@@ -1075,6 +1075,19 @@ def _fake_video_meta(data: bytes) -> dict:
     }
 
 
+def _real_video_meta(data: bytes) -> dict:
+    """decode="real" video metadata: the container header parse, or a
+    loud NotImplementedError for containers it does not know."""
+    meta = parse_video_header(data)
+    if meta is None:
+        magic = (data or b"")[:8].hex()
+        raise NotImplementedError(
+            f"video metadata parse supports MP4/MOV/AVI/WebM; "
+            f"bytes with magic {magic!r} need a demuxer (PyAV)"
+        )
+    return meta
+
+
 def extract_video_metadata(
     df: DataFrame, data_col: str = "data", id_col: str = "media_id",
     decode: str = "fake",
@@ -1086,15 +1099,7 @@ def extract_video_metadata(
     container doesn't carry are null (MP4 mvhd has duration but not
     dims/frames; AVI avih has all; Matroska has duration + dims)."""
     if decode == "real":
-        def kernel(data: bytes) -> dict:
-            meta = parse_video_header(data)
-            if meta is None:
-                magic = (data or b"")[:8].hex()
-                raise NotImplementedError(
-                    f"video metadata parse supports MP4/MOV/AVI/WebM; "
-                    f"bytes with magic {magic!r} need a demuxer (PyAV)"
-                )
-            return meta
+        kernel = _real_video_meta
     elif decode == "fake":
         kernel = _fake_video_meta
     else:
@@ -1135,7 +1140,7 @@ def extract_header_metadata_fused(
 
     Per-format results are IDENTICAL to the single-column extractors:
     the same kernels run per cell (``_real_decode_image``,
-    ``_real_decode_audio``, ``parse_video_header`` — decode="real"
+    ``_real_decode_audio``, ``_real_video_meta`` — decode="real"
     semantics, including their error contracts); only the plan shape
     changes. Unused per-format outputs (hash features) are dropped
     after decode, exactly as the per-leg form dropped them post-join.
@@ -1160,16 +1165,6 @@ def extract_header_metadata_fused(
         ]
     ddl = ", ".join(fields)
 
-    def _video_kernel(data: bytes) -> dict:
-        meta = parse_video_header(data)
-        if meta is None:
-            magic = (data or b"")[:8].hex()
-            raise NotImplementedError(
-                f"video metadata parse supports MP4/MOV/AVI/WebM; "
-                f"bytes with magic {magic!r} need a demuxer (PyAV)"
-            )
-        return meta
-
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
             out = {id_col: pdf[id_col].values}
@@ -1184,7 +1179,7 @@ def extract_header_metadata_fused(
                 out[f"{c}_samples"] = [d[1] for d in decoded]
                 out[f"{c}_duration_s"] = [d[2] for d in decoded]
             for c in video_cols:
-                metas = [_video_kernel(d) for d in pdf[c]]
+                metas = [_real_video_meta(d) for d in pdf[c]]
                 out[f"{c}_duration_s"] = [m["duration_s"] for m in metas]
                 out[f"{c}_n_frames"] = [m["n_frames"] for m in metas]
                 out[f"{c}_width"] = [m["width"] for m in metas]

@@ -7,8 +7,10 @@ parallelism), include=all, unique=False, SNAPPY compression,
 batch_count=14, batch_size=100MB, extract_strings=False.
 
 Batch knobs map to Spark partition sizing rather than literal channel
-buffers (SURVEY.md §2.7): ``threads`` → input repartition width,
-``batch_size`` → Arrow batch budget inside the ingest walker.
+buffers (SURVEY.md §2.7): ``threads`` → ingest scan tasks, at most one
+per thread, each walking one size-balanced bin of inputs
+(sources/archive_source.py); ``batch_size`` → Arrow batch budget inside
+the ingest walker.
 """
 
 from __future__ import annotations

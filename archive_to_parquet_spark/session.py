@@ -7,12 +7,48 @@ parallelism at hand rather than the 200 default).
 
 from __future__ import annotations
 
+import hashlib
 import os
+import tempfile
 import zipfile
 
 from pyspark.sql import SparkSession
 
 _PKG_DIR = os.path.dirname(os.path.abspath(__file__))
+
+
+def package_zip(pkg_dir: str = _PKG_DIR, out_dir: str | None = None) -> str:
+    """Zip the package's ``.py`` files for executors; returns its path.
+
+    The zip is named by a SHA-256 over every file's relative path and
+    bytes, so two checkouts (say, a parent and a change in an A/B run)
+    never share a zip, and an unchanged tree reuses the one it staged
+    before. Staging writes a pid-unique temporary file and renames it
+    into place, so concurrent drivers never see a half-written zip."""
+    root = os.path.dirname(pkg_dir)
+    sources: dict[str, bytes] = {}
+    for d, _, files in os.walk(pkg_dir):
+        for f in files:
+            if f.endswith(".py"):
+                full = os.path.join(d, f)
+                with open(full, "rb") as fh:
+                    sources[os.path.relpath(full, root)] = fh.read()
+    ordered = sorted(sources.items())
+    digest = hashlib.sha256()
+    for rel, data in ordered:
+        digest.update(f"{rel}\0{len(data)}\0".encode())
+        digest.update(data)
+    zip_path = os.path.join(
+        out_dir or tempfile.gettempdir(),
+        f"{os.path.basename(pkg_dir)}_pkg-{digest.hexdigest()[:16]}.zip",
+    )
+    if not os.path.exists(zip_path):
+        tmp = f"{zip_path}.{os.getpid()}.tmp"
+        with zipfile.ZipFile(tmp, "w") as zf:
+            for rel, data in ordered:
+                zf.writestr(rel, data)
+        os.replace(tmp, zip_path)
+    return zip_path
 
 
 def ensure_package_shipped(spark: SparkSession) -> None:
@@ -28,27 +64,7 @@ def ensure_package_shipped(spark: SparkSession) -> None:
     flag = "_a2p_pkg_shipped"
     if getattr(sc, flag, False):
         return
-    zip_path = os.path.join("/tmp", "archive_to_parquet_spark_pkg.zip")
-    if not os.path.exists(zip_path) or os.path.getmtime(zip_path) < max(
-        os.path.getmtime(os.path.join(root, f))
-        for root, _, files in os.walk(_PKG_DIR)
-        for f in files
-        if f.endswith(".py")
-    ):
-        # pid-unique staging name: concurrent drivers (bench + audit in
-        # parallel) each rename their own finished zip into place
-        # instead of racing on one shared .tmp
-        tmp = f"{zip_path}.{os.getpid()}.tmp"
-        with zipfile.ZipFile(tmp, "w") as zf:
-            for root, _, files in os.walk(_PKG_DIR):
-                for f in files:
-                    if not f.endswith(".py"):
-                        continue
-                    full = os.path.join(root, f)
-                    rel = os.path.relpath(full, os.path.dirname(_PKG_DIR))
-                    zf.write(full, rel)
-        os.replace(tmp, zip_path)
-    sc.addPyFile(zip_path)
+    sc.addPyFile(package_zip())
     setattr(sc, flag, True)
 
 

@@ -1,11 +1,21 @@
-"""Spark source: paths/URLs DataFrame → canonical entries DataFrame.
+"""Spark source: archive paths/URLs → canonical entries DataFrame.
 
 Mapping of the reference's physical layer (SURVEY.md §2.7) onto Spark:
 
-- per-input worker fan-out (rayon pool, one walk per input —
-  reference src/converter/base.rs:45-66) → ``repartition(n_inputs)``
-  so each task walks one input; a 1000-executor cluster walks 1000
-  archives concurrently with zero coordination.
+- per-input worker fan-out (a pool of ``threads`` workers, one input in
+  flight per worker — reference src/converter/base.rs:45-66) → one
+  scan task per thread: the driver packs the inputs into
+  ``min(len(paths), threads)`` size-balanced bins (greedy LPT), and a
+  JVM-only ``spark.range`` with one row per bin drives ONE
+  ``mapInArrow`` evaluation per task that walks its bin's inputs in
+  sequence. More tasks would only add cost: every Python task pays a
+  fixed start-up of about 0.3 s of worker CPU (measured on a 4-core
+  x86 host, PySpark 4.1, Python 3.11), because PySpark's per-task
+  ``setup_spark_files`` calls ``importlib.invalidate_caches()``, which
+  makes every ``zipimporter`` (one per package directory imported from
+  a zip, ``pyspark.zip`` above all) re-read its zip's central
+  directory; SCALING.md §Ingest has the figures. A cluster sets
+  ``threads`` to its total executor cores.
 - bounded batch channel with backpressure (reference
   src/channel.rs:112-139) → the ``mapInArrow`` iterator protocol:
   each yielded Arrow RecordBatch is capped by rows AND bytes (the
@@ -22,13 +32,12 @@ which is the reference's model too (threads = inputs in flight).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Iterable, Iterator
 
 import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 from archive_to_parquet_spark.options import ConvertOptions
-from archive_to_parquet_spark.schema import ENTRY_SCHEMA_DDL
 
 _BATCH_ROWS = 1024  # reference src/batch.rs:78
 
@@ -65,69 +74,50 @@ def _rows_to_batch(
     )
 
 
-def _make_walk_partition(options: ConvertOptions):
-    """Build the mapInArrow function (options captured by value — the
-    dataclass pickles into the task closure once, not per row).
+def _output_columns(options: ConvertOptions) -> tuple[str, ...]:
+    # canonical column order regardless of how the subset was spelled
+    if options.columns is None:
+        return ENTRY_COLUMNS
+    return tuple(c for c in ENTRY_COLUMNS if c in options.columns)
+
+
+def _walk_input(input_path: str, is_url: bool, options: ConvertOptions):
+    from archive_to_parquet_spark.sources.walker import walk_path, walk_stream
+
+    if not is_url:
+        yield from walk_path(input_path, options)
+        return
+    from archive_to_parquet_spark.sources.url_source import open_url
+
+    stream, size = open_url(input_path)
+    try:
+        yield from walk_stream(input_path, stream, size, options)
+    finally:
+        stream.close()
+
+
+def walk_inputs(
+    inputs: Iterable[tuple[str, bool]], options: ConvertOptions
+) -> Iterator[pa.RecordBatch]:
+    """Walk ``(path, is_url)`` inputs in order into Arrow batches — the
+    body of every ingest ``mapInArrow`` task.
 
     mapInArrow, not mapInPandas: entry content is opaque bytes, and the
     pandas leg (object arrays → per-batch Arrow re-conversion) only
-    added copies. The walker appends straight into Arrow builders;
-    each yielded RecordBatch is capped by rows AND bytes (the
-    reference's dual cap)."""
-
-    batch_bytes = options.batch_size
-    # canonical column order regardless of how the subset was spelled
-    columns = (
-        tuple(c for c in ENTRY_COLUMNS if c in options.columns)
-        if options.columns
-        else ENTRY_COLUMNS
-    )
-
-    def walk_partition(
-        batches: Iterator[pa.RecordBatch],
-    ) -> Iterator[pa.RecordBatch]:
-        from archive_to_parquet_spark.sources.url_source import open_url
-        from archive_to_parquet_spark.sources.walker import walk_path, walk_stream
-
-        pending: list = []
-        pending_bytes = 0
-        for rb in batches:
-            input_paths = rb.column("input_path").to_pylist()
-            is_url = (
-                rb.column("is_url").to_pylist()
-                if "is_url" in rb.schema.names
-                else [False] * rb.num_rows
-            )
-            for input_path, from_url in zip(input_paths, is_url):
-                if from_url:
-                    stream, size = open_url(input_path)
-                    try:
-                        row_iter = walk_stream(input_path, stream, size, options)
-                        for row in row_iter:
-                            pending.append(row)
-                            pending_bytes += len(row.content or b"")
-                            if (
-                                len(pending) >= _BATCH_ROWS
-                                or pending_bytes >= batch_bytes
-                            ):
-                                yield _rows_to_batch(pending, columns)
-                                pending, pending_bytes = [], 0
-                    finally:
-                        stream.close()
-                else:
-                    for row in walk_path(input_path, options):
-                        pending.append(row)
-                        pending_bytes += len(row.content or b"")
-                        if (
-                            len(pending) >= _BATCH_ROWS
-                            or pending_bytes >= batch_bytes
-                        ):
-                            yield _rows_to_batch(pending, columns)
-                            pending, pending_bytes = [], 0
-        if pending:
-            yield _rows_to_batch(pending, columns)
-
-    return walk_partition
+    added copies. Each yielded RecordBatch is capped by rows AND bytes
+    (the reference's dual cap); a batch may span inputs."""
+    columns = _output_columns(options)
+    pending: list = []
+    pending_bytes = 0
+    for input_path, is_url in inputs:
+        for row in _walk_input(input_path, is_url, options):
+            pending.append(row)
+            pending_bytes += len(row.content or b"")
+            if len(pending) >= _BATCH_ROWS or pending_bytes >= options.batch_size:
+                yield _rows_to_batch(pending, columns)
+                pending, pending_bytes = [], 0
+    if pending:
+        yield _rows_to_batch(pending, columns)
 
 
 def read_archives(
@@ -137,7 +127,8 @@ def read_archives(
     urls: bool = False,
 ) -> DataFrame:
     """Entries DataFrame from local archive paths (or URLs with
-    ``urls=True``). One Spark task per input.
+    ``urls=True``). One Spark task per thread, each walking one
+    size-balanced bin of inputs.
 
     ``options.columns`` prunes the output projection INSIDE the walker:
     with ``content`` excluded, entry payloads are stream-hashed but
@@ -150,36 +141,32 @@ def read_archives(
     options.validate()
     if not paths:
         raise ValueError("no input paths")
-    n_tasks = min(len(paths), max(options.threads, 1) * 4)
-    # Exactly-even input spread: hash/round-robin repartition of a small
-    # path list clumps several archives into one task (measured 3-4× skew
-    # on 16 paths). The path list is a driver-side Python list already,
-    # so pack it HERE — no shuffle, no global Window sort at the head of
-    # the ingest DAG (a previous row_number-over-everything approach
-    # would funnel a 10M-path manifest through a single WindowExec
-    # partition before any work started). When input SIZES are cheaply
-    # knowable (local files, bounded manifest), tasks are packed
-    # size-weighted (greedy LPT) instead of count-even: at 100 TB, a
-    # count-even split of heterogeneous archives makes the task that
-    # drew the biggest archives the job's straggler, while LPT bounds
-    # the makespan at ~4/3 of optimal. Falls back to contiguous
-    # count-even slices for URLs or very large manifests (stat cost).
-    bins = _pack_inputs(sorted(paths), n_tasks, urls=urls)
-    rdd = spark.sparkContext.parallelize(
-        [[(p, urls) for p in b] for b in bins], len(bins)
-    ).flatMap(lambda b: b)
-    paths_df = spark.createDataFrame(
-        rdd, "input_path string, is_url boolean"
-    )
-    if options.columns is None:
-        ddl = ENTRY_SCHEMA_DDL
-    else:
-        ddl = ", ".join(
-            f"{c} {_DDL_TYPES[c]}"
-            for c in ENTRY_COLUMNS
-            if c in options.columns
+    # The path list is a driver-side Python list already, so pack it
+    # HERE — no shuffle, no global Window sort at the head of the
+    # ingest DAG. When input SIZES are cheaply knowable (local files,
+    # bounded manifest), bins are packed size-weighted (greedy LPT),
+    # which bounds the makespan at ~4/3 of optimal; URLs and very large
+    # manifests fall back to contiguous count-even slices (stat cost).
+    bins = _pack_inputs(sorted(paths), min(len(paths), options.threads), urls=urls)
+
+    def walk_bins(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        # one Range row per task: its id picks the bin this task walks
+        yield from walk_inputs(
+            (
+                (p, urls)
+                for rb in batches
+                for i in rb.column("id").to_pylist()
+                for p in bins[i]
+            ),
+            options,
         )
-    return paths_df.mapInArrow(_make_walk_partition(options), ddl)
+
+    ddl = ", ".join(f"{c} {_DDL_TYPES[c]}" for c in _output_columns(options))
+    # The bins travel in the mapInArrow closure (PySpark broadcasts a
+    # pickled command over 1 MB, so a large manifest ships once per
+    # executor); the JVM-only Range keeps the scan at one Python
+    # evaluation per task.
+    return spark.range(0, len(bins), 1, len(bins)).mapInArrow(walk_bins, ddl)
 
 
 # stat-ing a manifest beyond this on the driver costs more than the

@@ -27,7 +27,7 @@ from archive_to_parquet_spark.operators.filters import (
 )
 from archive_to_parquet_spark.options import ConvertOptions
 from archive_to_parquet_spark.schema import ENTRY_SCHEMA_DDL
-from archive_to_parquet_spark.sources.archive_source import _make_walk_partition
+from archive_to_parquet_spark.sources.archive_source import walk_inputs
 
 
 def _entries_of_batch(batch_df: DataFrame, options: ConvertOptions) -> DataFrame:
@@ -35,12 +35,20 @@ def _entries_of_batch(batch_df: DataFrame, options: ConvertOptions) -> DataFrame
     # with local IO, so strip the local scheme (cluster deployments with
     # hdfs:/s3: inputs should mount or fetch — see url_source for http)
     paths_df = batch_df.select(
-        F.regexp_replace("path", r"^file:", "").alias("input_path"),
-        F.lit(False).alias("is_url"),
+        F.regexp_replace("path", r"^file:", "").alias("input_path")
     )
-    entries = paths_df.mapInArrow(
-        _make_walk_partition(options), ENTRY_SCHEMA_DDL
-    )
+
+    def walk_paths(batches):
+        yield from walk_inputs(
+            (
+                (p, False)
+                for rb in batches
+                for p in rb.column("input_path").to_pylist()
+            ),
+            options,
+        )
+
+    entries = paths_df.mapInArrow(walk_paths, ENTRY_SCHEMA_DDL)
     entries = apply_include_filter(entries, options.include)
     entries = apply_size_filter(entries, options)
     return entries

@@ -159,7 +159,7 @@ def test_deterministic_dedup_winner(spark, fixture_archives):
 
 
 def test_read_archives_even_spread_no_global_window(spark, tmp_path):
-    """Input fan-out: one contiguous equal slice of archives per task,
+    """Input fan-out: one size-balanced bin of archives per thread,
     with no global Window/sort at the head of the ingest DAG (the dense
     row-index approach warned 'WindowExec: No Partition Defined' and
     would single-partition a huge manifest)."""
@@ -175,12 +175,12 @@ def test_read_archives_even_spread_no_global_window(spark, tmp_path):
     entries = read_archives(spark, paths, ConvertOptions(threads=2))
     plan = entries._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in plan and "Exchange" not in plan
-    # threads=2 → 8 tasks; 8 archives → exactly one archive per task
+    # threads=2 → 2 tasks; 8 equal-size archives → 4 archives per task
     per_task = (
         entries.withColumn("pid", F.spark_partition_id())
         .groupBy("pid")
         .agg(F.countDistinct("source").alias("n_sources"))
         .collect()
     )
-    assert len(per_task) == 8
-    assert all(r.n_sources == 1 for r in per_task)
+    assert len(per_task) == 2
+    assert all(r.n_sources == 4 for r in per_task)

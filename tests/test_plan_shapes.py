@@ -557,6 +557,32 @@ def test_ingest_pipeline_is_single_stage(spark, tmp_path):
     assert _plan(df_uniq).count("Exchange") <= 2  # partial+final pair max
 
 
+def test_read_archives_head_is_range_with_one_python_node(spark, tmp_path):
+    """The ingest scan is a JVM-only Range with one row per thread
+    under exactly one Python evaluation (the walker's MapInArrow): no
+    Python-RDD path list at the DAG head, and no more scan tasks than
+    threads or inputs."""
+    from archive_to_parquet_spark.options import ConvertOptions
+    from archive_to_parquet_spark.plans.audit import PY_NODES
+    from archive_to_parquet_spark.sources.archive_source import read_archives
+    from tests.conftest import tar_archive
+
+    paths = []
+    for i in range(5):
+        p = tmp_path / f"a{i}.tar"
+        p.write_bytes(tar_archive({f"f{i}.txt": b"x" * (i + 1)}))
+        paths.append(str(p))
+    for n_paths, threads in ((5, 3), (2, 8), (5, 5)):
+        df = read_archives(spark, paths[:n_paths], ConvertOptions(threads=threads))
+        plan = _plan(df)
+        leaf = plan.strip().splitlines()[-1]
+        assert "Range (0, " in leaf, plan
+        assert plan.count("MapInArrow") == 1, plan
+        assert not [n for n in PY_NODES if n in plan], plan
+        assert "ExistingRDD" not in plan and "PythonRDD" not in plan, plan
+        assert df.rdd.getNumPartitions() == min(n_paths, threads)
+
+
 def test_lm_perplexity_broadcasts_model_and_scalar(spark):
     """text_lm_perplexity: the trigram model (charset-bounded) and the
     1-row totals must BROADCAST — per-doc histograms are the only
