@@ -1,41 +1,24 @@
 """Driver contract for the spark-graft builder (PySpark target).
 
-The driver's verify runs ``entry(spark)`` as a smoke check, runs
-each ``queries()[name]`` at sf=0.01 and compares it against the
-matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
-order-insensitive value-hash → CORRECTNESS_r{N}.json).
+``entry(spark)`` is a smoke check; each ``queries()[name]`` is compared
+against the matching ``oracle_sql()[name]`` in DuckDB (row count +
+schema + order-insensitive value hash, ``archive_to_parquet_spark.oracle``)
+by ``tests/test_oracle_gate.py`` and ``tools/check_correctness.py``.
 
 The actual catalog lives in ``archive_to_parquet_spark/queries.py``.
 
-``_wrap`` does two defensive things on the driver's session (which is
-not built by our ``session.get_spark`` and may carry different
-defaults):
-
-1. Pins the session confs that can change query RESULTS — timezone,
-   ANSI mode, parquet NTZ inference — to the values the repo's own
-   sessions use, so the driver's Spark run computes the same values the
-   local oracle runs computed.  The prior values are snapshotted on
-   first pin and restored at interpreter exit (atexit), so a host that
-   keeps using the session after the round gets its own conf state
-   back; DURING the round the pins must stay in force because the
-   driver executes the returned DataFrames after ``_wrap`` returns.
-2. Writes a per-entry result trace (row count, column names, sorted
-   normalized rows, value hash) under ``DRIVER_TRACE/`` when
-   ``entry_trace`` is enabled, so a failing driver hash can be diffed
-   row-by-row after the round with ``tools/diff_trace.py`` instead of
-   guessed at.  Tracing re-executes the query once at sf0.01 cost,
-   streaming rows via ``toLocalIterator`` with an early stop at
-   ``_TRACE_ROW_BUDGET`` rows so a per-row-output entry can't OOM the
-   driver; over-budget entries record a skip marker instead of rows.
-   Traces for entries no longer in the catalog are pruned when
-   ``queries()`` is first called; traces for live entries persist until
-   their entry is rerun.  Set ``SPARK_GRAFT_TRACE=0`` to disable.
+``_wrap`` pins, on a session this package did not build, the confs
+that can change query RESULTS — timezone, ANSI mode, parquet NTZ
+inference — to the values the repo's own sessions use, so that session
+computes the same values the oracle runs computed. The prior values are
+snapshotted on first pin and restored at interpreter exit (atexit), so
+a host that keeps using the session gets its own conf state back; until
+then the pins must stay in force because the caller executes the
+returned DataFrames after ``_wrap`` returns.
 """
 
 from __future__ import annotations
 
-import hashlib
-import json
 import os
 import sys
 from collections.abc import Callable
@@ -56,10 +39,6 @@ _RESULT_CONFS = {
     "spark.sql.ansi.enabled": "true",
     "spark.sql.parquet.inferTimestampNTZ.enabled": "true",
 }
-
-_TRACE_DIR = os.path.join(_REPO_ROOT, "DRIVER_TRACE")
-_TRACE_ROW_CAP = 1000  # rows stored in the JSON artifact
-_TRACE_ROW_BUDGET = 20_000  # rows pulled to the driver before giving up
 
 # prior conf values of the first session we pinned, for atexit restore
 _PRIOR_CONFS: dict[str, str | None] = {}
@@ -105,78 +84,6 @@ def _pin_result_confs(spark: SparkSession) -> None:
         atexit.register(_restore_result_confs)
 
 
-def _norm_cell(v) -> str:
-    """Strict normalization: floats keep their repr (no int collapse) so
-    the trace distinguishes 1 from 1.0 the way a dtype-sensitive hash
-    would."""
-    import datetime
-
-    if v is None:
-        return "NULL"
-    if isinstance(v, bool):
-        return str(int(v))
-    if isinstance(v, (bytes, bytearray)):
-        return v.hex()
-    if isinstance(v, datetime.datetime):
-        return v.isoformat()
-    if isinstance(v, list):
-        return "[" + ",".join(_norm_cell(x) for x in v) + "]"
-    return str(v)
-
-
-def _trace(name: str, df: DataFrame) -> None:
-    if os.environ.get("SPARK_GRAFT_TRACE", "1") == "0":
-        return
-    try:
-        cols = df.columns
-        order = sorted(range(len(cols)), key=lambda i: cols[i])
-        # stream rows with an early stop: a per-row-output entry (e.g. a
-        # running-total over every order) must not collect() the whole
-        # result onto the driver just for a diagnostic artifact
-        rows = []
-        over_budget = False
-        for r in df.toLocalIterator():
-            rows.append(r)
-            if len(rows) > _TRACE_ROW_BUDGET:
-                over_budget = True
-                break
-        if over_budget:
-            os.makedirs(_TRACE_DIR, exist_ok=True)
-            with open(os.path.join(_TRACE_DIR, f"{name}.json"), "w") as fh:
-                json.dump(
-                    {
-                        "name": name,
-                        "skipped": f"result exceeds the {_TRACE_ROW_BUDGET}-row"
-                        " trace budget; no rows or hash recorded",
-                        "columns": [cols[i] for i in order],
-                        "schema": df.schema.simpleString(),
-                    },
-                    fh,
-                )
-            return
-        lines = sorted(
-            "\x1f".join(_norm_cell(r[i]) for i in order) for r in rows
-        )
-        h = hashlib.sha256()
-        for line in lines:
-            h.update(line.encode("utf-8", "replace"))
-            h.update(b"\n")
-        os.makedirs(_TRACE_DIR, exist_ok=True)
-        payload = {
-            "name": name,
-            "n_rows": len(lines),
-            "columns": [cols[i] for i in order],
-            "schema": df.schema.simpleString(),
-            "value_hash": h.hexdigest()[:16],
-            "rows": lines[:_TRACE_ROW_CAP],
-            "rows_truncated": len(lines) > _TRACE_ROW_CAP,
-        }
-        with open(os.path.join(_TRACE_DIR, f"{name}.json"), "w") as fh:
-            json.dump(payload, fh)
-    except Exception:  # noqa: BLE001 — tracing must never fail the query
-        pass
-
-
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship: reference dataflow (project+hash → filter → dedup →
     per-source counters) over sf0.001 documents."""
@@ -185,45 +92,19 @@ def entry(spark: SparkSession) -> DataFrame:
     return _catalog.flagship(spark, "/root/testdata/sf0.001")
 
 
-def _wrap(name: str, fn: Callable[[SparkSession, str], DataFrame]):
+def _wrap(fn: Callable[[SparkSession, str], DataFrame]):
     def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the driver's session isn't ours — make the package importable
         # on its executor workers before any pandas_udf/mapInPandas runs
         ensure_package_shipped(spark)
         _pin_result_confs(spark)
-        df = fn(spark, sf_dir)
-        _trace(name, df)
-        return df
+        return fn(spark, sf_dir)
 
     return wrapped
 
 
-_TRACES_PRUNED: list[bool] = []
-
-
-def _prune_stale_traces() -> None:
-    """One-shot per process: drop only traces whose entry no longer
-    exists in the catalog (removed/renamed queries).  Traces for live
-    entries are left intact — each run overwrites its own per-entry
-    file — so a partial driver run or an ad-hoc smoke can never delete
-    the committed full-catalog trace set (a round-9 driver run wiped
-    157 of 207 committed traces under the old prune-everything rule)."""
-    if _TRACES_PRUNED or os.environ.get("SPARK_GRAFT_TRACE", "1") == "0":
-        return
-    _TRACES_PRUNED.append(True)
-    live = {f"{name}.json" for name in _catalog.queries()}
-    if os.path.isdir(_TRACE_DIR):
-        for f in os.listdir(_TRACE_DIR):
-            if f.endswith(".json") and f not in live:
-                try:
-                    os.unlink(os.path.join(_TRACE_DIR, f))
-                except OSError:
-                    pass
-
-
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    _prune_stale_traces()
-    return {name: _wrap(name, fn) for name, fn in _catalog.queries().items()}
+    return {name: _wrap(fn) for name, fn in _catalog.queries().items()}
 
 
 def oracle_sql() -> dict[str, str]:

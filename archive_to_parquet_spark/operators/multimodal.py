@@ -1,40 +1,47 @@
 """Multimodal (image/audio/video) column plumbing.
 
 Media lives as opaque ``binary`` columns with typed metadata, exactly like
-the engine's ``content`` column. Decode / feature-extract / resize /
-frame-sample run as Arrow-batched ``mapInPandas`` stages so bytes never
-take the row-at-a-time Python path.
+the engine's ``content`` column. Every decode runs through ONE dispatch,
+``decode_media``: per requested (column, cell kernel) it runs the kernel
+on every cell inside a single Arrow-batched ``mapInPandas`` pass, so a
+multi-format entry costs one Python boundary and no joins, and bytes
+never take the row-at-a-time Python path. The per-format operators
+(``extract_image_features``, ``extract_audio_features``,
+``extract_video_metadata``, ``sample_video_frames``,
+``image_perceptual_hashes``, ``audio_fingerprints``, ``resize_images``)
+are each one call into it. ``profile_media`` is the one other pass: it
+routes per row by kind and never fails (the CLI's bulk contract).
 
-Decode tiers (no image/audio libs exist in this container):
+The cell kernels are real, pure-Python parsers and decoders that need no
+image or audio library. Headers: PNG (IHDR), JPEG
+(SOFn), GIF, BMP, TIFF (IFD walk, both byte orders), WEBP
+(VP8/VP8L/VP8X), PPM/PGM dimensions+channels; WAV/RIFF, FLAC
+STREAMINFO, and MP3 frame headers for sample rate / sample count /
+duration; MP4/MOV mvhd and AVI avih for video duration / frame count /
+dimensions. CONTENT, codec-free: PPM/PGM/uncompressed-BMP pixel grids,
+PNG pixels via pure-stdlib zlib inflate + scanline unfilter
+(non-interlaced 8/16-bit, color types 0/2/3/4/6), baseline and
+progressive Huffman JPEG pixels via a pure-stdlib entropy decoder +
+numpy IDCT (Y-plane luminance, chroma entropy-skipped), GIF first-frame
+pixels via pure-stdlib LZW (global/local palettes, interlace),
+uncompressed striped 8-bit TIFF pixels (both byte orders), (grid-mean
+features, perceptual hashes), WAV samples in linear PCM, G.711
+μ-law/A-law, and mono IMA ADPCM (log-RMS features, energy fingerprints
+— G.711 and the ADPCM nibble core are bit-exact against the stdlib
+audioop reference), native FLAC streams (lossless PCM decode, RFC 9639:
+CONSTANT/VERBATIM/FIXED/LPC subframes, Rice + escape residuals, all
+four channel assignments, CRC-8/16 enforced — bit-exact roundtrip
+against the test-side encoder), and MP4 keyframe bitstream samples
+sliced out of mdat via the stss/stsc/stco/stsz box walk.
 
-- ``decode="real"`` — REAL parsing, pure Python. Headers: PNG (IHDR),
-  JPEG (SOFn), GIF, BMP, TIFF (IFD walk, both byte orders), WEBP
-  (VP8/VP8L/VP8X), PPM/PGM dimensions+channels; WAV/RIFF, FLAC
-  STREAMINFO, and MP3 frame headers for sample rate / sample count /
-  duration; MP4/MOV mvhd and AVI avih for video duration / frame count
-  / dimensions. CONTENT, codec-free: PPM/PGM/uncompressed-BMP pixel
-  grids, PNG pixels via pure-stdlib zlib inflate + scanline unfilter
-  (non-interlaced 8/16-bit, color types 0/2/3/4/6), baseline-Huffman
-  JPEG pixels via a pure-stdlib entropy decoder + numpy IDCT (SOF0/
-  SOF1, the dominant web JPEG — Y-plane luminance, chroma entropy-
-  skipped), GIF first-frame pixels via pure-stdlib LZW (global/local
-  palettes, interlace), uncompressed striped 8-bit TIFF pixels (both
-  byte orders), (grid-mean features, perceptual hashes), WAV samples in
-  linear PCM, G.711 μ-law/A-law, and mono IMA ADPCM (log-RMS features,
-  energy fingerprints — G.711 and the ADPCM nibble core are bit-exact
-  against the stdlib audioop reference), native FLAC streams (lossless
-  PCM decode, RFC 9639: CONSTANT/VERBATIM/FIXED/LPC subframes, Rice +
-  escape residuals, all four channel assignments, CRC-8/16 enforced —
-  bit-exact roundtrip against the test-side encoder), and MP4 keyframe
-  bitstream samples sliced out of mdat via the stss/stsc/stco/stsz box
-  walk. Formats whose *feature* needs an actual codec (progressive →
-  decoded since r6; arithmetic JPEG, MP3 PCM, H.264 frame decode) keep
-  hash-derived fingerprints or raise ``NotImplementedError`` — that is
-  the codec boundary (MP3 stays outside deliberately: its fixed spec
-  Huffman tables cannot be verified here — no reference decoder in
-  the container — whereas FLAC's parameters all arrive in-stream).
-- ``decode="fake"`` — fully deterministic stand-in decode from the byte
-  hash; keeps schema/batch shape real for plumbing tests.
+The codec boundary: formats whose *feature* needs an actual codec
+(WEBP, compressed TIFF, MP3 PCM) yield true dimensions/rates with a
+hash-derived feature vector; arithmetic/lossless JPEG, unknown magic
+and non-BMFF keyframe sampling raise ``NotImplementedError`` (MP3
+stays outside deliberately: its fixed spec Huffman tables cannot be
+verified without a reference decoder, whereas FLAC's parameters all
+arrive in-stream). The perceptual-hash,
+fingerprint and resize kernels return null for undecodable bytes instead.
 """
 
 from __future__ import annotations
@@ -42,7 +49,8 @@ from __future__ import annotations
 import hashlib
 import math
 import struct
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator, Sequence
+from typing import NamedTuple
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -57,10 +65,6 @@ MEDIA_SCHEMA = T.StructType(
         T.StructField("data", T.BinaryType(), False),
         T.StructField("meta", T.MapType(T.StringType(), T.StringType()), True),
     ]
-)
-
-IMAGE_FEATURES_DDL = (
-    "media_id long, width int, height int, channels int, feature array<float>"
 )
 
 # JPEG start-of-frame markers that carry dimensions (C4/C8/CC are
@@ -637,19 +641,10 @@ def parse_video_header(data: bytes) -> dict | None:
 
 def _hash_feature(data: bytes, dim: int = 16) -> list[float]:
     """Deterministic content-fingerprint feature in [-1, 1] — the
-    embedding stand-in used by both decode tiers (a real embedding needs
+    embedding stand-in for header-only formats (a real embedding needs
     pixel/PCM decode, which needs the heavy libs)."""
     h = hashlib.sha256(data or b"").digest()
     return [((b / 255.0) * 2.0 - 1.0) for b in h[:dim]]
-
-
-def _fake_decode_image(data: bytes) -> tuple[int, int, int, list[float]]:
-    """Deterministic stand-in for a real decoder: dims and a 16-d feature
-    derived from the sha256 of the bytes."""
-    h = hashlib.sha256(data or b"").digest()
-    width = 16 + h[0] % 64
-    height = 16 + h[1] % 64
-    return width, height, 3, _hash_feature(data)
 
 
 def _real_decode_image(data: bytes) -> tuple[int, int, int, list[float]]:
@@ -685,61 +680,6 @@ def _real_decode_image(data: bytes) -> tuple[int, int, int, list[float]]:
         )
     w, h, channels = parsed
     return w, h, channels, _hash_feature(data)
-
-
-def extract_image_features(
-    df: DataFrame, data_col: str = "data", id_col: str = "media_id",
-    decode: str = "fake",
-) -> DataFrame:
-    """binary → (dims, feature vector) via mapInPandas (Arrow batches).
-
-    ``decode="real"`` parses true dimensions/channels from PNG/JPEG/GIF/
-    BMP/PPM headers (pure Python, no codec libs) and raises
-    NotImplementedError for formats that require one.
-
-    Partitioning: rows are processed in-place per input partition — no
-    shuffle. At 100 TB, upstream should repartition by size so a batch of
-    large blobs doesn't exceed executor memory (same per-task byte budget
-    as the ingest walker).
-    """
-    if decode == "real":
-        kernel = _real_decode_image
-    elif decode == "fake":
-        kernel = _fake_decode_image
-    else:
-        raise ValueError(f"unknown decode mode {decode!r}")
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            decoded = [kernel(d) for d in pdf[data_col]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf[id_col].values,
-                    "width": [d[0] for d in decoded],
-                    "height": [d[1] for d in decoded],
-                    "channels": [d[2] for d in decoded],
-                    "feature": [d[3] for d in decoded],
-                }
-            )
-
-    return df.select(id_col, data_col).mapInPandas(batches, IMAGE_FEATURES_DDL)
-
-
-AUDIO_FEATURES_DDL = (
-    "media_id long, sample_rate int, n_samples long, duration_s double, "
-    "mfcc array<float>"
-)
-
-
-def _fake_decode_audio(data: bytes) -> tuple[int, int, float, list[float]]:
-    """Deterministic stand-in for a real audio decoder: sample rate /
-    length / a 13-d MFCC-shaped feature derived from the byte hash."""
-    h = hashlib.sha256(data or b"").digest()
-    sample_rate = (8000, 16000, 22050, 44100)[h[0] % 4]
-    n_samples = 1000 + int.from_bytes(h[1:4], "big") % 1_000_000
-    duration = n_samples / sample_rate
-    mfcc = [((b / 255.0) * 40.0 - 20.0) for b in h[4:17]]
-    return sample_rate, n_samples, duration, mfcc
 
 
 def _real_decode_audio(data: bytes) -> tuple[int, int, float, list[float]]:
@@ -792,38 +732,6 @@ def _real_decode_audio(data: bytes) -> tuple[int, int, float, list[float]]:
     h = hashlib.sha256(data or b"").digest()
     mfcc = [((b / 255.0) * 40.0 - 20.0) for b in h[4:17]]
     return rate, n, duration, mfcc
-
-
-def extract_audio_features(
-    df: DataFrame, data_col: str = "data", id_col: str = "media_id",
-    decode: str = "fake",
-) -> DataFrame:
-    """audio binary → (sample_rate, n_samples, duration, mfcc-shaped
-    feature) via mapInPandas. ``decode="real"`` reads true rate/length/
-    duration from the WAV/RIFF header (no codec needed for PCM metadata);
-    compressed formats raise NotImplementedError. Same partitioning/batch
-    contract as extract_image_features."""
-    if decode == "real":
-        kernel = _real_decode_audio
-    elif decode == "fake":
-        kernel = _fake_decode_audio
-    else:
-        raise ValueError(f"unknown decode mode {decode!r}")
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            decoded = [kernel(d) for d in pdf[data_col]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf[id_col].values,
-                    "sample_rate": [d[0] for d in decoded],
-                    "n_samples": [d[1] for d in decoded],
-                    "duration_s": [d[2] for d in decoded],
-                    "mfcc": [d[3] for d in decoded],
-                }
-            )
-
-    return df.select(id_col, data_col).mapInPandas(batches, AUDIO_FEATURES_DDL)
 
 
 def _mp4_boxes(d: bytes, start: int, end: int):
@@ -1001,83 +909,9 @@ def _mp4_keyframe_samples_strict(data: bytes) -> list[tuple[int, int, int]] | No
     return None
 
 
-def sample_video_frames(
-    df: DataFrame, data_col: str = "data", id_col: str = "media_id",
-    every_n: int = 30, decode: str = "fake",
-) -> DataFrame:
-    """video binary → exploded frame rows (frame_idx, frame binary).
-
-    ``decode="real"`` walks the MP4/MOV sample table (stss/stsc/stco/
-    stsz — see ``mp4_keyframe_samples``) and emits every ``every_n``-th
-    KEYFRAME's raw codec bitstream sample sliced straight out of
-    ``mdat`` (frame_idx = 1-based sample number). That is real,
-    codec-free frame *sampling*; decoding those samples to pixels is
-    the codec boundary and raises NotImplementedError for non-BMFF
-    containers. The fake path derives a deterministic pseudo-frame
-    count from the blob so the explode/batch plumbing is testable
-    without media fixtures.
-    """
-    out_ddl = "media_id long, frame_idx int, frame binary"
-
-    if decode == "real":
-        def rows_for(mid, data: bytes):
-            samples = mp4_keyframe_samples(data)
-            if samples is None:
-                magic = (data or b"")[:8].hex()
-                raise NotImplementedError(
-                    f"keyframe sampling needs an MP4/MOV sample table; "
-                    f"bytes with magic {magic!r} need a demuxer (PyAV)"
-                )
-            for k, off, size in samples[:: max(1, every_n)]:
-                # a malformed-but-parseable stco/stsz can point past the
-                # blob; skip such samples rather than silently emitting
-                # truncated/empty payloads (degrade like the box walk)
-                if off + size > len(data):
-                    continue
-                yield mid, k, data[off : off + size]
-    elif decode == "fake":
-        def rows_for(mid, data: bytes):
-            n_frames = 1 + (len(data) % 120)
-            for fi in range(0, n_frames, every_n):
-                yield mid, fi, hashlib.sha256(
-                    data + fi.to_bytes(4, "big")
-                ).digest()
-    else:
-        raise ValueError(f"unknown decode mode {decode!r}")
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, idxs, frames = [], [], []
-            for mid, data in zip(pdf[id_col], pdf[data_col]):
-                for m, fi, fr in rows_for(mid, bytes(data) if data else b""):
-                    ids.append(m)
-                    idxs.append(fi)
-                    frames.append(fr)
-            yield pd.DataFrame({"media_id": ids, "frame_idx": idxs, "frame": frames})
-
-    return df.select(id_col, data_col).mapInPandas(batches, out_ddl)
-
-
-VIDEO_META_DDL = (
-    "media_id long, duration_s double, n_frames long, width int, height int"
-)
-
-
-def _fake_video_meta(data: bytes) -> dict:
-    h = hashlib.sha256(data or b"").digest()
-    n_frames = 1 + h[0] % 240
-    fps = (24, 25, 30)[h[1] % 3]
-    return {
-        "duration_s": n_frames / fps,
-        "n_frames": n_frames,
-        "width": 160 + h[2] % 64,
-        "height": 120 + h[3] % 64,
-    }
-
-
 def _real_video_meta(data: bytes) -> dict:
-    """decode="real" video metadata: the container header parse, or a
-    loud NotImplementedError for containers it does not know."""
+    """Video container metadata: the header parse, or a loud
+    NotImplementedError for containers it does not know."""
     meta = parse_video_header(data)
     if meta is None:
         magic = (data or b"")[:8].hex()
@@ -1086,108 +920,6 @@ def _real_video_meta(data: bytes) -> dict:
             f"bytes with magic {magic!r} need a demuxer (PyAV)"
         )
     return meta
-
-
-def extract_video_metadata(
-    df: DataFrame, data_col: str = "data", id_col: str = "media_id",
-    decode: str = "fake",
-) -> DataFrame:
-    """video binary → container metadata (duration, frame count, dims)
-    via mapInPandas. ``decode="real"`` parses MP4/MOV mvhd, AVI avih
-    and Matroska/WebM EBML headers (pure Python, no codec);
-    unrecognized containers raise NotImplementedError. Fields a
-    container doesn't carry are null (MP4 mvhd has duration but not
-    dims/frames; AVI avih has all; Matroska has duration + dims)."""
-    if decode == "real":
-        kernel = _real_video_meta
-    elif decode == "fake":
-        kernel = _fake_video_meta
-    else:
-        raise ValueError(f"unknown decode mode {decode!r}")
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            metas = [kernel(d) for d in pdf[data_col]]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf[id_col].values,
-                    "duration_s": [m["duration_s"] for m in metas],
-                    "n_frames": [m["n_frames"] for m in metas],
-                    "width": [m["width"] for m in metas],
-                    "height": [m["height"] for m in metas],
-                }
-            )
-
-    return df.select(id_col, data_col).mapInPandas(batches, VIDEO_META_DDL)
-
-
-def extract_header_metadata_fused(
-    df: DataFrame,
-    image_cols: tuple[str, ...] = (),
-    audio_cols: tuple[str, ...] = (),
-    video_cols: tuple[str, ...] = (),
-    id_col: str = "media_id",
-) -> DataFrame:
-    """Header metadata for MANY media columns in ONE Arrow pass.
-
-    Round 12 (guide §4.2, r11 verdict ask #4): a multi-format
-    certification entry built from the per-column extractors costs one
-    MapInPandas boundary per format plus (formats−1) joins — for
-    ``multimodal_header_decode`` that was 10 Arrow legs + 9 joins whose
-    wall was Catalyst analysis of the 10-leg plan, not executor work.
-    Dispatching per column inside ONE kernel makes N formats cost one
-    boundary, one scan of the constructed media frame, and zero joins.
-
-    Per-format results are IDENTICAL to the single-column extractors:
-    the same kernels run per cell (``_real_decode_image``,
-    ``_real_decode_audio``, ``_real_video_meta`` — decode="real"
-    semantics, including their error contracts); only the plan shape
-    changes. Unused per-format outputs (hash features) are dropped
-    after decode, exactly as the per-leg form dropped them post-join.
-
-    Output: ``id_col`` plus, per image column c — ``{c}_width int,
-    {c}_height int, {c}_channels int``; per audio column c —
-    ``{c}_rate int, {c}_samples long, {c}_duration_s double``
-    (unrounded; callers round); per video column c — ``{c}_duration_s
-    double, {c}_n_frames long, {c}_width int, {c}_height int``.
-    """
-    fields = [f"{id_col} long"]
-    for c in image_cols:
-        fields += [f"{c}_width int", f"{c}_height int", f"{c}_channels int"]
-    for c in audio_cols:
-        fields += [f"{c}_rate int", f"{c}_samples long", f"{c}_duration_s double"]
-    for c in video_cols:
-        fields += [
-            f"{c}_duration_s double",
-            f"{c}_n_frames long",
-            f"{c}_width int",
-            f"{c}_height int",
-        ]
-    ddl = ", ".join(fields)
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {id_col: pdf[id_col].values}
-            for c in image_cols:
-                decoded = [_real_decode_image(d) for d in pdf[c]]
-                out[f"{c}_width"] = [d[0] for d in decoded]
-                out[f"{c}_height"] = [d[1] for d in decoded]
-                out[f"{c}_channels"] = [d[2] for d in decoded]
-            for c in audio_cols:
-                decoded = [_real_decode_audio(d) for d in pdf[c]]
-                out[f"{c}_rate"] = [d[0] for d in decoded]
-                out[f"{c}_samples"] = [d[1] for d in decoded]
-                out[f"{c}_duration_s"] = [d[2] for d in decoded]
-            for c in video_cols:
-                metas = [_real_video_meta(d) for d in pdf[c]]
-                out[f"{c}_duration_s"] = [m["duration_s"] for m in metas]
-                out[f"{c}_n_frames"] = [m["n_frames"] for m in metas]
-                out[f"{c}_width"] = [m["width"] for m in metas]
-                out[f"{c}_height"] = [m["height"] for m in metas]
-            yield pd.DataFrame(out)
-
-    cols = [id_col, *image_cols, *audio_cols, *video_cols]
-    return df.select(*cols).mapInPandas(batches, ddl)
 
 
 def media_table_from_entries(entries: DataFrame) -> DataFrame:
@@ -1513,8 +1245,8 @@ def _jpeg_pixels(d: bytes):
     Huffman (SOF2) delegates to `_jpeg_pixels_progressive`. None for
     non-JPEG bytes, malformed/truncated streams, and out-of-scope
     processes (arithmetic/lossless/differential —
-    `_jpeg_unsupported_kind` names them so decode="real" can raise
-    the loud codec boundary).
+    `_jpeg_unsupported_kind` names them so `_real_decode_image` can
+    raise the loud codec boundary).
 
     Scale note: this is the correctness tier — a pure-Python Huffman
     loop (~1 MB/s/core). At 100 TB the hash-fingerprint tier or a real
@@ -1582,7 +1314,7 @@ def _jpeg_pixels(d: bytes):
         elif marker == _JPEG_SOF_PROGRESSIVE:
             return _jpeg_pixels_progressive(d)
         elif marker in _JPEG_SOF_UNSUPPORTED:
-            return None  # named by _jpeg_unsupported_kind; loud in decode="real"
+            return None  # named by _jpeg_unsupported_kind; loud in _real_decode_image
         elif marker == 0xDD:  # DRI
             restart_interval = int.from_bytes(body[:2], "big")
         elif marker == 0xDA:  # SOS
@@ -2337,8 +2069,10 @@ def perceptual_hash(data: bytes, method: str = "ahash") -> int | None:
     compares horizontal neighbors on a 9×8 grid. None when the format
     needs a codec."""
     gray = decode_pixels(data)
-    if gray is None:
-        return None
+    return None if gray is None else _phash_gray(gray, method)
+
+
+def _phash_gray(gray, method: str) -> int:
     if method == "ahash":
         g = _grid_mean(gray, 8, 8)
         return _bits_to_int64((g > g.mean()).ravel())
@@ -2346,118 +2080,6 @@ def perceptual_hash(data: bytes, method: str = "ahash") -> int | None:
         g = _grid_mean(gray, 8, 9)
         return _bits_to_int64((g[:, 1:] > g[:, :-1]).ravel())
     raise ValueError(f"unknown perceptual hash method {method!r}")
-
-
-PHASH_DDL = "media_id long, width int, height int, phash long"
-
-
-def image_perceptual_hashes(
-    media: DataFrame,
-    id_col: str = "media_id",
-    data_col: str = "data",
-    method: str = "ahash",
-) -> DataFrame:
-    """(media_id, width, height, phash) via Arrow-batched mapInPandas —
-    real pixels for PPM/PGM/raw-BMP, null phash (and null dims) for
-    codec-requiring formats. Narrow op: no shuffle, bytes never leave
-    the partition."""
-    cols = media.select(
-        F.col(id_col).alias("media_id"), F.col(data_col).alias("data")
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {"media_id": [], "width": [], "height": [], "phash": []}
-            for mid, data in zip(pdf["media_id"], pdf["data"]):
-                data = bytes(data) if data is not None else b""
-                gray = decode_pixels(data)
-                out["media_id"].append(mid)
-                if gray is None:
-                    out["width"].append(None)
-                    out["height"].append(None)
-                    out["phash"].append(None)
-                else:
-                    out["width"].append(gray.shape[1])
-                    out["height"].append(gray.shape[0])
-                    out["phash"].append(perceptual_hash(data, method))
-            yield pd.DataFrame(out)
-
-    return cols.mapInPandas(batches, schema=PHASH_DDL)
-
-
-RESIZE_DDL = "media_id long, in_w int, in_h int, out_w int, out_h int, pixels binary"
-
-
-def resize_images(
-    media: DataFrame,
-    out_w: int,
-    out_h: int,
-    id_col: str = "media_id",
-    data_col: str = "data",
-) -> DataFrame:
-    """Box-filter resize of decodable images (the `resize` stage of a
-    multimodal training pipeline — thumbnail/patch normalization before
-    feature extraction). Decodes the grayscale plane (PPM/PGM/BMP/PNG/
-    baseline-JPEG/GIF/TIFF — every format ``decode_pixels`` covers),
-    box-averages to exactly ``out_h × out_w`` (area-weighted integer
-    pixel boundaries ``floor(i·dim/out)``, the same kernel the
-    perceptual hashes use), quantizes ``floor(x + 0.5)`` clamped to
-    [0, 255], and emits the resized plane as row-major bytes — a valid
-    payload for a downstream encoder or model input. Codec-requiring
-    formats yield null pixels (and null dims), same degradation
-    contract as ``image_perceptual_hashes``.
-
-    Scale: Arrow-batched ``mapInPandas``, rows processed within their
-    input partition — no shuffle; output rows are a bounded
-    ``out_w·out_h`` bytes regardless of input size, so the stage
-    SHRINKS data (upstream should size-repartition for decode-cost
-    balance, as with the other media kernels).
-    """
-    import numpy as np
-
-    cols = media.select(
-        F.col(id_col).alias("media_id"), F.col(data_col).alias("data")
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {
-                "media_id": pdf["media_id"].values,
-                "in_w": [],
-                "in_h": [],
-                "out_w": [],
-                "out_h": [],
-                "pixels": [],
-            }
-            for data in pdf["data"]:
-                data = bytes(data) if data is not None else b""
-                gray = decode_pixels(data)
-                if gray is None:
-                    out["in_w"].append(None)
-                    out["in_h"].append(None)
-                    out["out_w"].append(None)
-                    out["out_h"].append(None)
-                    out["pixels"].append(None)
-                    continue
-                g = _grid_mean(gray, out_h, out_w)
-                q = np.clip(np.floor(g + 0.5), 0, 255).astype(np.uint8)
-                out["in_w"].append(gray.shape[1])
-                out["in_h"].append(gray.shape[0])
-                out["out_w"].append(out_w)
-                out["out_h"].append(out_h)
-                out["pixels"].append(q.tobytes())
-            yield pd.DataFrame(
-                {
-                    k: (
-                        pd.array(v, dtype="Int32")
-                        if k in ("in_w", "in_h", "out_w", "out_h")
-                        else v
-                    )
-                    for k, v in out.items()
-                }
-            )
-
-    return cols.mapInPandas(batches, schema=RESIZE_DDL)
 
 
 # -- real PCM decode + audio fingerprinting ------------------------------------
@@ -3090,44 +2712,263 @@ def audio_fingerprint64(data: bytes) -> int | None:
     return _fingerprint_from_mono(decoded[1])
 
 
-AUDIO_FP_DDL = "media_id long, sample_rate int, n_samples long, fingerprint long"
+# -- the decode dispatch and the per-format operators --------------------------
+
+
+class CellKernel(NamedTuple):
+    """A per-cell decode: ``fn(data)`` returns a tuple aligned with
+    ``fields`` (``(name, Spark type)`` pairs), or None for a row whose
+    fields are all null. Whatever ``fn`` raises fails the task."""
+
+    fn: Callable[[bytes], tuple | None]
+    fields: tuple[tuple[str, str], ...]
+
+
+# pandas dtypes per declared Spark type. A plain list with None in it
+# becomes float64, which rounds every 64-bit value above 2^53 in the
+# batch — integers are built as nullable extension arrays instead.
+_PANDAS_DTYPE = {"int": "Int32", "long": "Int64", "double": "float64"}
+
+
+def decode_media(
+    df: DataFrame,
+    id_col: str,
+    specs: Sequence[tuple[str, CellKernel, str]],
+) -> DataFrame:
+    """Run every requested cell kernel in ONE Arrow-batched
+    ``mapInPandas`` pass over ``df``.
+
+    Each spec is ``(column, kernel, prefix)``: ``kernel.fn`` runs on
+    every cell of the binary ``column`` (a null cell reads as empty
+    bytes) and its fields come out as ``{prefix}{name}``. The output is
+    ``id_col long`` followed by every spec's fields in spec order, each
+    column built once with its declared type. N formats therefore cost
+    one Python boundary, one scan and no joins.
+
+    Partitioning: rows are decoded in place per input partition — no
+    shuffle. Upstream should repartition by size so a batch of large
+    blobs does not exceed executor memory (the same per-task byte
+    budget as the ingest walker).
+    """
+    fields = [
+        (prefix + name, typ)
+        for _col, kernel, prefix in specs
+        for name, typ in kernel.fields
+    ]
+    ddl = ", ".join([f"{id_col} long"] + [f"{n} {t}" for n, t in fields])
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            out = {id_col: pdf[id_col].values}
+            for col, kernel, prefix in specs:
+                rows = [
+                    kernel.fn(bytes(d) if d is not None else b"")
+                    for d in pdf[col]
+                ]
+                for i, (name, typ) in enumerate(kernel.fields):
+                    values = [None if r is None else r[i] for r in rows]
+                    dtype = _PANDAS_DTYPE.get(typ)
+                    out[prefix + name] = (
+                        pd.array(values, dtype=dtype) if dtype else values
+                    )
+            yield pd.DataFrame(out)
+
+    cols = dict.fromkeys([id_col, *(col for col, _k, _p in specs)])
+    return df.select(*cols).mapInPandas(batches, ddl)
+
+
+IMAGE_FEATURES = CellKernel(
+    _real_decode_image,
+    (("width", "int"), ("height", "int"), ("channels", "int"),
+     ("feature", "array<float>")),
+)
+
+AUDIO_FEATURES = CellKernel(
+    _real_decode_audio,
+    (("sample_rate", "int"), ("n_samples", "long"), ("duration_s", "double"),
+     ("mfcc", "array<float>")),
+)
+
+_VIDEO_META_FIELDS = (
+    ("duration_s", "double"), ("n_frames", "long"), ("width", "int"),
+    ("height", "int"),
+)
+
+VIDEO_META = CellKernel(
+    lambda data: tuple(_real_video_meta(data)[n] for n, _t in _VIDEO_META_FIELDS),
+    _VIDEO_META_FIELDS,
+)
+
+
+def _fingerprint_cell(data: bytes) -> tuple | None:
+    decoded = decode_pcm(data)
+    if decoded is None:
+        return None
+    rate, mono = decoded
+    # fingerprint from the decode already in hand — a second
+    # decode_pcm(data) would re-run the whole (sequential, per-bit for
+    # FLAC) frame decode
+    return rate, int(mono.size), _fingerprint_from_mono(mono)
+
+
+AUDIO_FINGERPRINT = CellKernel(
+    _fingerprint_cell,
+    (("sample_rate", "int"), ("n_samples", "long"), ("fingerprint", "long")),
+)
+
+
+def phash_kernel(method: str = "ahash") -> CellKernel:
+    """Decoded dims + 64-bit perceptual hash; null for bytes
+    ``decode_pixels`` cannot decode."""
+
+    def cell(data: bytes) -> tuple | None:
+        gray = decode_pixels(data)
+        if gray is None:
+            return None
+        return gray.shape[1], gray.shape[0], _phash_gray(gray, method)
+
+    return CellKernel(cell, (("width", "int"), ("height", "int"), ("phash", "long")))
+
+
+def resize_kernel(out_w: int, out_h: int) -> CellKernel:
+    """Box-filter resize to ``out_h × out_w`` grayscale bytes; null for
+    bytes ``decode_pixels`` cannot decode (see ``resize_images``)."""
+
+    def cell(data: bytes) -> tuple | None:
+        import numpy as np
+
+        gray = decode_pixels(data)
+        if gray is None:
+            return None
+        g = _grid_mean(gray, out_h, out_w)
+        q = np.clip(np.floor(g + 0.5), 0, 255).astype(np.uint8)
+        return gray.shape[1], gray.shape[0], out_w, out_h, q.tobytes()
+
+    return CellKernel(
+        cell,
+        (("in_w", "int"), ("in_h", "int"), ("out_w", "int"), ("out_h", "int"),
+         ("pixels", "binary")),
+    )
+
+
+def keyframes_kernel(every_n: int = 1) -> CellKernel:
+    """Every ``every_n``-th MP4/MOV keyframe as ``(frame_idx, frame)``
+    structs — the raw codec bitstream sample sliced out of ``mdat``
+    (frame_idx = 1-based sample number, see ``mp4_keyframe_samples``).
+    Non-BMFF bytes raise NotImplementedError (decoding the samples to
+    pixels is the codec boundary)."""
+
+    def cell(data: bytes) -> tuple:
+        samples = mp4_keyframe_samples(data)
+        if samples is None:
+            raise NotImplementedError(
+                f"keyframe sampling needs an MP4/MOV sample table; "
+                f"bytes with magic {data[:8].hex()!r} need a demuxer (PyAV)"
+            )
+        # a malformed-but-parseable stco/stsz can point past the blob;
+        # skip such samples rather than emitting truncated payloads
+        return ([
+            {"frame_idx": k, "frame": data[off : off + size]}
+            for k, off, size in samples[:: max(1, every_n)]
+            if off + size <= len(data)
+        ],)
+
+    return CellKernel(
+        cell, (("keyframes", "array<struct<frame_idx:int,frame:binary>>"),)
+    )
+
+
+def _decode_column(
+    df: DataFrame, data_col: str, id_col: str, kernel: CellKernel
+) -> DataFrame:
+    """One kernel over one column, keyed by ``media_id``."""
+    media = df.select(F.col(id_col).alias("media_id"), F.col(data_col))
+    return decode_media(media, "media_id", [(data_col, kernel, "")])
+
+
+def extract_image_features(
+    df: DataFrame, data_col: str = "data", id_col: str = "media_id"
+) -> DataFrame:
+    """image binary → (width, height, channels, 16-d feature): true
+    dims/channels from the header, a 4×4 grid-mean luminance feature
+    where the pixels decode, a hash feature where only the header
+    parses; NotImplementedError for formats that need a codec."""
+    return _decode_column(df, data_col, id_col, IMAGE_FEATURES)
+
+
+def extract_audio_features(
+    df: DataFrame, data_col: str = "data", id_col: str = "media_id"
+) -> DataFrame:
+    """audio binary → (sample_rate, n_samples, duration_s, 13-d
+    log-RMS feature) — see ``_real_decode_audio``; unknown magic raises
+    NotImplementedError."""
+    return _decode_column(df, data_col, id_col, AUDIO_FEATURES)
+
+
+def extract_video_metadata(
+    df: DataFrame, data_col: str = "data", id_col: str = "media_id"
+) -> DataFrame:
+    """video binary → container metadata (duration, frame count, dims):
+    MP4/MOV mvhd, AVI avih and Matroska/WebM EBML headers; unrecognized
+    containers raise NotImplementedError. Fields a container doesn't
+    carry are null (MP4 mvhd has duration but not dims/frames; AVI avih
+    has all; Matroska has duration + dims)."""
+    return _decode_column(df, data_col, id_col, VIDEO_META)
+
+
+def sample_video_frames(
+    df: DataFrame, data_col: str = "data", id_col: str = "media_id",
+    every_n: int = 30,
+) -> DataFrame:
+    """video binary → exploded frame rows (media_id, frame_idx, frame):
+    every ``every_n``-th MP4/MOV keyframe (``keyframes_kernel``),
+    inlined JVM-side."""
+    return _decode_column(
+        df, data_col, id_col, keyframes_kernel(every_n)
+    ).select("media_id", F.inline("keyframes"))
+
+
+def image_perceptual_hashes(
+    media: DataFrame,
+    id_col: str = "media_id",
+    data_col: str = "data",
+    method: str = "ahash",
+) -> DataFrame:
+    """(media_id, width, height, phash) — real pixels for every format
+    ``decode_pixels`` covers, null phash (and null dims) for
+    codec-requiring formats."""
+    return _decode_column(media, data_col, id_col, phash_kernel(method))
+
+
+def resize_images(
+    media: DataFrame,
+    out_w: int,
+    out_h: int,
+    id_col: str = "media_id",
+    data_col: str = "data",
+) -> DataFrame:
+    """Box-filter resize of decodable images (the `resize` stage of a
+    multimodal training pipeline — thumbnail/patch normalization before
+    feature extraction). Decodes the grayscale plane (every format
+    ``decode_pixels`` covers), box-averages to exactly ``out_h × out_w``
+    (area-weighted integer pixel boundaries ``floor(i·dim/out)``, the
+    same kernel the perceptual hashes use), quantizes ``floor(x + 0.5)``
+    clamped to [0, 255], and emits (media_id, in_w, in_h, out_w, out_h,
+    pixels) with the resized plane as row-major bytes. Codec-requiring
+    formats yield null pixels (and null dims), the same degradation
+    contract as ``image_perceptual_hashes``. Output rows are a bounded
+    ``out_w·out_h`` bytes regardless of input size, so the stage
+    SHRINKS data."""
+    return _decode_column(media, data_col, id_col, resize_kernel(out_w, out_h))
 
 
 def audio_fingerprints(
     media: DataFrame, id_col: str = "media_id", data_col: str = "data"
 ) -> DataFrame:
-    """(media_id, sample_rate, n_samples, fingerprint) via Arrow-batched
-    mapInPandas — real PCM decode for uncompressed WAV, null row values
-    for codec-requiring formats. Narrow, shuffle-free stage."""
-    cols = media.select(
-        F.col(id_col).alias("media_id"), F.col(data_col).alias("data")
-    )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out = {
-                "media_id": [], "sample_rate": [], "n_samples": [],
-                "fingerprint": [],
-            }
-            for mid, data in zip(pdf["media_id"], pdf["data"]):
-                data = bytes(data) if data is not None else b""
-                decoded = decode_pcm(data)
-                out["media_id"].append(mid)
-                if decoded is None:
-                    out["sample_rate"].append(None)
-                    out["n_samples"].append(None)
-                    out["fingerprint"].append(None)
-                else:
-                    rate, mono = decoded
-                    out["sample_rate"].append(rate)
-                    out["n_samples"].append(int(mono.size))
-                    # fingerprint from the decode already in hand — a
-                    # second decode_pcm(data) would re-run the whole
-                    # (sequential, per-bit for FLAC) frame decode
-                    out["fingerprint"].append(_fingerprint_from_mono(mono))
-            yield pd.DataFrame(out)
-
-    return cols.mapInPandas(batches, AUDIO_FP_DDL)
+    """(media_id, sample_rate, n_samples, fingerprint) — real PCM decode
+    (``decode_pcm``) and the 64-bit energy-envelope fingerprint; null
+    row values for codec-requiring formats."""
+    return _decode_column(media, data_col, id_col, AUDIO_FINGERPRINT)
 
 
 MEDIA_PROFILE_DDL = (
@@ -3146,7 +2987,7 @@ def profile_media(df: DataFrame) -> DataFrame:
     rate/length/duration + energy fingerprint, video
     duration/frames/dims. Every kernel degrades to null on undecodable
     bytes (the CLI bulk path must NEVER die on one weird file — unlike
-    ``extract_*_features(decode="real")``, whose loud NotImplementedError
+    ``extract_*_features``, whose loud NotImplementedError
     is the right contract for targeted extraction).
 
     Scale shape: one Arrow-batched ``mapInPandas`` stage, no shuffle —

@@ -4034,109 +4034,12 @@ _CATALOG["eval_mrr_bm25"] = (
 )
 
 
-# Static, hand-maintained coverage schedule.  The external correctness
-# gate samples exactly the first 50 ``queries()`` entries per run, so a
-# 212-entry catalog needs a deliberate front-of-list.  Round-12
-# rotation (the r10/r11 precedent: new entries and changed executed
-# plans re-certify in-window even when value-identical): slot 1 is the
-# round-12 addition (maintenance_stream_index_compaction_fold — the
-# fold-timing twin, first driver row); slots 2-6 re-certify the five
-# entries whose EXECUTED plans changed in this optimization round
-# (graph_pagerank — per-round nodes join removed + long-keyed edge
-# distinct; graph_label_propagation — pre-distinct join inputs;
-# multimodal_header_decode — ten Arrow legs fused to one;
-# dedup_containment — size-conjunct confirm + checkpointed sort input;
-# eval_ndcg_bm25 — single relevance pass), all verified value-identical
-# against the oracle at sf0.001/0.01/0.1 locally this round.  Slots
-# 7-23 are the 17 spilled r5-stale entries named in the r11 schedule
-# comment (the queued rotation debt).  Slots 24-42 are the 19 stalest
-# remaining entries — every one carried its last driver row in round 7
-# (computed from the committed CORRECTNESS_r*.json history,
-# alphabetical within the tie).  Slots 43-50 are the permanent
-# reference-parity spine required in EVERY window.  This list is a
-# plain literal on purpose: the ordering must be deterministic and
-# independent of any files on disk (a previous revision derived it
-# from CORRECTNESS_r*.json artifacts at call time, which made the
-# public API's ordering nondeterministic and self-referential).
-# Update it by hand between rounds; `tools/check_correctness.py`
-# always runs ALL entries regardless of order.
-_SCHEDULE_FRONT: tuple[str, ...] = (
-    # -- round-12 window --
-    # slot 1: the round-12 addition (never driver-sampled)
-    "maintenance_stream_index_compaction_fold",
-    # slots 2-6: executed plans changed this round -- re-certify
-    "graph_pagerank",
-    "graph_label_propagation",
-    "multimodal_header_decode",
-    "dedup_containment",
-    "eval_ndcg_bm25",
-    # slots 7-23: the 17 spilled r5-stale entries (r11 queue, see above)
-    "rel_part_type_stats",
-    "rel_percentiles",
-    "rel_pivot_status",
-    "rel_posexplode_words",
-    "rel_range_join_price_bands",
-    "rel_revenue_by_nation",
-    "rel_sessionize",
-    "rel_string_funcs",
-    "sample_weighted_priority",
-    "sketch_theta_setops",
-    "source_bucketed_join",
-    "source_pruned_manifest",
-    "text_bigram_topk",
-    "text_fingerprint",
-    "text_lang_id",
-    "text_quality",
-    "text_token_counts",
-    # slots 24-42: the 19 stalest entries (last driver-certified r7,
-    # alphabetical; computed from the committed CORRECTNESS_r*.json)
-    "ann_ivf_topk",
-    "corpus_shuffle",
-    "crossdoc_spans",
-    "dedup_span_removal",
-    "multimodal_content_decode",
-    "rel_array_funcs",
-    "rel_intersect_having",
-    "rel_rollup_sales",
-    "rel_running_totals",
-    "rel_set_ops",
-    "rel_ship_delay_by_year",
-    "rel_supplier_balance_by_nation",
-    "rel_top_orders",
-    "rel_window_top3_per_cust",
-    "sample_split",
-    "text_char_entropy",
-    "text_gopher_quality",
-    "text_pii_redact",
-    "text_topgram_repetition",
-    # -- slots 43-50: permanent reference-parity spine (every round)
-    "q1_projection_hash",
-    "q2_include_text",
-    "q3_size_filter",
-    "q4_dedup_hash_groups",
-    "q5_extract_strings",
-    "q6_union_group",
-    "source_nested_walk",
-    "source_url_ingest",
-)
-
-
-def _ordered_names() -> list[str]:
-    front = [n for n in _SCHEDULE_FRONT if n in _CATALOG]
-    rest = [n for n in _CATALOG if n not in set(_SCHEDULE_FRONT)]
-    return front + rest
-
-
 def queries() -> dict[str, QueryFn]:
-    return {name: _CATALOG[name][0] for name in _ordered_names()}
+    return {name: fn for name, (fn, _sql) in _CATALOG.items()}
 
 
 def oracle_sql() -> dict[str, str]:
-    return {
-        name: _CATALOG[name][1]
-        for name in _ordered_names()
-        if _CATALOG[name][1] is not None
-    }
+    return {name: sql for name, (_fn, sql) in _CATALOG.items() if sql is not None}
 
 
 def flagship(spark: SparkSession, sf_dir: str = "/root/testdata/sf0.001") -> DataFrame:

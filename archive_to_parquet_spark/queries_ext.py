@@ -1237,8 +1237,8 @@ def multimodal_header_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     claim) and Matroska/WebM
     bytes are constructed JVM-side with
     closed-form geometry (width/height/sample-rate/duration derived
-    from doc_id), pushed through the Arrow ``mapInPandas`` decoders in
-    ``decode="real"`` mode, and the parsed metadata must equal what the
+    from doc_id), pushed through the image/audio/video cell kernels of
+    one ``decode_media`` pass, and the parsed metadata must equal what the
     construction implies — the oracle states the closed form. This
     certifies the binary-column plumbing AND the header parsers
     end-to-end (reference parity for the stub-free formats; codec
@@ -1260,19 +1260,21 @@ def multimodal_header_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     1e9 and the dims against the closed form. Same boundary: container
     metadata only, no frame/codec claim.
 
-    Scale: decode is per-row in Arrow batches, no shuffle; the join of
-    the feature frames keys on doc_id (broadcast-sized here; at corpus
-    scale all sides are co-partitioned by id).
+    Scale: decode is per-row in Arrow batches in one Python pass, no
+    join.
     """
     from archive_to_parquet_spark.operators.dedup import spread_small_scan
     from archive_to_parquet_spark.operators.multimodal import (
-        extract_header_metadata_fused,
+        AUDIO_FEATURES,
+        IMAGE_FEATURES,
+        VIDEO_META,
+        decode_media,
     )
 
     # spread the one-split documents scan across the cluster BEFORE the
-    # byte construction + fused decode (guide §2.5): with the ten
-    # per-format legs fused into one kernel the whole decode otherwise
-    # runs as a single task; no-op on a wide 100-TB scan
+    # byte construction + decode (guide §2.5): with all ten formats in
+    # one pass the whole decode otherwise runs as a single task; no-op
+    # on a wide 100-TB scan
     docs = spread_small_scan(
         _t(spark, sf_dir, "documents").select("doc_id"), "doc_id"
     )
@@ -1491,34 +1493,31 @@ def multimodal_header_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("adts", adts)
         .drop("_adts_frame_hex", "_n_frames")
     )
-    # Round 12 (guide §4.2, r11 verdict ask #4): the ten per-format
-    # extractor legs + nine doc_id joins are fused into ONE Arrow
-    # boundary — same kernels per cell, identical per-format results,
-    # but the plan is one MapInPandas over one scan of the constructed
-    # media frame instead of a 10-leg join tree whose wall was Catalyst
-    # analysis, not executor work.
-    fused = extract_header_metadata_fused(
+    # one decode_media pass over all ten columns: one MapInPandas over
+    # one scan of the constructed media frame, no per-format joins
+    audio = ("wav", "ogg", "opus", "m4a", "adts", "aiff", "au", "mp3")
+    decoded = decode_media(
         media,
-        image_cols=("png",),
-        audio_cols=("wav", "ogg", "opus", "m4a", "adts", "aiff", "au", "mp3"),
-        video_cols=("webm",),
-        id_col="doc_id",
+        "doc_id",
+        [("png", IMAGE_FEATURES, "png_")]
+        + [(c, AUDIO_FEATURES, f"{c}_") for c in audio]
+        + [("webm", VIDEO_META, "webm_")],
     )
 
     def aud_cols(col: str, prefix: str) -> list:
         return [
-            F.col(f"{col}_rate").alias(f"{prefix}rate"),
-            F.col(f"{col}_samples").alias(f"{prefix}samples"),
+            F.col(f"{col}_sample_rate").alias(f"{prefix}rate"),
+            F.col(f"{col}_n_samples").alias(f"{prefix}samples"),
             F.round(f"{col}_duration_s", 6).alias(f"{prefix}duration_s"),
         ]
 
-    return fused.select(
+    return decoded.select(
         "doc_id",
         F.col("png_width").alias("width"),
         F.col("png_height").alias("height"),
         F.col("png_channels").alias("channels"),
-        F.col("wav_rate").alias("sample_rate"),
-        F.col("wav_samples").alias("n_samples"),
+        F.col("wav_sample_rate").alias("sample_rate"),
+        F.col("wav_n_samples").alias("n_samples"),
         F.round("wav_duration_s", 6).alias("duration_s"),
         *aud_cols("ogg", "ogg_"),
         *aud_cols("opus", "opus_"),

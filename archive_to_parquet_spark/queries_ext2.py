@@ -898,11 +898,11 @@ def multimodal_content_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     step past ``multimodal_header_decode``'s header parsing): per doc,
 
     - a constant-gray 8×8 binary PGM (pixel value doc_id % 251) goes
-      through ``extract_image_features(decode="real")`` — the 4×4 pixel
+      through the ``IMAGE_FEATURES`` kernel — the 4×4 pixel
       grid-mean feature of a constant image must equal that constant:
       p00 = (v/255)·2 − 1 exactly, stated by the oracle;
     - a 128-sample PCM WAV (64 silent samples, then 64 at amplitude
-      16384 = 0.5 full-scale) goes through ``audio_fingerprints`` —
+      16384 = 0.5 full-scale) goes through ``AUDIO_FINGERPRINT`` —
       the 64-block energy envelope is 32 zero blocks then 32 hot
       blocks, so the median-thresholded fingerprint is exactly the
       high-32-bits pattern: −2^32 as signed int64;
@@ -911,8 +911,8 @@ def multimodal_content_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
       the REAL lossless frame decode (RFC 9639, round 7) — bit-for-bit
       the same PCM, so flac_rate/flac_n/flac_fp must equal the WAV
       leg's closed forms;
-    - a minimal MP4 goes through ``sample_video_frames(decode="real")``
-      — the stss/stsc/stco/stsz walk must slice exactly the three
+    - a minimal MP4 goes through ``keyframes_kernel`` — the
+      stss/stsc/stco/stsz walk must slice exactly the three
       construction-time keyframe payloads out of mdat (sha256 literals
       in the oracle);
     - a forward-filtered 8×8 grayscale PNG (``_png_fixture``: right
@@ -935,13 +935,15 @@ def multimodal_content_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
       REAL pure-stdlib GIF-LZW decoder — grid columns must hit the
       closed forms for 20 and 230.
 
-    All four decoders run as Arrow ``mapInPandas`` stages — per-row,
-    no shuffle; the result frames join on doc_id.
+    All eight columns decode in ONE ``decode_media`` pass — one Arrow
+    ``mapInPandas`` node, per row, no join and no shuffle; the keyframe
+    count and digest are computed JVM-side from the keyframes array.
     """
     from archive_to_parquet_spark.operators.multimodal import (
-        audio_fingerprints,
-        extract_image_features,
-        sample_video_frames,
+        AUDIO_FINGERPRINT,
+        IMAGE_FEATURES,
+        decode_media,
+        keyframes_kernel,
     )
 
     docs = _t(spark, sf_dir, "documents").select("doc_id").filter(
@@ -985,110 +987,62 @@ def multimodal_content_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
         flac.alias("flac"),
     )
 
-    img = extract_image_features(
-        media, data_col="pgm", id_col="doc_id", decode="real"
-    ).select(
-        F.col("media_id").alias("doc_id"),
-        "width",
-        "height",
-        F.floor(
-            F.element_at("feature", 1).cast("double") * 1e6 + F.lit(0.5)
-        ).cast("long").alias("p00_e6"),
+    decoded = decode_media(
+        media,
+        "doc_id",
+        [(c, IMAGE_FEATURES, f"{c}_") for c in ("pgm", "png", "jpg", "jpp", "gif")]
+        + [(c, AUDIO_FINGERPRINT, f"{c}_") for c in ("wav", "flac")]
+        + [("mp4", keyframes_kernel(every_n=1), "")],
     )
-    png_img = extract_image_features(
-        media, data_col="png", id_col="doc_id", decode="real"
-    ).select(
-        F.col("media_id").alias("doc_id"),
-        F.col("width").alias("png_width"),
-        F.col("height").alias("png_height"),
-        F.floor(
-            F.element_at("feature", 1).cast("double") * 1e6 + F.lit(0.5)
-        ).cast("long").alias("png_p00_e6"),
-        F.floor(
-            F.element_at("feature", 4).cast("double") * 1e6 + F.lit(0.5)
-        ).cast("long").alias("png_p03_e6"),
-    )
-    jpg_img = extract_image_features(
-        media, data_col="jpg", id_col="doc_id", decode="real"
-    ).select(
-        F.col("media_id").alias("doc_id"),
-        F.col("width").alias("jpg_width"),
-        F.col("height").alias("jpg_height"),
-        F.floor(
-            F.element_at("feature", 1).cast("double") * 1e6 + F.lit(0.5)
-        ).cast("long").alias("jpg_p00_e6"),
-        F.floor(
-            F.element_at("feature", 4).cast("double") * 1e6 + F.lit(0.5)
-        ).cast("long").alias("jpg_p03_e6"),
-    )
-    jpp_img = extract_image_features(
-        media, data_col="jpp", id_col="doc_id", decode="real"
-    ).select(
-        F.col("media_id").alias("doc_id"),
-        F.col("width").alias("jpp_width"),
-        F.floor(
-            F.element_at("feature", 1).cast("double") * 1e6 + F.lit(0.5)
-        ).cast("long").alias("jpp_p00_e6"),
-        F.floor(
-            F.element_at("feature", 4).cast("double") * 1e6 + F.lit(0.5)
-        ).cast("long").alias("jpp_p03_e6"),
-    )
-    gif_img = extract_image_features(
-        media, data_col="gif", id_col="doc_id", decode="real"
-    ).select(
-        F.col("media_id").alias("doc_id"),
-        F.col("width").alias("gif_width"),
-        F.floor(
-            F.element_at("feature", 1).cast("double") * 1e6 + F.lit(0.5)
-        ).cast("long").alias("gif_p00_e6"),
-        F.floor(
-            F.element_at("feature", 4).cast("double") * 1e6 + F.lit(0.5)
-        ).cast("long").alias("gif_p03_e6"),
-    )
-    aud = audio_fingerprints(media, id_col="doc_id", data_col="wav").select(
-        F.col("media_id").alias("doc_id"),
-        "sample_rate",
-        "n_samples",
-        F.col("fingerprint").alias("audio_fp"),
-    )
-    # the FLAC twin of the WAV leg: the REAL lossless frame decode
-    # (RFC 9639) must land on the identical closed forms
-    aud_flac = audio_fingerprints(
-        media, id_col="doc_id", data_col="flac"
-    ).select(
-        F.col("media_id").alias("doc_id"),
-        F.col("sample_rate").alias("flac_rate"),
-        F.col("n_samples").alias("flac_n"),
-        F.col("fingerprint").alias("flac_fp"),
-    )
-    vid = (
-        sample_video_frames(
-            media, data_col="mp4", id_col="doc_id", every_n=1, decode="real"
-        )
-        .groupBy(F.col("media_id").alias("doc_id"))
-        .agg(
-            F.count("*").cast("long").alias("n_keyframes"),
-            F.array_join(
+
+    def feature_e6(col: str, i: int):
+        return F.floor(
+            F.element_at(f"{col}_feature", i).cast("double") * 1e6 + F.lit(0.5)
+        ).cast("long")
+
+    # the digest of the keyframe payloads, in frame order — JVM-side
+    kf_digest = F.array_join(
+        F.transform(
+            F.array_sort(
                 F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.struct(F.col("frame_idx"), F.sha2("frame", 256).alias("s"))
-                        )
+                    "keyframes",
+                    lambda x: F.struct(
+                        x["frame_idx"].alias("frame_idx"),
+                        F.sha2(x["frame"], 256).alias("s"),
                     ),
-                    lambda x: x["s"],
-                ),
-                "",
-            ).alias("kf_digest"),
-        )
+                )
+            ),
+            lambda x: x["s"],
+        ),
+        "",
     )
-    return (
-        img.join(png_img, "doc_id")
-        .join(jpg_img, "doc_id")
-        .join(jpp_img, "doc_id")
-        .join(gif_img, "doc_id")
-        .join(aud, "doc_id")
-        .join(aud_flac, "doc_id")
-        .join(vid, "doc_id")
+    return decoded.select(
+        "doc_id",
+        F.col("pgm_width").alias("width"),
+        F.col("pgm_height").alias("height"),
+        feature_e6("pgm", 1).alias("p00_e6"),
+        "png_width",
+        "png_height",
+        feature_e6("png", 1).alias("png_p00_e6"),
+        feature_e6("png", 4).alias("png_p03_e6"),
+        "jpg_width",
+        "jpg_height",
+        feature_e6("jpg", 1).alias("jpg_p00_e6"),
+        feature_e6("jpg", 4).alias("jpg_p03_e6"),
+        "jpp_width",
+        feature_e6("jpp", 1).alias("jpp_p00_e6"),
+        feature_e6("jpp", 4).alias("jpp_p03_e6"),
+        "gif_width",
+        feature_e6("gif", 1).alias("gif_p00_e6"),
+        feature_e6("gif", 4).alias("gif_p03_e6"),
+        F.col("wav_sample_rate").alias("sample_rate"),
+        F.col("wav_n_samples").alias("n_samples"),
+        F.col("wav_fingerprint").alias("audio_fp"),
+        F.col("flac_sample_rate").alias("flac_rate"),
+        F.col("flac_n_samples").alias("flac_n"),
+        F.col("flac_fingerprint").alias("flac_fp"),
+        F.size("keyframes").cast("long").alias("n_keyframes"),
+        kf_digest.alias("kf_digest"),
     )
 
 

@@ -239,55 +239,6 @@ def _emit_and_exit(signum, frame) -> None:
         sys.stdout.flush()
     os._exit(0)
 
-# Optional executor-time capture (r11 verdict ask #8): at sf0.1 the
-# 8-vs-32-core wall ratios measure scheduling overhead, not the
-# operators — per-entry executorRunTime is the scale-credible signal
-# (constant across core counts while wall shrinks ⇒ the operator
-# parallelizes; exec ≪ wall ⇒ the entry is driver/overhead-bound).
-# Off by default (the driver contract is wall-time; enabling the UI
-# perturbs nothing measured but is opt-in anyway): set
-# SPARK_GRAFT_BENCH_EXEC_METRICS=1 and the artifact gains a
-# queries_exec_ms map (executorRunTime per entry, best-window run).
-_EXEC_METRICS = os.environ.get("SPARK_GRAFT_BENCH_EXEC_METRICS") == "1"
-
-
-def _exec_ms_probe(spark):
-    """Returns a callable `(min_stage_id) -> (max_stage_id, ms)` giving
-    the completed-stage executorRunTime accumulated by stages with id >
-    min_stage_id (None when the UI is off). Keyed on stage ids — a
-    cumulative total goes BACKWARDS when the UI store evicts old stages
-    mid-sweep (measured: negative per-entry deltas on a 5000-stage
-    sweep), while new-stage sums only need the RECENT window."""
-    import urllib.request
-
-    try:
-        url = spark.sparkContext.uiWebUrl
-        app_id = spark.sparkContext.applicationId
-    except Exception:
-        return None
-    if not url:
-        return None
-    base = f"{url}/api/v1/applications/{app_id}/stages?status=complete"
-
-    def since(min_stage_id: int):
-        try:
-            with urllib.request.urlopen(base) as r:
-                stages = json.load(r)
-            ids = [s["stageId"] for s in stages]
-            return (
-                max(ids, default=min_stage_id),
-                sum(
-                    s.get("executorRunTime", 0)
-                    for s in stages
-                    if s["stageId"] > min_stage_id
-                ),
-            )
-        except Exception:
-            return (min_stage_id, -1)
-
-    return since
-
-
 # Queries that exercise the distinct physical paths: scan+project+hash,
 # hash agg, big-big join + broadcast dims, window, sessionization,
 # shingle join, minhash LSH, broadcast ANN, regex-heavy text ops.
@@ -905,8 +856,6 @@ def _run_sweep(spark, qs, sf_dir: str, cpus: int, deadline: _Deadline) -> dict:
     pin_before: dict[str, float] = {}
     pin_after: dict[str, float] = {}
     prev_pin = pin_samples[-1]  # the sample taken after the ingest section
-    exec_probe = _exec_ms_probe(spark) if _EXEC_METRICS else None
-    exec_ms: dict[str, int] = {}
 
     # Per-query quiet-window retry (r6 verdict ask #3): host load is
     # BURSTY — a whole-sweep retry re-rolls every entry's window at
@@ -1031,14 +980,6 @@ def _run_sweep(spark, qs, sf_dir: str, cpus: int, deadline: _Deadline) -> dict:
             pin_before[name] = win_before
             pin_after[name] = win_after
             out[name] = round(best, 3)
-            if exec_probe is not None:
-                # one extra bracketed execution per entry (opt-in only:
-                # the flag changes sweep cost, never the timed numbers)
-                mark, _ = exec_probe(-1)
-                run_noop(qs[name](spark, sf_dir))
-                _, ms = exec_probe(mark)
-                if ms >= 0:
-                    exec_ms[name] = ms
             prev_pin = after
             entry_walls.append(time.time() - t_entry)
             _checkpoint()
@@ -1161,7 +1102,6 @@ def _run_sweep(spark, qs, sf_dir: str, cpus: int, deadline: _Deadline) -> dict:
         "tpch_total_normalized": round(sum(tpch_norm.values()), 3),
         "queries_normalized": per_query_norm,
         "tpch_normalized": tpch_norm,
-        **({"queries_exec_ms": exec_ms} if exec_ms else {}),
     }
 
 
@@ -1199,13 +1139,6 @@ def main() -> int:
         "bench",
         master=f"local[{cpus}]",
         shuffle_partitions=cpus,
-        extra_conf=(
-            # retain enough completed stages that a probe window never
-            # loses its own entry's stages to eviction
-            {"spark.ui.enabled": "true", "spark.ui.retainedStages": "20000"}
-            if _EXEC_METRICS
-            else None
-        ),
     )
 
     # warm-up: JVM, codegen, parquet footer caches

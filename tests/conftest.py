@@ -15,16 +15,6 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 if REPO not in sys.path:
     sys.path.insert(0, REPO)
 
-# The suite must neither PRUNE nor WRITE DRIVER_TRACE/: the
-# driver-contract tests call __spark_entry__.queries(), whose one-shot
-# prune wiped the committed 188-trace artifact after every full pytest
-# run (caught r7) — and test executions run at sf0.001, so letting
-# them WRITE would silently overwrite sf0.01 traces with wrong-scale
-# rows, which is worse.  Traces are a check_correctness-run artifact
-# only.
-os.environ.setdefault("SPARK_GRAFT_TRACE", "0")
-
-
 # -- per-test hard watchdog (VERDICT r6 defect #1) --------------------------
 # pytest.ini's faulthandler_timeout=600 dumps all thread stacks when a
 # test stalls, but it does not END the run — and the r6 stall was the

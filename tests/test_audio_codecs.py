@@ -239,7 +239,7 @@ def test_audio_features_real_covers_g711(spark):
     ramp = np.arange(256, dtype=np.uint8)
     wav = make_wav(7, 1, 8000, 8, 1, bytes(ramp))
     df = spark.createDataFrame([Row(media_id=1, data=bytes(wav))])
-    row = extract_audio_features(df, decode="real").collect()[0]
+    row = extract_audio_features(df).collect()[0]
     assert row.sample_rate == 8000
     assert row.n_samples == 256
     assert len(row.mfcc) == 13

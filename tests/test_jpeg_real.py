@@ -627,7 +627,7 @@ def test_progressive_deep_successive_approximation():
 
 
 def test_progressive_real_decode_feature_tier():
-    """decode='real' returns true pixel stats for a progressive JPEG —
+    """The image kernel returns true pixel stats for a progressive JPEG —
     the boundary docstring contract."""
     img = np.zeros((16, 16), dtype=np.uint8)
     img[:, 8:] = 230
@@ -641,7 +641,7 @@ def test_progressive_real_decode_feature_tier():
 
 
 def test_baseline_jpeg_real_decode_feature_and_phash():
-    """decode='real' returns true pixel stats; phash matches the PGM of
+    """The image kernel returns true pixel stats; phash matches the PGM of
     the same pixels (high-contrast image, so rounding can't flip bits)."""
     from tests.test_phash import make_ppm
 

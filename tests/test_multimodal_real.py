@@ -105,14 +105,14 @@ def test_sample_video_frames_real_slices_keyframes(spark):
     samples = [f"s{i}".encode() * 5 for i in range(6)]
     blob = make_mp4(samples, sync=[1, 3, 5])
     df = spark.createDataFrame([(1, bytearray(blob))], ["media_id", "data"])
-    rows = sample_video_frames(df, every_n=1, decode="real").collect()
+    rows = sample_video_frames(df, every_n=1).collect()
     assert [(r.frame_idx, bytes(r.frame)) for r in rows] == [
         (1, samples[0]),
         (3, samples[2]),
         (5, samples[4]),
     ]
     # every_n subsamples the keyframe list
-    rows2 = sample_video_frames(df, every_n=2, decode="real").collect()
+    rows2 = sample_video_frames(df, every_n=2).collect()
     assert [r.frame_idx for r in rows2] == [1, 5]
 
 
@@ -121,7 +121,7 @@ def test_sample_video_frames_real_rejects_non_mp4(spark):
 
     df = spark.createDataFrame([(1, bytearray(b"not a video"))], ["media_id", "data"])
     with pytest.raises(Exception, match="demuxer|NotImplemented"):
-        sample_video_frames(df, decode="real").collect()
+        sample_video_frames(df).collect()
 
 
 def test_image_features_real_pixels_for_ppm(spark):
@@ -135,7 +135,7 @@ def test_image_features_real_pixels_for_ppm(spark):
     px[:, 4:] = 255  # left black, right white
     blob = make_ppm(px)
     df = spark.createDataFrame([(1, bytearray(blob))], ["media_id", "data"])
-    row = extract_image_features(df, decode="real").collect()[0]
+    row = extract_image_features(df).collect()[0]
     assert (row.width, row.height, row.channels) == (8, 8, 3)
     want = [
         float(v) / 255.0 * 2.0 - 1.0
@@ -154,7 +154,7 @@ def test_audio_features_real_pcm_for_wav(spark):
     df = spark.createDataFrame(
         [(1, bytearray(make_wav(sig)))], ["media_id", "data"]
     )
-    row = extract_audio_features(df, decode="real").collect()[0]
+    row = extract_audio_features(df).collect()[0]
     assert row.sample_rate == 8000
     assert row.n_samples == 8000
     assert row.duration_s == pytest.approx(1.0, abs=1e-6)

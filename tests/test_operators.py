@@ -275,37 +275,6 @@ def test_language_id_heuristic(spark):
     assert out[4] == "und"
 
 
-def test_multimodal_plumbing(spark):
-    from archive_to_parquet_spark.operators.multimodal import (
-        extract_image_features,
-        sample_video_frames,
-    )
-
-    rows = [(i, bytes([i]) * (50 + i)) for i in range(8)]
-    df = spark.createDataFrame(rows, "media_id long, data binary")
-    feats = extract_image_features(df).collect()
-    assert len(feats) == 8
-    for r in feats:
-        assert len(r.feature) == 16
-        assert 16 <= r.width < 80
-    # deterministic: same bytes → same features
-    feats2 = extract_image_features(df).collect()
-    assert {(r.media_id, tuple(r.feature)) for r in feats} == {
-        (r.media_id, tuple(r.feature)) for r in feats2
-    }
-    frames = sample_video_frames(df, every_n=30).collect()
-    assert len(frames) >= 8
-    assert all(len(r.frame) == 32 for r in frames)
-    from archive_to_parquet_spark.operators.multimodal import extract_audio_features
-
-    audio = extract_audio_features(df).collect()
-    assert len(audio) == 8
-    for r in audio:
-        assert r.sample_rate in (8000, 16000, 22050, 44100)
-        assert abs(r.duration_s - r.n_samples / r.sample_rate) < 1e-9
-        assert len(r.mfcc) == 13
-
-
 def _tiny_png(w=320, h=240, color_type=6):
     import struct
 
@@ -341,8 +310,9 @@ def _tiny_wav(rate=44100, n_frames=44100, channels=2, bits=16):
 
 
 def test_real_header_decoders(spark):
-    """decode='real' reads true dimensions / sample metadata from PNG,
-    JPEG, GIF, BMP, PPM, and WAV headers — pure parsing, no codec."""
+    """The image/audio kernels read true dimensions / sample metadata
+    from PNG, JPEG, GIF, BMP, PPM, and WAV headers — pure parsing, no
+    codec."""
     import struct
 
     from archive_to_parquet_spark.operators.multimodal import (
@@ -372,7 +342,7 @@ def test_real_header_decoders(spark):
     ]
     df = spark.createDataFrame(rows, "media_id long, data binary")
     feats = {
-        r.media_id: r for r in extract_image_features(df, decode="real").collect()
+        r.media_id: r for r in extract_image_features(df).collect()
     }
     assert (feats[1].width, feats[1].height, feats[1].channels) == (320, 240, 4)
     assert (feats[2].width, feats[2].height, feats[2].channels) == (320, 240, 3)
@@ -384,7 +354,7 @@ def test_real_header_decoders(spark):
     assert (feats[8].width, feats[8].height, feats[8].channels) == (100, 50, 4)
 
     wav_df = spark.createDataFrame([(10, _tiny_wav())], "media_id long, data binary")
-    audio = extract_audio_features(wav_df, decode="real").collect()[0]
+    audio = extract_audio_features(wav_df).collect()[0]
     assert audio.sample_rate == 44100
     assert audio.n_samples == 44100
     assert audio.duration_s == pytest.approx(1.0)
@@ -392,9 +362,9 @@ def test_real_header_decoders(spark):
     # codec-requiring bytes fail loudly, not silently
     bad = spark.createDataFrame([(9, b"\x00\x01junk")], "media_id long, data binary")
     with pytest.raises(Exception, match="codec library"):
-        extract_image_features(bad, decode="real").collect()
+        extract_image_features(bad).collect()
     with pytest.raises(Exception, match="codec library"):
-        extract_audio_features(bad, decode="real").collect()
+        extract_audio_features(bad).collect()
 
 
 def test_media_table_classification(spark):
@@ -961,7 +931,7 @@ def test_real_audio_video_decode_via_spark(spark):
          (2, bytearray(_make_mp3()))],
         "media_id long, data binary",
     )
-    rows = {r.media_id: r for r in extract_audio_features(audio, decode="real").collect()}
+    rows = {r.media_id: r for r in extract_audio_features(audio).collect()}
     assert rows[1].sample_rate == 48000 and rows[1].n_samples == 96000
     assert rows[2].sample_rate == 44100
     assert len(rows[1].mfcc) == 13
@@ -971,7 +941,7 @@ def test_real_audio_video_decode_via_spark(spark):
          (3, bytearray(_make_webm(scale=2_000_000, width=320, height=240)))],
         "media_id long, data binary",
     )
-    out = {r.media_id: r for r in extract_video_metadata(video, decode="real").collect()}
+    out = {r.media_id: r for r in extract_video_metadata(video).collect()}
     assert abs(out[1].duration_s - 5.5) < 1e-9 and out[1].width is None
     assert out[2].n_frames == 250 and out[2].width == 640
     assert abs(out[3].duration_s - 2.0) < 1e-12 and out[3].width == 320

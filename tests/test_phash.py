@@ -219,3 +219,32 @@ def test_audio_fingerprint_similar_vs_different(spark):
         fps, id_col="media_id", sig_col="fingerprint", max_hamming=3
     ).collect()
     assert [(r["id_a"], r["id_b"]) for r in pairs] == [(1, 2)]
+
+
+def test_mixed_batch_keeps_64_bit_hashes_exact(spark):
+    """A null row in the same Arrow batch must not round the other rows'
+    64-bit hashes: a long column built from a plain list with None in it
+    becomes float64, which loses every value above 2^53."""
+    from archive_to_parquet_spark.operators.multimodal import (
+        audio_fingerprint64,
+        audio_fingerprints,
+        image_perceptual_hashes,
+        perceptual_hash,
+    )
+
+    rng = np.random.default_rng(0)
+    pgm = make_pgm(rng.integers(0, 256, (8, 8), dtype=np.uint8))
+    wav = make_wav(rng.uniform(-1, 1, 4096))
+    want_phash, want_fp = perceptual_hash(pgm), audio_fingerprint64(wav)
+    # both are outside float64's exact-integer range
+    assert float(want_phash) != want_phash and float(want_fp) != want_fp
+
+    junk = bytearray(b"\x00\x01junk")  # undecodable → null row
+    media = spark.createDataFrame(
+        [(1, bytearray(pgm)), (2, junk), (3, bytearray(wav))],
+        "media_id long, data binary",
+    ).coalesce(1)
+    phash = {r.media_id: r.phash for r in image_perceptual_hashes(media).collect()}
+    assert phash[1] == want_phash and phash[2] is None
+    fps = {r.media_id: r.fingerprint for r in audio_fingerprints(media).collect()}
+    assert fps[3] == want_fp and fps[2] is None

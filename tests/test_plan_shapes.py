@@ -583,6 +583,19 @@ def test_read_archives_head_is_range_with_one_python_node(spark, tmp_path):
         assert df.rdd.getNumPartitions() == min(n_paths, threads)
 
 
+def test_multimodal_content_decode_is_one_python_pass(spark):
+    """multimodal_content_decode decodes its eight media columns in one
+    decode_media pass: exactly one Python node, no join, no shuffle."""
+    from archive_to_parquet_spark import queries as q
+    from archive_to_parquet_spark.plans.audit import PY_NODES
+
+    plan = _plan(q.queries()["multimodal_content_decode"](spark, SF_DIR))
+    lines = plan.splitlines()
+    assert sum(1 for l in lines for n in PY_NODES if n in l) == 1, plan
+    assert "Join" not in plan, plan
+    assert "Exchange" not in plan, plan
+
+
 def test_lm_perplexity_broadcasts_model_and_scalar(spark):
     """text_lm_perplexity: the trigram model (charset-bounded) and the
     1-row totals must BROADCAST — per-doc histograms are the only

@@ -2,15 +2,15 @@
 
 Runs every ``queries()`` entry at a given sf dir and compares against
 ``oracle_sql()`` in DuckDB: row count, column names, and an
-order-insensitive value hash (columns sorted by name, rows sorted by
-their stringified tuple). Prints one line per query + a summary.
+order-insensitive value hash (``archive_to_parquet_spark.oracle``).
+Prints one line per query (a PASS line carries the value hash) + a
+summary.
 
 Usage: python tools/check_correctness.py [sf_dir] [query ...]
 """
 
 from __future__ import annotations
 
-import hashlib
 import os
 import sys
 import time
@@ -18,52 +18,16 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
-
-
-def _norm_cell(v) -> str:
-    import datetime
-    import math
-
-    if v is None:
-        return "NULL"
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "nan"
-        if math.isinf(v):
-            return "inf" if v > 0 else "-inf"
-        if v == int(v) and abs(v) < 1e15:
-            return str(int(v))
-        return repr(round(v, 9))
-    if isinstance(v, (bytes, bytearray)):
-        return v.hex()
-    if isinstance(v, bool):
-        return str(int(v))
-    if isinstance(v, datetime.datetime):
-        return v.isoformat()
-    if isinstance(v, list):
-        return "[" + ",".join(_norm_cell(x) for x in v) + "]"
-    return str(v)
-
-
-def value_hash(cols: list[str], rows: list[tuple]) -> str:
-    order = sorted(range(len(cols)), key=lambda i: cols[i])
-    lines = sorted(
-        "\x1f".join(_norm_cell(r[i]) for i in order) for r in rows
-    )
-    h = hashlib.sha256()
-    for line in lines:
-        h.update(line.encode("utf-8", "replace"))
-        h.update(b"\n")
-    return h.hexdigest()[:16]
+from archive_to_parquet_spark.oracle import (  # noqa: E402,F401 — TABLES/value_hash re-exported
+    TABLES,
+    norm_cell,
+    oracle_connection,
+    oracle_problems,
+    value_hash,
+)
 
 
 def main() -> int:
-    import duckdb
-
     import __spark_entry__ as entrymod
     from archive_to_parquet_spark.session import get_spark
 
@@ -77,11 +41,7 @@ def main() -> int:
     only = set(args[1:])
 
     spark = get_spark("correctness_check")
-    con = duckdb.connect()
-    for t in TABLES:
-        p = f"{sf_dir}/{t}.parquet"
-        if os.path.exists(p):
-            con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    con = oracle_connection(sf_dir)
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
@@ -130,35 +90,33 @@ def main() -> int:
         rec["oracle_rows"] = len(o_rows)
         rec["rows_match"] = len(rows) == len(o_rows)
         rec["schema_match"] = sorted(cols) == sorted(o_cols)
-        problems = []
-        if len(rows) != len(o_rows):
-            problems.append(f"rowcount {len(rows)} != {len(o_rows)}")
-        if sorted(cols) != sorted(o_cols):
-            problems.append(f"cols {sorted(cols)} != {sorted(o_cols)}")
-        else:
-            h1, h2 = value_hash(cols, rows), value_hash(o_cols, o_rows)
-            rec["hash_match"] = h1 == h2
-            if h1 != h2:
-                problems.append(f"value-hash {h1} != {h2}")
+        spark_hash = value_hash(cols, rows)
+        if rec["schema_match"]:
+            rec["hash_match"] = spark_hash == value_hash(o_cols, o_rows)
+        problems = oracle_problems(cols, rows, o_cols, o_rows)
         if problems:
             print(f"FAIL  {name}: {'; '.join(problems)} [{spark_secs:.1f}s]")
             failures.append(name)
             # show a small diff sample
             order = sorted(range(len(cols)), key=lambda i: cols[i])
-            s_set = {tuple(_norm_cell(r[i]) for i in order) for r in rows}
+            s_set = {tuple(norm_cell(r[i]) for i in order) for r in rows}
             o_order = sorted(range(len(o_cols)), key=lambda i: o_cols[i])
-            o_set = {tuple(_norm_cell(r[i]) for i in o_order) for r in o_rows}
+            o_set = {tuple(norm_cell(r[i]) for i in o_order) for r in o_rows}
             for x in list(s_set - o_set)[:3]:
                 print(f"      spark-only: {x}")
             for x in list(o_set - s_set)[:3]:
                 print(f"      duckdb-only: {x}")
         else:
-            print(f"PASS  {name}: rows={len(rows)} [{spark_secs:.1f}s]")
+            print(
+                f"PASS  {name}: rows={len(rows)} hash={spark_hash} "
+                f"[{spark_secs:.1f}s]"
+            )
 
     print()
     if json_path:
         import json
 
+        import duckdb
         import pyspark
 
         with open(json_path, "w") as fh:

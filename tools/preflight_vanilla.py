@@ -20,11 +20,9 @@ import time
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
-sys.path.insert(0, os.path.join(REPO, "tools"))
 
 
 def main() -> int:
-    import duckdb
     from pyspark.sql import SparkSession
 
     args = sys.argv[1:]
@@ -47,15 +45,10 @@ def main() -> int:
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
-    os.environ.setdefault("SPARK_GRAFT_TRACE", "0")
     import __spark_entry__ as entrymod
-    from check_correctness import TABLES, value_hash
+    from archive_to_parquet_spark.oracle import oracle_connection, oracle_problems
 
-    con = duckdb.connect()
-    for t in TABLES:
-        p = f"{sf_dir}/{t}.parquet"
-        if os.path.exists(p):
-            con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    con = oracle_connection(sf_dir)
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
@@ -71,11 +64,7 @@ def main() -> int:
             res = con.sql(oracles[name])
             o_cols = [d[0] for d in res.description]
             o_rows = res.fetchall()
-            ok = (
-                len(rows) == len(o_rows)
-                and sorted(cols) == sorted(o_cols)
-                and value_hash(cols, rows) == value_hash(o_cols, o_rows)
-            )
+            ok = not oracle_problems(cols, rows, o_cols, o_rows)
             print(
                 ("PASS " if ok else "FAIL ") + f"{name} [{time.time() - t0:.1f}s]",
                 flush=True,
