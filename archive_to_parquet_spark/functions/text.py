@@ -3,7 +3,7 @@
 All functions are pure column expressions (JVM-side, whole-stage
 codegen) — language ID, quality scoring, token counting, and
 fingerprinting all stay out of Python. SimHash lives in
-``operators.dedup.simhash_chunk_signatures`` (also fully JVM-side).
+``operators.dedup.simhash_signature`` (also fully JVM-side).
 """
 
 from __future__ import annotations
@@ -309,7 +309,7 @@ def fingerprint64_col(text: Column | str) -> Column:
 # -- SimHash ------------------------------------------------------------------
 #
 # SimHash is computed fully JVM-side: see
-# ``operators.dedup.simhash_chunk_signatures`` (md5 half-parses + 64
+# ``operators.dedup.simhash_signature`` (md5 half-parses + 64
 # map-side-combinable bit votes, whole-stage codegen, DuckDB-oracle
 # reproducible). The former row-at-a-time ``simhash64`` pandas_udf was
 # removed so no Python kernel is reachable from the public API.

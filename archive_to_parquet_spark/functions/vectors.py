@@ -48,6 +48,49 @@ def dot_col(
     )
 
 
+def d2_col(a: str, b: str, dim: int | None = None) -> Column:
+    """Squared L2 distance Σ_i (a[i]−b[i])² between two array columns,
+    as a double — fold, or unrolled over a fixed ``dim`` like
+    :func:`dot_col` (same left-to-right order, bit-identical doubles)."""
+    if dim is not None:
+        return F.expr(unrolled_d2_sql(a, b, dim))
+    return F.aggregate(
+        F.zip_with(
+            F.col(a),
+            F.col(b),
+            lambda x, y: (x.cast("double") - y.cast("double"))
+            * (x.cast("double") - y.cast("double")),
+        ),
+        F.lit(0.0),
+        lambda acc, v: acc + v,
+    )
+
+
+def d2e6_col(a: str, b: str, dim: int | None = None) -> Column:
+    """Integer micro-unit squared L2 distance Σ_i round((a[i]−b[i])²·1e6)
+    as BIGINT: every term is rounded BEFORE the sum, so the sum is exact
+    integer math in any order and any engine (the deterministic
+    clustering/ANN contract). Rounding the sum of :func:`d2_col`
+    instead gives a different value. Fold, or unrolled over a fixed
+    ``dim`` (see :func:`unrolled_d2e6_sql`)."""
+    if dim is not None:
+        return F.expr(unrolled_d2e6_sql(a, b, dim))
+    return F.aggregate(
+        F.zip_with(
+            F.col(a),
+            F.col(b),
+            lambda x, y: F.round(
+                (x.cast("double") - y.cast("double"))
+                * (x.cast("double") - y.cast("double"))
+                * 1e6,
+                0,
+            ),
+        ),
+        F.lit(0.0),
+        lambda acc, t: acc + t,
+    ).cast("long")
+
+
 def l2_norm_col(a: Column | str, dim: int | None = None) -> Column:
     if dim is not None:
         if isinstance(a, str):
@@ -150,9 +193,8 @@ def unrolled_norm_sql(a: str, dim: int) -> str:
 def unrolled_d2_sql(a: str, b: str, dim: int) -> str:
     """SQL string for the plain squared L2 distance Σ_i (a[i]−b[i])²
     over a FIXED dim (no rounding, no scaling) — codegen-friendly twin
-    of the ``aggregate(zip_with(a, b, (x,y) -> (x−y)²))`` fold used by
-    the IVF/PQ assignment distances. Same left-to-right order →
-    bit-identical doubles."""
+    of :func:`d2_col`'s fold. Same left-to-right order → bit-identical
+    doubles."""
     return " + ".join(
         f"((CAST({a}[{i}] AS DOUBLE) - CAST({b}[{i}] AS DOUBLE)) * "
         f"(CAST({a}[{i}] AS DOUBLE) - CAST({b}[{i}] AS DOUBLE)))"

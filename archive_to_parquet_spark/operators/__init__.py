@@ -1,7 +1,7 @@
+from archive_to_parquet_spark.operators.candidates import cap_hot_buckets
 from archive_to_parquet_spark.operators.dedup import (
     bloom_filter_bits,
     bloom_probe,
-    cap_hot_buckets,
     connected_components,
     connected_components_star,
     dedup_against_index,
@@ -11,12 +11,11 @@ from archive_to_parquet_spark.operators.dedup import (
     hamming_near_duplicates,
     minhash_band_index,
     minhash_candidate_pairs,
-    minhash_near_duplicates,
     minhash_near_duplicates_confirmed,
     ngram_jaccard_pairs,
     remove_boilerplate_lines,
-    simhash_chunk_signatures,
     simhash_near_duplicates,
+    simhash_signature,
 )
 from archive_to_parquet_spark.operators.filters import (
     apply_include_filter,
@@ -74,13 +73,12 @@ __all__ = [
     "lsh_top_k",
     "minhash_band_index",
     "minhash_candidate_pairs",
-    "minhash_near_duplicates",
     "minhash_near_duplicates_confirmed",
     "ngram_jaccard_pairs",
     "out_degrees",
     "pagerank",
     "remove_boilerplate_lines",
-    "simhash_chunk_signatures",
     "simhash_near_duplicates",
+    "simhash_signature",
     "word_frequencies",
 ]

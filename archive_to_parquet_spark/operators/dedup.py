@@ -8,19 +8,33 @@ contract in Spark — deterministic *set* of hashes, nondeterministic
 winner — and scales as a hash-based shuffle agg with map-side partial
 dedup, not the reference's O(rows²) per-batch mask.
 
-Near-dup operators (MinHash+LSH, SimHash, n-gram Jaccard, embedding
-cosine) are the standard large-corpus family; all are shuffle-on-bucket
-designs: candidate generation never compares all pairs, only rows that
-collide in a band/bucket, so cost scales with collisions rather than n².
+The near-dup operators are one pipeline, built from the stages in
+``operators/candidates.py``:
 
-Degenerate hot buckets (e.g. millions of empty documents hashing to one
-band) are bounded by ``max_bucket_size``: rows in buckets above the cap
-are excluded from the self-join (a windowed count on the same shuffle
-key the join uses — no extra pass). Truncation is never silent: pass an
+    signature → bucket candidates → pair dedup with a prefilter
+              → exact confirm → optional connected components
+
+Each operator is a (signature, candidate step, confirm) triple:
+
+- MinHash: band hashes → ``bucket_pairs`` on (band, hash) → exact
+  Jaccard (``minhash_near_duplicates_confirmed``), then
+  ``connected_components`` for clusters (``near_duplicate_clusters``);
+- SimHash / any 64-bit hash: pigeonhole chunks → ``bucket_pairs`` on
+  (table, chunk) → Hamming filter (``hamming_near_duplicates``);
+- n-gram Jaccard / containment: shingle sets → ``rare_prefix`` joins →
+  exact Jaccard / containment (``ngram_jaccard_pairs``,
+  ``containment_pairs``);
+- embeddings: hyperplane bucket or nearest centroid → ``bucket_pairs``
+  → exact cosine (``embedding_near_duplicates``, ``semantic_dedup``).
+
+Candidate generation never compares all pairs, only rows that collide
+in a bucket, so cost scales with collisions rather than n². Degenerate
+hot buckets (e.g. millions of empty documents hashing to one band) are
+bounded by ``max_bucket_size``; truncation is never silent: pass an
 ``Observation`` and the query reports ``rows_in_hot_buckets`` /
 ``max_bucket_size`` after any action on the result.
 
-SimHash is computed entirely JVM-side: md5 nibbles of each shingle are
+SimHash is computed entirely JVM-side: md5 halves of each shingle are
 bit-vote aggregated (64 map-side-combinable sums), so the whole pipeline
 stays in whole-stage codegen and — because md5 is engine-independent —
 the operator is oracle-checkable bit-for-bit against DuckDB.
@@ -28,10 +42,24 @@ the operator is oracle-checkable bit-for-bit against DuckDB.
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
+
+from archive_to_parquet_spark.functions.vectors import (
+    cosine_from_norms,
+    d2_col,
+    l2_norm_col,
+)
+from archive_to_parquet_spark.operators.candidates import (
+    BOUND_SLACK,
+    bucket_pairs,
+    checkpoint_counted,
+    exact_jaccard,
+    loop_shuffle_scope,
+    nearest,
+    observed_row,
+    rare_prefix,
+)
 
 
 def dedup_exact(df: DataFrame, key: str = "hash") -> DataFrame:
@@ -51,40 +79,6 @@ def dedup_exact_deterministic(
         .filter(F.col("__rn") == 1)
         .drop("__rn")
     )
-
-
-# -- hot-bucket capping --------------------------------------------------------
-
-
-def cap_hot_buckets(
-    df: DataFrame,
-    keys: list[str],
-    max_bucket_size: int | None,
-    observation: Observation | None = None,
-) -> DataFrame:
-    """Drop rows in candidate buckets larger than ``max_bucket_size``
-    before a bucket self-join, preventing the quadratic pair explosion a
-    degenerate bucket (e.g. hash-identical empty docs) would cause.
-
-    Implemented as a windowed count over the bucket key — the window
-    shuffle is the same partitioning the subsequent self-join needs, so
-    no extra pass over the data. When ``observation`` is given the
-    truncation is reported (``rows_in_hot_buckets``, ``max_bucket_size``)
-    after the caller's first action — capping is never silent.
-    """
-    if max_bucket_size is None:
-        return df
-    w = Window.partitionBy(*keys)
-    counted = df.withColumn("__bucket_n", F.count(F.lit(1)).over(w))
-    if observation is not None:
-        counted = counted.observe(
-            observation,
-            F.sum(
-                F.when(F.col("__bucket_n") > max_bucket_size, 1).otherwise(0)
-            ).alias("rows_in_hot_buckets"),
-            F.max("__bucket_n").alias("max_bucket_size"),
-        )
-    return counted.filter(F.col("__bucket_n") <= max_bucket_size).drop("__bucket_n")
 
 
 # -- shingling ----------------------------------------------------------------
@@ -154,6 +148,17 @@ def minhash_signatures(
     return exploded.groupBy("id").agg(*aggs, F.count("*").alias("n_shingles"))
 
 
+def shingle_sets(
+    df: DataFrame, id_col: str, text_col: str, shingle_n: int = 3
+) -> DataFrame:
+    """Per-doc distinct shingle set (id, sh) — the input of every exact
+    confirm and of the prefix-filtered candidate generators."""
+    return df.select(
+        F.col(id_col).alias("id"),
+        F.array_distinct(shingles_col(text_col, shingle_n)).alias("sh"),
+    )
+
+
 def minhash_candidate_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -165,8 +170,8 @@ def minhash_candidate_pairs(
     observation: Observation | None = None,
 ) -> DataFrame:
     """LSH candidate pairs: band collision only, no similarity filter —
-    maximum recall for a given banding. Returns (id_a, id_b, sig_a,
-    sig_b) with id_a < id_b, deduplicated across bands.
+    maximum recall for a given banding. Returns (id_a, id_b) with
+    id_a < id_b, deduplicated across bands.
 
     Scale: the only join is the self-equi-join on band buckets — a
     shuffle on the band hash; genuinely similar docs collide, others
@@ -176,82 +181,12 @@ def minhash_candidate_pairs(
     banded = minhash_band_index(
         df, id_col, text_col, num_hashes, bands, shingle_n
     )
-    banded = cap_hot_buckets(
-        banded, ["band_idx", "band_hash"], max_bucket_size, observation
-    )
-
-    left = banded.alias("a")
-    right = banded.alias("b")
-    return (
-        left.join(
-            right,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_hash") == F.col("b.band_hash"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.col("a.sig").alias("sig_a"),
-            F.col("b.sig").alias("sig_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
-    )
-
-
-def minhash_near_duplicates(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
-    jaccard_threshold: float = 0.7,
-    max_bucket_size: int | None = 100_000,
-    observation: Observation | None = None,
-) -> DataFrame:
-    """MinHash + LSH near-duplicate pairs.
-
-    shingle → minhash signature → band (rows = num_hashes/bands) → bucket
-    join on (band_idx, band_hash) → estimate Jaccard from full signatures
-    → filter by threshold. Returns (id_a, id_b, est_jaccard) with
-    id_a < id_b, deduplicated across bands.
-    """
-    pairs = minhash_candidate_pairs(
-        df, id_col, text_col, num_hashes, bands, shingle_n,
-        max_bucket_size, observation,
-    )
-    est = (
-        F.size(F.filter(F.zip_with("sig_a", "sig_b", lambda x, y: x == y), lambda v: v))
-        .cast("double")
-        / F.lit(float(num_hashes))
-    )
-    return (
-        pairs.withColumn("est_jaccard", est)
-        .filter(F.col("est_jaccard") >= jaccard_threshold)
-        .select("id_a", "id_b", "est_jaccard")
-    )
-
-
-def _exact_jaccard_on_pairs(
-    candidates: DataFrame, sh: DataFrame, threshold: float
-) -> DataFrame:
-    """Exact Jaccard for candidate (id_a, id_b) pairs given per-doc
-    distinct shingle sets ``sh`` (id, sh). Cost is O(candidates), never
-    O(n²) — candidates came from a bucketed generator."""
-    sa = sh.select(F.col("id").alias("id_a"), F.col("sh").alias("sh_a"))
-    sb = sh.select(F.col("id").alias("id_b"), F.col("sh").alias("sh_b"))
-    shared = F.size(F.array_intersect("sh_a", "sh_b"))
-    return (
-        candidates.join(sa, "id_a")
-        .join(sb, "id_b")
-        .withColumn(
-            "jaccard",
-            shared.cast("double") / (F.size("sh_a") + F.size("sh_b") - shared),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    return bucket_pairs(
+        banded,
+        ["band_idx", "band_hash"],
+        max_bucket_size=max_bucket_size,
+        observation=observation,
+    ).dropDuplicates(["id_a", "id_b"])
 
 
 def minhash_near_duplicates_confirmed(
@@ -281,34 +216,28 @@ def minhash_near_duplicates_confirmed(
     candidates = minhash_candidate_pairs(
         df, id_col, text_col, num_hashes, bands, shingle_n,
         max_bucket_size, observation,
-    ).select("id_a", "id_b")
-    sh = df.select(
-        F.col(id_col).alias("id"),
-        F.array_distinct(shingles_col(text_col, shingle_n)).alias("sh"),
     )
-    return _exact_jaccard_on_pairs(candidates, sh, jaccard_threshold)
+    sh = shingle_sets(df, id_col, text_col, shingle_n)
+    return exact_jaccard(candidates, sh, jaccard_threshold)
 
 
 # -- SimHash (JVM-side md5 bit voting) ----------------------------------------
 
 
-def simhash_chunk_signatures(
+def simhash_signature(
     df: DataFrame,
     id_col: str,
     text_col: str,
     shingle_n: int = 3,
-    num_chunks: int = 4,
 ) -> DataFrame:
-    """64-bit SimHash per document, returned as ``num_chunks`` integer
-    chunk columns (c_0..c_{k-1}, 64/k bits each, c_0 = least-significant
-    chunk) — the exact shape the pigeonhole bucketing needs.
+    """64-bit SimHash per document: (id, sig long).
 
     Entirely JVM-side: explode shingles (NON-distinct — repeated
     shingles vote repeatedly, standard SimHash weighting) → md5 → parse
     the hex prefix as two 32-bit halves with ``conv`` (2 parses per
     shingle, not 16 nibble parses — measured 1.5× on the sf0.1 bench) →
-    64 map-side-combinable ``sum(±1)`` bit votes per doc → reassemble
-    chunk ints from vote signs. md5 (unlike xxhash64) is
+    64 map-side-combinable ``sum(±1)`` bit votes per doc → bit b of
+    ``sig`` is set iff vote b is positive. md5 (unlike xxhash64) is
     engine-independent, so a DuckDB oracle reproduces the signature
     bit-for-bit.
 
@@ -316,8 +245,6 @@ def simhash_chunk_signatures(
     chars 9-16 the low; bit b of the 64-bit value is bit ``b % 32`` of
     the half ``hi`` iff ``b >= 32``.
     """
-    assert 64 % num_chunks == 0, "num_chunks must divide 64"
-    chunk_bits = 64 // num_chunks
     grams = spread_small_scan(df, id_col).select(
         F.col(id_col).alias("id"),
         F.explode(shingles_col(text_col, shingle_n)).alias("g"),
@@ -329,7 +256,7 @@ def simhash_chunk_signatures(
         F.conv(F.substring("h", 9, 8), 16, 10).cast("long").alias("hx_lo"),
     )
 
-    # the 64 vote aggregates and the chunk reassembly are built as
+    # the 64 vote aggregates and the bit reassembly are built as
     # F.expr SQL strings: the Column-DSL loop cost ~1.5 s of py4j
     # round-trips per plan construction (round-11 profile — ~800
     # driver calls), the parsed expressions are identical
@@ -340,14 +267,17 @@ def simhash_chunk_signatures(
     votes = halves.groupBy("id").agg(
         *[F.expr(f"sum({bit(b)} * 2 - 1)").alias(f"v_{b}") for b in range(64)]
     )
-    chunk_cols = []
-    for t in range(num_chunks):
-        terms = " + ".join(
-            f"(CASE WHEN v_{t * chunk_bits + r} > 0 THEN {1 << r} ELSE 0 END)"
-            for r in range(chunk_bits)
+
+    def half_bits(lo: int) -> str:
+        return " + ".join(
+            f"(CASE WHEN v_{lo + r} > 0 THEN {1 << r}L ELSE 0L END)"
+            for r in range(32)
         )
-        chunk_cols.append(F.expr(f"CAST(0 + {terms} AS INT)").alias(f"c_{t}"))
-    return votes.select("id", *chunk_cols)
+
+    return votes.select(
+        "id",
+        F.expr(f"shiftleft({half_bits(32)}, 32) | ({half_bits(0)})").alias("sig"),
+    )
 
 
 def simhash_near_duplicates(
@@ -355,63 +285,21 @@ def simhash_near_duplicates(
     id_col: str = "doc_id",
     text_col: str = "text",
     max_hamming: int = 3,
-    num_tables: int = 4,
     shingle_n: int = 3,
     max_bucket_size: int | None = 100_000,
     observation: Observation | None = None,
 ) -> DataFrame:
-    """SimHash near-dup pairs: 64-bit simhash split into ``num_tables``
-    chunks; by pigeonhole, any pair within ``max_hamming < num_tables``
-    bits collides on at least one chunk (candidate generation is then
-    EXACT, not approximate — the approximation is simhash≈similarity).
-    Bucket-join per chunk, exact Hamming via bit_count(xor) over chunks.
-    Returns (id_a, id_b, hamming:int)."""
-    sig = simhash_chunk_signatures(df, id_col, text_col, shingle_n, num_tables)
-    chunk_cols = [f"c_{t}" for t in range(num_tables)]
-    chunked = sig.select(
+    """SimHash near-dup pairs: :func:`hamming_near_duplicates` over
+    :func:`simhash_signature`. Candidate generation is EXACT (pigeonhole
+    over the signature chunks); the approximation is
+    simhash≈similarity. Returns (id_a, id_b, hamming:int)."""
+    return hamming_near_duplicates(
+        simhash_signature(df, id_col, text_col, shingle_n),
         "id",
-        *chunk_cols,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(t).alias("tbl"), F.col(f"c_{t}").alias("chunk")
-                    )
-                    for t in range(num_tables)
-                ]
-            )
-        ).alias("b"),
-    ).select("id", *chunk_cols, "b.tbl", "b.chunk")
-    chunked = cap_hot_buckets(chunked, ["tbl", "chunk"], max_bucket_size, observation)
-
-    a, b = chunked.alias("a"), chunked.alias("b")
-    hamming: Column = F.lit(0)
-    for t in range(num_tables):
-        hamming = hamming + F.bit_count(
-            F.col(f"a.c_{t}").bitwiseXOR(F.col(f"b.c_{t}"))
-        )
-    return (
-        a.join(
-            b,
-            (F.col("a.tbl") == F.col("b.tbl"))
-            & (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            hamming.cast("int").alias("hamming"),
-        )
-        # filter BEFORE the cross-chunk dedup (r11, guide §2.3):
-        # hamming is a function of the two signatures, so every
-        # duplicate of a pair carries the same value — filter-then-
-        # dedup ≡ dedup-then-filter, but only pairs inside the
-        # threshold cross the dropDuplicates exchange instead of every
-        # chunk collision. Catalyst cannot hoist this itself (a filter
-        # on a non-grouping column below a first-row aggregate is not
-        # semantics-preserving in general).
-        .filter(F.col("hamming") <= max_hamming)
-        .dropDuplicates(["id_a", "id_b"])
+        "sig",
+        max_hamming,
+        max_bucket_size,
+        observation,
     )
 
 
@@ -421,74 +309,55 @@ def ngram_jaccard_pairs(
     text_col: str = "text",
     shingle_n: int = 3,
     threshold: float = 0.5,
-    materialize: bool = True,
 ) -> DataFrame:
     """Exact n-gram Jaccard pairs ≥ threshold, with AllPairs-style prefix
     filtering for candidate generation.
 
     A naive inverted index (join every doc pair sharing ANY shingle)
-    explodes on hot shingles. Prefix filtering is exact-preserving: rank
-    each doc's shingles by global rarity (document frequency, then
-    shingle — a total order); if J(a,b) ≥ t then the overlap O ≥
-    t·max(|a|,|b|), so the (|x| − ⌈t·|x|⌉ + 1)-length rare-prefixes of a
-    and b must intersect. Candidates therefore join only on prefix
-    shingles — the rarest ones, with the fewest collisions — and the
+    explodes on hot shingles. If J(a,b) ≥ t then the overlap O ≥
+    t·max(|a|,|b|), so the rare prefixes of a and b (:func:`rare_prefix`)
+    must intersect: candidates join only on prefix shingles, and the
     exact score is computed per candidate with array_intersect. Shuffle
     keys: shingle (freq + candidate joins), id (rank window, score
     joins); no all-pairs stage anywhere, so the plan scales with
     candidate count, not n².
     """
-    sh = df.select(
-        F.col(id_col).alias("id"),
-        F.array_distinct(shingles_col(text_col, shingle_n)).alias("sh"),
-    )
-    if materialize:
-        # the shingle table feeds three consumers (inverted index, and
-        # both sides of the exact confirm join); materializing it trades
-        # one corpus-sized spillable intermediate for three full
-        # text-scan + shingle recomputations — measured ~15% at sf0.1,
-        # and at 100 TB it is the difference between one corpus pass
-        # and three. Pass materialize=False to keep the pipeline fully
-        # lazy (e.g. when shingle storage would exceed the cluster's
-        # spill budget).
-        sh = sh.localCheckpoint()
-    exploded = sh.select("id", F.size("sh").alias("n_sh"), F.explode("sh").alias("g"))
-    freq = exploded.groupBy("g").agg(F.count("*").alias("df_g"))
-    w = Window.partitionBy("id").orderBy("df_g", "g")
-    prefix = (
-        exploded.join(freq, "g")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(
-            F.col("rank") <= F.col("n_sh") - F.ceil(F.lit(threshold) * F.col("n_sh")) + 1
-        )
-        .select("id", "n_sh", "rank", "g")
-    )
-    a, b = prefix.alias("a"), prefix.alias("b")
+    # the shingle table feeds three consumers (the prefix index and both
+    # sides of the exact confirm join); materializing it trades one
+    # corpus-sized spillable intermediate for three full text-scan +
+    # shingle recomputations — measured ~15% at sf0.1, and at 100 TB it
+    # is the difference between one corpus pass and three
+    sh = shingle_sets(df, id_col, text_col, shingle_n).localCheckpoint()
     # Two exact-preserving prunes on the candidate join (ppjoin family):
     # - length filter: J ≥ t ⇒ min(|a|,|b|)/max(|a|,|b|) ≥ t;
     # - positional filter: for the FIRST common token (positions pa, pb in
     #   the shared rarity order) the remaining-suffix bound
     #   1 + min(|a|−pa, |b|−pb) ≥ O must hold when the true overlap is O,
     #   and J ≥ t ⇒ O ≥ ⌈t/(1+t)·(|a|+|b|)⌉ — prune matches below it.
+    n_a, n_b = F.col("n_a"), F.col("n_b")
+    t = F.lit(threshold)
     alpha = F.ceil(
-        F.lit(threshold / (1.0 + threshold)) * (F.col("a.n_sh") + F.col("b.n_sh"))
+        F.lit(threshold / (1.0 + threshold)) * (n_a + n_b) - BOUND_SLACK
     )
-    ubound = 1 + F.least(
-        F.col("a.n_sh") - F.col("a.rank"), F.col("b.n_sh") - F.col("b.rank")
-    )
+    ubound = 1 + F.least(n_a - F.col("r_a"), n_b - F.col("r_b"))
     candidates = (
-        a.join(
-            b,
-            (F.col("a.g") == F.col("b.g"))
-            & (F.col("a.id") < F.col("b.id"))
-            & (F.col("b.n_sh") >= F.lit(threshold) * F.col("a.n_sh"))
-            & (F.col("a.n_sh") >= F.lit(threshold) * F.col("b.n_sh")),
+        bucket_pairs(
+            rare_prefix(sh, threshold),
+            ["g"],
+            F.col("a.n_sh").alias("n_a"),
+            F.col("b.n_sh").alias("n_b"),
+            F.col("a.rank").alias("r_a"),
+            F.col("b.rank").alias("r_b"),
         )
-        .filter(ubound >= alpha)
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        .filter(
+            (n_b >= t * n_a - BOUND_SLACK)
+            & (n_a >= t * n_b - BOUND_SLACK)
+            & (ubound >= alpha)
+        )
+        .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
     )
-    return _exact_jaccard_on_pairs(candidates, sh, threshold)
+    return exact_jaccard(candidates, sh, threshold)
 
 
 def containment_pairs(
@@ -505,9 +374,8 @@ def containment_pairs(
     containment 1.0.
 
     Exact-preserving prefix filter (the asymmetric half of ppjoin): if
-    C(a→b) ≥ t then the overlap O ≥ ⌈t·|a|⌉, so a's rare-prefix of
-    length |a| − ⌈t·|a|⌉ + 1 (shingles ranked by global document
-    frequency, rarest first) must share a shingle with b — candidates
+    C(a→b) ≥ t then the overlap O ≥ ⌈t·|a|⌉, so a's rare prefix
+    (:func:`rare_prefix`) must share a shingle with b — candidates
     join a-prefix shingles against the FULL inverted index on the b
     side, never all-pairs. The exact score is computed per candidate
     with array_intersect; ppm integer math end to end (shared·10⁶ div
@@ -518,27 +386,18 @@ def containment_pairs(
     prefix collisions, not n². Returns ordered (id_sub, id_sup,
     containment_ppm) — both directions can appear for mutual near-dups.
     """
-    sh = df.select(
-        F.col(id_col).alias("id"),
-        F.array_distinct(shingles_col(text_col, shingle_n)).alias("sh"),
-    ).localCheckpoint()  # feeds the index build and both confirm sides
-    exploded = sh.select(
-        "id", F.size("sh").alias("n_sh"), F.explode("sh").alias("g")
-    )
-    freq = exploded.groupBy("g").agg(F.count("*").alias("df_g"))
-    w = Window.partitionBy("id").orderBy("df_g", "g")
-    prefix = (
-        exploded.join(freq, "g")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(
-            F.col("rank")
-            <= F.col("n_sh") - F.ceil(F.lit(threshold) * F.col("n_sh")) + 1
-        )
-        .select(F.col("id").alias("id_sub"), "g")
+    # the confirm keeps ppm ≥ thr, so thr (not the float threshold)
+    # bounds the overlap the prefix must guarantee
+    thr = int(threshold * 1_000_000)
+    # feeds the index build and both confirm sides
+    sh = shingle_sets(df, id_col, text_col, shingle_n).localCheckpoint()
+    prefix = rare_prefix(sh, thr / 1_000_000).select(
+        F.col("id").alias("id_sub"), "g"
     )
     cand = (
         prefix.join(
-            exploded.select(F.col("id").alias("id_sup"), "g"), "g"
+            sh.select(F.col("id").alias("id_sup"), F.explode("sh").alias("g")),
+            "g",
         )
         .filter(F.col("id_sub") != F.col("id_sup"))
         .select("id_sub", "id_sup")
@@ -549,14 +408,12 @@ def containment_pairs(
     ppm = F.expr(
         "size(array_intersect(sh_a, sh_b)) * 1000000L div size(sh_a)"
     )
-    # Round 12 (guide §1.2 "per-task work"): C(a→b) ≥ t needs
-    # |S(a)∩S(b)| ≥ t·|S(a)|, and the intersection can never exceed
-    # |S(b)| — so |S(b)| ≥ t·|S(a)| is IMPLIED by the ppm threshold and
-    # adding it changes no result. As the first conjunct of the confirm
-    # filter it short-circuits the O(|a|+|b|) array_intersect for every
-    # candidate whose candidate superset is too small (exact integer
-    # compare, no rounding).
-    thr = int(threshold * 1_000_000)
+    # C(a→b) ≥ t needs |S(a)∩S(b)| ≥ t·|S(a)|, and the intersection can
+    # never exceed |S(b)| — so |S(b)| ≥ t·|S(a)| is IMPLIED by the ppm
+    # threshold and adding it changes no result. As the first conjunct
+    # of the confirm filter it short-circuits the O(|a|+|b|)
+    # array_intersect for every candidate whose candidate superset is
+    # too small (exact integer compare, no rounding).
     size_ok = (
         F.size("sh_b").cast("long") * 1_000_000 >= thr * F.size("sh_a").cast("long")
     )
@@ -567,99 +424,6 @@ def containment_pairs(
         .select("id_sub", "id_sup", ppm.alias("containment_ppm"))
         .filter(F.col("containment_ppm") >= thr)
     )
-
-
-def _observed_row(obs: Observation, timeout: float | None = None) -> dict | None:
-    """``obs.get`` with a bounded wait (r10 advice: the fused
-    convergence probes rely on ``localCheckpoint`` routing through a
-    metrics-posting action — on an engine where checkpoint
-    materialization stopped reporting CollectMetrics, a bare
-    ``obs.get`` would hang the loop forever instead of erroring).
-
-    Returns the metric row as a dict, or ``None`` if metrics were not
-    delivered within the timeout; callers fall back to an explicit
-    bounded action on the already-checkpointed result — correct, just
-    one extra small job."""
-    import os
-    import threading
-
-    if timeout is None:
-        timeout = float(os.environ.get("SPARK_GRAFT_OBS_TIMEOUT", "120"))
-    box: dict = {}
-
-    def _read() -> None:
-        try:
-            box["row"] = dict(obs.get)
-        except Exception:
-            pass
-
-    t = threading.Thread(target=_read, daemon=True)
-    t.start()
-    t.join(timeout)
-    return box.get("row")
-
-
-def _loop_partition_count(
-    spark, n_rows: int, rows_per_partition: int = 65536
-) -> int:
-    """Shuffle-partition count for an iterative loop over a table of
-    ``n_rows`` rows: the session count is the ceiling (big graphs are
-    untouched), but bounded tables stop paying 32 task launches per
-    AQE-less checkpoint stage for ~500-row relations (r10 verdict ask
-    #3 — the residual local tax of the CC loops). Floor 8 keeps local
-    parallelism. Capping the session CONF for the whole loop — rather
-    than repartitioning one table — keeps every checkpointed table,
-    aggregation shuffle and join co-partitioned at one count, so no
-    re-exchanges appear anywhere in the loop."""
-    try:
-        conf_n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):  # e.g. "auto" — leave untouched
-        return 0
-    want = -(-max(1, n_rows) // rows_per_partition)
-    return max(8, min(conf_n, want))
-
-
-@contextmanager
-def _shuffle_partitions_scope(spark, n: int):
-    """Temporarily pin ``spark.sql.shuffle.partitions`` (0 = no-op).
-    Safe for the CC loops because every DataFrame escaping the scope is
-    checkpoint-materialized inside it — nothing is lazily planned at
-    the capped count after restore.
-
-    Round 11: the scope also restores AQE's coalescing floor
-    (``minPartitionSize``) to the engine default for the loop's own
-    jobs. The session floor is lowered to 256k so small CPU-heavy
-    shuffles (shingle intersections, vector math) keep the cluster's
-    parallelism — but a CC loop runs dozens of KB-sized stages per
-    entry where aggressive coalescing to 1-2 tasks is exactly right;
-    without the restore the loop pays task-launch overhead × rounds
-    (measured +0.5-1 s on the label/star loops at sf0.1). The loop's
-    checkpoints execute eagerly INSIDE the ``with``, so the restore
-    covers every per-round job."""
-    if not n:
-        yield
-        return
-    old = spark.conf.get("spark.sql.shuffle.partitions")
-    old_min = spark.conf.get(
-        "spark.sql.adaptive.coalescePartitions.minPartitionSize", None
-    )
-    spark.conf.set("spark.sql.shuffle.partitions", str(n))
-    spark.conf.set(
-        "spark.sql.adaptive.coalescePartitions.minPartitionSize", "1m"
-    )
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old)
-        if old_min is None:
-            spark.conf.unset(
-                "spark.sql.adaptive.coalescePartitions.minPartitionSize"
-            )
-        else:
-            spark.conf.set(
-                "spark.sql.adaptive.coalescePartitions.minPartitionSize",
-                old_min,
-            )
 
 
 def connected_components(
@@ -707,30 +471,14 @@ def connected_components(
 
     Raises RuntimeError if not converged within max_iterations.
     """
-    from pyspark.sql import Observation
-
-    spark = pairs.sparkSession
     # Materialize the pair list ONCE with its row count harvested from
-    # the same job (round 11): the count sizes the loop's shuffle-
-    # partition scope below, and the union branches now read
-    # materialized rows instead of each re-executing the candidate
-    # generator (the old union-of-two-selects form computed the pair
-    # plan twice inside the edges checkpoint).
-    obs_pairs = Observation()
-    pairs_m = (
+    # the same job: the count sizes the loop's shuffle-partition scope
+    # below, and the union branches read materialized rows instead of
+    # each re-executing the candidate generator.
+    pairs_m, n_pairs = checkpoint_counted(
         pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
-        .observe(obs_pairs, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint()
     )
-    row = _observed_row(obs_pairs)
-    n_pairs = (
-        int(row["n"])
-        if row is not None and row.get("n") is not None
-        else pairs_m.count()
-    )
-    with _shuffle_partitions_scope(
-        spark, _loop_partition_count(spark, 2 * n_pairs)
-    ):
+    with loop_shuffle_scope(pairs.sparkSession, 2 * n_pairs):
         return _cc_label_loop(pairs_m, max_iterations)
 
 
@@ -738,8 +486,6 @@ def _cc_label_loop(pairs_m: DataFrame, max_iterations: int) -> DataFrame:
     """The min-label-propagation loop proper, run inside the capped
     shuffle-partition scope; ``pairs_m`` is the materialized (src, dst)
     pair table."""
-    from pyspark.sql import Observation
-
     from archive_to_parquet_spark.plans.checkpoint import (
         checkpoint_keeping_partitioning,
         checkpoint_partitioned,
@@ -791,7 +537,7 @@ def _cc_label_loop(pairs_m: DataFrame, max_iterations: int) -> DataFrame:
         # engine ever stops delivering CollectMetrics through the
         # checkpoint job, degrade to a filter+count on the
         # materialized table instead of hanging forever.
-        row = _observed_row(obs)
+        row = observed_row(obs)
         n_changed = (
             row["n_changed"]
             if row is not None
@@ -867,30 +613,18 @@ def connected_components_star(
     materialization job as an ``Observation`` metric (round 10 — same
     job-fusion as the label-propagation loop).
     """
-    from pyspark.sql import Observation
-
-    spark = pairs.sparkSession
-    obs_edges = Observation()
-    edges = (
+    edges, n_edges = checkpoint_counted(
         pairs.select(
             F.col(id_a).cast("long").alias("u"), F.col(id_b).cast("long").alias("v")
         )
         .filter(F.col("u") != F.col("v"))
         .distinct()
-        .observe(obs_edges, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint()
-    )
-    row0 = _observed_row(obs_edges)
-    n_edges = (
-        int(row0["n"])
-        if row0 is not None and row0.get("n") is not None
-        else edges.count()
     )
 
     def _edge_sig(df: DataFrame) -> tuple:
         """Fallback convergence probe: explicit bounded action on the
         checkpointed edge set (only runs if CollectMetrics delivery
-        ever breaks — see _observed_row)."""
+        ever breaks — see observed_row)."""
         r = df.agg(
             F.count(F.lit(1)).alias("n"),
             F.coalesce(F.bit_xor(F.xxhash64("u", "v")), F.lit(0)).alias(
@@ -899,9 +633,7 @@ def connected_components_star(
         ).collect()[0]
         return (r["n"], r["sig"])
 
-    with _shuffle_partitions_scope(
-        spark, _loop_partition_count(spark, 2 * n_edges)
-    ):
+    with loop_shuffle_scope(pairs.sparkSession, 2 * n_edges):
         all_ids = edges.select(F.col("u").alias("id")).union(
             edges.select(F.col("v").alias("id"))
         ).distinct().localCheckpoint()
@@ -920,7 +652,7 @@ def connected_components_star(
                 )
                 .localCheckpoint()
             )
-            row = _observed_row(obs)
+            row = observed_row(obs)
             sig = (row["n"], row["sig"]) if row is not None else _edge_sig(edges)
             if sig == prev_sig:
                 break
@@ -943,17 +675,16 @@ def near_duplicate_clusters(
     id_col: str = "doc_id",
     text_col: str = "text",
     jaccard_threshold: float = 0.7,
-    confirm_exact: bool = False,
     method: str = "label",
     auto_label_rounds: int = 8,
     **minhash_kwargs,
 ) -> DataFrame:
-    """End-to-end near-dup clustering: MinHash+LSH candidate pairs →
-    connected components → (id, component, is_representative) where the
-    representative is the min id per cluster. Singletons (no near-dup)
-    are their own representative. With ``confirm_exact`` the pair graph
-    is the exact-Jaccard graph (LSH candidates verified by true Jaccard)
-    — deterministic and oracle-checkable. ``method``: 'label'
+    """End-to-end near-dup clustering: MinHash+LSH candidate pairs
+    confirmed by exact Jaccard → connected components → (id, component,
+    is_representative) where the representative is the min id per
+    cluster. Singletons (no near-dup) are their own representative. The
+    pair graph is the exact-Jaccard graph — deterministic and
+    oracle-checkable. ``method``: 'label'
     (min-label propagation, O(diameter) rounds — right for shallow
     near-dup star graphs) or 'star' (large-star/small-star, O(log² n)
     rounds — right for deep/chained components) or 'auto' (try label
@@ -961,10 +692,7 @@ def near_duplicate_clusters(
     pair table, fall back to star on non-convergence — the bounded
     probe IS the depth detector, so shallow graphs never pay star's
     extra exchanges and deep graphs never pay O(diameter) rounds)."""
-    pair_fn = (
-        minhash_near_duplicates_confirmed if confirm_exact else minhash_near_duplicates
-    )
-    pairs = pair_fn(
+    pairs = minhash_near_duplicates_confirmed(
         df, id_col, text_col, jaccard_threshold=jaccard_threshold, **minhash_kwargs
     )
     if method == "star":
@@ -1009,7 +737,6 @@ def embedding_near_duplicates(
     planes: list[list[float]] | None = None,
     max_bucket_size: int | None = 100_000,
     observation: Observation | None = None,
-    dim: int | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs via random-hyperplane LSH.
 
@@ -1022,10 +749,6 @@ def embedding_near_duplicates(
     keeps the bucketing engine-independent for oracle checks; default is
     the xxhash64-derived on-the-fly planes (no driver state shipped).
     """
-    from archive_to_parquet_spark.functions.vectors import (
-        cosine_from_norms,
-        l2_norm_col,
-    )
     from archive_to_parquet_spark.operators.similarity import (
         hyperplane_bucket_col,
         hyperplane_bucket_literal,
@@ -1042,22 +765,13 @@ def embedding_near_duplicates(
         l2_norm_col(vec_col).alias("norm"),
         bucket.alias("bucket"),
     )
-    bucketed = cap_hot_buckets(bucketed, ["bucket"], max_bucket_size, observation)
-    a, b = bucketed.alias("a"), bucketed.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.bucket") == F.col("b.bucket")) & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            cosine_from_norms("a.v", "b.v", "a.norm", "b.norm").alias(
-                "cosine"
-            ),
-        )
-        .filter(F.col("cosine") >= threshold)
-    )
+    return bucket_pairs(
+        bucketed,
+        ["bucket"],
+        cosine_from_norms("a.v", "b.v", "a.norm", "b.norm").alias("cosine"),
+        max_bucket_size=max_bucket_size,
+        observation=observation,
+    ).filter(F.col("cosine") >= threshold)
 
 
 def decontaminate(
@@ -1145,10 +859,6 @@ def semantic_dedup(
     engines. At 100 TB: persist the assignment bucketBy(bucket), and
     cap degenerate clusters with cap_hot_buckets before the self-join.
     """
-    from archive_to_parquet_spark.operators.similarity import (
-        cosine_from_norms,
-        l2_norm_col,
-    )
     from archive_to_parquet_spark.plans.checkpoint import (
         checkpoint_keeping_partitioning,
     )
@@ -1166,32 +876,7 @@ def semantic_dedup(
             F.col(centroid_vec).alias("cent_v"),
         )
     )
-    if dim is not None:
-        from archive_to_parquet_spark.functions.vectors import (
-            unrolled_d2_sql,
-        )
-
-        # unrolled fixed-dim distance (guide §4.1) — same fold order,
-        # bit-identical doubles
-        dist = F.round(
-            F.sqrt(F.expr(unrolled_d2_sql("v", "cent_v", dim))), round_to
-        )
-    else:
-        dist = F.round(
-            F.sqrt(
-                F.aggregate(
-                    F.zip_with(
-                        F.col("v"),
-                        F.col("cent_v"),
-                        lambda x, y: (x.cast("double") - y.cast("double"))
-                        * (x.cast("double") - y.cast("double")),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-            ),
-            round_to,
-        )
+    dist = F.round(F.sqrt(d2_col("v", "cent_v", dim)), round_to)
     # round 11 (guide §2.4/§5): the assignment feeds THREE consumers
     # (both sides of the in-bucket pairwise self-join and the final
     # keep/drop join) — un-materialized, the broadcast-cross-join argmin
@@ -1201,39 +886,23 @@ def semantic_dedup(
     # on id and the partitioning-keeping checkpoint preserves that for
     # the final id-keyed join.
     assigned = checkpoint_keeping_partitioning(
-        corpus.select(
-            F.col(id_col).alias("id"),
-            F.col(vec_col).alias("v"),
-            l2_norm_col(vec_col).alias("n"),
-        )
-        .join(cent)
-        .groupBy("id")
-        .agg(
-            F.min(F.struct(dist.alias("d"), F.col("cid").alias("cid"))).alias(
-                "best"
+        nearest(
+            corpus.select(
+                F.col(id_col).alias("id"),
+                F.col(vec_col).alias("v"),
+                l2_norm_col(vec_col).alias("n"),
             ),
-            F.first("v").alias("v"),
-            F.first("n").alias("n"),
-        )
-        .select("id", "v", "n", F.col("best.cid").alias("bucket"))
+            ["id"],
+            cent,
+            dist,
+            "cid",
+            carry=("v", "n"),
+        ).select("id", "v", "n", F.col("cid").alias("bucket"))
     )
-    a = assigned.select(
-        F.col("bucket"),
-        F.col("id").alias("id_a"),
-        F.col("v").alias("va"),
-        F.col("n").alias("na"),
-    )
-    b = assigned.select(
-        F.col("bucket"),
-        F.col("id").alias("id_b"),
-        F.col("v").alias("vb"),
-        F.col("n").alias("nb"),
-    )
-    cos = F.round(cosine_from_norms("va", "vb", "na", "nb"), round_to)
+    cos = F.round(cosine_from_norms("a.v", "b.v", "a.n", "b.n"), round_to)
     drops = (
-        a.join(b, ["bucket"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .filter(cos >= F.lit(threshold))
+        bucket_pairs(assigned, ["bucket"], cos.alias("cos"))
+        .filter(F.col("cos") >= F.lit(threshold))
         .select(F.col("id_b").alias("id"))
         .distinct()
         .withColumn("dropped", F.lit(1))
@@ -1816,61 +1485,60 @@ def hamming_near_duplicates(
     id_col: str = "id",
     sig_col: str = "sig",
     max_hamming: int = 3,
-    num_tables: int = 4,
     max_bucket_size: int | None = 100_000,
     observation: Observation | None = None,
 ) -> DataFrame:
-    """Near-dup pairs over ANY 64-bit signature column (simhash,
-    perceptual image hash, audio fingerprint) — the pigeonhole
-    chunk-bucket design of ``simhash_near_duplicates`` generalized to a
-    precomputed signature: split the int64 into ``num_tables`` chunks
-    (any pair within ``max_hamming < num_tables`` bits collides on at
-    least one chunk — candidate generation is exact), bucket-join per
-    chunk, exact Hamming via bit_count(xor). Null signatures are
-    dropped. Returns (id_a, id_b, hamming:int)."""
-    assert 64 % num_tables == 0, "num_tables must divide 64"
+    """Near-dup pairs within ``max_hamming`` bits over ANY 64-bit
+    signature column (simhash, perceptual image hash, audio
+    fingerprint). Null signatures are dropped. Returns (id_a, id_b,
+    hamming:int).
+
+    Pigeonhole candidates: the signature is split into T equal chunks,
+    T the smallest divisor of 64 greater than ``max_hamming``. A pair
+    within ``max_hamming`` < T bits differs in fewer chunks than there
+    are, so it collides on at least one — candidate generation is
+    EXACT, never a recall loss. Bucket-join per (table, chunk), exact
+    Hamming via bit_count(xor).
+    """
+    if not 0 <= max_hamming < 64:
+        raise ValueError(f"max_hamming must be in [0, 64), got {max_hamming}")
+    num_tables = next(t for t in (1, 2, 4, 8, 16, 32, 64) if t > max_hamming)
     chunk_bits = 64 // num_tables
-    mask = (1 << chunk_bits) - 1
-    sig = df.filter(F.col(sig_col).isNotNull()).select(
+    mask = (1 << chunk_bits) - 1 if chunk_bits < 64 else -1  # signed long
+    chunked = df.filter(F.col(sig_col).isNotNull()).select(
         F.col(id_col).alias("id"),
         F.col(sig_col).alias("s"),
-        *[
-            F.shiftrightunsigned(F.col(sig_col), t * chunk_bits)
-            .bitwiseAND(F.lit(mask))
-            .alias(f"c_{t}")
-            for t in range(num_tables)
-        ],
-    )
-    chunked = sig.select(
-        "id",
-        "s",
         F.explode(
             F.array(
                 *[
-                    F.struct(F.lit(t).alias("tbl"), F.col(f"c_{t}").alias("chunk"))
+                    F.struct(
+                        F.lit(t).alias("tbl"),
+                        F.shiftrightunsigned(F.col(sig_col), t * chunk_bits)
+                        .bitwiseAND(F.lit(mask))
+                        .alias("chunk"),
+                    )
                     for t in range(num_tables)
                 ]
             )
         ).alias("b"),
     ).select("id", "s", "b.tbl", "b.chunk")
-    chunked = cap_hot_buckets(chunked, ["tbl", "chunk"], max_bucket_size, observation)
-    a, b = chunked.alias("a"), chunked.alias("b")
     hamming = F.bit_count(F.col("a.s").bitwiseXOR(F.col("b.s")))
     return (
-        a.join(
-            b,
-            (F.col("a.tbl") == F.col("b.tbl"))
-            & (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
+        bucket_pairs(
+            chunked,
+            ["tbl", "chunk"],
             hamming.cast("int").alias("hamming"),
+            max_bucket_size=max_bucket_size,
+            observation=observation,
         )
-        # same filter-before-dedup reorder as simhash_near_duplicates
-        # (r11, guide §2.3): identical pair set, fewer rows through the
-        # dropDuplicates exchange.
+        # filter BEFORE the cross-chunk dedup (r11, guide §2.3):
+        # hamming is a function of the two signatures, so every
+        # duplicate of a pair carries the same value — filter-then-
+        # dedup ≡ dedup-then-filter, but only pairs inside the
+        # threshold cross the dropDuplicates exchange instead of every
+        # chunk collision. Catalyst cannot hoist this itself (a filter
+        # on a non-grouping column below a first-row aggregate is not
+        # semantics-preserving in general).
         .filter(F.col("hamming") <= max_hamming)
         .dropDuplicates(["id_a", "id_b"])
     )
@@ -1935,7 +1603,7 @@ def dedup_against_index(
     the index, Jaccard estimated from the stored signatures (corpus
     text is never touched — only its index rows); ``new_index`` = the
     batch's own band rows, for the caller to append (plus intra-batch
-    dedup via minhash_near_duplicates if desired).
+    dedup via minhash_near_duplicates_confirmed if desired).
 
     Scale shape: the batch index is small (one ingest slice) → its band
     rows broadcast against the persisted index's band buckets; with the

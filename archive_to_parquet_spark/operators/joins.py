@@ -10,6 +10,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from archive_to_parquet_spark.operators.candidates import bucket_pairs, top_k
+
 
 def asof_join(
     left: DataFrame,
@@ -141,17 +143,14 @@ def _deletion_self_join(
         *(["blk"] if block_col is not None else []),
         F.xxhash64("var").alias("vh"),
     )
-    a, b = v.alias("a"), v.alias("b")
-    cond = (
-        (F.col("a.vh") == F.col("b.vh"))
-        & (F.col("a.id") < F.col("b.id"))
-        & (F.abs(F.col("a.len") - F.col("b.len")) <= F.lit(k))
-    )
-    if block_col is not None:
-        cond = cond & (F.col("a.blk") == F.col("b.blk"))
     pairs = (
-        a.join(b, cond)
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
+        bucket_pairs(
+            v,
+            ["vh"] + (["blk"] if block_col is not None else []),
+            F.abs(F.col("a.len") - F.col("b.len")).alias("len_diff"),
+        )
+        .filter(F.col("len_diff") <= F.lit(k))
+        .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
     )
     names = s.select("id", "t")
@@ -249,25 +248,23 @@ def fuzzy_self_join(
         ).alias("g"),
     )
     freq = grams.groupBy("g").agg(F.count("*").alias("df_g"))
-    w = Window.partitionBy("id").orderBy("df_g", "g")
-    prefix = (
-        grams.join(freq, "g")
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= prefix_len)
-        .select(*carry, "g")
-    )
-    a, b = prefix.alias("a"), prefix.alias("b")
-    cond = (
-        (F.col("a.g") == F.col("b.g"))
-        & (F.col("a.id") < F.col("b.id"))
-        & (F.abs(F.col("a.len") - F.col("b.len")) <= F.lit(max_edits))
-    )
-    if block_col is not None:
-        cond = cond & (F.col("a.blk") == F.col("b.blk"))
+    prefix = top_k(
+        grams.join(freq, "g"),
+        "id",
+        [F.col("df_g"), F.col("g")],
+        prefix_len,
+        "rank",
+    ).select(*carry, "g")
     return (
-        a.join(b, cond)
-        .select("a.id", "b.id", "a.t", "b.t")
-        .toDF("id_a", "id_b", "ta", "tb")
+        bucket_pairs(
+            prefix,
+            ["g"] + (["blk"] if block_col is not None else []),
+            F.col("a.t").alias("ta"),
+            F.col("b.t").alias("tb"),
+            F.abs(F.col("a.len") - F.col("b.len")).alias("len_diff"),
+        )
+        .filter(F.col("len_diff") <= F.lit(max_edits))
+        .select("id_a", "id_b", "ta", "tb")
         .dropDuplicates(["id_a", "id_b"])
         .withColumn("dist", F.levenshtein("ta", "tb"))
         .filter(F.col("dist") <= max_edits)

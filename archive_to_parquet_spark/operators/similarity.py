@@ -1,28 +1,47 @@
-"""Similarity search over embedding columns (approximate nearest neighbor).
+"""Similarity search over embedding columns (approximate nearest
+neighbor) and the embedding clustering operators.
 
-Two tiers:
+Every operator here is the near-dup pipeline of ``dedup.py`` with a
+top-k or clustering tail, built from the stages in
+``operators/candidates.py``:
 
-- ``brute_force_top_k``: exact cosine top-k — broadcast the (small) query
-  set against the corpus; one scan, no corpus shuffle, window top-k per
-  query. The correctness baseline.
-- ``lsh_top_k``: random-hyperplane LSH — bucket corpus and queries with the
-  same deterministic planes, equi-join on bucket (with multi-probe via
-  single-bit flips), exact re-rank inside buckets. The 100 TB path:
-  the corpus is scanned once to build buckets (cacheable/bucketed table);
-  per-query cost is proportional to bucket size, not corpus size.
+    candidates (scan / bucket / inverted list / PQ codes)
+              → exact re-rank → ``top_k`` per query
 
-Everything is pure column expressions (zip_with/aggregate dot products)
-— no Python in the scoring loop.
+- ``brute_force_top_k`` / ``hard_negatives``: every corpus row is a
+  candidate — broadcast the (small) query set against one corpus scan.
+  The correctness baseline.
+- ``lsh_top_k``: random-hyperplane buckets with multi-probe.
+- ``ivf_top_k_fixed_centroids``: ``nearest`` centroid assigns the
+  inverted lists; queries ``top_k`` their ``n_probe`` lists.
+- ``pq_top_k_fixed_codebook`` / ``ivf_pq_top_k_fixed``: ``nearest`` code
+  per subspace (PQ encode), an ADC ``top_k`` candidate cut, then the
+  exact re-rank.
+- ``kmeans_fixed_rounds``: ``nearest`` centroid, then the mean update.
+- ``cosine_dbscan`` / ``lsh_dbscan``: ε-pairs from ``bucket_pairs``
+  (all pairs, or per LSH band), then ``dbscan_from_pairs``.
+
+Everything is pure column expressions (distance and dot columns from
+``functions/vectors.py``) — no Python in the scoring loop.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from archive_to_parquet_spark.functions.vectors import (
     cosine_from_norms,
+    d2_col,
+    d2e6_col,
     l2_norm_col,
+)
+from archive_to_parquet_spark.operators.candidates import (
+    bucket_pairs,
+    checkpoint_counted,
+    loop_shuffle_scope,
+    nearest,
+    top_k,
 )
 
 
@@ -49,69 +68,35 @@ def fixed_hyperplanes(
     ]
 
 
-def double_array_literal(values: list[float]):
-    """Literal ``array<double>`` column built with ONE py4j round-trip.
-
-    ``F.array(*[F.lit(x) ...])`` costs a py4j call per element — for a
-    64-dim plane that is ~45 ms of DRIVER time per plane, and a banded
-    LSH entry building 32 planes spent ~2 s of its wall just
-    constructing Column objects (round-11 profile of
-    cluster_dbscan_lsh). A single SQL ``array(...)`` literal parses
-    JVM-side in microseconds. ``repr`` is shortest round-trip notation,
-    so the parsed doubles are bit-identical to the Python values
-    (verified incl. exponent notation and subnormals)."""
-    return F.expr(
-        "array(" + ",".join(repr(float(x)) + "D" for x in values) + ")"
-    )
-
-
 def long_array_literal(values: list[int]):
-    """Literal ``array<bigint>`` column in one py4j round-trip — the
-    integer twin of :func:`double_array_literal`."""
+    """Literal ``array<bigint>`` column built with ONE py4j round-trip
+    (``F.array(*[F.lit(x) ...])`` costs a py4j call per element)."""
     return F.expr("array(" + ",".join(f"{int(x)}L" for x in values) + ")")
 
 
-def hyperplane_bucket_literal(vec_col, planes: list[list[float]]):
+def hyperplane_bucket_literal(vec_col: str, planes: list[list[float]]):
     """LSH bucket id from a literal plane matrix (see fixed_hyperplanes):
     bit p = sign(dot(v, planes[p])). Pure column expression — the plane
     arrays are plan literals, the dot is a zip_with/aggregate fold.
 
-    Built as ONE ``F.expr`` SQL string when ``vec_col`` is a column
-    name (every call site today): the Column-DSL form costs ~30 ms of
-    py4j round-trips PER PLANE constructing lambda/when nodes, which
+    Built as ONE ``F.expr`` SQL string: the Column-DSL form costs ~30 ms
+    of py4j round-trips PER PLANE constructing lambda/when nodes, which
     for a 4-band × 8-plane entry was ~1 s of pure driver wall per
-    execution (round-11 profile of cluster_dbscan_lsh). The SQL string
-    parses JVM-side to the same analyzed expressions; ``repr`` double
-    literals are shortest-round-trip so the plane values are
-    bit-identical to the DSL form."""
-    if isinstance(vec_col, str):
-        ident = "`" + vec_col.replace("`", "``") + "`"
-        terms = ["0"]
-        for p, plane in enumerate(planes):
-            arr = (
-                "array(" + ",".join(repr(float(x)) + "D" for x in plane) + ")"
-            )
-            dot = (
-                f"aggregate(zip_with({ident}, {arr},"
-                " (x, y) -> CAST(x AS DOUBLE) * y),"
-                " CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
-            )
-            terms.append(f"(CASE WHEN {dot} >= 0.0D THEN {1 << p} ELSE 0 END)")
-        return F.expr("CAST(" + " + ".join(terms) + " AS INT)")
-    v = vec_col
-    bucket = F.lit(0)
+    execution (round-11 profile of cluster_dbscan_lsh). ``repr`` double
+    literals are shortest-round-trip, so the parsed plane values are
+    bit-identical to the Python values (verified incl. exponent
+    notation and subnormals)."""
+    ident = "`" + vec_col.replace("`", "``") + "`"
+    terms = ["0"]
     for p, plane in enumerate(planes):
-        dot = F.aggregate(
-            F.zip_with(
-                v,
-                double_array_literal(plane),
-                lambda x, y: x.cast("double") * y,
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
+        arr = "array(" + ",".join(repr(float(x)) + "D" for x in plane) + ")"
+        dot = (
+            f"aggregate(zip_with({ident}, {arr},"
+            " (x, y) -> CAST(x AS DOUBLE) * y),"
+            " CAST(0.0 AS DOUBLE), (acc, x) -> acc + x)"
         )
-        bucket = bucket + F.when(dot >= 0, F.lit(1 << p)).otherwise(F.lit(0))
-    return bucket.cast("int")
+        terms.append(f"(CASE WHEN {dot} >= 0.0D THEN {1 << p} ELSE 0 END)")
+    return F.expr("CAST(" + " + ".join(terms) + " AS INT)")
 
 
 def hyperplane_bucket_col(vec_col, num_planes: int = 8, seed: int = 42):
@@ -144,89 +129,6 @@ def hyperplane_bucket_col(vec_col, num_planes: int = 8, seed: int = 42):
     return bucket.cast("int")
 
 
-def ivf_top_k(
-    corpus: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    n_list: int = 16,
-    n_probe: int = 4,
-    seed: int = 42,
-    corpus_id: str = "vec_id",
-    corpus_vec: str = "embedding",
-    query_id: str = "query_id",
-    query_vec: str = "query_vec",
-) -> DataFrame:
-    """IVF (inverted-file) approximate top-k: k-means the corpus into
-    ``n_list`` centroid buckets, probe the ``n_probe`` nearest buckets
-    per query, exact cosine re-rank inside probed buckets.
-
-    The centroid model is learned distributed (Spark ML KMeans over the
-    corpus — one pass per iteration, no driver materialization of
-    vectors); bucket assignment is the model's JVM transform. Queries
-    pick probe buckets via a broadcast centroid table (always tiny:
-    ``n_list`` rows) — a |queries|×n_list scored join, ranked to
-    n_probe. At scale, persist the bucketed corpus once
-    (``write.bucketBy(n_list, 'bucket')``) and amortize training across
-    query batches; recall/latency trades via n_probe exactly like the
-    LSH multi-probe knob.
-    """
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    c = corpus.select(
-        F.col(corpus_id).alias("vec_id"),
-        F.col(corpus_vec).alias("cv"),
-        l2_norm_col(corpus_vec).alias("cn"),
-        array_to_vector(F.col(corpus_vec).cast("array<double>")).alias("features"),
-    )
-    model = KMeans(k=n_list, seed=seed, maxIter=5).fit(c.select("features"))
-    bucketed = model.transform(c).select(
-        "vec_id", "cv", "cn", F.col("prediction").alias("bucket")
-    )
-
-    centroids = model.clusterCenters()  # n_list small vectors — driver-safe
-    spark = corpus.sparkSession
-    cent_df = spark.createDataFrame(
-        [(i, [float(x) for x in v]) for i, v in enumerate(centroids)],
-        "bucket int, centroid array<double>",
-    )
-    q = queries.select(
-        F.col(query_id).alias("query_id"),
-        F.col(query_vec).alias("qv"),
-        l2_norm_col(query_vec).alias("qn"),
-    )
-    # score queries against every centroid (broadcast n_list rows),
-    # keep the n_probe nearest by euclidean distance (kmeans' metric)
-    dist2 = F.aggregate(
-        F.zip_with(F.col("qv"), F.col("centroid"), lambda x, y: (x.cast("double") - y) * (x.cast("double") - y)),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    probed = q.join(F.broadcast(cent_df)).select(
-        "query_id", "qv", "qn", "bucket", dist2.alias("d2")
-    )
-    wp = Window.partitionBy("query_id").orderBy(F.col("d2").asc(), F.col("bucket").asc())
-    q_probes = (
-        probed.withColumn("pr", F.row_number().over(wp))
-        .filter(F.col("pr") <= n_probe)
-        .select("query_id", "qv", "qn", "bucket")
-    )
-
-    scored = bucketed.join(F.broadcast(q_probes), "bucket").select(
-        "query_id",
-        "vec_id",
-        cosine_from_norms("cv", "qv", "cn", "qn").alias("cosine"),
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cosine", "rank")
-    )
-
-
 def brute_force_top_k(
     corpus: DataFrame,
     queries: DataFrame,
@@ -236,7 +138,6 @@ def brute_force_top_k(
     query_id: str = "query_id",
     query_vec: str = "query_vec",
     round_to: int | None = None,
-    dim: int | None = None,
 ) -> DataFrame:
     """Exact cosine top-k: broadcast queries × scan corpus → window top-k.
 
@@ -264,14 +165,9 @@ def brute_force_top_k(
     scored = c.join(F.broadcast(q)).select(
         "query_id", "vec_id", score.alias("cosine")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cosine", "rank")
-    )
+    return top_k(
+        scored, "query_id", [F.col("cosine").desc(), F.col("vec_id").asc()], k, "rank"
+    ).select("query_id", "vec_id", "cosine", "rank")
 
 
 def lsh_top_k(
@@ -287,7 +183,6 @@ def lsh_top_k(
     query_vec: str = "query_vec",
     planes: list[list[float]] | None = None,
     round_to: int | None = None,
-    dim: int | None = None,
 ) -> DataFrame:
     """Approximate cosine top-k via hyperplane LSH with multi-probe.
 
@@ -344,14 +239,9 @@ def lsh_top_k(
         "vec_id",
         score.alias("cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cosine", "rank")
-    )
+    return top_k(
+        scored, "query_id", [F.col("cosine").desc(), F.col("vec_id").asc()], k, "rank"
+    ).select("query_id", "vec_id", "cosine", "rank")
 
 
 def ivf_top_k_fixed_centroids(
@@ -371,17 +261,17 @@ def ivf_top_k_fixed_centroids(
 ) -> DataFrame:
     """IVF top-k with an EXPLICIT centroid table (any coarse quantizer:
     k-means output, a deterministic corpus sample, a product quantizer's
-    codebook). Fully deterministic given the centroids — and, unlike the
-    k-means variant, reproducible by a SQL oracle.
+    codebook). Fully deterministic given the centroids, so a SQL oracle
+    reproduces it.
 
-    Plan shape: corpus × broadcast(centroids) → per-row argmin (groupBy
-    min(struct) — map-side combinable, no window shuffle) assigns each
-    corpus vector its inverted list; queries rank the same broadcast
-    centroid table to pick ``n_probe`` lists; probe join on the list id;
-    exact cosine re-rank inside probed lists. At scale, persist the
-    assignment once (bucketBy on ``bucket``) and amortize across query
-    batches. Distances are rounded before ranking so float summation
-    order can't flip a bucket choice across engines.
+    Plan shape: corpus × broadcast(centroids) → per-row argmin
+    (:func:`nearest` — map-side combinable, no window shuffle) assigns
+    each corpus vector its inverted list; queries rank the same
+    broadcast centroid table to pick ``n_probe`` lists; probe join on
+    the list id; exact cosine re-rank inside probed lists. At scale,
+    persist the assignment once (bucketBy on ``bucket``) and amortize
+    across query batches. Distances are rounded before ranking so float
+    summation order can't flip a bucket choice across engines.
     """
     cent = F.broadcast(
         centroids.select(
@@ -390,25 +280,7 @@ def ivf_top_k_fixed_centroids(
     )
 
     def _dist(vec_col: str):
-        if dim is not None:
-            from archive_to_parquet_spark.functions.vectors import (
-                unrolled_d2_sql,
-            )
-
-            d = F.sqrt(F.expr(unrolled_d2_sql(vec_col, "cent_v", dim)))
-        else:
-            d = F.sqrt(
-                F.aggregate(
-                    F.zip_with(
-                        F.col(vec_col),
-                        F.col("cent_v"),
-                        lambda x, y: (x.cast("double") - y.cast("double"))
-                        * (x.cast("double") - y.cast("double")),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, v: acc + v,
-                )
-            )
+        d = F.sqrt(d2_col(vec_col, "cent_v", dim))
         return F.round(d, round_to) if round_to is not None else d
 
     c = corpus.select(
@@ -416,37 +288,22 @@ def ivf_top_k_fixed_centroids(
         F.col(corpus_vec).alias("cv"),
         l2_norm_col(corpus_vec).alias("cn"),
     )
-    # per-corpus-row argmin centroid: min(struct(dist, cid)) is
-    # lexicographic → nearest centroid, ties to the smaller cid; a
-    # map-side-combinable agg, not a global window
-    assigned = (
-        c.join(cent)
-        .groupBy("vec_id")
-        .agg(
-            F.min(F.struct(_dist("cv").alias("d"), F.col("cid").alias("cid"))).alias(
-                "best"
-            ),
-            F.first("cv").alias("cv"),
-            F.first("cn").alias("cn"),
-        )
-        .select("vec_id", "cv", "cn", F.col("best.cid").alias("bucket"))
-    )
+    assigned = nearest(
+        c, ["vec_id"], cent, _dist("cv"), "cid", carry=("cv", "cn")
+    ).select("vec_id", "cv", "cn", F.col("cid").alias("bucket"))
 
     q = queries.select(
         F.col(query_id).alias("query_id"),
         F.col(query_vec).alias("qv"),
         l2_norm_col(query_vec).alias("qn"),
     )
-    wp = Window.partitionBy("query_id").orderBy(
-        F.col("d").asc(), F.col("cid").asc()
-    )
-    q_probes = (
-        q.join(cent)
-        .select("query_id", "qv", "qn", "cid", _dist("qv").alias("d"))
-        .withColumn("pr", F.row_number().over(wp))
-        .filter(F.col("pr") <= n_probe)
-        .select("query_id", "qv", "qn", F.col("cid").alias("bucket"))
-    )
+    q_probes = top_k(
+        q.join(cent).select("query_id", "qv", "qn", "cid", _dist("qv").alias("d")),
+        "query_id",
+        [F.col("d").asc(), F.col("cid").asc()],
+        n_probe,
+        "pr",
+    ).select("query_id", "qv", "qn", F.col("cid").alias("bucket"))
 
     score = cosine_from_norms("cv", "qv", "cn", "qn")
     if round_to is not None:
@@ -454,14 +311,9 @@ def ivf_top_k_fixed_centroids(
     scored = assigned.join(F.broadcast(q_probes), "bucket").select(
         "query_id", "vec_id", score.alias("cosine")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "vec_id", "cosine", "rank")
-    )
+    return top_k(
+        scored, "query_id", [F.col("cosine").desc(), F.col("vec_id").asc()], k, "rank"
+    ).select("query_id", "vec_id", "cosine", "rank")
 
 
 def hard_negatives(
@@ -475,7 +327,6 @@ def hard_negatives(
     query_vec: str = "query_vec",
     query_label: str = "query_label",
     round_to: int | None = None,
-    dim: int | None = None,
 ) -> DataFrame:
     """Hard-negative mining for contrastive training data: per query,
     the top-k most-similar corpus vectors with a DIFFERENT label (the
@@ -486,8 +337,9 @@ def hard_negatives(
     side: an epoch's anchor sample), one corpus scan, per-query window
     top-k — with the label-mismatch predicate applied at the join so
     the window never ranks in-class rows. At larger query counts swap
-    the candidate stage for lsh_top_k/ivf_top_k and apply the same
-    label filter on its candidates; the ranking contract is unchanged.
+    the candidate stage for lsh_top_k/ivf_top_k_fixed_centroids and
+    apply the same label filter on its candidates; the ranking
+    contract is unchanged.
     ``round_to`` rounds the score BEFORE ranking (cross-engine
     determinism, same rationale as brute_force_top_k).
     """
@@ -515,14 +367,9 @@ def hard_negatives(
     scored = c.join(
         F.broadcast(q), F.col("c_label") != F.col("q_label")
     ).select("query_id", "neg_id", score.alias("cosine"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neg_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neg_id", "cosine", "rank")
-    )
+    return top_k(
+        scored, "query_id", [F.col("cosine").desc(), F.col("neg_id").asc()], k, "rank"
+    ).select("query_id", "neg_id", "cosine", "rank")
 
 
 def _pq_sub_rows(
@@ -590,25 +437,21 @@ def pq_top_k_fixed_codebook(
     def sub_rows(df: DataFrame, id_col: str, vec_col: str, out_id: str):
         return _pq_sub_rows(df, id_col, vec_col, out_id, m, sub_dim)
 
-    from archive_to_parquet_spark.functions.vectors import unrolled_d2_sql
-
     # unrolled fixed-dim distances (guide §4.1): these evaluate inside
     # codegen'd hash-aggregate / project stages where the fixed-length
     # sum compiles, and the instance count is small (A/B-measured
     # faster than the aggregate/zip_with fold at sf0.1: 2.1 s vs 3.1 s
     # rebuild). Identical fold order → identical doubles/micro-units.
-    d2_e6 = F.round(
-        F.expr(unrolled_d2_sql("sub", "cbv", sub_dim)) * 1e6, 0
-    ).cast("long")
+    # Here the SUM is rounded to micro-units (d2e6_col rounds each term).
+    d2_e6 = F.round(d2_col("sub", "cbv", sub_dim) * 1e6, 0).cast("long")
 
-    codes = (
-        sub_rows(corpus, corpus_id, corpus_vec, "vec_id")
-        .join(cb, "s")
-        .select("vec_id", "s", "j", d2_e6.alias("d2"))
-        .groupBy("vec_id", "s")
-        .agg(F.min(F.struct("d2", "j")).alias("mn"))
-        .select("vec_id", "s", F.col("mn.j").alias("j"))
-    )
+    codes = nearest(
+        sub_rows(corpus, corpus_id, corpus_vec, "vec_id"),
+        ["vec_id", "s"],
+        cb,
+        d2_e6,
+        "j",
+    ).select("vec_id", "s", "j")
     qtab = (
         sub_rows(queries, query_id, query_vec, "query_id")
         .join(cb, "s")
@@ -619,14 +462,13 @@ def pq_top_k_fixed_codebook(
         .groupBy("query_id", "vec_id")
         .agg(F.sum("qd2").alias("approx_d2_e6"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_d2_e6").asc(), F.col("vec_id").asc()
-    )
-    cand = (
-        scored.withColumn("crank", F.row_number().over(w))
-        .filter(F.col("crank") <= k_candidates)
-        .select("query_id", "vec_id")
-    )
+    cand = top_k(
+        scored,
+        "query_id",
+        [F.col("approx_d2_e6").asc(), F.col("vec_id").asc()],
+        k_candidates,
+        "crank",
+    ).select("query_id", "vec_id")
     # exact re-rank: full vectors touched ONLY for candidate rows
     full = corpus.select(
         F.col(corpus_id).alias("vec_id"), F.col(corpus_vec).alias("cv")
@@ -636,20 +478,16 @@ def pq_top_k_fixed_codebook(
             F.col(query_id).alias("query_id"), F.col(query_vec).alias("qv")
         )
     )
-    exact_d2 = F.round(
-        F.expr(unrolled_d2_sql("cv", "qv", m * sub_dim)) * 1e6, 0
-    ).cast("long")
-    wr = Window.partitionBy("query_id").orderBy(
-        F.col("d2_e6").asc(), F.col("vec_id").asc()
-    )
-    return (
+    exact_d2 = F.round(d2_col("cv", "qv", m * sub_dim) * 1e6, 0).cast("long")
+    return top_k(
         cand.join(full, "vec_id")
         .join(qfull, "query_id")
-        .select("query_id", "vec_id", exact_d2.alias("d2_e6"))
-        .withColumn("rank", F.row_number().over(wr))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", "d2_e6")
-    )
+        .select("query_id", "vec_id", exact_d2.alias("d2_e6")),
+        "query_id",
+        [F.col("d2_e6").asc(), F.col("vec_id").asc()],
+        k,
+        "rank",
+    ).select("query_id", "rank", "vec_id", "d2_e6")
 
 
 def ivf_pq_top_k_fixed(
@@ -684,25 +522,11 @@ def ivf_pq_top_k_fixed(
     hazard exists anywhere — a SQL twin replays assignment → probe →
     encode → ADC → re-rank bit-for-bit. Returns
     (query_id, rank, vec_id, d2_e6)."""
-
-    def d2e6(a_name: str, b_name: str, d: int):
-        return F.aggregate(
-            F.zip_with(
-                F.col(a_name),
-                F.col(b_name),
-                lambda x, y: F.round(
-                    (x.cast("double") - y.cast("double"))
-                    * (x.cast("double") - y.cast("double"))
-                    * 1e6,
-                    0,
-                ).cast("long"),
-            ),
-            F.lit(0).cast("long"),
-            lambda acc, v: acc + v,
-        )
-
     from archive_to_parquet_spark.operators.dedup import spread_small_scan
 
+    # The distances stay the fold: the unrolled form (d2e6_col with a
+    # dim) measured slower for this operator at sf0.01 on a 4-core host
+    # — ~0.5 s more per warm run, ~4 s more on the cold-codegen first.
     cent = F.broadcast(
         centroids.select(F.col("cid"), F.col("centroid").alias("cent_v"))
     )
@@ -715,34 +539,21 @@ def ivf_pq_top_k_fixed(
     c = spread_small_scan(corpus, corpus_id).select(
         F.col(corpus_id).alias("vec_id"), F.col(corpus_vec).alias("cv")
     )
-    assigned = (
-        c.join(cent)
-        .groupBy("vec_id")
-        .agg(
-            F.min(
-                F.struct(
-                    d2e6("cv", "cent_v", m * sub_dim).alias("d"),
-                    F.col("cid").alias("cid"),
-                )
-            ).alias("best")
-        )
-        .select("vec_id", F.col("best.cid").alias("bucket"))
-    )
+    assigned = nearest(
+        c, ["vec_id"], cent, d2e6_col("cv", "cent_v"), "cid"
+    ).select("vec_id", F.col("cid").alias("bucket"))
     q = queries.select(
         F.col(query_id).alias("query_id"), F.col(query_vec).alias("qv")
     )
-    wp = Window.partitionBy("query_id").orderBy(
-        F.col("d").asc(), F.col("cid").asc()
-    )
-    q_probes = (
-        q.join(cent)
-        .select(
-            "query_id", "cid", d2e6("qv", "cent_v", m * sub_dim).alias("d")
-        )
-        .withColumn("pr", F.row_number().over(wp))
-        .filter(F.col("pr") <= n_probe)
-        .select("query_id", F.col("cid").alias("bucket"))
-    )
+    q_probes = top_k(
+        q.join(cent).select(
+            "query_id", "cid", d2e6_col("qv", "cent_v").alias("d")
+        ),
+        "query_id",
+        [F.col("d").asc(), F.col("cid").asc()],
+        n_probe,
+        "pr",
+    ).select("query_id", F.col("cid").alias("bucket"))
     # the query universe: (query, corpus vector) pairs inside probed lists
     probed = assigned.join(F.broadcast(q_probes), "bucket").select(
         "query_id", "vec_id"
@@ -755,15 +566,10 @@ def ivf_pq_top_k_fixed(
     def sub_rows(df: DataFrame, id_col: str, vec_col: str, out_id: str):
         return _pq_sub_rows(df, id_col, vec_col, out_id, m, sub_dim)
 
-    sub_d2 = d2e6("sub", "cbv", sub_dim)
-    codes = (
-        sub_rows(c, "vec_id", "cv", "vec_id")
-        .join(cb, "s")
-        .select("vec_id", "s", "j", sub_d2.alias("d2"))
-        .groupBy("vec_id", "s")
-        .agg(F.min(F.struct("d2", "j")).alias("mn"))
-        .select("vec_id", "s", F.col("mn.j").alias("j"))
-    )
+    sub_d2 = d2e6_col("sub", "cbv")
+    codes = nearest(
+        sub_rows(c, "vec_id", "cv", "vec_id"), ["vec_id", "s"], cb, sub_d2, "j"
+    ).select("vec_id", "s", "j")
     qtab = (
         sub_rows(q, "query_id", "qv", "query_id")
         .join(cb, "s")
@@ -777,30 +583,22 @@ def ivf_pq_top_k_fixed(
         .groupBy("query_id", "vec_id")
         .agg(F.sum("qd2").alias("approx_d2_e6"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("approx_d2_e6").asc(), F.col("vec_id").asc()
-    )
-    cand = (
-        scored.withColumn("crank", F.row_number().over(w))
-        .filter(F.col("crank") <= k_candidates)
-        .select("query_id", "vec_id")
-    )
-    qfull = F.broadcast(q)
-    wr = Window.partitionBy("query_id").orderBy(
-        F.col("d2_e6").asc(), F.col("vec_id").asc()
-    )
-    return (
+    cand = top_k(
+        scored,
+        "query_id",
+        [F.col("approx_d2_e6").asc(), F.col("vec_id").asc()],
+        k_candidates,
+        "crank",
+    ).select("query_id", "vec_id")
+    return top_k(
         cand.join(c, "vec_id")
-        .join(qfull, "query_id")
-        .select(
-            "query_id",
-            "vec_id",
-            d2e6("cv", "qv", m * sub_dim).alias("d2_e6"),
-        )
-        .withColumn("rank", F.row_number().over(wr))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", "d2_e6")
-    )
+        .join(F.broadcast(q), "query_id")
+        .select("query_id", "vec_id", d2e6_col("cv", "qv").alias("d2_e6")),
+        "query_id",
+        [F.col("d2_e6").asc(), F.col("vec_id").asc()],
+        k,
+        "rank",
+    ).select("query_id", "rank", "vec_id", "d2_e6")
 
 
 def kmeans_fixed_rounds(
@@ -814,8 +612,7 @@ def kmeans_fixed_rounds(
     """Lloyd's k-means with FIXED init and a FIXED round count — the
     corpus-clustering step of data-mixing / SemDeDup pipelines, made a
     pure deterministic function of its inputs so a SQL oracle can
-    replay it (the Spark-ML `KMeans` used by `ivf_top_k` is the
-    training-quality variant; this one is the certified twin).
+    replay it.
 
     Determinism across engines, the whole trick:
 
@@ -841,7 +638,6 @@ def kmeans_fixed_rounds(
     compile per round costs more than the explode shuffle it saves.
     Returns the final assignment (vec_id, cid, d2_e6).
     """
-    from archive_to_parquet_spark.functions.vectors import unrolled_d2e6_sql
     from archive_to_parquet_spark.operators.dedup import spread_small_scan
 
     # Round 11 (guide §4.1/§2.5): the distance evaluation dominated the
@@ -854,7 +650,9 @@ def kmeans_fixed_rounds(
     # unrolled codegen-able sum instead of the interpreted
     # aggregate/zip_with fold (bit-identical result — same per-term
     # rounding, same addition order).
-    corpus = spread_small_scan(corpus, vec_id)
+    corpus = spread_small_scan(corpus, vec_id).select(
+        F.col(vec_id).alias("vec_id"), F.col(vec_col).alias("v")
+    )
 
     # centroid frame: (cid int, cv array<double>); doubles from the
     # start so round-0 distances see the same values later rounds do
@@ -863,52 +661,23 @@ def kmeans_fixed_rounds(
         F.transform("centroid", lambda x: x.cast("double")).alias("cv"),
     )
 
-    def assign(cent_df, carry_vec: bool = False):
-        if dim is not None:
-            d2 = F.expr(unrolled_d2e6_sql("v", "cv", dim))
-        else:
-            d2 = F.aggregate(
-                F.zip_with(
-                    F.col("v"),
-                    F.col("cv"),
-                    lambda x, y: F.round(
-                        (x.cast("double") - y.cast("double"))
-                        * (x.cast("double") - y.cast("double"))
-                        * 1e6,
-                        0,
-                    ),
-                ),
-                F.lit(0.0),
-                lambda acc, t: acc + t,
-            ).cast("long")
-        scored = (
-            corpus.select(
-                F.col(vec_id).alias("vec_id"), F.col(vec_col).alias("v")
-            )
-            .join(F.broadcast(cent_df))
-            .select("vec_id", "v", "cid", d2.alias("d2"))
-        )
+    def assign(cent_df):
         # carry the vector through the argmin so the means step needs no
         # corpus re-join (v is constant within a vec_id group — first()
-        # is deterministic); the final assignment skips the payload
-        aggs = [F.min(F.struct("d2", "cid")).alias("mn")]
-        if carry_vec:
-            aggs.append(F.first("v").alias("v"))
-        return (
-            scored.groupBy("vec_id")
-            .agg(*aggs)
-            .select(
-                "vec_id",
-                F.col("mn.cid").alias("cid"),
-                F.col("mn.d2").alias("d2_e6"),
-                *(["v"] if carry_vec else []),
-            )
-        )
+        # is deterministic); the final assignment prunes the payload
+        return nearest(
+            corpus,
+            ["vec_id"],
+            F.broadcast(cent_df),
+            d2e6_col("v", "cv", dim),
+            "cid",
+            carry=("v",),
+        ).select("vec_id", "cid", F.col("d").alias("d2_e6"), "v")
 
     for _ in range(n_rounds):
-        assigned = assign(cent_df, carry_vec=True)
         cent_df = (
-            assigned.select("cid", F.posexplode("v").alias("dim", "x"))
+            assign(cent_df)
+            .select("cid", F.posexplode("v").alias("dim", "x"))
             .select(
                 "cid",
                 "dim",
@@ -931,7 +700,7 @@ def kmeans_fixed_rounds(
                 ).alias("cv")
             )
         )
-    return assign(cent_df)
+    return assign(cent_df).select("vec_id", "cid", "d2_e6")
 
 
 def dbscan_from_pairs(
@@ -957,35 +726,15 @@ def dbscan_from_pairs(
     join to attach borders. Everything shuffles on point/pair ids only.
     Returns (vec_id, role, cluster).
     """
-    from pyspark.sql import Observation
-
-    from archive_to_parquet_spark.operators.dedup import (
-        _loop_partition_count,
-        _observed_row,
-        _shuffle_partitions_scope,
-        connected_components,
-    )
+    from archive_to_parquet_spark.operators.dedup import connected_components
 
     # the pair list feeds FOUR consumers (degrees, two core semi-joins,
     # border attach) — materialize it once or the candidate generator's
     # join re-executes per consumer (measured 5× end-to-end on the
-    # exact-pairs form at sf0.1). The pair count is harvested from the
-    # same materialization job (round 11): it sizes the shuffle-
-    # partition scope below, so the AQE-less checkpoint stages of the
-    # core table and the CC loop stop launching 32 tasks for
-    # ~500-row relations locally; big pair graphs hit the session
-    # ceiling and are untouched (r10 verdict ask #3, extended from the
-    # CC loop to the whole DBSCAN tail).
-    obs_pairs = Observation()
-    pairs = pairs.observe(
-        obs_pairs, F.count(F.lit(1)).alias("n")
-    ).localCheckpoint()
-    row = _observed_row(obs_pairs)
-    n_pairs = (
-        int(row["n"])
-        if row is not None and row.get("n") is not None
-        else pairs.count()
-    )
+    # exact-pairs form at sf0.1). The pair count, harvested from the
+    # same job, sizes the shuffle-partition scope of the core table and
+    # the CC loop below.
+    pairs, n_pairs = checkpoint_counted(pairs)
     directed = pairs.select(
         F.col("id_a").alias("id"), F.col("id_b").alias("nbr")
     ).unionByName(
@@ -996,9 +745,7 @@ def dbscan_from_pairs(
     )
 
     deg = directed.groupBy("id").agg(F.count("*").alias("n_nbrs"))
-    with _shuffle_partitions_scope(
-        points.sparkSession, _loop_partition_count(points.sparkSession, 4 * n_pairs)
-    ):
+    with loop_shuffle_scope(points.sparkSession, 4 * n_pairs):
         # core feeds THREE consumers (two semi-joins, the border
         # anti-join) plus the self-loop seed — without materialization
         # the degree aggregation re-executes inside each, including
@@ -1077,10 +824,6 @@ def lsh_epsilon_pairs(
     fetch vectors for the exact filter; no all-pairs anywhere
     (tests/test_plan_shapes.py pins the absence of nested-loop joins).
     """
-    from archive_to_parquet_spark.functions.vectors import (
-        cosine_from_norms,
-        l2_norm_col,
-    )
     from archive_to_parquet_spark.plans.checkpoint import (
         checkpoint_partitioned,
     )
@@ -1112,17 +855,7 @@ def lsh_epsilon_pairs(
         "band_idx",
         "bucket",
     )
-    a, b_ = banded.alias("a"), banded.alias("b")
-    cand = (
-        a.join(
-            b_,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.bucket") == F.col("b.bucket"))
-            & (F.col("a.id") < F.col("b.id")),
-        )
-        .select(F.col("a.id").alias("id_a"), F.col("b.id").alias("id_b"))
-        .distinct()
-    )
+    cand = bucket_pairs(banded, ["band_idx", "bucket"]).distinct()
     va = side.select(
         F.col("id").alias("id_a"), F.col("v").alias("va"), F.col("n").alias("na")
     )
@@ -1172,33 +905,23 @@ def cosine_dbscan(
     min_neighbors: int = 2,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    dim: int | None = None,
 ) -> DataFrame:
     """DBSCAN with exact cosine ε-neighbors (similarity ≥ threshold,
     compared after 6dp rounding so an engine-order ulp can't flip a
-    boundary pair). The all-pairs generator is the exact-baseline path
-    (norms hoisted below the join); swap in LSH pairs at corpus scale.
+    boundary pair). The all-pairs generator (``bucket_pairs`` with no
+    keys) is the exact-baseline path (norms hoisted below the join);
+    swap in LSH pairs at corpus scale.
     """
-    from archive_to_parquet_spark.functions.vectors import (
-        cosine_from_norms,
-        l2_norm_col,
-    )
-
     side = df.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("v"),
         l2_norm_col(vec_col).alias("n"),
     )
-    a, b = side.alias("a"), side.alias("b")
     pairs = (
-        a.join(b, F.col("a.id") < F.col("b.id"))
-        .select(
-            F.col("a.id").alias("id_a"),
-            F.col("b.id").alias("id_b"),
-            F.round(
-                cosine_from_norms("a.v", "b.v", "a.n", "b.n"),
-                6,
-            ).alias("cos6"),
+        bucket_pairs(
+            side,
+            [],
+            F.round(cosine_from_norms("a.v", "b.v", "a.n", "b.n"), 6).alias("cos6"),
         )
         .filter(F.col("cos6") >= threshold)
         .select("id_a", "id_b")

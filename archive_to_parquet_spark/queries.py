@@ -2535,7 +2535,7 @@ def dedup_near_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     labeled = near_duplicate_clusters(
         docs, "doc_id", "text", jaccard_threshold=0.5,
-        confirm_exact=True, num_hashes=32, bands=8,
+        num_hashes=32, bands=8,
     )
     return labeled.select(
         F.col("id").alias("doc_id"),
@@ -2613,7 +2613,7 @@ def dedup_near_clusters_star(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     labeled = near_duplicate_clusters(
         docs, "doc_id", "text", jaccard_threshold=0.5,
-        confirm_exact=True, method="star", num_hashes=32, bands=8,
+        method="star", num_hashes=32, bands=8,
     )
     return labeled.select(
         F.col("id").alias("doc_id"),
@@ -2653,7 +2653,7 @@ def split_leakage_safe(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     labeled = near_duplicate_clusters(
         docs, "doc_id", "text", jaccard_threshold=0.5,
-        confirm_exact=True, num_hashes=32, bands=8,
+        num_hashes=32, bands=8,
     )
     u32 = F.conv(
         F.substring(
@@ -2785,9 +2785,7 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe their 4 nearest lists, exact cosine re-rank inside probed
     lists. Oracle-checked end-to-end — DuckDB reproduces assignment,
     probing, and re-rank exactly (distances/cosines rounded before
-    ranking on both sides). The k-means-trained variant (``ivf_top_k``)
-    shares the probe/re-rank machinery and is recall-tested vs brute
-    force in tests/test_operators.py."""
+    ranking on both sides)."""
     emb = _t(spark, sf_dir, "embeddings")
     cent = emb.filter(F.col("vec_id") % 31 == 0).select(
         F.col("vec_id").alias("cid"), F.col("embedding").alias("centroid")
@@ -4245,11 +4243,11 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall-by-construction argument as dedup_minhash: every true pair
     collides in ≥1 of the 8 bands on this corpus, so the output equals
     the exact cross-partition Jaccard pair set the oracle computes."""
+    from archive_to_parquet_spark.operators.candidates import exact_jaccard
     from archive_to_parquet_spark.operators.dedup import (
-        _exact_jaccard_on_pairs,
         dedup_against_index,
         minhash_band_index,
-        shingles_col,
+        shingle_sets,
     )
 
     docs = _t(spark, sf_dir, "documents")
@@ -4259,15 +4257,12 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates, _new_index = dedup_against_index(
         batch, index, jaccard_threshold=0.0
     )
-    sh = docs.select(
-        F.col("doc_id").alias("id"),
-        F.array_distinct(shingles_col("text", 3)).alias("sh"),
-    )
+    sh = shingle_sets(docs, "doc_id", "text", 3)
     pairs = candidates.select(
         F.col("new_id").alias("id_a"), F.col("index_id").alias("id_b")
     )
     return (
-        _exact_jaccard_on_pairs(pairs, sh, 0.5)
+        exact_jaccard(pairs, sh, 0.5)
         .select(
             F.col("id_a").alias("new_id"),
             F.col("id_b").alias("index_id"),
@@ -4328,10 +4323,8 @@ def stream_neardup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     import shutil
     import tempfile
 
-    from archive_to_parquet_spark.operators.dedup import (
-        _exact_jaccard_on_pairs,
-        shingles_col,
-    )
+    from archive_to_parquet_spark.operators.candidates import exact_jaccard
+    from archive_to_parquet_spark.operators.dedup import shingle_sets
     from archive_to_parquet_spark.streaming.neardup import neardup_stream
 
     docs = _t(spark, sf_dir, "documents")
@@ -4369,11 +4362,8 @@ def stream_neardup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
             .dropDuplicates(["id_a", "id_b"])
             .localCheckpoint(eager=True)  # staging dir is removed below
         )
-        sh = docs.select(
-            F.col("doc_id").alias("id"),
-            F.array_distinct(shingles_col("text", 3)).alias("sh"),
-        )
-        return _exact_jaccard_on_pairs(cand, sh, 0.5).select(
+        sh = shingle_sets(docs, "doc_id", "text", 3)
+        return exact_jaccard(cand, sh, 0.5).select(
             "id_a", "id_b", F.round("jaccard", 6).alias("jaccard")
         )
     finally:

@@ -1,8 +1,8 @@
 """`near_duplicate_clusters(method="auto")` — the documented depth
-heuristic (r10 verdict ask #5): a bounded label-propagation probe IS
-the detector; chain-shaped pair graphs (diameter > budget) fall back
-to star-CC, shallow star graphs converge inside the budget and never
-pay star's extra exchanges.
+heuristic: a bounded label-propagation probe IS the detector;
+chain-shaped pair graphs (diameter > budget) fall back to star-CC,
+shallow star graphs converge inside the budget and never pay star's
+extra exchanges.
 
 The pair generator is stubbed so the graph SHAPE is exact: a 40-node
 path (worst case for min-label propagation — O(diameter) rounds) and a
@@ -28,7 +28,7 @@ def _docs(spark, n):
 def _with_stub_pairs(monkeypatch, spark, edges):
     pairs_df = spark.createDataFrame(edges, "id_a: long, id_b: long")
     monkeypatch.setattr(
-        D, "minhash_near_duplicates", lambda *a, **kw: pairs_df
+        D, "minhash_near_duplicates_confirmed", lambda *a, **kw: pairs_df
     )
     return pairs_df
 

@@ -1,5 +1,6 @@
-"""Property-based tests (hypothesis) for round-2 operators: BPE pair
-counts vs a pure-Python reference, and Hamming near-dup vs brute force.
+"""Property-based tests (hypothesis) for operators: BPE pair counts vs a
+pure-Python reference, and the near-dup candidate stages (pigeonhole
+Hamming, rare-prefix set similarity) vs brute force.
 Spark jobs are slow per example, so example counts stay small; the
 point is adversarial inputs (unicode, 1-char words, signature bit
 patterns), not volume."""
@@ -8,7 +9,7 @@ from __future__ import annotations
 
 from collections import Counter
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 _words = st.lists(
@@ -61,7 +62,11 @@ _sigs = st.lists(
     deadline=None,
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
-@given(sigs=_sigs, max_hamming=st.integers(min_value=0, max_value=3))
+@given(sigs=_sigs, max_hamming=st.integers(min_value=0, max_value=12))
+# distance 4, one differing bit in each 16-bit chunk: no chunk of a
+# 4-table split collides, so max_hamming ≥ 4 needs more tables
+@example(sigs=[0, 0x0001000100010001], max_hamming=4)
+@example(sigs=[0, 0x0001000100010001], max_hamming=10)
 def test_hamming_near_duplicates_matches_brute_force(spark, sigs, max_hamming):
     from archive_to_parquet_spark.operators.dedup import hamming_near_duplicates
 
@@ -79,7 +84,113 @@ def test_hamming_near_duplicates_matches_brute_force(spark, sigs, max_hamming):
                 h = bin((a ^ b) & mask).count("1")
                 if h <= max_hamming:
                     want[(i, j)] = h
-    # pigeonhole guarantee: max_hamming < num_tables(4) → exact recall
+    # pigeonhole guarantee: the table count exceeds max_hamming → exact
+    # recall at every distance
+    assert got == want
+
+
+def test_hamming_near_duplicates_rejects_full_width_distance(spark):
+    import pytest
+
+    from archive_to_parquet_spark.operators.dedup import hamming_near_duplicates
+
+    df = spark.createDataFrame([(1, 0), (2, -1)], ["id", "sig"])
+    with pytest.raises(ValueError, match="max_hamming"):
+        hamming_near_duplicates(df, max_hamming=64)
+
+
+def _ref_shingle_sets(docs: dict[int, str], n: int) -> dict[int, set[str]]:
+    out = {}
+    for i, text in docs.items():
+        words = text.lower().split()
+        out[i] = {
+            " ".join(words[k : k + n]) for k in range(max(len(words) - n + 1, 1))
+        }
+    return out
+
+
+_corpora = st.lists(
+    st.lists(st.sampled_from("abcdefgh"), min_size=1, max_size=9).map(" ".join),
+    min_size=2,
+    max_size=6,
+)
+
+# J(a, b) = 28/35 = 0.8 exactly with b ⊂ a: the first shared shingle
+# sits last in a's rare prefix, where the positional bound is tight
+_tight_prefix = [
+    " ".join(f"w{i}" for i in range(35)),
+    " ".join(f"w{i}" for i in range(7, 35)),
+]
+
+
+@settings(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    texts=_corpora,
+    shingle_n=st.integers(min_value=1, max_value=3),
+    threshold=st.sampled_from([0.3, 0.5, 0.6, 0.7, 0.8, 0.9]),
+)
+@example(texts=_tight_prefix, shingle_n=1, threshold=0.8)
+def test_ngram_jaccard_pairs_matches_brute_force(spark, texts, shingle_n, threshold):
+    """The rare-prefix candidate step (plus the length and positional
+    prunes) loses no pair: output equals all-pairs exact Jaccard."""
+    from archive_to_parquet_spark.operators.dedup import ngram_jaccard_pairs
+
+    docs = dict(enumerate(texts))
+    df = spark.createDataFrame(list(docs.items()), "doc_id long, text string")
+    got = {
+        (r.id_a, r.id_b): r.jaccard
+        for r in ngram_jaccard_pairs(
+            df, "doc_id", "text", shingle_n=shingle_n, threshold=threshold
+        ).collect()
+    }
+    sets = _ref_shingle_sets(docs, shingle_n)
+    want = {}
+    for a in sets:
+        for b in sets:
+            if a < b:
+                shared = len(sets[a] & sets[b])
+                j = shared / (len(sets[a]) + len(sets[b]) - shared)
+                if j >= threshold:
+                    want[(a, b)] = j
+    assert got == want
+
+
+@settings(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    texts=_corpora,
+    shingle_n=st.integers(min_value=1, max_value=3),
+    threshold=st.sampled_from([0.3, 0.5, 0.7, 0.8, 0.9, 1.0]),
+)
+def test_containment_pairs_matches_brute_force(spark, texts, shingle_n, threshold):
+    """The asymmetric rare-prefix join loses no pair: output equals the
+    all-pairs exact containment in integer ppm."""
+    from archive_to_parquet_spark.operators.dedup import containment_pairs
+
+    docs = dict(enumerate(texts))
+    df = spark.createDataFrame(list(docs.items()), "doc_id long, text string")
+    got = {
+        (r.id_sub, r.id_sup): r.containment_ppm
+        for r in containment_pairs(
+            df, "doc_id", "text", shingle_n=shingle_n, threshold=threshold
+        ).collect()
+    }
+    sets = _ref_shingle_sets(docs, shingle_n)
+    thr = int(threshold * 1_000_000)
+    want = {}
+    for a in sets:
+        for b in sets:
+            if a != b:
+                ppm = len(sets[a] & sets[b]) * 1_000_000 // len(sets[a])
+                if ppm >= thr:
+                    want[(a, b)] = ppm
     assert got == want
 
 
