@@ -6,6 +6,14 @@ Usage::
 
 ``PATHS`` of ``-`` reads newline-separated paths from stdin (S3,
 reference src/main.rs:137-153).
+
+Every mode runs the same conversion pipeline (plans/convert.py): the
+entries pass the refine stage (``--include``, ``--min-size``,
+``--max-size``, ``--unique``, ``--deterministic-dedup``), the mode
+turns them into its table (raw entries, ``--documents`` or
+``--media``), ``--incremental`` skips rows whose key the output already
+holds, and one counted write commits the result. A flag a mode cannot
+honour is rejected with exit status 2.
 """
 
 from __future__ import annotations
@@ -13,7 +21,11 @@ from __future__ import annotations
 import argparse
 import sys
 
-from archive_to_parquet_spark.options import ConvertOptions, IncludeType
+from archive_to_parquet_spark.options import (
+    ConvertOptions,
+    IncludeType,
+    parse_columns,
+)
 
 
 def _parse_size(value: str) -> int:
@@ -45,7 +57,9 @@ def build_parser() -> argparse.ArgumentParser:
     p.add_argument("--threads", type=int, default=None,
                    help="parallelism (defaults to all cores)")
     p.add_argument("--compression", default="snappy")
-    p.add_argument("--batch-count", type=int, default=14)
+    p.add_argument("--batch-count", type=int, default=14,
+                   help="accepted for reference CLI parity; has no effect "
+                        "(Spark schedules the batches)")
     p.add_argument("--batch-size", type=_parse_size, default=100 * 1024 * 1024)
     p.add_argument("--extract-executable-strings", action="store_true")
     p.add_argument("--columns", default=None,
@@ -54,17 +68,20 @@ def build_parser() -> argparse.ArgumentParser:
                         "'content' makes the walker stream-hash without "
                         "buffering payloads — the fast manifest/"
                         "dedup-prepass scan (engine extension; the "
-                        "reference's sink schema is fixed)")
+                        "reference's sink schema is fixed; raw entries "
+                        "output only)")
     p.add_argument("--single-file", action="store_true",
                    help="coalesce output to one file (reference layout parity)")
     p.add_argument("--deterministic-dedup", action="store_true")
     p.add_argument("--incremental", action="store_true",
-                   help="append only content whose hash is absent from OUTPUT")
-    p.add_argument("--documents", action="store_true",
+                   help="append only rows whose key (hash; doc_id with "
+                        "--documents) is absent from OUTPUT; not with --media")
+    mode = p.add_mutually_exclusive_group()
+    mode.add_argument("--documents", action="store_true",
                    help="emit a curated documents table (UTF-8 gate, "
                         "HTML→text, language ID) instead of raw entries — "
                         "the crawl-corpus path (plans/crawl.py)")
-    p.add_argument("--media", action="store_true",
+    mode.add_argument("--media", action="store_true",
                    help="emit a media profile table (kind, dims/duration, "
                         "perceptual hash, audio fingerprint) instead of raw "
                         "entries — header parse + pure-stdlib content "
@@ -121,9 +138,48 @@ def _start_progress_reporter(spark, interval: float = 2.0):
     return stop
 
 
+def _mode_error(args) -> str | None:
+    """The flags the chosen mode cannot honour (README §CLI modes)."""
+    mode = "--media" if args.media else "--documents" if args.documents else None
+    if mode and args.columns:
+        return f"--columns applies to the raw entries output, not {mode}"
+    if args.media and args.incremental:
+        return "--incremental does not apply to --media (a profile has no key to skip on)"
+    if args.output_format == "jsonl" and not args.documents:
+        return "--output-format jsonl requires --documents"
+    if args.incremental and args.output_format == "jsonl":
+        return (
+            "--incremental requires the parquet output format (the doc_id "
+            "probe reads the existing dataset's id column)"
+        )
+    return None
+
+
+def _table_writer(options: ConvertOptions, jsonl: bool):
+    """Writer of a derived table (documents, media profile): parquet, or
+    gzipped JSONL shards (one JSON object per line; to_json handles all
+    escaping; shard count = task count)."""
+    from pyspark.sql import functions as F
+
+    def write(df, output: str, mode: str) -> None:
+        if options.single_file:
+            df = df.coalesce(1)
+        if jsonl:
+            df.select(F.to_json(F.struct(*df.columns)).alias("value")).write.mode(
+                mode
+            ).option("compression", "gzip").text(output)
+        else:
+            df.write.mode(mode).option("compression", options.compression).parquet(
+                output
+            )
+
+    return write
+
+
 def main(argv: list[str] | None = None) -> int:
     import logging
     import os
+    from functools import partial
 
     args = build_parser().parse_args(argv)
     if args.log_file:
@@ -137,6 +193,10 @@ def main(argv: list[str] | None = None) -> int:
             print(f"error: cannot open log file {args.log_file}: {e}", file=sys.stderr)
             return 2
         logging.getLogger(__name__).info("starting conversion: %s", vars(args))
+    error = _mode_error(args)
+    if error:
+        print(f"error: {error}", file=sys.stderr)
+        return 2
     threads = args.threads or os.cpu_count() or 8
     options = ConvertOptions(
         threads=threads,
@@ -145,16 +205,11 @@ def main(argv: list[str] | None = None) -> int:
         compression=args.compression,
         min_size=args.min_size,
         max_size=args.max_size,
-        batch_count=args.batch_count,
         batch_size=args.batch_size,
         extract_strings=args.extract_executable_strings,
         single_file=args.single_file,
         deterministic_dedup=args.deterministic_dedup,
-        columns=(
-            tuple(c.strip() for c in args.columns.split(",") if c.strip())
-            if args.columns
-            else None
-        ),
+        columns=parse_columns(args.columns),
     )
     options.validate()
     paths = get_paths(args.paths)
@@ -164,7 +219,12 @@ def main(argv: list[str] | None = None) -> int:
 
     from pyspark.sql import SparkSession
 
-    from archive_to_parquet_spark.plans.convert import convert, convert_incremental
+    from archive_to_parquet_spark.plans.convert import (
+        counted_write,
+        entries_pipeline,
+        skip_existing,
+    )
+    from archive_to_parquet_spark.plans.sink import write_parquet
     from archive_to_parquet_spark.session import get_spark
 
     # only stop a session this invocation created: when main() is
@@ -185,92 +245,37 @@ def main(argv: list[str] | None = None) -> int:
     if not args.no_progress and sys.stderr.isatty():
         progress_stop = _start_progress_reporter(spark)
     try:
+        entries = entries_pipeline(spark, paths, options, urls=args.urls)
         if args.media:
-            from pyspark.sql import Observation
-            from pyspark.sql import functions as F
-
             from archive_to_parquet_spark.operators.multimodal import (
                 media_table_from_entries,
                 profile_media,
             )
-            from archive_to_parquet_spark.plans.convert import (
-                ConversionCounters,
-                entries_pipeline,
-            )
 
-            entries = entries_pipeline(spark, paths, options, urls=args.urls)
-            obs = Observation("media")
-            profile = profile_media(media_table_from_entries(entries)).observe(
-                obs,
-                F.count(F.lit(1)).alias("rows"),
-                F.sum("n_bytes").alias("bytes"),
-            )
-            profile.write.mode("overwrite").parquet(args.output)
-            got = obs.get
-            if not got["rows"]:
-                print("error: no media rows produced", file=sys.stderr)
-                return 1
-            counters = ConversionCounters(
-                output_rows=got["rows"], output_bytes=got["bytes"] or 0
-            )
+            df = profile_media(media_table_from_entries(entries))
+            key, bytes_column = None, "n_bytes"
+            write = _table_writer(options, jsonl=False)
         elif args.documents:
-            from pyspark.sql import Observation
-            from pyspark.sql import functions as F
+            from archive_to_parquet_spark.plans.crawl import documents_from_entries
 
-            from archive_to_parquet_spark.plans.convert import (
-                ConversionCounters,
-            )
-            from archive_to_parquet_spark.plans.crawl import crawl_to_documents
-
-            if args.incremental:
-                if args.output_format == "jsonl":
-                    print(
-                        "error: --incremental requires the parquet output "
-                        "format (the doc_id probe reads the existing "
-                        "dataset's id column)",
-                        file=sys.stderr,
-                    )
-                    return 2
-                from archive_to_parquet_spark.plans.crawl import (
-                    crawl_to_documents_incremental,
-                )
-
-                rows, chars = crawl_to_documents_incremental(
-                    spark, paths, args.output, options, urls=args.urls
-                )
-                if not args.no_progress:
-                    print(
-                        f"appended {rows} new documents ({chars} chars) "
-                        f"to {args.output}"
-                    )
-                return 0
-            obs = Observation("crawl")
-            df = crawl_to_documents(spark, paths, options, urls=args.urls).observe(
-                obs, F.count(F.lit(1)).alias("rows"), F.sum("n_chars").alias("chars")
-            )
-            if args.output_format == "jsonl":
-                # one JSON object per line, gzip shards — to_json handles
-                # all escaping; shard count = task count
-                df.select(
-                    F.to_json(F.struct(*df.columns)).alias("value")
-                ).write.mode("overwrite").option("compression", "gzip").text(
-                    args.output
-                )
-            else:
-                df.write.mode("overwrite").parquet(args.output)
-            got = obs.get
-            if not got["rows"]:
-                print("error: no documents extracted from input files", file=sys.stderr)
-                return 1
-            counters = ConversionCounters(
-                output_rows=got["rows"], output_bytes=got["chars"] or 0
-            )
-        elif args.incremental:
-            counters = convert_incremental(
-                spark, paths, args.output, options, urls=args.urls
-            )
+            df = documents_from_entries(entries)
+            key, bytes_column = "doc_id", "n_chars"
+            write = _table_writer(options, jsonl=args.output_format == "jsonl")
         else:
-            counters = convert(spark, paths, args.output, options, urls=args.urls)
+            df, key, bytes_column = entries, "hash", "size"
+            write = partial(write_parquet, options=options)
+        if args.incremental:
+            df = skip_existing(spark, df, args.output, key)
+        counters = counted_write(
+            df,
+            args.output,
+            write,
+            bytes_column,
+            mode="append" if args.incremental else "overwrite",
+        )
+    except ValueError as e:
+        print(f"error: {e}", file=sys.stderr)
+        return 2
     except RuntimeError as e:
         print(f"error: {e}", file=sys.stderr)
         return 1
@@ -282,7 +287,7 @@ def main(argv: list[str] | None = None) -> int:
     if not args.no_progress:
         print(
             f"wrote {counters.output_rows} rows "
-            f"({counters.output_bytes} content bytes) to {args.output}"
+            f"(sum of {bytes_column}: {counters.output_bytes}) to {args.output}"
         )
     return 0
 

@@ -4,19 +4,23 @@ Mirrors the reference's ``ConvertionOptions`` (reference src/lib.rs:26-52)
 and its CLI surface (reference src/main.rs:26-85). Defaults match the
 reference: threads=8 (library default; the CLI overrides to available
 parallelism), include=all, unique=False, SNAPPY compression,
-batch_count=14, batch_size=100MB, extract_strings=False.
+batch_size=100MB, extract_strings=False. The reference's
+``batch_count`` (its channel depth) has no Spark counterpart; the CLI
+accepts ``--batch-count`` for flag parity and ignores it.
 
 Batch knobs map to Spark partition sizing rather than literal channel
 buffers (SURVEY.md §2.7): ``threads`` → ingest scan tasks, at most one
 per thread, each walking one size-balanced bin of inputs
 (sources/archive_source.py); ``batch_size`` → Arrow batch budget inside
-the ingest walker.
+the ingest walker (sources/archive_source.py ``walk_inputs``).
 """
 
 from __future__ import annotations
 
 import enum
-from dataclasses import dataclass, field
+from dataclasses import dataclass
+
+from archive_to_parquet_spark.schema import ENTRY_COLUMNS
 
 
 class IncludeType(str, enum.Enum):
@@ -51,7 +55,6 @@ class ConvertOptions:
     compression: str = "snappy"
     min_size: int | None = None
     max_size: int | None = None  # EXCLUSIVE (reference src/lib.rs:55-62)
-    batch_count: int = 14
     batch_size: int = DEFAULT_BATCH_SIZE
     extract_strings: bool = False
     min_string_len: int = DEFAULT_MIN_STRING_LEN
@@ -95,11 +98,10 @@ class ConvertOptions:
         if self.max_depth < 1:
             raise ValueError("max_depth must be >= 1")
         if self.columns is not None:
-            valid = ("source", "path", "size", "hash", "content", "format")
-            bad = [c for c in self.columns if c not in valid]
+            bad = [c for c in self.columns if c not in ENTRY_COLUMNS]
             if bad or not self.columns:
                 raise ValueError(
-                    f"columns must be a non-empty subset of {valid}; got "
+                    f"columns must be a non-empty subset of {ENTRY_COLUMNS}; got "
                     f"{self.columns!r}"
                 )
             if "content" not in self.columns and self.include != IncludeType.ALL:
@@ -118,3 +120,12 @@ class ConvertOptions:
                     "min/max_size filter on size; it cannot be pruned "
                     "from columns"
                 )
+
+
+def parse_columns(raw: str | None) -> tuple[str, ...] | None:
+    """A comma-separated ``columns`` projection (CLI ``--columns``, the
+    DataSource ``columns`` option); None when not given. The names are
+    checked by ``ConvertOptions.validate``."""
+    if not raw:
+        return None
+    return tuple(c.strip() for c in raw.split(",") if c.strip())

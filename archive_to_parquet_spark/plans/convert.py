@@ -5,6 +5,11 @@ filter → (optional) global hash dedup → parquet sink, with
 observability counters — the Spark expression of reference
 src/main.rs:87-135 / SURVEY.md §3.1.
 
+Every ingest mode (``convert``, ``convert_incremental``, the CLI's
+``--documents`` and ``--media``, ``stream_convert``) is a composition of
+the stages here: ``refine`` over the scanned entries, optionally
+``skip_existing`` against the output, then one ``counted_write``.
+
 All post-ingest stages are narrow column predicates except dedup (one
 shuffle on ``hash``); filters run in the SAME stage as the walker
 (no exchange), so content bytes stream from the archive straight into
@@ -13,7 +18,9 @@ the parquet writer unless ``unique`` forces the dedup exchange.
 
 from __future__ import annotations
 
+from collections.abc import Callable
 from dataclasses import dataclass
+from functools import partial
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -40,15 +47,10 @@ class ConversionCounters:
     output_bytes: int
 
 
-def entries_pipeline(
-    spark: SparkSession,
-    paths: list[str],
-    options: ConvertOptions | None = None,
-    urls: bool = False,
-) -> DataFrame:
-    """The full logical plan, unsunk — scan/flatten/filter/dedup."""
-    options = options or ConvertOptions()
-    df = read_archives(spark, paths, options, urls=urls)
+def refine(df: DataFrame, options: ConvertOptions) -> DataFrame:
+    """Entries → the rows the reference keeps: include filter → size
+    filter → (``unique``) hash dedup → the reference projection when
+    ``emit_format_column`` is off."""
     df = apply_include_filter(df, options.include)
     df = apply_size_filter(df, options)
     if options.unique:
@@ -62,77 +64,72 @@ def entries_pipeline(
     return df
 
 
-def convert_incremental(
+def entries_pipeline(
     spark: SparkSession,
     paths: list[str],
-    output: str,
     options: ConvertOptions | None = None,
     urls: bool = False,
-) -> ConversionCounters:
-    """Append-only conversion that skips content already present in
-    ``output`` (by hash) — the steady-state ingest mode for a growing
-    corpus: each batch pays one left-anti join against the existing
-    hash set instead of a full-table rewrite.
+) -> DataFrame:
+    """The full logical plan, unsunk — scan/flatten/filter/dedup."""
+    options = options or ConvertOptions()
+    return refine(read_archives(spark, paths, options, urls=urls), options)
 
-    At scale: the anti join reads ONLY the hash column of the existing
-    dataset (column pruning; with the hash-prefix partitioned layout it
-    also prunes partitions), so cost tracks the new batch + the hash
-    index, not total corpus bytes. New rows may still duplicate each
-    other; ``options.unique`` dedups within the batch first.
-    """
+
+def skip_existing(
+    spark: SparkSession, df: DataFrame, output: str, key: str
+) -> DataFrame:
+    """Rows of ``df`` whose ``key`` is absent from the dataset at
+    ``output`` — the append-only ingest step. The probe reads ONLY the
+    key column of the existing dataset (column pruning; with the
+    hash-prefix partitioned layout it also prunes partitions), so cost
+    tracks the new batch + the key index, not total corpus bytes. Raises
+    ``ValueError`` before any job when ``df`` lacks ``key``."""
     from pyspark.errors import AnalysisException
 
-    options = options or ConvertOptions()
-    df = entries_pipeline(spark, paths, options, urls=urls)
+    if key not in df.columns:
+        raise ValueError(
+            f"skipping rows already in {output} needs the {key!r} column; "
+            f"got columns {df.columns}"
+        )
     # probe the output through Spark, not os.path — the output may be a
     # non-local URI (hdfs://, s3a://) where a local existence check
-    # would silently skip the dedup anti-join
+    # would silently skip the anti-join
     try:
-        existing_hashes = spark.read.parquet(output).select("hash")
+        existing = spark.read.parquet(output).select(key)
     except AnalysisException:
-        existing_hashes = None  # first batch: nothing to dedup against
-    if existing_hashes is not None:
-        df = df.join(existing_hashes, "hash", "left_anti")
-    obs = Observation("incremental_counters")
-    df = df.observe(
-        obs,
-        F.count(F.lit(1)).alias("output_rows"),
-        F.coalesce(F.sum("size"), F.lit(0)).alias("output_bytes"),
-    )
-    # append mode; zero NEW rows is fine (everything already ingested)
-    write_parquet(df, output, options, mode="append")
-    return ConversionCounters(
-        output_rows=int(obs.get["output_rows"]),
-        output_bytes=int(obs.get["output_bytes"]),
-    )
+        return df  # first batch: nothing to skip
+    # a USING join puts the key first; keep the frame's column order
+    return df.join(existing, key, "left_anti").select(*df.columns)
 
 
-def convert(
-    spark: SparkSession,
-    paths: list[str],
+def counted_write(
+    df: DataFrame,
     output: str,
-    options: ConvertOptions | None = None,
-    urls: bool = False,
+    write: Callable[..., None],
+    bytes_column: str = "size",
+    mode: str = "overwrite",
 ) -> ConversionCounters:
-    """Run the conversion and write parquet. Raises on zero output rows
-    (reference src/main.rs:129-132)."""
-    options = options or ConvertOptions()
-    df = entries_pipeline(spark, paths, options, urls=urls)
+    """Run ``write(df, output, mode=mode)`` with the row count and the
+    sum of ``bytes_column`` observed inside the same job. Zero rows under
+    ``overwrite`` raises ``RuntimeError`` and removes the empty dataset
+    (reference src/main.rs:129-132); zero new rows under ``append`` is
+    fine (everything was already ingested)."""
     obs = Observation("conversion_counters")
     df = df.observe(
         obs,
         F.count(F.lit(1)).alias("output_rows"),
-        # size may be pruned from the projection (options.columns)
+        # the column may be pruned from the projection (options.columns)
         F.coalesce(
-            F.sum("size") if "size" in df.columns else F.lit(0), F.lit(0)
+            F.sum(bytes_column) if bytes_column in df.columns else F.lit(0),
+            F.lit(0),
         ).alias("output_bytes"),
     )
-    write_parquet(df, output, options)
+    write(df, output, mode=mode)
     counters = ConversionCounters(
         output_rows=int(obs.get["output_rows"]),
         output_bytes=int(obs.get["output_bytes"]),
     )
-    if counters.output_rows == 0:
+    if counters.output_rows == 0 and mode == "overwrite":
         # the reference errors WITHOUT producing output (src/main.rs:129-132);
         # remove the empty dataset the sink just committed so a failed run
         # leaves nothing behind (local/file URIs only — for remote
@@ -151,3 +148,38 @@ def convert(
             "no rows converted from input files" + detail  # reference src/main.rs:131
         )
     return counters
+
+
+def convert_incremental(
+    spark: SparkSession,
+    paths: list[str],
+    output: str,
+    options: ConvertOptions | None = None,
+    urls: bool = False,
+) -> ConversionCounters:
+    """Append-only conversion that skips content already present in
+    ``output`` (by hash) — the steady-state ingest mode for a growing
+    corpus: each batch pays one left-anti join against the existing
+    hash set instead of a full-table rewrite. New rows may still
+    duplicate each other; ``options.unique`` dedups within the batch
+    first."""
+    options = options or ConvertOptions()
+    df = entries_pipeline(spark, paths, options, urls=urls)
+    df = skip_existing(spark, df, output, "hash")
+    return counted_write(
+        df, output, partial(write_parquet, options=options), mode="append"
+    )
+
+
+def convert(
+    spark: SparkSession,
+    paths: list[str],
+    output: str,
+    options: ConvertOptions | None = None,
+    urls: bool = False,
+) -> ConversionCounters:
+    """Run the conversion and write parquet. Raises on zero output rows
+    (reference src/main.rs:129-132)."""
+    options = options or ConvertOptions()
+    df = entries_pipeline(spark, paths, options, urls=urls)
+    return counted_write(df, output, partial(write_parquet, options=options))

@@ -6,9 +6,11 @@ walker (sources/walker.py) yields captured response bodies as entries,
 and everything after the walker is pure JVM column work — UTF-8
 validity gate, HTML detection by content sniff, `html_to_text`
 extraction, language ID, quality features — fused by Catalyst into the
-ingest scan's stage. No shuffle anywhere: input → documents is a single
-stage, exactly like the reference's archive → parquet path, with the
-text refinement layered in at scan speed.
+ingest scan's stage. The entries first pass the same refine stage as
+``convert`` (include, size, optional hash dedup). Without ``unique``
+there is no shuffle anywhere: input → documents is a single stage,
+exactly like the reference's archive → parquet path, with the text
+refinement layered in at scan speed.
 
 Output schema matches the synthetic `documents` testdata table
 (doc_id, text, lang, source, n_chars) so every downstream catalog
@@ -25,7 +27,7 @@ from archive_to_parquet_spark.functions.html import html_title, html_to_text
 from archive_to_parquet_spark.functions.text import language_id_col
 from archive_to_parquet_spark.operators.filters import is_utf8_col
 from archive_to_parquet_spark.options import ConvertOptions
-from archive_to_parquet_spark.sources.archive_source import read_archives
+from archive_to_parquet_spark.plans.convert import entries_pipeline
 
 
 def looks_like_html(text_col) -> F.Column:
@@ -84,44 +86,9 @@ def crawl_to_documents(
     options: ConvertOptions | None = None,
     urls: bool = False,
 ) -> DataFrame:
-    """WARC/archive inputs → documents table, single-stage."""
+    """WARC/archive inputs → documents table, single-stage unless
+    ``options.unique`` adds the dedup exchange. The entries pass the
+    same refine stage as ``convert`` (include, size, unique) first."""
     return documents_from_entries(
-        read_archives(spark, inputs, options, urls=urls)
+        entries_pipeline(spark, inputs, options, urls=urls)
     )
-
-
-def crawl_to_documents_incremental(
-    spark,
-    paths,
-    output: str,
-    options=None,
-    urls: bool = False,
-):
-    """Append-only crawl ingestion: documents whose ``doc_id`` (the
-    content-hash-derived id) already exists in ``output`` are skipped —
-    the steady-state mode for a continuously-recrawled corpus. Same
-    anti-join economics as ``convert_incremental``: the probe reads
-    ONLY the doc_id column of the existing dataset; cost tracks the new
-    batch + the id index, never total corpus bytes. Returns
-    (n_new_rows, n_new_chars) after the append.
-    """
-    from pyspark.errors import AnalysisException
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as F
-
-    df = crawl_to_documents(spark, paths, options, urls=urls)
-    try:
-        existing = spark.read.parquet(output).select("doc_id")
-    except AnalysisException:
-        existing = None  # first batch
-    if existing is not None:
-        df = df.join(existing, "doc_id", "left_anti")
-    obs = Observation("crawl_incremental")
-    df = df.observe(
-        obs,
-        F.count(F.lit(1)).alias("rows"),
-        F.coalesce(F.sum("n_chars"), F.lit(0)).alias("chars"),
-    )
-    df.write.mode("append").parquet(output)
-    got = obs.get
-    return int(got["rows"]), int(got["chars"] or 0)

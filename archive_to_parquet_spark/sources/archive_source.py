@@ -38,47 +38,16 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 
 from archive_to_parquet_spark.options import ConvertOptions
+from archive_to_parquet_spark.schema import entry_arrow_schema, entry_ddl
 
 _BATCH_ROWS = 1024  # reference src/batch.rs:78
 
-# mirrors ENTRY_SCHEMA_DDL; the walker hands Arrow batches straight to
-# the JVM (mapInArrow) — no pandas object arrays in the hot path
-_PA_TYPES = {
-    "source": pa.string(),
-    "path": pa.string(),
-    "size": pa.int64(),
-    "hash": pa.binary(),
-    "content": pa.binary(),
-    "format": pa.string(),
-}
-_DDL_TYPES = {
-    "source": "string",
-    "path": "string",
-    "size": "long",
-    "hash": "binary",
-    "content": "binary",
-    "format": "string",
-}
-ENTRY_COLUMNS = tuple(_PA_TYPES)
 
-
-def _rows_to_batch(
-    rows: list, columns: tuple[str, ...] = ENTRY_COLUMNS
-) -> pa.RecordBatch:
+def _rows_to_batch(rows: list, schema: pa.Schema) -> pa.RecordBatch:
     return pa.RecordBatch.from_arrays(
-        [
-            pa.array([getattr(r, c) for r in rows], _PA_TYPES[c])
-            for c in columns
-        ],
-        schema=pa.schema([(c, _PA_TYPES[c]) for c in columns]),
+        [pa.array([getattr(r, f.name) for r in rows], f.type) for f in schema],
+        schema=schema,
     )
-
-
-def _output_columns(options: ConvertOptions) -> tuple[str, ...]:
-    # canonical column order regardless of how the subset was spelled
-    if options.columns is None:
-        return ENTRY_COLUMNS
-    return tuple(c for c in ENTRY_COLUMNS if c in options.columns)
 
 
 def _walk_input(input_path: str, is_url: bool, options: ConvertOptions):
@@ -100,24 +69,31 @@ def walk_inputs(
     inputs: Iterable[tuple[str, bool]], options: ConvertOptions
 ) -> Iterator[pa.RecordBatch]:
     """Walk ``(path, is_url)`` inputs in order into Arrow batches — the
-    body of every ingest ``mapInArrow`` task.
+    body of every ingest task (``read_archives``, the ``archive``
+    DataSource, ``stream_convert``).
 
-    mapInArrow, not mapInPandas: entry content is opaque bytes, and the
-    pandas leg (object arrays → per-batch Arrow re-conversion) only
-    added copies. Each yielded RecordBatch is capped by rows AND bytes
-    (the reference's dual cap); a batch may span inputs."""
-    columns = _output_columns(options)
+    Arrow, not pandas: entry content is opaque bytes, and a pandas leg
+    (object arrays → per-batch Arrow re-conversion) only adds copies.
+    Each yielded RecordBatch is capped by rows AND content bytes (the
+    reference's dual cap): at most 1024 rows, and at most
+    ``options.batch_size`` bytes unless it is one larger row. A batch
+    may span inputs."""
+    schema = entry_arrow_schema(options.columns)
     pending: list = []
     pending_bytes = 0
     for input_path, is_url in inputs:
         for row in _walk_input(input_path, is_url, options):
-            pending.append(row)
-            pending_bytes += len(row.content or b"")
-            if len(pending) >= _BATCH_ROWS or pending_bytes >= options.batch_size:
-                yield _rows_to_batch(pending, columns)
+            n_bytes = len(row.content or b"")
+            if pending and (
+                len(pending) == _BATCH_ROWS
+                or pending_bytes + n_bytes > options.batch_size
+            ):
+                yield _rows_to_batch(pending, schema)
                 pending, pending_bytes = [], 0
+            pending.append(row)
+            pending_bytes += n_bytes
     if pending:
-        yield _rows_to_batch(pending, columns)
+        yield _rows_to_batch(pending, schema)
 
 
 def read_archives(
@@ -161,12 +137,13 @@ def read_archives(
             options,
         )
 
-    ddl = ", ".join(f"{c} {_DDL_TYPES[c]}" for c in _output_columns(options))
     # The bins travel in the mapInArrow closure (PySpark broadcasts a
     # pickled command over 1 MB, so a large manifest ships once per
     # executor); the JVM-only Range keeps the scan at one Python
     # evaluation per task.
-    return spark.range(0, len(bins), 1, len(bins)).mapInArrow(walk_bins, ddl)
+    return spark.range(0, len(bins), 1, len(bins)).mapInArrow(
+        walk_bins, entry_ddl(options.columns)
+    )
 
 
 # stat-ing a manifest beyond this on the driver costs more than the

@@ -16,10 +16,12 @@ Usage::
 
 Options: ``paths`` (comma-separated), ``glob`` (shell glob), ``urls``
 ("true" → paths are http(s) URLs), ``extract_strings``, ``max_depth``,
-``batch_rows``, ``columns`` (comma-separated projection — excluding
-``content`` makes the walker stream-hash without ever buffering entry
-payloads; the Python DataSource API cannot see the query's projection,
-so pruning is an explicit option, not automatic).
+``columns`` (comma-separated projection — excluding ``content`` makes
+the walker stream-hash without ever buffering entry payloads; the
+Python DataSource API cannot see the query's projection, so pruning is
+an explicit option, not automatic). Each partition is one
+``walk_inputs`` call, so its Arrow batches carry the same dual cap as
+``read_archives`` (1024 rows or ``batch_size`` content bytes).
 """
 
 from __future__ import annotations
@@ -27,25 +29,21 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
-from pyspark.sql.types import StructType
 
-from archive_to_parquet_spark.schema import ENTRY_SCHEMA
+from archive_to_parquet_spark.options import ConvertOptions, parse_columns
+from archive_to_parquet_spark.schema import ENTRY_SCHEMA, entry_struct
 
 
-def _parse_columns(raw: str | None) -> tuple[str, ...] | None:
-    """Comma-separated projection option → canonical-order tuple.
-    Unknown names raise (matching the CLI/ConvertOptions front door) —
-    silently dropping a typo'd column would be silent data loss."""
-    if not raw:
-        return None
-    wanted = {c.strip() for c in raw.split(",") if c.strip()}
-    valid = {f.name for f in ENTRY_SCHEMA.fields}
-    bad = sorted(wanted - valid)
-    if bad or not wanted:
-        raise ValueError(
-            f"unknown columns {bad}; valid: {sorted(valid)}"
-        )
-    return tuple(f.name for f in ENTRY_SCHEMA.fields if f.name in wanted)
+def _convert_options(options: dict) -> ConvertOptions:
+    """The ``archive`` format's options as a validated ConvertOptions."""
+    out = ConvertOptions(
+        extract_strings=str(options.get("extract_strings", "false")).lower()
+        == "true",
+        max_depth=int(options.get("max_depth", 16)),
+        columns=parse_columns(options.get("columns")),
+    )
+    out.validate()
+    return out
 
 
 class ArchivePartition(InputPartition):
@@ -62,10 +60,7 @@ class ArchiveDataSource(DataSource):
         return "archive"
 
     def schema(self):
-        cols = _parse_columns(self.options.get("columns"))
-        if cols is None:
-            return ENTRY_SCHEMA
-        return StructType([f for f in ENTRY_SCHEMA.fields if f.name in cols])
+        return entry_struct(_convert_options(self.options).columns)
 
     def reader(self, schema) -> "ArchiveReader":
         return ArchiveReader(self.options)
@@ -94,58 +89,11 @@ class ArchiveReader(DataSourceReader):
         return [ArchivePartition(p, is_url) for p in self._paths()]
 
     def read(self, partition: ArchivePartition) -> Iterator:
-        import pyarrow as pa
+        from archive_to_parquet_spark.sources.archive_source import walk_inputs
 
-        from archive_to_parquet_spark.options import ConvertOptions
-        from archive_to_parquet_spark.sources.url_source import open_url
-        from archive_to_parquet_spark.sources.walker import walk_path, walk_stream
-
-        columns = _parse_columns(self.options.get("columns"))
-        options = ConvertOptions(
-            extract_strings=str(self.options.get("extract_strings", "false")).lower()
-            == "true",
-            max_depth=int(self.options.get("max_depth", 16)),
-            columns=columns,
+        yield from walk_inputs(
+            [(partition.path, partition.is_url)], _convert_options(self.options)
         )
-        options.validate()
-        batch_rows = int(self.options.get("batch_rows", 1024))
-
-        def batches(rows_iter):
-            buf: list = []
-            for row in rows_iter:
-                buf.append(row)
-                if len(buf) >= batch_rows:
-                    yield _to_arrow(buf)
-                    buf = []
-            if buf:
-                yield _to_arrow(buf)
-
-        _types = {
-            "source": pa.string(),
-            "path": pa.string(),
-            "size": pa.int64(),
-            "hash": pa.binary(),
-            "content": pa.binary(),
-            "format": pa.string(),
-        }
-        out_cols = columns or tuple(_types)
-
-        def _to_arrow(rows) -> pa.RecordBatch:
-            return pa.RecordBatch.from_pydict(
-                {
-                    c: pa.array([getattr(r, c) for r in rows], type=_types[c])
-                    for c in out_cols
-                }
-            )
-
-        if partition.is_url:
-            stream, size = open_url(partition.path)
-            try:
-                yield from batches(walk_stream(partition.path, stream, size, options))
-            finally:
-                stream.close()
-        else:
-            yield from batches(walk_path(partition.path, options))
 
 
 try:  # streaming reader API (Spark 4)
@@ -225,8 +173,6 @@ class ArchiveStreamReader(SimpleDataSourceStreamReader):
         import glob as globmod
         import os
 
-        from archive_to_parquet_spark.options import ConvertOptions
-
         seen = self._seen(start)
         files = sorted(globmod.glob(self.options["glob"]))
         opts = ConvertOptions(
@@ -263,8 +209,6 @@ class ArchiveStreamReader(SimpleDataSourceStreamReader):
     def readBetweenOffsets(self, start: dict, end: dict):
         import glob as globmod
         import os
-
-        from archive_to_parquet_spark.options import ConvertOptions
 
         before = self._seen(start)
         after = self._seen(end)

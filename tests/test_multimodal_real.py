@@ -451,3 +451,33 @@ def test_cli_media_mode(tmp_path):
     assert wav_row["kind"] == "audio"
     assert wav_row["sample_rate"] == 8000
     assert rows["note.txt"]["kind"] == "unknown"
+
+
+def test_cli_media_incremental_is_rejected(tmp_path, capsys):
+    """--media has no key to skip existing rows on: --incremental exits 2."""
+    import os
+
+    from archive_to_parquet_spark.cli import main
+    from tests.conftest import tar_archive
+
+    src = tmp_path / "media.tar"
+    src.write_bytes(tar_archive({"note.txt": b"not media at all"}))
+    out = str(tmp_path / "profile.parquet")
+    assert main(["--media", "--incremental", "--no-progress", out, str(src)]) == 2
+    assert "--incremental does not apply to --media" in capsys.readouterr().err
+    assert not os.path.exists(out)
+
+
+def test_cli_media_zero_rows_leaves_nothing(tmp_path):
+    """A --media run with no entry left fails like the raw conversion:
+    exit 1 and no dataset left behind."""
+    import os
+
+    from archive_to_parquet_spark.cli import main
+    from tests.conftest import tar_archive
+
+    src = tmp_path / "media.tar"
+    src.write_bytes(tar_archive({"big.bin": b"B" * 5000}))
+    out = str(tmp_path / "profile.parquet")
+    assert main(["--media", "--max-size", "100", "--no-progress", out, str(src)]) == 1
+    assert not os.path.exists(out)

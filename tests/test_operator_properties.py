@@ -379,25 +379,34 @@ def test_no_new_order_dependent_rounded_aggregates():
     functions/exactnum.py). Money aggregates must use the exact
     integer fragments; only the documented exceptions below (log/exp
     scores where rounding ties are measure-zero, and avgs over integer
-    inputs whose sums are already exact) may keep the double form."""
+    inputs whose sums are already exact) may keep the double form.
+    Scans every ``queries*.py`` module of the catalog."""
+    import pathlib
     import re
+
+    import archive_to_parquet_spark
 
     allowed = {
         # log-based BM25 contributions (irrational values)
         ("queries.py", "score"),
         ("queries_ext.py", "score"),
+        ("queries_ext3.py", "score"),
         # exp-decayed sums (irrational weights)
         ("queries_ext.py", "decayed_value"),
         ("queries_ext.py", "decayed_count"),
         # integer-input avgs: sums are exact, division deterministic
         ("queries.py", "avg_ship_delay_days"),
         ("queries.py", "avg_chars"),
+        # a sum of log-ratio PSI terms (irrational values)
+        ("queries_ext4.py", "psi_total"),
     }
-    base = "/root/repo/archive_to_parquet_spark"
     offenders = []
-    for fname in ("queries.py", "queries_ext.py", "queries_ext2.py",
-                  "queries_tpch.py"):
-        src = open(f"{base}/{fname}").read()
+    package = pathlib.Path(archive_to_parquet_spark.__file__).parent
+    catalog = sorted(package.glob("queries*.py"))
+    assert catalog
+    for path in catalog:
+        fname = path.name
+        src = path.read_text()
         for m in re.finditer(
             r"F\.round\(\s*F\.(?:sum|avg)\([^)]*\)[^)]*\)\s*\.alias\(\s*"
             r"f?['\"]([^'\"]+)['\"]", src

@@ -130,17 +130,42 @@ def test_convert_incremental_skips_existing(spark, fixture_archives, tmp_path):
     assert "fresh.txt" in {r["path"] for r in table.to_pylist()}
 
 
-def test_observability_counters(spark, fixture_archives):
-    from archive_to_parquet_spark.observability import observe_entries, stage_snapshot
+def test_convert_incremental_pruned_columns(spark, fixture_archives, tmp_path):
+    """Incremental conversion over a pruned projection: without ``size``
+    it counts 0 bytes instead of failing to resolve ``size``; without
+    its ``hash`` key it raises a ValueError naming the column before
+    any job starts."""
+    from archive_to_parquet_spark.plans.convert import convert_incremental
 
-    df = entries_pipeline(spark, fixture_archives, ConvertOptions())
-    observed, resolve = observe_entries(df)
-    n = observed.count()
-    counters = resolve()
-    assert counters.entries_read == n == 6
-    assert counters.entries_read_bytes > 0
-    assert counters.distinct_sources == 2
-    assert 0 < counters.text_entries < 6
+    out = str(tmp_path / "inc_pruned.parquet")
+    pruned = ConvertOptions(columns=("source", "path", "hash"))
+    c1 = convert_incremental(spark, fixture_archives[:1], out, pruned)
+    assert (c1.output_rows, c1.output_bytes) == (4, 0)
+    c2 = convert_incremental(spark, fixture_archives[:1], out, pruned)
+    assert c2.output_rows == 0
+    assert pq.read_table(out).column_names == ["source", "path", "hash"]
+
+    sc = spark.sparkContext
+    sc.setJobGroup("incremental_without_key", "must not start a job")
+    try:
+        with pytest.raises(ValueError, match="'hash'"):
+            convert_incremental(
+                spark,
+                fixture_archives,
+                str(tmp_path / "no_key.parquet"),
+                ConvertOptions(columns=("source", "path", "size")),
+            )
+        assert sc.statusTracker().getJobIdsForGroup("incremental_without_key") == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert not (tmp_path / "no_key.parquet").exists()
+
+
+def test_observability_counters(spark, fixture_archives):
+    from archive_to_parquet_spark.observability import stage_snapshot
+
+    assert entries_pipeline(spark, fixture_archives, ConvertOptions()).count() == 6
     snap = stage_snapshot(spark)
     assert snap.failed_tasks == 0
 

@@ -380,3 +380,40 @@ def test_read_archives_lpt_rows_identical(spark, tmp_path):
         ("in2.tar", "f0.txt"),
         ("in2.tar", "f1.txt"),
     }
+
+
+def test_walk_inputs_dual_cap(tmp_path):
+    """walk_inputs, the one walk → Arrow batch path of every ingest mode:
+    at most 1024 rows per batch, at most ``batch_size`` content bytes
+    unless the batch is one larger row, batches spanning inputs, and the
+    pruned Arrow schema under ``columns``."""
+    import pyarrow as pa
+
+    from archive_to_parquet_spark.sources.archive_source import walk_inputs
+
+    many = tmp_path / "many.tar"
+    many.write_bytes(tar_archive({f"m{i}.txt": b"x" for i in range(1100)}))
+    sized = tmp_path / "sized.tar"
+    sized.write_bytes(
+        tar_archive(
+            {f"s{i}.bin": bytes([i]) * n for i, n in enumerate((900, 900, 900, 2500, 10))}
+        )
+    )
+    inputs = [(str(many), False), (str(sized), False)]
+    batches = list(walk_inputs(inputs, ConvertOptions(batch_size=2000)))
+    assert sum(b.num_rows for b in batches) == 1105
+    for b in batches:
+        content_bytes = sum(len(c) for c in b.column("content").to_pylist())
+        assert b.num_rows <= 1024
+        assert content_bytes <= 2000 or b.num_rows == 1, (b.num_rows, content_bytes)
+    assert max(b.num_rows for b in batches) == 1024
+    assert any(len(set(b.column("source").to_pylist())) == 2 for b in batches)
+
+    pruned = list(
+        walk_inputs(inputs, ConvertOptions(columns=("hash", "source", "path")))
+    )
+    expected = pa.schema(
+        [("source", pa.string()), ("path", pa.string()), ("hash", pa.binary())]
+    )
+    assert all(b.schema == expected for b in pruned)
+    assert [b.num_rows for b in pruned] == [1024, 81]

@@ -193,6 +193,18 @@ def test_stateful_tws_declares_or_runs(spark, event_stream_dir):
         q.stop()
 
 
+def _drain(query, timeout_s: float = 120) -> None:
+    """Wait for an availableNow stream_convert query to finish."""
+    deadline = time.time() + timeout_s
+    try:
+        while query.isActive and time.time() < deadline:
+            time.sleep(0.5)
+    finally:
+        if query.isActive:
+            query.stop()
+    assert query.exception() is None, query.exception()
+
+
 def test_stream_convert_watches_directory(spark, tmp_path):
     from archive_to_parquet_spark.options import ConvertOptions
     from archive_to_parquet_spark.streaming.stream_convert import stream_convert
@@ -204,19 +216,45 @@ def test_stream_convert_watches_directory(spark, tmp_path):
     )
     out = str(tmp_path / "out_parquet")
     ckpt = str(tmp_path / "ckpt")
-    q = stream_convert(spark, str(watch), out, ckpt, ConvertOptions())
-    try:
-        # availableNow trigger: drains existing files then stops
-        deadline = time.time() + 120
-        while q.isActive and time.time() < deadline:
-            time.sleep(0.5)
-    finally:
-        if q.isActive:
-            q.stop()
+    _drain(stream_convert(spark, str(watch), out, ckpt, ConvertOptions()))
     table = pq.read_table(out)
     assert sorted(r["path"] for r in table.to_pylist()) == ["f1.txt", "f2.txt"]
     contents = {r["path"]: r["content"] for r in table.to_pylist()}
     assert contents["f1.txt"] == b"stream me"
+
+
+def test_stream_convert_unique_is_global(spark, tmp_path):
+    """``unique`` holds across micro-batches: an archive arriving in a
+    later run whose member bytes the output already has adds no row."""
+    from archive_to_parquet_spark.options import ConvertOptions
+    from archive_to_parquet_spark.streaming.stream_convert import stream_convert
+
+    watch = tmp_path / "incoming"
+    watch.mkdir()
+    out = str(tmp_path / "out_parquet")
+    ckpt = str(tmp_path / "ckpt")
+    opts = ConvertOptions(unique=True)
+    (watch / "a.tar").write_bytes(tar_archive({"a.txt": b"same member bytes"}))
+    _drain(stream_convert(spark, str(watch), out, ckpt, opts))
+    (watch / "b.tar").write_bytes(tar_archive({"b.txt": b"same member bytes"}))
+    _drain(stream_convert(spark, str(watch), out, ckpt, opts))
+    assert pq.read_table(out).num_rows == 1
+
+
+def test_stream_convert_pruned_columns(spark, tmp_path):
+    """A pruned ``columns`` projection streams into a pruned output."""
+    from archive_to_parquet_spark.options import ConvertOptions
+    from archive_to_parquet_spark.streaming.stream_convert import stream_convert
+
+    watch = tmp_path / "incoming"
+    watch.mkdir()
+    (watch / "a.tar").write_bytes(tar_archive({"f1.txt": b"pruned stream"}))
+    out = str(tmp_path / "out_parquet")
+    opts = ConvertOptions(columns=("source", "path", "hash"))
+    _drain(stream_convert(spark, str(watch), out, str(tmp_path / "ckpt"), opts))
+    table = pq.read_table(out)
+    assert table.column_names == ["source", "path", "hash"]
+    assert table.column("path").to_pylist() == ["f1.txt"]
 
 
 def test_interval_join_stream_pairs(spark, tmp_path):

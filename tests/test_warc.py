@@ -323,3 +323,54 @@ def test_cli_documents_incremental_appends_only_new(tmp_path):
         "http://a.example/",
         "http://b.example/",
     ]
+
+
+def test_cli_documents_honours_refine_flags(tmp_path):
+    """--documents runs the entries through the same refine stage as
+    the raw conversion: --max-size drops the large page."""
+    import pyarrow.parquet as pq
+
+    from archive_to_parquet_spark.cli import main
+
+    small = b"<html><body><p>a short page that stays</p></body></html>"
+    large = b"<html><body><p>" + b"a long page that goes " * 100 + b"</p></body></html>"
+    src = tmp_path / "crawl.warc.gz"
+    src.write_bytes(
+        gzip.compress(
+            warc_record("response", http_response(small), uri="http://small.example/")
+            + warc_record("response", http_response(large), uri="http://large.example/")
+        )
+    )
+    out = str(tmp_path / "docs.parquet")
+    rc = main(["--documents", "--max-size", "1000", "--no-progress", out, str(src)])
+    assert rc == 0
+    assert [r["url"] for r in pq.read_table(out).to_pylist()] == ["http://small.example/"]
+
+
+def test_cli_documents_zero_rows_leaves_nothing(tmp_path):
+    """A --documents run that extracts no document fails like the raw
+    conversion: exit 1 and no dataset left behind."""
+    import os
+
+    from archive_to_parquet_spark.cli import main
+
+    src = tmp_path / "binary.tar"
+    src.write_bytes(tar_archive({"blob.bin": b"\xff\xfe\x00 not text"}))
+    out = str(tmp_path / "docs.parquet")
+    assert main(["--documents", "--no-progress", out, str(src)]) == 1
+    assert not os.path.exists(out)
+
+
+def test_cli_jsonl_without_documents_is_rejected(tmp_path, capsys):
+    """--output-format jsonl only applies to --documents; the raw
+    conversion rejects it instead of silently writing parquet."""
+    import os
+
+    from archive_to_parquet_spark.cli import main
+
+    src = tmp_path / "a.tar"
+    src.write_bytes(tar_archive({"a.txt": b"some text"}))
+    out = str(tmp_path / "out")
+    assert main(["--output-format", "jsonl", "--no-progress", out, str(src)]) == 2
+    assert "--output-format jsonl requires --documents" in capsys.readouterr().err
+    assert not os.path.exists(out)
