@@ -15,6 +15,13 @@ snapshotted on first pin and restored at interpreter exit (atexit), so
 a host that keeps using the session gets its own conf state back; until
 then the pins must stay in force because the caller executes the
 returned DataFrames after ``_wrap`` returns.
+
+Performance confs are left as the host set them. In particular the
+codegen cache (``spark.sql.codegen.cache.maxEntries``, which
+``session.get_spark`` sizes to the catalog's working set) is a static
+conf fixed once per JVM: a host session keeps its own size, and at
+Spark's default of 100 a repeated pass over the catalog recompiles its
+generated classes.
 """
 
 from __future__ import annotations

@@ -2,7 +2,8 @@
 
 Local testing runs ``local[N]``; the same configs are what we'd set on a
 real cluster (AQE on, Arrow on, UTC, shuffle partitions sized to the
-parallelism at hand rather than the 200 default).
+parallelism at hand rather than the 200 default, a codegen cache that
+holds the catalog's generated classes rather than the 100 default).
 """
 
 from __future__ import annotations
@@ -82,6 +83,10 @@ def get_spark(
     # count and planner settings — measured as a plan-shape drift
     # (an extra exchange) in entries whose explicit repartitions are
     # sized to co-partition with the session's shuffle count.
+    # A caller-owned session also keeps its own codegen cache size:
+    # spark.sql.codegen.cache.maxEntries is a static conf, read once per
+    # JVM when the first class is generated, so no runtime set could
+    # resize it (and __spark_entry__._wrap pins only result confs).
     existing = SparkSession.getActiveSession() or getattr(
         SparkSession, "_instantiatedSession", None
     )
@@ -143,6 +148,19 @@ def get_spark(
         # per-round task-launch overhead); production-size shuffles sit
         # far above either threshold and are untouched.
         .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "256k")
+        # Whole-stage codegen compiles each generated class with Janino
+        # into an LRU cache of maxEntries (default 100), a static conf
+        # read once per JVM at the first codegen. The catalog needs far
+        # more (measured with observability.codegen_counters, 4 cores):
+        # a cold pass over all 212 entries at sf0.001 compiles 2,664
+        # classes, one over the ten perfbench catalog-battery entries
+        # 269. At 100 each warm pass evicted every class before its
+        # next use and recompiled it: 275 compiles and 2.6 s of compile
+        # time per battery pass, 3,638 compiles per catalog pass. 4096
+        # holds the catalog with headroom (a warm catalog pass: 142 s →
+        # 99 s). Cost: ~16 KB of JVM non-heap per cached class, +43 MB
+        # after two catalog passes.
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")

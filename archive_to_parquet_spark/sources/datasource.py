@@ -22,6 +22,10 @@ Python DataSource API cannot see the query's projection, so pruning is
 an explicit option, not automatic). Each partition is one
 ``walk_inputs`` call, so its Arrow batches carry the same dual cap as
 ``read_archives`` (1024 rows or ``batch_size`` content bytes).
+
+``format("archive-stream")`` reads ``glob`` only and honours the same
+``extract_strings``, ``max_depth`` and ``columns`` options, through the
+same ``_convert_options``.
 """
 
 from __future__ import annotations
@@ -31,11 +35,12 @@ from collections.abc import Iterator
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
 from archive_to_parquet_spark.options import ConvertOptions, parse_columns
-from archive_to_parquet_spark.schema import ENTRY_SCHEMA, entry_struct
+from archive_to_parquet_spark.schema import ENTRY_COLUMNS, entry_struct
 
 
 def _convert_options(options: dict) -> ConvertOptions:
-    """The ``archive`` format's options as a validated ConvertOptions."""
+    """The ``archive`` and ``archive-stream`` formats' options as a
+    validated ConvertOptions."""
     out = ConvertOptions(
         extract_strings=str(options.get("extract_strings", "false")).lower()
         == "true",
@@ -150,6 +155,7 @@ class ArchiveStreamReader(SimpleDataSourceStreamReader):
         self.options = options
         if not options.get("glob"):
             raise ValueError("archive-stream needs option 'glob'")
+        self.convert = _convert_options(options)
 
     def initialOffset(self) -> dict:
         return {"processed": {}}
@@ -161,13 +167,14 @@ class ArchiveStreamReader(SimpleDataSourceStreamReader):
             return {p: -1 for p in processed}
         return dict(processed)
 
-    def _walk_range(self, path: str, start_b: int, end_b: int, opts):
+    def _walk_range(self, path: str, start_b: int, end_b: int):
         from archive_to_parquet_spark.sources.walker import walk_stream
 
+        names = [c for c in ENTRY_COLUMNS if self.convert.wants(c)]
         with open(path, "rb") as fh:
             tail = _BoundedTail(fh, start_b, end_b)
-            for r in walk_stream(path, tail, end_b - start_b, opts):
-                yield (r.source, r.path, r.size, r.hash, r.content, r.format)
+            for r in walk_stream(path, tail, end_b - start_b, self.convert):
+                yield tuple(getattr(r, c) for c in names)
 
     def read(self, start: dict):
         import glob as globmod
@@ -175,10 +182,6 @@ class ArchiveStreamReader(SimpleDataSourceStreamReader):
 
         seen = self._seen(start)
         files = sorted(globmod.glob(self.options["glob"]))
-        opts = ConvertOptions(
-            max_depth=int(self.options.get("max_depth", 16)),
-        )
-
         end_sizes = dict(seen)
         work: list[tuple[str, int, int]] = []  # (path, from_byte, to_byte)
         for f in files:
@@ -199,7 +202,7 @@ class ArchiveStreamReader(SimpleDataSourceStreamReader):
         rows = [
             row
             for f, s, e in work
-            for row in self._walk_range(f, s, e, opts)
+            for row in self._walk_range(f, s, e)
         ]
         # the prefetcher requires a PICKLABLE ITERATOR: a generator
         # fails pickling, a bare list fails the iterator check —
@@ -212,7 +215,6 @@ class ArchiveStreamReader(SimpleDataSourceStreamReader):
 
         before = self._seen(start)
         after = self._seen(end)
-        opts = ConvertOptions(max_depth=int(self.options.get("max_depth", 16)))
         present = set(globmod.glob(self.options["glob"]))
         for f in sorted(after):
             if f not in present:
@@ -229,7 +231,7 @@ class ArchiveStreamReader(SimpleDataSourceStreamReader):
             if to < 0:  # legacy offset: whole file
                 prev, to = 0, os.path.getsize(f)
             if prev < to:
-                yield from self._walk_range(f, prev, to, opts)
+                yield from self._walk_range(f, prev, to)
 
     def commit(self, end: dict) -> None:
         pass  # offsets carry full state; nothing external to clean up
@@ -243,7 +245,7 @@ class ArchiveStreamDataSource(DataSource):
         return "archive-stream"
 
     def schema(self):
-        return ENTRY_SCHEMA
+        return entry_struct(_convert_options(self.options).columns)
 
     def simpleStreamReader(self, schema) -> "ArchiveStreamReader":
         return ArchiveStreamReader(self.options)

@@ -3,9 +3,10 @@
 Pure-Python streaming walk of (possibly compressed, possibly nested)
 archives, emitting one row per extracted file with a fused streaming
 SHA-256. This is the only genuinely non-relational component; it runs
-inside ``mapInPandas`` on executors (see ``archive_source.py``), one
-input archive per task, so the cluster parallelizes across inputs and
-everything downstream is stock DataFrame ops.
+inside ``mapInArrow`` on executors (see ``archive_source.py``), one
+size-balanced bin of input archives per task, so the cluster
+parallelizes across inputs and everything downstream is stock
+DataFrame ops.
 
 Reference semantics preserved (file:line into /root/reference/):
 
@@ -359,8 +360,8 @@ def _hashed_meta(stream) -> tuple[bytes, bytes, int]:
     the column-pruned ingest path (``options.columns`` excludes
     ``content``): only the first PEEK_SIZE bytes are kept for format
     refinement, so a manifest / hash-only-dedup scan never materializes
-    entry bytes beyond one 1 MiB copy buffer. Same truncation
-    tolerance as `_hashed_copy`."""
+    entry bytes beyond one 64 KiB copy buffer (``_COPY_BUF``). Same
+    truncation tolerance as `_hashed_copy`."""
     hasher = hashlib.sha256()
     peek = b""
     total = 0

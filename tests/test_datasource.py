@@ -6,7 +6,7 @@ import hashlib
 
 import pytest
 
-from tests.conftest import gzip_data, tar_archive, zip_archive
+from tests.conftest import FAKE_ELF, gzip_data, tar_archive, zip_archive
 
 
 @pytest.fixture()
@@ -94,6 +94,58 @@ def test_format_archive_stream(registered, tmp_path):
         assert registered.sql("SELECT COUNT(*) n FROM arch_stream").collect()[0].n == 2
     finally:
         q.stop()
+
+
+def _stream_rows(spark, name: str, **options) -> tuple[list[str], list]:
+    """Run ``format("archive-stream")`` with ``options`` to exhaustion
+    into a memory sink; returns the declared columns and the rows."""
+    stream = spark.readStream.format("archive-stream").options(**options).load()
+    q = stream.writeStream.format("memory").queryName(name).start()
+    try:
+        q.processAllAvailable()
+        return stream.columns, spark.sql(f"SELECT * FROM {name}").collect()
+    finally:
+        q.stop()
+
+
+def test_format_archive_stream_extract_strings(registered, tmp_path):
+    """The stream honours extract_strings exactly as the batch format
+    does: the executable's row carries the strings text, not the ELF."""
+    watch = tmp_path / "elf_in"
+    watch.mkdir()
+    (watch / "e.tar").write_bytes(tar_archive({"prog": FAKE_ELF}))
+    batch = (
+        registered.read.format("archive")
+        .option("glob", f"{watch}/*.tar")
+        .option("extract_strings", "true")
+        .load()
+        .collect()
+    )
+    _, streamed = _stream_rows(
+        registered, "elf_stream", glob=f"{watch}/*.tar", extract_strings="true"
+    )
+    assert len(batch) == 1 and batch[0].size < len(FAKE_ELF)
+    assert {(r.path, r.size, bytes(r.hash), bytes(r.content)) for r in streamed} == {
+        (r.path, r.size, bytes(r.hash), bytes(r.content)) for r in batch
+    }
+
+
+def test_format_archive_stream_columns_prunes_schema(registered, tmp_path):
+    """``columns`` prunes the stream's declared schema and its rows."""
+    watch = tmp_path / "pruned_in"
+    watch.mkdir()
+    (watch / "one.tar").write_bytes(tar_archive({"a.txt": b"pruned stream"}))
+    columns, rows = _stream_rows(
+        registered, "pruned_stream", glob=f"{watch}/*.tar", columns="path,source,hash"
+    )
+    assert columns == ["source", "path", "hash"]
+    assert [(r.source, r.path, bytes(r.hash)) for r in rows] == [
+        (
+            str(watch / "one.tar"),
+            "a.txt",
+            hashlib.sha256(b"pruned stream").digest(),
+        )
+    ]
 
 
 def test_format_archive_requires_paths(registered):
