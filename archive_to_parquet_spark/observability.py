@@ -13,13 +13,21 @@ no extra pass). Here:
 - ``codegen_counters``: whole-stage-codegen classes compiled and their
   Janino compile time so far, the query profile's codegen layer (read
   twice, around the work to be measured).
+- ``profile``: one DataFrame built and executed into the noop sink,
+  split into layers: build and execute wall time, the jobs, stages and
+  tasks it ran with their executor time and shuffle bytes, the classes
+  it compiled, and its physical plan's shape. ``bench.py`` records one
+  per catalog entry and ingest leg.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass
+import time
+from collections.abc import Callable
+from dataclasses import asdict, dataclass, fields
 
-from pyspark.sql import SparkSession
+from py4j.protocol import Py4JError
+from pyspark.sql import DataFrame, SparkSession
 
 
 @dataclass
@@ -76,4 +84,142 @@ def codegen_counters(spark: SparkSession) -> CodegenCounters:
     return CodegenCounters(
         compiled=int(metrics.METRIC_COMPILATION_TIME().getCount()),
         compile_ms=generator.compileTime() / 1e6,
+    )
+
+
+@dataclass
+class StageTotals:
+    """What the jobs and stages launched inside one bracket did."""
+
+    jobs: int = 0
+    stages: int = 0  # stages that ran; SKIPPED ones (reused shuffle) excluded
+    tasks: int = 0
+    executor_run_ms: int = 0
+    executor_cpu_ms: float = 0.0
+    gc_ms: int = 0
+    shuffle_read_bytes: int = 0
+    shuffle_write_bytes: int = 0
+    spill_bytes: int = 0  # memory + disk spill
+
+
+@dataclass(frozen=True)
+class QueryProfile:
+    wall_s: float  # build_s + exec_s
+    build_s: float  # the build call, including any checkpoint it ran
+    exec_s: float  # the noop write
+    totals: StageTotals | None  # None when the bracket could not be read
+    codegen: CodegenCounters  # classes compiled inside the bracket
+    plan: dict  # plans.audit.audit_plan of the final executed plan
+
+    def record(self) -> dict:
+        """The profile as one flat JSON-ready dict; the stage totals
+        are ``None`` when they could not be read."""
+        if self.totals is None:
+            totals = dict.fromkeys(f.name for f in fields(StageTotals))
+        else:
+            totals = {k: round(v, 1) for k, v in asdict(self.totals).items()}
+        return {
+            "wall_s": round(self.wall_s, 3),
+            "build_s": round(self.build_s, 3),
+            "exec_s": round(self.exec_s, 3),
+            **totals,
+            "codegen_compiled": self.codegen.compiled,
+            "codegen_ms": round(self.codegen.compile_ms, 1),
+            "plan": self.plan,
+        }
+
+
+class _StatusStore:
+    """Spark's application status store, which exists with
+    ``spark.ui.enabled=false``. Its job and stage lists come back sorted
+    by id, newest first, so a mark is the newest ids and a bracket reads
+    the entries newer than its mark. The listener bus is drained before
+    every read, so a stage that finished inside the bracket is in the
+    store when the bracket closes."""
+
+    def __init__(self, spark: SparkSession):
+        sc = spark.sparkContext
+        jsc = sc._jsc.sc()
+        self._store = jsc.statusStore()
+        self._bus = jsc.listenerBus()
+        self._no_quantiles = sc._gateway.new_array(sc._jvm.double, 0)
+
+    def _lists(self):
+        self._bus.waitUntilEmpty(60_000)
+        stages = self._store.stageList(None, False, False, self._no_quantiles, None)
+        return self._store.jobsList(None), stages
+
+    def mark(self) -> tuple[int, int] | None:
+        try:
+            jobs, stages = self._lists()
+        except Py4JError:
+            return None
+        return (
+            jobs.apply(0).jobId() if jobs.size() else -1,
+            stages.apply(0).stageId() if stages.size() else -1,
+        )
+
+    def since(self, mark: tuple[int, int] | None) -> StageTotals | None:
+        if mark is None:
+            return None
+        try:
+            jobs, stages = self._lists()
+        except Py4JError:
+            return None
+        out = StageTotals()
+        for i in range(jobs.size()):
+            if jobs.apply(i).jobId() <= mark[0]:
+                break
+            out.jobs += 1
+        ran: set[int] = set()
+        for i in range(stages.size()):
+            s = stages.apply(i)
+            if s.stageId() <= mark[1]:
+                break
+            if str(s.status()) == "SKIPPED":
+                continue
+            ran.add(s.stageId())
+            out.tasks += s.numCompleteTasks() + s.numFailedTasks()
+            out.executor_run_ms += s.executorRunTime()
+            out.executor_cpu_ms += s.executorCpuTime() / 1e6
+            out.gc_ms += s.jvmGcTime()
+            out.shuffle_read_bytes += s.shuffleReadBytes()
+            out.shuffle_write_bytes += s.shuffleWriteBytes()
+            out.spill_bytes += s.memoryBytesSpilled() + s.diskBytesSpilled()
+        out.stages = len(ran)
+        return out
+
+
+def profile(spark: SparkSession, build: Callable[[], DataFrame]) -> QueryProfile:
+    """Call ``build`` and execute the DataFrame it returns into the noop
+    sink, bracketed by job and stage id and by the codegen counters.
+
+    The bracket opens before ``build`` runs, so the jobs of a
+    checkpoint taken while the DataFrame is built are counted. The plan
+    shape is read from the final DataFrame after the bracket closes;
+    subplans hidden behind a checkpoint count in the jobs and stages but
+    not in the plan shape."""
+    from archive_to_parquet_spark.plans.audit import audit_plan
+
+    status = _StatusStore(spark)
+    codegen0 = codegen_counters(spark)
+    mark = status.mark()
+    t0 = time.perf_counter()
+    df = build()
+    t1 = time.perf_counter()
+    df.write.format("noop").mode("overwrite").save()
+    t2 = time.perf_counter()
+    totals = status.since(mark)
+    codegen1 = codegen_counters(spark)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return QueryProfile(
+        wall_s=t2 - t0,
+        build_s=t1 - t0,
+        exec_s=t2 - t1,
+        totals=totals,
+        codegen=CodegenCounters(
+            compiled=codegen1.compiled - codegen0.compiled,
+            compile_ms=codegen1.compile_ms - codegen0.compile_ms,
+        ),
+        plan=audit_plan(plan),
     )

@@ -22,7 +22,7 @@ import re
 PY_NODES = (
     "ArrowEvalPython",
     "BatchEvalPython",
-    "PythonMapInArrow",
+    "MapInArrow",  # also matches the pre-4.0 name PythonMapInArrow
     "MapInPandas",
     "FlatMapGroupsInPandas",
     "FlatMapGroupsInPandasWithState",

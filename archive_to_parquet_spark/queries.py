@@ -1,10 +1,11 @@
 """Query catalog: the engine's declared operator surface.
 
 Every entry pairs an idiomatic-Spark DataFrame query with an ANSI-SQL
-oracle that DuckDB runs over the same parquet tables; the driver
-compares row counts, schemas, and order-insensitive value hashes
-(CORRECTNESS_r{N}.json). Naming rule: every computed column is aliased
-identically on both sides.
+oracle that DuckDB runs over the same parquet tables; the oracle gate
+(``archive_to_parquet_spark.oracle``, run per entry by
+``tests/test_oracle_gate.py``) compares row counts, schemas, and
+order-insensitive value hashes. Naming rule: every computed column is
+aliased identically on both sides.
 
 Groups:
 

@@ -21,11 +21,6 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
-
 # DuckDB logical type id -> pandas family
 _DUCK_FAMILY = {
     "TINYINT": "int",
@@ -114,21 +109,15 @@ def compatible(sf: str, df: str) -> bool:
 
 
 def main() -> int:
-    import duckdb
-
-    import __spark_entry__ as entrymod
     from archive_to_parquet_spark import queries as catmod
+    from archive_to_parquet_spark.oracle import oracle_connection
     from archive_to_parquet_spark.session import get_spark
 
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     only = set(sys.argv[2:])
 
     spark = get_spark("dtype_audit")
-    con = duckdb.connect()
-    for t in TABLES:
-        p = f"{sf_dir}/{t}.parquet"
-        if os.path.exists(p):
-            con.sql(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{p}')")
+    con = oracle_connection(sf_dir)
 
     qs = catmod.queries()
     oracles = catmod.oracle_sql()
