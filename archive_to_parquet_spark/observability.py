@@ -16,8 +16,10 @@ no extra pass). Here:
 - ``profile``: one DataFrame built and executed into the noop sink,
   split into layers: build and execute wall time, the jobs, stages and
   tasks it ran with their executor time and shuffle bytes, the classes
-  it compiled, and its physical plan's shape. ``bench.py`` records one
-  per catalog entry and ingest leg.
+  it compiled, and the shape of its physical plan as planned before
+  adaptive execution (the plan ``PLAN_PINS.json`` audits; a runtime
+  join or partition change shows in the counts, not in the shape).
+  ``bench.py`` records one per catalog entry and ingest leg.
 """
 
 from __future__ import annotations
@@ -109,7 +111,7 @@ class QueryProfile:
     exec_s: float  # the noop write
     totals: StageTotals | None  # None when the bracket could not be read
     codegen: CodegenCounters  # classes compiled inside the bracket
-    plan: dict  # plans.audit.audit_plan of the final executed plan
+    plan: dict  # plans.audit.audit_plan of the pre-AQE physical plan
 
     def record(self) -> dict:
         """The profile as one flat JSON-ready dict; the stage totals
@@ -196,8 +198,12 @@ def profile(spark: SparkSession, build: Callable[[], DataFrame]) -> QueryProfile
 
     The bracket opens before ``build`` runs, so the jobs of a
     checkpoint taken while the DataFrame is built are counted. The plan
-    shape is read from the final DataFrame after the bracket closes;
-    subplans hidden behind a checkpoint count in the jobs and stages but
+    shape is read from the built DataFrame's own physical plan, the one
+    ``PLAN_PINS.json`` audits: with AQE on it is the plan as first
+    planned, not the adaptive plan the noop write settled on (the write
+    plans its own execution), so a runtime join or partition change
+    shows in the jobs, stages and shuffle bytes but not in the shape.
+    Subplans hidden behind a checkpoint count in the jobs and stages but
     not in the plan shape."""
     from archive_to_parquet_spark.plans.audit import audit_plan
 

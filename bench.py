@@ -27,6 +27,7 @@ import gzip
 import io
 import json
 import os
+import re
 import sys
 import tarfile
 import tempfile
@@ -59,22 +60,26 @@ FIXTURE_BYTES = INPUTS * MEMBERS * MEMBER_BYTES
 PRUNED_COLUMNS = ("source", "path", "size", "hash", "format")
 
 
-def artifact_name(cpus: int, sf) -> str:
-    return f"BENCH_FULL.c{cpus}.sf{sf}.json"
+def artifact_name(cpus: int, sf: float) -> str:
+    return f"BENCH_FULL.c{cpus}.sf{sf:g}.json"
 
 
-def sf_of(sf_dir: str):
-    sf = sf_dir.rstrip("/").split("sf")[-1]
-    return float(sf) if sf.replace(".", "").isdigit() else sf
+def sf_of(sf_dir: str) -> float:
+    """The scale factor a tables dir is named for (``.../sf0.01`` →
+    0.01); ValueError when its name is not ``sf<number>``."""
+    m = re.fullmatch(r"sf(\d+(?:\.\d+)?)", os.path.basename(sf_dir.rstrip("/")))
+    if m is None:
+        raise ValueError(f"tables dir name is not sf<number>: {sf_dir!r}")
+    return float(m.group(1))
 
 
-def time_entry(spark, build, runs: int = RUNS) -> dict:
-    """One warm run of ``build`` then ``runs`` profiled ones: the
+def time_entry(spark, build) -> dict:
+    """One warm run of ``build`` then ``RUNS`` profiled ones: the
     fastest run's record, plus whether the counted fields repeated."""
     from archive_to_parquet_spark.observability import profile
 
     build().write.format("noop").mode("overwrite").save()
-    records = [profile(spark, build).record() for _ in range(runs)]
+    records = [profile(spark, build).record() for _ in range(RUNS)]
     best = min(records, key=lambda r: r["wall_s"])
     moved = {
         k: [r[k] for r in records]
@@ -169,6 +174,11 @@ def summary(full: dict) -> dict:
 
 def main(names: list[str]) -> int:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    try:
+        sf = sf_of(sf_dir)
+    except ValueError as exc:
+        print(f"SPARK_GRAFT_SF_DIR: {exc}", file=sys.stderr)
+        return 2
 
     from archive_to_parquet_spark import queries as catalog
     from archive_to_parquet_spark.options import ConvertOptions
@@ -181,7 +191,7 @@ def main(names: list[str]) -> int:
         return 2
     spark = get_spark("bench")
     cpus = spark.sparkContext.defaultParallelism
-    full: dict = {"sf": sf_of(sf_dir), "cpus": cpus, "entries": {}, "errors": {}}
+    full: dict = {"sf": sf, "cpus": cpus, "entries": {}, "errors": {}}
 
     def measure(out: dict, key: str, run) -> None:
         try:
@@ -218,7 +228,7 @@ def main(names: list[str]) -> int:
     if names:
         print(json.dumps(full))
     else:
-        with open(os.path.join(REPO, artifact_name(cpus, full["sf"])), "w") as fh:
+        with open(os.path.join(REPO, artifact_name(cpus, sf)), "w") as fh:
             json.dump({**summary(full), **full}, fh, indent=1)
             fh.write("\n")
         print(json.dumps(summary(full)))

@@ -2,6 +2,8 @@
 session: counted layers repeat across runs, and one named entry comes
 back with its wall time and counted fields."""
 
+import pytest
+
 import bench
 from archive_to_parquet_spark import queries as q
 from archive_to_parquet_spark.observability import profile
@@ -41,7 +43,14 @@ def test_time_entry_records_wall_and_counted_fields(spark):
     assert rec["repeat"] is (rec.get("moved") is None)
 
 
-def test_artifact_name_is_keyed_on_cpus_and_sf():
+def test_artifact_name_is_keyed_on_cpus_and_sf(monkeypatch):
     assert bench.sf_of("/data/sf0.01/") == 0.01
     assert bench.artifact_name(4, 0.01) == "BENCH_FULL.c4.sf0.01.json"
     assert bench.artifact_name(32, 0.1) == "BENCH_FULL.c32.sf0.1.json"
+    assert bench.artifact_name(4, bench.sf_of("/data/sf1")) == "BENCH_FULL.c4.sf1.json"
+    # a tables dir not named sf<number> is refused before anything runs
+    for bad in ("/data/tables", "/data/sf_small", "/sf0.1/tables"):
+        with pytest.raises(ValueError):
+            bench.sf_of(bad)
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", "/data/tables")
+    assert bench.main([]) == 2
