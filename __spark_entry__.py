@@ -5,7 +5,8 @@ against the matching ``oracle_sql()[name]`` in DuckDB (row count +
 schema + order-insensitive value hash, ``archive_to_parquet_spark.oracle``)
 by ``tests/test_oracle_gate.py`` and ``tools/check_correctness.py``.
 
-The actual catalog lives in ``archive_to_parquet_spark/queries.py``.
+The actual catalog lives in the ``archive_to_parquet_spark/queries/``
+package: one module per family, registered in its ``__init__.py``.
 
 ``_wrap`` pins, on a session this package did not build, the confs
 that can change query RESULTS — timezone, ANSI mode, parquet NTZ
@@ -37,6 +38,7 @@ if _REPO_ROOT not in sys.path:
     sys.path.insert(0, _REPO_ROOT)
 
 from archive_to_parquet_spark import queries as _catalog  # noqa: E402
+from archive_to_parquet_spark.queries.parity import flagship  # noqa: E402
 from archive_to_parquet_spark.session import ensure_package_shipped  # noqa: E402
 
 # Confs that change query *values* (not just performance), pinned to
@@ -96,7 +98,7 @@ def entry(spark: SparkSession) -> DataFrame:
     per-source counters) over sf0.001 documents."""
     ensure_package_shipped(spark)
     _pin_result_confs(spark)
-    return _catalog.flagship(spark, "/root/testdata/sf0.001")
+    return flagship(spark, "/root/testdata/sf0.001")
 
 
 def _wrap(fn: Callable[[SparkSession, str], DataFrame]):

@@ -2,7 +2,7 @@
 Benford first-digit analysis as reusable DataFrame-in/DataFrame-out
 transforms (the ``plans.maintenance.profile_table`` family).
 
-Both were born as catalog queries (queries_ext.py); the catalog entries
+Both were born as catalog queries; the catalog entries
 are now thin wrappers over these so pipelines can audit arbitrary
 columns, not just the benchmark tables.
 """

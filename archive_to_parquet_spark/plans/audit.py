@@ -67,11 +67,11 @@ def audit_plan(plan: str) -> dict:
 
 
 def collect_audit(spark, sf_dir: str):
-    """Build every non-streaming catalog entry at ``sf_dir`` and return
-    ``(rows, streaming, errors)`` where ``rows`` is one statistics dict
-    per entry (checkpoint-hidden subplans folded in), ``streaming`` the
-    skipped streaming entry names, and ``errors`` ``(name, msg)``
-    pairs."""
+    """Build every catalog entry outside the streaming family at
+    ``sf_dir`` and return ``(rows, streaming, errors)`` where ``rows`` is
+    one statistics dict per entry (checkpoint-hidden subplans folded
+    in), ``streaming`` the skipped streaming-family names, and
+    ``errors`` ``(name, msg)`` pairs."""
     from archive_to_parquet_spark import queries as q
     from archive_to_parquet_spark.plans.checkpoint import (
         recording_checkpoint_plans,
@@ -81,7 +81,7 @@ def collect_audit(spark, sf_dir: str):
     streaming = []
     errors = []
     for name, fn in q.queries().items():
-        if name.startswith("stream_"):
+        if q.family(name) == "streaming":
             streaming.append(name)
             continue
         hidden: list[str] = []

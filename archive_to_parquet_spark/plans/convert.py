@@ -91,13 +91,21 @@ def skip_existing(
             f"skipping rows already in {output} needs the {key!r} column; "
             f"got columns {df.columns}"
         )
-    # probe the output through Spark, not os.path — the output may be a
-    # non-local URI (hdfs://, s3a://) where a local existence check
-    # would silently skip the anti-join
+    # probe the output through Hadoop's FileSystem, not os.path — the
+    # output may be a non-local URI (hdfs://, s3a://) where a local
+    # existence check would silently skip the anti-join. Reading a
+    # missing path is no probe: the failed read's QueryExecution reaches
+    # the session's query-execution listeners, and once an Observation
+    # has registered one (``counted_write``) it re-analyzes that plan
+    # and logs PATH_NOT_FOUND as a listener error.
+    path = spark._jvm.org.apache.hadoop.fs.Path(output)
+    fs = path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    if not fs.exists(path):
+        return df  # first batch: nothing to skip
     try:
         existing = spark.read.parquet(output).select(key)
     except AnalysisException:
-        return df  # first batch: nothing to skip
+        return df  # an output dir holding no parquet files yet
     # a USING join puts the key first; keep the frame's column order
     return df.join(existing, key, "left_anti").select(*df.columns)
 

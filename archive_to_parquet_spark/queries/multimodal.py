@@ -1,0 +1,1103 @@
+"""Multimodal family: the real decode paths (headers, content,
+perceptual hash, resize, media profile) driver-checked against
+byte-level oracles.
+"""
+
+from __future__ import annotations
+
+import hashlib
+
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+
+from archive_to_parquet_spark.queries.relational import _t
+
+
+def _be4(col):
+    """4-byte big-endian binary of an int column (JVM hex/lpad/unhex)."""
+    return F.unhex(F.lpad(F.hex(col), 8, "0"))
+
+
+def _le(col, n_bytes: int):
+    """n-byte little-endian binary of an int column."""
+    parts = [
+        F.unhex(
+            F.lpad(
+                F.hex((col / (256 ** i)).cast("long") % 256), 2, "0"
+            )
+        )
+        for i in range(n_bytes)
+    ]
+    return F.concat(*parts)
+
+
+def _be2(col):
+    """2-byte big-endian binary of an int column."""
+    return F.unhex(F.lpad(F.hex(col), 4, "0"))
+
+
+def multimodal_header_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The REAL multimodal decode path, driver-checked: valid PNG, WAV,
+    Ogg/Vorbis, Ogg/Opus, MP4/M4A audio, ADTS/AAC, AIFF, Sun/NeXT .au,
+    MP3-with-Xing (round 10: exact frames×1152 duration from the VBR
+    header — the header tier the r8 stretch asked for, still no PCM
+    claim) and Matroska/WebM
+    bytes are constructed JVM-side with
+    closed-form geometry (width/height/sample-rate/duration derived
+    from doc_id), pushed through the image/audio/video cell kernels of
+    one ``decode_media`` pass, and the parsed metadata must equal what the
+    construction implies — the oracle states the closed form. This
+    certifies the binary-column plumbing AND the header parsers
+    end-to-end (reference parity for the stub-free formats; codec
+    formats still raise loudly).
+
+    The Ogg leg (r7 verdict stretch #8) builds a minimal two-page
+    stream — BOS page carrying the ``\\x01vorbis`` identification
+    header, EOS page whose granule position is the total sample count —
+    and the ADTS leg a run of header-only AAC frames (1024 samples
+    each), so rate/channels/duration extraction is certified for both
+    WITHOUT any PCM claim (the deliberate codec boundary stands).
+
+    The WebM leg (round 8) builds a minimal Matroska stream — EBML
+    header (DocType webm), Segment→Info carrying TimestampScale
+    (doc_id-derived, ns/tick) + Duration (1000.0 ticks, a literal
+    8-byte float), Segment→Tracks→TrackEntry→Video carrying
+    PixelWidth/PixelHeight — and pushes it through the real EBML walk
+    (parse_matroska_header), certifying duration_s = ticks × scale /
+    1e9 and the dims against the closed form. Same boundary: container
+    metadata only, no frame/codec claim.
+
+    Scale: decode is per-row in Arrow batches in one Python pass, no
+    join.
+    """
+    from archive_to_parquet_spark.operators.dedup import spread_small_scan
+    from archive_to_parquet_spark.operators.multimodal import (
+        AUDIO_FEATURES,
+        IMAGE_FEATURES,
+        VIDEO_META,
+        decode_media,
+    )
+
+    # spread the one-split documents scan across the cluster BEFORE the
+    # byte construction + decode (guide §2.5): with all ten formats in
+    # one pass the whole decode otherwise runs as a single task; no-op
+    # on a wide 100-TB scan
+    docs = spread_small_scan(
+        _t(spark, sf_dir, "documents").select("doc_id"), "doc_id"
+    )
+    width = (F.col("doc_id") % 300 + 16).cast("long")
+    height = (F.col("doc_id") % 200 + 16).cast("long")
+    png = F.concat(
+        F.unhex(F.lit("89504E470D0A1A0A" + "0000000D" + "49484452")),
+        _be4(width),
+        _be4(height),
+        F.unhex(F.lit("0802000000")),  # 8-bit, color type 2 (RGB)
+    )
+    rate = (F.lit(8000) + (F.col("doc_id") % 5) * 1000).cast("long")
+    n_samples = (F.col("doc_id") % 1000 + 100).cast("long")
+    data_size = n_samples * 2  # mono 16-bit
+    wav = F.concat(
+        F.unhex(F.lit("52494646")),            # RIFF
+        _le(data_size + 36, 4),                # riff size
+        F.unhex(F.lit("57415645666D7420")),    # WAVEfmt(space)
+        _le(F.lit(16), 4),                     # fmt chunk size
+        _le(F.lit(1), 2),                      # PCM
+        _le(F.lit(1), 2),                      # mono
+        _le(rate, 4),
+        _le(rate * 2, 4),                      # byte rate
+        _le(F.lit(2), 2),                      # block align
+        _le(F.lit(16), 2),                     # bits
+        F.unhex(F.lit("64617461")),            # data
+        _le(data_size, 4),
+    )
+    # Ogg/Vorbis: BOS page (30-byte identification-header packet) + EOS
+    # page whose granule position = total samples; CRCs zero (the
+    # parser extracts metadata, it does not verify page integrity)
+    ogg_rate = (F.lit(8000) + (F.col("doc_id") % 4) * 4000).cast("long")
+    ogg_channels = (F.col("doc_id") % 2 + 1).cast("long")
+    ogg_total = (F.col("doc_id") % 4000 + 500).cast("long")
+    ogg = F.concat(
+        # OggS v0 BOS, granule 0, serial 1, seq 0, crc 0, 1 seg of 30
+        F.unhex(F.lit(
+            "4F676753" + "00" + "02" + "00" * 8
+            + "01000000" + "00000000" + "00000000" + "01" + "1E"
+            + "01" + "766F72626973" + "00000000"  # \x01vorbis, version 0
+        )),
+        F.unhex(F.lpad(F.hex(ogg_channels), 2, "0")),
+        _le(ogg_rate, 4),
+        # bitrates (3x4 zero), blocksizes 0xB8, framing 1
+        F.unhex(F.lit("00" * 12 + "B8" + "01")),
+        # OggS v0 EOS page: granule = total samples, seq 1, 1-byte body
+        F.unhex(F.lit("4F676753" + "00" + "04")),
+        _le(ogg_total, 8),
+        F.unhex(F.lit("01000000" + "01000000" + "00000000" + "01" + "01" + "00")),
+    )
+    # Ogg/Opus (RFC 7845): BOS page with the 19-byte OpusHead (version
+    # 1, pre-skip 312, informational input rate 48k), EOS page whose
+    # granule = pre-skip + n samples (granules always count 48 kHz
+    # samples, so duration = n / 48000 whatever the input rate)
+    opus_n = (F.col("doc_id") % 48000 + 4800).cast("long")
+    opus_channels = (F.col("doc_id") % 2 + 1).cast("long")
+    opus = F.concat(
+        # OggS v0 BOS, granule 0, serial 2, seq 0, crc 0, 1 seg of 19
+        F.unhex(F.lit(
+            "4F676753" + "00" + "02" + "00" * 8
+            + "02000000" + "00000000" + "00000000" + "01" + "13"
+            + "4F70757348656164" + "01"  # OpusHead, version 1
+        )),
+        F.unhex(F.lpad(F.hex(opus_channels), 2, "0")),
+        _le(F.lit(312), 2),    # pre-skip
+        _le(F.lit(48000), 4),  # input rate (informational only)
+        F.unhex(F.lit("0000" + "00")),  # output gain, mapping family 0
+        # OggS v0 EOS page: granule = pre-skip + samples, seq 1, 1-byte body
+        F.unhex(F.lit("4F676753" + "00" + "04")),
+        _le(opus_n + 312, 8),
+        F.unhex(F.lit("02000000" + "01000000" + "00000000" + "01" + "01" + "00")),
+    )
+    # ADTS/AAC: n header-only frames (frame_length 7, AAC LC, mono,
+    # fullness 0x7FF, no CRC), 1024 samples each
+    adts_rate_idx = (F.lit(3) + F.col("doc_id") % 3).cast("long")  # 48k/44.1k/32k
+    n_frames = (F.col("doc_id") % 5 + 2).cast("int")
+    adts_frame_hex = F.concat(
+        F.lit("FFF1"),
+        F.lpad(F.hex(F.lit(0x40) + adts_rate_idx * 4), 2, "0"),
+        F.lit("4000FFFC"),
+    )
+    adts = F.unhex(F.expr("repeat(_adts_frame_hex, _n_frames)"))
+    # MP4/M4A audio (ISO 14496-12): fixed 173-byte box tree with every
+    # size literal — ftyp + moov→trak→mdia{mdhd,hdlr(soun),minf→stbl→
+    # stsd→mp4a}; mdhd timescale is set to the sample rate so
+    # n_samples = mdhd duration exactly
+    m4a_rate = (F.lit(16000) + (F.col("doc_id") % 3) * 8000).cast("long")
+    m4a_n = (F.col("doc_id") % 96000 + 9600).cast("long")
+    m4a_channels = (F.col("doc_id") % 2 + 1).cast("long")
+    m4a = F.concat(
+        F.unhex(F.lit(
+            "00000010" + "66747970" + "4D344120" + "00000000"  # ftyp M4A
+            + "0000009D" + "6D6F6F76"                          # moov (157)
+            + "00000095" + "7472616B"                          # trak (149)
+            + "0000008D" + "6D646961"                          # mdia (141)
+            + "00000020" + "6D646864" + "00000000"             # mdhd v0
+            + "00000000" + "00000000"                          # ctime, mtime
+        )),
+        _be4(m4a_rate),   # timescale = sample rate
+        _be4(m4a_n),      # duration in ticks = samples
+        F.unhex(F.lit(
+            "00000000"                                         # language+pre
+            + "00000021" + "68646C72" + "00000000" + "00000000"
+            + "736F756E" + "00" * 12 + "00"                    # hdlr 'soun'
+            + "00000044" + "6D696E66"                          # minf (68)
+            + "0000003C" + "7374626C"                          # stbl (60)
+            + "00000034" + "73747364" + "00000000" + "00000001"  # stsd, 1 entry
+            + "00000024" + "6D703461" + "000000000000" + "0001"  # mp4a, dref 1
+            + "0000" + "0000" + "00000000"                     # ver, rev, vendor
+        )),
+        _be2(m4a_channels),
+        F.unhex(F.lit("0010" + "0000" + "0000")),              # 16-bit, pre, res
+        _be4(m4a_rate * 65536),                                # 16.16 rate
+    )
+    # Matroska/WebM: fixed 64-byte layout, all EBML size vints literal;
+    # only TimestampScale (4-byte uint) and the pixel dims (2-byte
+    # uints) vary. Duration is the literal double 1000.0 ticks, so
+    # duration_s = 1000 * (m*1000 ns) / 1e9 = m / 1000 exactly.
+    webm_m = (F.col("doc_id") % 4000 + 500).cast("long")
+    webm_w = (F.col("doc_id") % 640 + 16).cast("long")
+    webm_h = (F.col("doc_id") % 480 + 16).cast("long")
+    webm = F.concat(
+        F.unhex(F.lit(
+            "1A45DFA3" + "87" + "4282847765626D"  # EBML hdr, DocType webm
+            + "18538067" + "AF"                   # Segment (47-byte body)
+            + "1549A966" + "93"                   # Info (19)
+            + "2AD7B184"                          # TimestampScale, uint32
+        )),
+        _be4(webm_m * 1000),
+        F.unhex(F.lit(
+            "448988" + "408F400000000000"         # Duration = 1000.0 ticks
+            + "1654AE6B" + "92"                   # Tracks (18)
+            + "AE" + "90"                         # TrackEntry (16)
+            + "D78101" + "838101"                 # TrackNumber 1, type video
+            + "E0" + "88"                         # Video (8)
+            + "B082"                              # PixelWidth, uint16
+        )),
+        _be2(webm_w),
+        F.unhex(F.lit("BA82")),                   # PixelHeight, uint16
+        _be2(webm_h),
+    )
+    # AIFF (round 9): COMM-only IFF file — channels 1, 16-bit,
+    # numSampleFrames doc_id-derived, sample rate an 80-bit IEEE
+    # extended float from a 4-entry literal table; certifies the
+    # big-endian chunk walk + extended-float decode.  Rates are chosen
+    # TIE-FREE: n/rate must never land exactly on a 7th-decimal 5 over
+    # the frame range, because Spark's round() (HALF_UP on the
+    # shortest-repr BigDecimal) and DuckDB's (on the raw double)
+    # disagree at exact 6dp ties — 16000/32000 DO tie (n·625 ends in
+    # 5 for odd n) and broke the hash; 8000/10000/22050/44100 cannot.
+    aiff_rate_hex = F.element_at(
+        F.array(
+            F.lit("400BFA00000000000000"),  # 8000
+            F.lit("400C9C40000000000000"),  # 10000
+            F.lit("400DAC44000000000000"),  # 22050
+            F.lit("400EAC44000000000000"),  # 44100
+        ),
+        (F.col("doc_id") % 4 + 1).cast("int"),
+    )
+    aiff_frames = (F.col("doc_id") % 9000 + 800).cast("long")
+    aiff = F.concat(
+        F.unhex(F.lit(
+            "464F524D" + "0000001E" + "41494646"  # FORM, size 30, AIFF
+            + "434F4D4D" + "00000012"             # COMM, size 18
+            + "0001"                              # channels = 1
+        )),
+        _be4(aiff_frames),
+        F.unhex(F.lit("0010")),                   # 16-bit
+        F.unhex(aiff_rate_hex),
+    )
+    # Sun/NeXT .au (round 9): 24-byte big-endian header, encoding 1
+    # (G.711 μ-law, 1 byte/sample), declared data size with no payload
+    # — certifies the header tier's declared-size sample count
+    au_rate = (F.lit(8000) + (F.col("doc_id") % 6) * 1000).cast("long")
+    au_n = (F.col("doc_id") % 6000 + 600).cast("long")
+    au = F.concat(
+        F.unhex(F.lit("2E736E64")),               # .snd
+        _be4(F.lit(24)),                          # data offset
+        _be4(au_n),                               # data size (1 B/sample)
+        _be4(F.lit(1)),                           # encoding: G.711 μ-law
+        _be4(au_rate),
+        _be4(F.lit(1)),                           # channels
+    )
+    # MP3 with a Xing VBR header (round 10): MPEG1 Layer III mono
+    # frame header (0xFFFB, bitrate idx 9, rate idx doc_id%3 →
+    # 44100/48000/32000), 17 zero side-info bytes, then
+    # Xing + flags(frames) + frame count — the EXACT-duration tier
+    # (frames × 1152 samples), no PCM claim.  Rates are tie-free under
+    # round(d, 6): n_samples = 1152·frames is divisible by 4 and 6, so
+    # the ·10^6/32000 and /48000 half-tie residues (s≡2 mod 4, s≡3
+    # mod 6) are unreachable, and s·10^6 ≡ 22050 (mod 44100) has no
+    # solution (gcd 100 ∤ 22050).
+    mp3_rate_idx = (F.col("doc_id") % 3).cast("long")
+    mp3_frames = (F.col("doc_id") % 2000 + 50).cast("long")
+    mp3 = F.concat(
+        F.unhex(F.lit("FFFB")),
+        F.unhex(F.lpad(F.hex(F.lit(0x90) + mp3_rate_idx * 4), 2, "0")),
+        F.unhex(F.lit("C0" + "00" * 17 + "58696E67" + "00000001")),
+        _be4(mp3_frames),
+    )
+    media = (
+        docs.select(
+            "doc_id",
+            png.alias("png"),
+            wav.alias("wav"),
+            ogg.alias("ogg"),
+            opus.alias("opus"),
+            m4a.alias("m4a"),
+            webm.alias("webm"),
+            aiff.alias("aiff"),
+            au.alias("au"),
+            mp3.alias("mp3"),
+            adts_frame_hex.alias("_adts_frame_hex"),
+            n_frames.alias("_n_frames"),
+        )
+        .withColumn("adts", adts)
+        .drop("_adts_frame_hex", "_n_frames")
+    )
+    # one decode_media pass over all ten columns: one MapInPandas over
+    # one scan of the constructed media frame, no per-format joins
+    audio = ("wav", "ogg", "opus", "m4a", "adts", "aiff", "au", "mp3")
+    decoded = decode_media(
+        media,
+        "doc_id",
+        [("png", IMAGE_FEATURES, "png_")]
+        + [(c, AUDIO_FEATURES, f"{c}_") for c in audio]
+        + [("webm", VIDEO_META, "webm_")],
+    )
+
+    def aud_cols(col: str, prefix: str) -> list:
+        return [
+            F.col(f"{col}_sample_rate").alias(f"{prefix}rate"),
+            F.col(f"{col}_n_samples").alias(f"{prefix}samples"),
+            F.round(f"{col}_duration_s", 6).alias(f"{prefix}duration_s"),
+        ]
+
+    return decoded.select(
+        "doc_id",
+        F.col("png_width").alias("width"),
+        F.col("png_height").alias("height"),
+        F.col("png_channels").alias("channels"),
+        F.col("wav_sample_rate").alias("sample_rate"),
+        F.col("wav_n_samples").alias("n_samples"),
+        F.round("wav_duration_s", 6).alias("duration_s"),
+        *aud_cols("ogg", "ogg_"),
+        *aud_cols("opus", "opus_"),
+        *aud_cols("m4a", "m4a_"),
+        *aud_cols("adts", "adts_"),
+        *aud_cols("aiff", "aiff_"),
+        *aud_cols("au", "au_"),
+        *aud_cols("mp3", "mp3_"),
+        F.col("webm_width"),
+        F.col("webm_height"),
+        F.round("webm_duration_s", 6).alias("webm_duration_s"),
+    )
+
+
+MULTIMODAL_HEADER_SQL = """
+SELECT doc_id,
+       CAST(doc_id % 300 + 16 AS INT) AS width,
+       CAST(doc_id % 200 + 16 AS INT) AS height,
+       3 AS channels,
+       CAST(8000 + (doc_id % 5) * 1000 AS INT) AS sample_rate,
+       CAST(doc_id % 1000 + 100 AS BIGINT) AS n_samples,
+       round((doc_id % 1000 + 100)
+               / (8000.0 + (doc_id % 5) * 1000), 6) AS duration_s,
+       CAST(8000 + (doc_id % 4) * 4000 AS INT) AS ogg_rate,
+       CAST(doc_id % 4000 + 500 AS BIGINT) AS ogg_samples,
+       round((doc_id % 4000 + 500)
+               / (8000.0 + (doc_id % 4) * 4000), 6) AS ogg_duration_s,
+       48000 AS opus_rate,
+       CAST(doc_id % 48000 + 4800 AS BIGINT) AS opus_samples,
+       round((doc_id % 48000 + 4800) / 48000.0, 6) AS opus_duration_s,
+       CAST(16000 + (doc_id % 3) * 8000 AS INT) AS m4a_rate,
+       CAST(doc_id % 96000 + 9600 AS BIGINT) AS m4a_samples,
+       round((doc_id % 96000 + 9600)
+               / CAST(16000 + (doc_id % 3) * 8000 AS DOUBLE), 6)
+         AS m4a_duration_s,
+       CAST(CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN 48000
+                 WHEN 1 THEN 44100 ELSE 32000 END AS INT) AS adts_rate,
+       CAST((doc_id % 5 + 2) * 1024 AS BIGINT) AS adts_samples,
+       round((doc_id % 5 + 2) * 1024
+               / CAST(CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN 48000
+                      WHEN 1 THEN 44100 ELSE 32000 END AS DOUBLE), 6)
+         AS adts_duration_s,
+       CAST(CASE CAST(doc_id % 4 AS INT) WHEN 0 THEN 8000 WHEN 1 THEN 10000
+                 WHEN 2 THEN 22050 ELSE 44100 END AS INT) AS aiff_rate,
+       CAST(doc_id % 9000 + 800 AS BIGINT) AS aiff_samples,
+       round((doc_id % 9000 + 800)
+               / CAST(CASE CAST(doc_id % 4 AS INT) WHEN 0 THEN 8000
+                      WHEN 1 THEN 10000 WHEN 2 THEN 22050
+                      ELSE 44100 END AS DOUBLE), 6) AS aiff_duration_s,
+       CAST(8000 + (doc_id % 6) * 1000 AS INT) AS au_rate,
+       CAST(doc_id % 6000 + 600 AS BIGINT) AS au_samples,
+       round((doc_id % 6000 + 600)
+               / CAST(8000 + (doc_id % 6) * 1000 AS DOUBLE), 6)
+         AS au_duration_s,
+       CAST(CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN 44100
+                 WHEN 1 THEN 48000 ELSE 32000 END AS INT) AS mp3_rate,
+       CAST((doc_id % 2000 + 50) * 1152 AS BIGINT) AS mp3_samples,
+       round((doc_id % 2000 + 50) * 1152
+               / CAST(CASE CAST(doc_id % 3 AS INT) WHEN 0 THEN 44100
+                      WHEN 1 THEN 48000 ELSE 32000 END AS DOUBLE), 6)
+         AS mp3_duration_s,
+       CAST(doc_id % 640 + 16 AS INT) AS webm_width,
+       CAST(doc_id % 480 + 16 AS INT) AS webm_height,
+       round((doc_id % 4000 + 500) / 1000.0, 6) AS webm_duration_s
+FROM documents
+"""
+
+
+# ---------------------------------------------------------------------------
+# Content-level multimodal decode (codec-free), driver-checked
+# ---------------------------------------------------------------------------
+
+def _mp4_fixture() -> tuple[bytes, list[bytes]]:
+    """Minimal ISO BMFF blob with one video trak and three sync samples
+    — built byte-exactly at import so the expected keyframe payloads
+    are knowable literals (no stss box → every sample is a keyframe per
+    ISO 14496-12 §8.6.2)."""
+    import struct as _s
+
+    samples = [b"keyframe-one", b"keyframe-two!", b"keyframe-three!!"]
+    sizes = [len(s) for s in samples]
+
+    def box(btype: bytes, payload: bytes) -> bytes:
+        return _s.pack(">I", 8 + len(payload)) + btype + payload
+
+    stsz = box(b"stsz", _s.pack(">III", 0, 0, 3) + _s.pack(">3I", *sizes))
+    stsc = box(b"stsc", _s.pack(">II", 0, 1) + _s.pack(">III", 1, 3, 1))
+    hdlr = box(b"hdlr", b"\x00" * 8 + b"vide" + b"\x00" * 12)
+
+    def build(chunk_off: int) -> bytes:
+        stco = box(b"stco", _s.pack(">II", 0, 1) + _s.pack(">I", chunk_off))
+        moov = box(
+            b"moov",
+            box(b"trak", box(b"mdia", hdlr + box(b"minf", box(b"stbl", stsz + stsc + stco)))),
+        )
+        ftyp = box(b"ftyp", b"isom\x00\x00\x02\x00isomiso2")
+        return ftyp + moov + box(b"mdat", b"".join(samples))
+
+    draft = build(0)
+    blob = build(len(draft) - sum(sizes))
+    assert len(blob) == len(draft)
+    return blob, samples
+
+
+_MP4_BLOB, _MP4_SAMPLES = _mp4_fixture()
+_MP4_KF_DIGEST = "".join(
+    hashlib.sha256(s).hexdigest() for s in _MP4_SAMPLES
+)
+
+
+def _png_fixture() -> bytes:
+    """8×8 grayscale PNG, right half bright (0|255 columns), FORWARD-
+    filtered with every nontrivial scanline filter (Sub/Up/Average/
+    Paeth cycling per row) and zlib-compressed — built independently of
+    the decoder so ``operators.multimodal._png_pixels``'s inverse
+    filtering is certified against the spec's forward direction, not
+    against itself. The 4×4 grid-mean feature has closed-form corners:
+    the left boxes average 0 (→ −1.0), the right boxes 255 (→ +1.0).
+    """
+    import struct as _s
+    import zlib as _z
+
+    row = [0] * 4 + [255] * 4
+    raw = bytearray()
+    prev = [0] * 8
+    for y in range(8):
+        f = (y % 4) + 1  # Sub, Up, Average, Paeth
+        raw.append(f)
+        cur = row
+        for x in range(8):
+            a = cur[x - 1] if x >= 1 else 0
+            b = prev[x]
+            c = prev[x - 1] if x >= 1 else 0
+            if f == 1:
+                enc = cur[x] - a
+            elif f == 2:
+                enc = cur[x] - b
+            elif f == 3:
+                enc = cur[x] - ((a + b) >> 1)
+            else:
+                p = a + b - c
+                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
+                pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
+                enc = cur[x] - pred
+            raw.append(enc & 0xFF)
+        prev = cur
+
+    def chunk(ctype: bytes, body: bytes) -> bytes:
+        return (
+            _s.pack(">I", len(body))
+            + ctype
+            + body
+            + _s.pack(">I", _z.crc32(ctype + body) & 0xFFFFFFFF)
+        )
+
+    ihdr = _s.pack(">IIBBBBB", 8, 8, 8, 0, 0, 0, 0)
+    return (
+        b"\x89PNG\r\n\x1a\n"
+        + chunk(b"IHDR", ihdr)
+        + chunk(b"IDAT", _z.compress(bytes(raw)))
+        + chunk(b"IEND", b"")
+    )
+
+
+_PNG_BLOB = _png_fixture()
+
+
+def _jpeg_fixture() -> bytes:
+    """16×8 two-block BASELINE JPEG (left 8×8 block constant 64, right
+    block constant 192), quantizer all-ones — hand-encoded in the
+    forward direction (canonical Huffman codes, DC prediction across
+    blocks, category/magnitude bits, EOB, 1-padding) independently of
+    ``operators.multimodal._jpeg_pixels`` so the decoder is certified
+    against the spec, not against itself. Constant blocks are DC-only
+    (DC = 8·(v−128), all AC zero), so the decode is EXACT: the 4×4
+    grid-mean feature has closed-form columns 64 (left half) and 192
+    (right half). Also exercises MCU iteration and the DC predictor in
+    the driver-certified path (category 11 on the second block's jump).
+    """
+    import struct as _s
+
+    bits: list[int] = []
+
+    def put(value: int, n: int) -> None:
+        bits.extend((value >> i) & 1 for i in range(n - 1, -1, -1))
+
+    # canonical tables: DC categories 0..11 all at 4 bits (codes 0..11);
+    # AC has the single EOB symbol at 1 bit (code 0)
+    pred = 0
+    for v in (64, 192):
+        dc = 8 * (v - 128)
+        diff = dc - pred
+        pred = dc
+        cat = abs(diff).bit_length()
+        put(cat, 4)  # DC symbol `cat` → canonical code == cat at 4 bits
+        put(diff if diff >= 0 else diff + (1 << cat) - 1, cat)
+        put(0, 1)  # EOB
+    while len(bits) % 8:
+        bits.append(1)
+    data = bytes(
+        int("".join(map(str, bits[i : i + 8])), 2) for i in range(0, len(bits), 8)
+    )
+    assert b"\xff" not in data  # no stuffing needed for this payload
+
+    def seg(marker: bytes, body: bytes) -> bytes:
+        return marker + _s.pack(">H", len(body) + 2) + body
+
+    dqt = seg(b"\xff\xdb", bytes([0x00]) + bytes([1] * 64))
+    sof = seg(b"\xff\xc0", bytes([8]) + _s.pack(">HH", 8, 16) + bytes([1, 1, 0x11, 0]))
+    dht_dc = seg(
+        b"\xff\xc4",
+        bytes([0x00])
+        + bytes([0, 0, 0, 12] + [0] * 12)
+        + bytes(range(12)),
+    )
+    dht_ac = seg(
+        b"\xff\xc4", bytes([0x10]) + bytes([1] + [0] * 15) + bytes([0x00])
+    )
+    sos = seg(b"\xff\xda", bytes([1, 1, 0x00, 0, 63, 0]))
+    return (
+        b"\xff\xd8" + dqt + sof + dht_dc + dht_ac + sos + data + b"\xff\xd9"
+    )
+
+
+_JPEG_BLOB = _jpeg_fixture()
+
+
+def _jpeg_progressive_fixture() -> bytes:
+    """The same 16×8 two-block image (left 64, right 192) as
+    ``_jpeg_fixture`` encoded PROGRESSIVELY (SOF2) by hand, independent
+    of ``_jpeg_pixels_progressive``: a DC-first scan at Al=1
+    (successive approximation, point-transformed diffs −256/+512), one
+    AC scan whose band 1..63 is a single EOBRUN=2 spanning both blocks
+    (EOB1 symbol + one extension bit), and a DC refinement scan (one
+    appended bit per block). Constant blocks decode EXACTLY, so the
+    grid feature has the same closed forms as the baseline twin —
+    certifying successive approximation, EOBRUN spans, and multi-scan
+    coefficient accumulation in the driver gate."""
+    import struct as _s
+
+    def seg(marker: bytes, body: bytes) -> bytes:
+        return marker + _s.pack(">H", len(body) + 2) + body
+
+    def pack_bits(bits: list[int]) -> bytes:
+        bits = bits + [1] * (-len(bits) % 8)
+        return bytes(
+            int("".join(map(str, bits[i : i + 8])), 2)
+            for i in range(0, len(bits), 8)
+        )
+
+    def put(bits: list[int], value: int, n: int) -> None:
+        bits.extend((value >> i) & 1 for i in range(n - 1, -1, -1))
+
+    dqt = seg(b"\xff\xdb", bytes([0x00]) + bytes([1] * 64))
+    sof = seg(
+        b"\xff\xc2", bytes([8]) + _s.pack(">HH", 8, 16) + bytes([1, 1, 0x11, 0])
+    )
+    dht_dc = seg(
+        b"\xff\xc4",
+        bytes([0x00]) + bytes([0, 0, 0, 12] + [0] * 12) + bytes(range(12)),
+    )
+    # AC table: single symbol EOB1 (0x10) at 1 bit (code 0)
+    dht_ac = seg(
+        b"\xff\xc4", bytes([0x10]) + bytes([1] + [0] * 15) + bytes([0x10])
+    )
+    # scan 1: DC first, Al=1 — v = dc >> 1: −256 then +256, diffs −256/+512
+    b1: list[int] = []
+    pred = 0
+    for dc in (8 * (64 - 128), 8 * (192 - 128)):
+        v = dc >> 1
+        diff = v - pred
+        pred = v
+        cat = abs(diff).bit_length()
+        put(b1, cat, 4)
+        put(b1, diff if diff >= 0 else diff + (1 << cat) - 1, cat)
+    sos1 = seg(b"\xff\xda", bytes([1, 1, 0x00, 0, 0, 0x01])) + pack_bits(b1)
+    # scan 2: AC band 1..63 — EOB1 (code 0) + 1 extension bit 0 → EOBRUN=2
+    sos2 = seg(b"\xff\xda", bytes([1, 1, 0x00, 1, 63, 0x00])) + pack_bits(
+        [0, 0]
+    )
+    # scan 3: DC refinement (Ah=1, Al=0) — bit0 of each DC (both even → 0)
+    sos3 = seg(b"\xff\xda", bytes([1, 1, 0x00, 0, 0, 0x10])) + pack_bits(
+        [0, 0]
+    )
+    return b"\xff\xd8" + dqt + sof + dht_dc + dht_ac + sos1 + sos2 + sos3 + b"\xff\xd9"
+
+
+_JPEG_PROG_BLOB = _jpeg_progressive_fixture()
+
+# 16×8 two-color GIF89a (left half palette (20,20,20), right half
+# (230,230,230)) generated by the FORWARD LZW encoder in
+# tests/test_gif_tiff_real.py (make_gif) and frozen here;
+# test_content_decode_gif_literal_matches_generator pins the literal to
+# the generator so it stays regenerable and decoder-independent.
+# Luminance is exactly 20 / 230, so the 4×4 grid has closed forms.
+_GIF_BLOB = bytes.fromhex(
+    "47494638396110000800800000141414e6e6e62c000000001000080000021384"
+    "6fa1ab88ccdc814b261a2cc0d972fd795801003b"
+)
+
+
+def _flac_fixture() -> bytes:
+    """Native FLAC stream of the SAME 128-sample signal as the WAV leg
+    (64 silent samples then 64 at +16384), mono 16-bit 8 kHz, one
+    VERBATIM subframe — so the REAL lossless decode
+    (operators/multimodal._flac_pcm, RFC 9639) must reproduce the WAV
+    leg's closed forms exactly: rate 8000, 128 samples, energy
+    fingerprint = the high-32-bits pattern −2^32.  CRC-8/CRC-16 are
+    computed with the decoder-shared helpers, which
+    tests/test_flac_real.py pins to the published check values."""
+    from archive_to_parquet_spark.operators.multimodal import _crc8, _crc16
+
+    pcm = [0] * 64 + [16384] * 64
+    si = bytearray()
+    # min/max block size = the actual frame block size (128), per spec
+    si += (128).to_bytes(2, "big") * 2 + (0).to_bytes(3, "big") * 2
+    si += ((8000 << 44) | (0 << 41) | (15 << 36) | 128).to_bytes(8, "big")
+    si += b"\x00" * 16  # md5 unknown
+    head = b"fLaC" + bytes([0x80]) + len(si).to_bytes(3, "big") + bytes(si)
+    hdr = bytearray(b"\xff\xf8")
+    hdr.append((7 << 4) | 0)  # blocksize: 16-bit-1 follows; rate: streaminfo
+    hdr.append((0 << 4) | (0 << 1))  # mono; sample size from streaminfo
+    hdr.append(0)  # frame number 0 (1-byte coded form)
+    hdr += (127).to_bytes(2, "big")  # blocksize-1
+    hdr.append(_crc8(bytes(hdr)))
+    body = bytearray(hdr)
+    # VERBATIM subframe: 1 pad bit + type 000001 + no-wasted bit = 0x02,
+    # then 128 × 16-bit big-endian two's-complement samples (the 8
+    # header bits keep everything byte-aligned)
+    body.append(0x02)
+    for s in pcm:
+        body += (s & 0xFFFF).to_bytes(2, "big")
+    return head + bytes(body) + _crc16(bytes(body)).to_bytes(2, "big")
+
+
+_FLAC_BLOB = _flac_fixture()
+
+
+def multimodal_content_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CONTENT-level codec-free decode, driver-checked (the round-3
+    step past ``multimodal_header_decode``'s header parsing): per doc,
+
+    - a constant-gray 8×8 binary PGM (pixel value doc_id % 251) goes
+      through the ``IMAGE_FEATURES`` kernel — the 4×4 pixel
+      grid-mean feature of a constant image must equal that constant:
+      p00 = (v/255)·2 − 1 exactly, stated by the oracle;
+    - a 128-sample PCM WAV (64 silent samples, then 64 at amplitude
+      16384 = 0.5 full-scale) goes through ``AUDIO_FINGERPRINT`` —
+      the 64-block energy envelope is 32 zero blocks then 32 hot
+      blocks, so the median-thresholded fingerprint is exactly the
+      high-32-bits pattern: −2^32 as signed int64;
+    - the NATIVE FLAC encoding of the same signal (``_flac_fixture``:
+      STREAMINFO + one VERBATIM-subframe frame, CRC-8/16) goes through
+      the REAL lossless frame decode (RFC 9639, round 7) — bit-for-bit
+      the same PCM, so flac_rate/flac_n/flac_fp must equal the WAV
+      leg's closed forms;
+    - a minimal MP4 goes through ``keyframes_kernel`` — the
+      stss/stsc/stco/stsz walk must slice exactly the three
+      construction-time keyframe payloads out of mdat (sha256 literals
+      in the oracle);
+    - a forward-filtered 8×8 grayscale PNG (``_png_fixture``: right
+      half bright, Sub/Up/Average/Paeth rows, zlib IDAT) goes through
+      the REAL stdlib PNG pixel decode — the 4×4 grid corners must hit
+      the closed forms −1.0 (dark left) and +1.0 (bright right),
+      certifying inflate + inverse filtering end-to-end;
+    - a hand-encoded two-block BASELINE JPEG (``_jpeg_fixture``: left
+      block 64, right block 192, quant 1 → DC-only, EXACT decode) goes
+      through the REAL pure-stdlib JPEG entropy decoder — grid columns
+      must hit the closed forms for 64 and 192, certifying Huffman
+      decode, DC prediction, dequantize and IDCT end-to-end;
+    - the PROGRESSIVE (SOF2) twin of that image
+      (``_jpeg_progressive_fixture``: DC-first at Al=1 + EOBRUN=2 AC
+      scan + DC refinement bit, hand-encoded) goes through the REAL
+      multi-scan progressive decoder — same closed forms, certifying
+      successive approximation and cross-block EOBRUN accumulation;
+    - a forward-LZW-encoded two-color GIF (``_GIF_BLOB``: left half
+      luminance 20, right half 230, EXACT decode) goes through the
+      REAL pure-stdlib GIF-LZW decoder — grid columns must hit the
+      closed forms for 20 and 230.
+
+    All eight columns decode in ONE ``decode_media`` pass — one Arrow
+    ``mapInPandas`` node, per row, no join and no shuffle; the keyframe
+    count and digest are computed JVM-side from the keyframes array.
+    """
+    from archive_to_parquet_spark.operators.multimodal import (
+        AUDIO_FINGERPRINT,
+        IMAGE_FEATURES,
+        decode_media,
+        keyframes_kernel,
+    )
+
+    docs = _t(spark, sf_dir, "documents").select("doc_id").filter(
+        F.col("doc_id") < 50
+    )
+    v = (F.col("doc_id") % 251).cast("int")
+    pgm = F.concat(
+        F.unhex(F.lit("503520382038203235350A")),  # "P5 8 8 255\n"
+        F.unhex(F.repeat(F.lpad(F.hex(v), 2, "0"), 64)),
+    )
+    wav = F.unhex(
+        F.lit(
+            "52494646"  # RIFF
+            + "24010000"  # riff size = 292 LE
+            + "57415645666D7420"  # WAVEfmt(space)
+            + "10000000"  # fmt size 16
+            + "0100" + "0100"  # PCM, mono
+            + "401F0000"  # rate 8000
+            + "803E0000"  # byte rate 16000
+            + "0200" + "1000"  # block align, 16-bit
+            + "64617461" + "00010000"  # data, size 256
+            + "0000" * 64  # 64 silent samples
+            + "0040" * 64  # 64 samples at 0x4000 = 16384
+        )
+    )
+    mp4 = F.unhex(F.lit(_MP4_BLOB.hex()))
+    png = F.unhex(F.lit(_PNG_BLOB.hex()))
+    jpg = F.unhex(F.lit(_JPEG_BLOB.hex()))
+    jpp = F.unhex(F.lit(_JPEG_PROG_BLOB.hex()))
+    gif = F.unhex(F.lit(_GIF_BLOB.hex()))
+    flac = F.unhex(F.lit(_FLAC_BLOB.hex()))
+    media = docs.select(
+        "doc_id",
+        pgm.alias("pgm"),
+        wav.alias("wav"),
+        mp4.alias("mp4"),
+        png.alias("png"),
+        jpg.alias("jpg"),
+        jpp.alias("jpp"),
+        gif.alias("gif"),
+        flac.alias("flac"),
+    )
+
+    decoded = decode_media(
+        media,
+        "doc_id",
+        [(c, IMAGE_FEATURES, f"{c}_") for c in ("pgm", "png", "jpg", "jpp", "gif")]
+        + [(c, AUDIO_FINGERPRINT, f"{c}_") for c in ("wav", "flac")]
+        + [("mp4", keyframes_kernel(every_n=1), "")],
+    )
+
+    def feature_e6(col: str, i: int):
+        return F.floor(
+            F.element_at(f"{col}_feature", i).cast("double") * 1e6 + F.lit(0.5)
+        ).cast("long")
+
+    # the digest of the keyframe payloads, in frame order — JVM-side
+    kf_digest = F.array_join(
+        F.transform(
+            F.array_sort(
+                F.transform(
+                    "keyframes",
+                    lambda x: F.struct(
+                        x["frame_idx"].alias("frame_idx"),
+                        F.sha2(x["frame"], 256).alias("s"),
+                    ),
+                )
+            ),
+            lambda x: x["s"],
+        ),
+        "",
+    )
+    return decoded.select(
+        "doc_id",
+        F.col("pgm_width").alias("width"),
+        F.col("pgm_height").alias("height"),
+        feature_e6("pgm", 1).alias("p00_e6"),
+        "png_width",
+        "png_height",
+        feature_e6("png", 1).alias("png_p00_e6"),
+        feature_e6("png", 4).alias("png_p03_e6"),
+        "jpg_width",
+        "jpg_height",
+        feature_e6("jpg", 1).alias("jpg_p00_e6"),
+        feature_e6("jpg", 4).alias("jpg_p03_e6"),
+        "jpp_width",
+        feature_e6("jpp", 1).alias("jpp_p00_e6"),
+        feature_e6("jpp", 4).alias("jpp_p03_e6"),
+        "gif_width",
+        feature_e6("gif", 1).alias("gif_p00_e6"),
+        feature_e6("gif", 4).alias("gif_p03_e6"),
+        F.col("wav_sample_rate").alias("sample_rate"),
+        F.col("wav_n_samples").alias("n_samples"),
+        F.col("wav_fingerprint").alias("audio_fp"),
+        F.col("flac_sample_rate").alias("flac_rate"),
+        F.col("flac_n_samples").alias("flac_n"),
+        F.col("flac_fingerprint").alias("flac_fp"),
+        F.size("keyframes").cast("long").alias("n_keyframes"),
+        kf_digest.alias("kf_digest"),
+    )
+
+
+MULTIMODAL_CONTENT_SQL = f"""
+SELECT doc_id,
+       8 AS width,
+       8 AS height,
+       CAST(floor(CAST(CAST((CAST(doc_id % 251 AS DOUBLE) / 255.0) * 2.0 - 1.0
+            AS FLOAT) AS DOUBLE) * 1000000 + 0.5) AS BIGINT) AS p00_e6,
+       8 AS png_width,
+       8 AS png_height,
+       CAST(-1000000 AS BIGINT) AS png_p00_e6,
+       CAST(1000000 AS BIGINT) AS png_p03_e6,
+       16 AS jpg_width,
+       8 AS jpg_height,
+       CAST(floor(CAST(CAST((64.0 / 255.0) * 2.0 - 1.0 AS FLOAT) AS DOUBLE)
+            * 1000000 + 0.5) AS BIGINT) AS jpg_p00_e6,
+       CAST(floor(CAST(CAST((192.0 / 255.0) * 2.0 - 1.0 AS FLOAT) AS DOUBLE)
+            * 1000000 + 0.5) AS BIGINT) AS jpg_p03_e6,
+       16 AS jpp_width,
+       CAST(floor(CAST(CAST((64.0 / 255.0) * 2.0 - 1.0 AS FLOAT) AS DOUBLE)
+            * 1000000 + 0.5) AS BIGINT) AS jpp_p00_e6,
+       CAST(floor(CAST(CAST((192.0 / 255.0) * 2.0 - 1.0 AS FLOAT) AS DOUBLE)
+            * 1000000 + 0.5) AS BIGINT) AS jpp_p03_e6,
+       16 AS gif_width,
+       CAST(floor(CAST(CAST((20.0 / 255.0) * 2.0 - 1.0 AS FLOAT) AS DOUBLE)
+            * 1000000 + 0.5) AS BIGINT) AS gif_p00_e6,
+       CAST(floor(CAST(CAST((230.0 / 255.0) * 2.0 - 1.0 AS FLOAT) AS DOUBLE)
+            * 1000000 + 0.5) AS BIGINT) AS gif_p03_e6,
+       8000 AS sample_rate,
+       CAST(128 AS BIGINT) AS n_samples,
+       CAST(-4294967296 AS BIGINT) AS audio_fp,
+       8000 AS flac_rate,
+       CAST(128 AS BIGINT) AS flac_n,
+       CAST(-4294967296 AS BIGINT) AS flac_fp,
+       CAST(3 AS BIGINT) AS n_keyframes,
+       '{_MP4_KF_DIGEST}' AS kf_digest
+FROM documents
+WHERE doc_id < 50
+"""
+
+
+# ---------------------------------------------------------------------------
+# Perceptual-hash dedup path, driver-checked
+# ---------------------------------------------------------------------------
+
+# closed-form ahash literals for the two constructed 8×8 patterns:
+# bits are (pixel > mean); LSB-first packing bit = row*8 + col
+_PHASH_RIGHT_BRIGHT = sum(0xF0 << (8 * r) for r in range(8)) - (1 << 64)
+_PHASH_BOTTOM_BRIGHT = sum(0xFF << (8 * r) for r in range(4, 8)) - (1 << 64)
+
+
+def multimodal_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The REAL pixel → perceptual-hash path driver-checked: each doc
+    carries a constructed 8×8 binary PGM — right-half-bright for even
+    doc_ids, bottom-half-bright for odd — pushed through
+    ``image_perceptual_hashes`` (real decode_pixels + 8×8 box-mean
+    ahash). The expected hashes are closed forms of the construction
+    (bits = pixel > mean, LSB-first), stated as literals in the oracle;
+    the two patterns sit at Hamming distance 32, so any bit error
+    surfaces. Arrow mapInPandas per row, no shuffle.
+    """
+    from archive_to_parquet_spark.operators.multimodal import (
+        image_perceptual_hashes,
+    )
+
+    docs = _t(spark, sf_dir, "documents").select("doc_id").filter(
+        F.col("doc_id") < 64
+    )
+    header = "503520382038203235350A"  # "P5 8 8 255\n"
+    right_bright = header + ("00" * 4 + "FF" * 4) * 8
+    bottom_bright = header + "00" * 32 + "FF" * 32
+    pgm = F.when(
+        F.col("doc_id") % 2 == 0, F.unhex(F.lit(right_bright))
+    ).otherwise(F.unhex(F.lit(bottom_bright)))
+    media = docs.select("doc_id", pgm.alias("data"))
+    return image_perceptual_hashes(media, id_col="doc_id").select(
+        F.col("media_id").alias("doc_id"), "width", "height", "phash"
+    )
+
+
+MULTIMODAL_PHASH_SQL = f"""
+SELECT doc_id,
+       8 AS width,
+       8 AS height,
+       CASE WHEN doc_id % 2 = 0 THEN CAST({_PHASH_RIGHT_BRIGHT} AS BIGINT)
+            ELSE CAST({_PHASH_BOTTOM_BRIGHT} AS BIGINT) END AS phash
+FROM documents
+WHERE doc_id < 64
+"""
+
+
+# ---------------------------------------------------------------------------
+# Bulk media profile, driver-checked
+# ---------------------------------------------------------------------------
+
+_PROFILE_WAV_HEX = (
+    "52494646" "24010000" "57415645666D7420" "10000000" "0100" "0100"
+    "401F0000" "803E0000" "0200" "1000" "64617461" "00010000"
+    + "0000" * 64 + "0040" * 64
+)
+
+
+def multimodal_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``operators.multimodal.profile_media`` driver-checked — the CLI
+    ``--media`` bulk path: each doc explodes into three media rows (the
+    frozen two-tone GIF, the 64-silent/64-hot PCM WAV, and three
+    unclassifiable bytes) and the profile must produce the closed
+    forms: GIF 16×8×3 with ahash 0xF0F0F0F0F0F0F0F0 (signed), WAV
+    8000 Hz / 128 samples / 16 ms with energy fingerprint −2³², and
+    all-null metadata (but exact n_bytes) for the unknown row.
+
+    Scale shape: explode then ONE Arrow mapInPandas stage — no shuffle,
+    no join; the bulk profile of a corpus is scan cost plus the Python
+    kernels (every kernel degrades to null, never raises).
+    """
+    from archive_to_parquet_spark.operators.multimodal import profile_media
+
+    docs = _t(spark, sf_dir, "documents").select("doc_id").filter(
+        F.col("doc_id") < 40
+    )
+    legs = F.array(
+        F.struct(
+            F.lit("image").alias("kind"),
+            F.unhex(F.lit(_GIF_BLOB.hex())).alias("data"),
+            F.lit(0).alias("leg"),
+        ),
+        F.struct(
+            F.lit("audio").alias("kind"),
+            F.unhex(F.lit(_PROFILE_WAV_HEX)).alias("data"),
+            F.lit(1).alias("leg"),
+        ),
+        F.struct(
+            F.lit("unknown").alias("kind"),
+            F.unhex(F.lit("000102")).alias("data"),
+            F.lit(2).alias("leg"),
+        ),
+    )
+    media = docs.select(
+        "doc_id", F.explode(legs).alias("m")
+    ).select(
+        (F.col("doc_id") * 3 + F.col("m.leg")).alias("media_id"),
+        F.col("m.kind").alias("kind"),
+        F.lit(None).cast("string").alias("mime"),
+        F.col("m.data").alias("data"),
+        F.create_map(
+            F.lit("path"), F.concat(F.lit("doc/"), F.col("m.kind"))
+        ).alias("meta"),
+    )
+    prof = profile_media(media)
+    return prof.select(
+        "media_id",
+        "kind",
+        "path",
+        "n_bytes",
+        "width",
+        "height",
+        "channels",
+        "phash",
+        "sample_rate",
+        "n_samples",
+        F.floor(F.col("duration_s") * 1000 + F.lit(0.5))
+        .cast("long")
+        .alias("dur_ms"),
+        "audio_fp",
+    )
+
+
+MULTIMODAL_PROFILE_SQL = f"""
+SELECT d.doc_id * 3 + l.leg AS media_id,
+       l.kind,
+       'doc/' || l.kind AS path,
+       l.n_bytes,
+       l.width, l.height, l.channels, l.phash,
+       l.sample_rate, l.n_samples, l.dur_ms, l.audio_fp
+FROM documents d
+CROSS JOIN (
+  VALUES
+    (0, 'image', CAST({len(_GIF_BLOB)} AS BIGINT), 16, 8, 3,
+     CAST(-1085102592571150096 AS BIGINT),
+     NULL, CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
+     CAST(NULL AS BIGINT)),
+    (1, 'audio', CAST(300 AS BIGINT), NULL, NULL, NULL,
+     CAST(NULL AS BIGINT),
+     8000, CAST(128 AS BIGINT), CAST(16 AS BIGINT),
+     CAST(-4294967296 AS BIGINT)),
+    (2, 'unknown', CAST(3 AS BIGINT), NULL, NULL, NULL,
+     CAST(NULL AS BIGINT),
+     NULL, CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
+     CAST(NULL AS BIGINT))
+) AS l(leg, kind, n_bytes, width, height, channels, phash,
+       sample_rate, n_samples, dur_ms, audio_fp)
+WHERE d.doc_id < 40
+"""
+
+
+# ---------------------------------------------------------------------------
+# Multimodal resize: box-filter thumbnailing with closed-form oracles
+# ---------------------------------------------------------------------------
+
+_STEP8_BODY_HEX = (("00" * 4) + ("c8" * 4)) * 8  # 8×8: left half 0, right 200
+
+
+def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """REAL box-filter image resize (`operators.multimodal.
+    resize_images`), driver-checked with closed-form constructions:
+
+    - a constant-gray 8×8 PGM (value doc_id % 251) resized DOWN to 4×4
+      must stay that constant in every output byte;
+    - a step 8×8 PGM (left half 0, right half 200) resized to 3×3
+      exercises non-divisible area-weighted boxes: column boundaries
+      [0,2)/[2,5)/[5,8) give exact means 0, 200/3 → 67, 200 — each
+      output row is bytes 00 43 c8;
+    - the constant 2×2 PGM resized UP to 4×4 exercises the
+      nearest-neighbor upsample leg and must also stay constant.
+
+    Pixels are certified byte-for-byte via their hex image. One Arrow
+    ``mapInPandas`` stage per fixture, no shuffle (see resize_images).
+    """
+    from archive_to_parquet_spark.operators.multimodal import resize_images
+
+    docs = _t(spark, sf_dir, "documents").select("doc_id").filter(
+        F.col("doc_id") < 50
+    )
+    v_hex = F.lpad(F.lower(F.hex((F.col("doc_id") % 251).cast("int"))), 2, "0")
+    const8 = F.concat(
+        F.unhex(F.lit("503520382038203235350a")),  # "P5 8 8 255\n"
+        F.unhex(F.repeat(v_hex, 64)),
+    )
+    step8 = F.unhex(F.lit("503520382038203235350a" + _STEP8_BODY_HEX))
+    const2 = F.concat(
+        F.unhex(F.lit("503520322032203235350a")),  # "P5 2 2 255\n"
+        F.unhex(F.repeat(v_hex, 4)),
+    )
+    media = docs.select(
+        "doc_id",
+        const8.alias("const8"),
+        step8.alias("step8"),
+        const2.alias("const2"),
+    )
+
+    def leg(data_col: str, fixture: str, w: int, h: int) -> DataFrame:
+        return resize_images(
+            media, out_w=w, out_h=h, id_col="doc_id", data_col=data_col
+        ).select(
+            F.col("media_id").alias("doc_id"),
+            F.lit(fixture).alias("fixture"),
+            "in_w",
+            "in_h",
+            "out_w",
+            "out_h",
+            F.lower(F.hex("pixels")).alias("pix_hex"),
+        )
+
+    return (
+        leg("const8", "const8_4x4", 4, 4)
+        .unionByName(leg("step8", "step8_3x3", 3, 3))
+        .unionByName(leg("const2", "const2_4x4", 4, 4))
+    )
+
+
+MULTIMODAL_RESIZE_SQL = """
+WITH ids AS (SELECT doc_id FROM documents WHERE doc_id < 50)
+SELECT doc_id, 'const8_4x4' AS fixture,
+       CAST(8 AS INT) AS in_w, CAST(8 AS INT) AS in_h,
+       CAST(4 AS INT) AS out_w, CAST(4 AS INT) AS out_h,
+       repeat(lpad(lower(hex(doc_id % 251)), 2, '0'), 16) AS pix_hex
+FROM ids
+UNION ALL
+SELECT doc_id, 'step8_3x3',
+       CAST(8 AS INT), CAST(8 AS INT), CAST(3 AS INT), CAST(3 AS INT),
+       '0043c80043c80043c8'
+FROM ids
+UNION ALL
+SELECT doc_id, 'const2_4x4',
+       CAST(2 AS INT), CAST(2 AS INT), CAST(4 AS INT), CAST(4 AS INT),
+       repeat(lpad(lower(hex(doc_id % 251)), 2, '0'), 16)
+FROM ids
+"""
+
+
+ENTRIES = {
+    "multimodal_header_decode": (multimodal_header_decode, MULTIMODAL_HEADER_SQL),
+    "multimodal_content_decode": (multimodal_content_decode, MULTIMODAL_CONTENT_SQL),
+    "multimodal_phash_dedup": (multimodal_phash_dedup, MULTIMODAL_PHASH_SQL),
+    "multimodal_profile": (multimodal_profile, MULTIMODAL_PROFILE_SQL),
+    "multimodal_resize": (multimodal_resize, MULTIMODAL_RESIZE_SQL),
+}

@@ -1,9 +1,9 @@
 """Continuous maintenance of the bucketed ANN (LSH) index.
 
-The serving layout (`ann_lsh_bucketed`, queries_ext2.py) is an 8-bucket
-table on the literal-plane LSH bucket id. Under continuous arrival each
-micro-batch is appended bucket-routed at write (``bucketBy`` append to
-the same table), so the index never needs re-clustering — and the
+The serving layout (`ann_lsh_bucketed`, queries/similarity.py) is an
+8-bucket table on the literal-plane LSH bucket id. Under continuous
+arrival each micro-batch is appended bucket-routed at write
+(``bucketBy`` append to the same table), so the index never needs re-clustering — and the
 index health profile is COUNT(DISTINCT vec_id) per bucket, which makes
 idempotence a property of the LAYOUT rather than of a transactional
 sink: a failure-replayed batch appends a second copy of its rows, but a

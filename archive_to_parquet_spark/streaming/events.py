@@ -14,7 +14,7 @@ from pyspark.sql import functions as F
 
 
 def with_event_time(events: DataFrame, ts_col: str = "ts") -> DataFrame:
-    """Normalize the driver data's int64-nanos ts (see queries._events)
+    """Normalize the driver data's int64-nanos ts (see queries.relational._events)
     into a proper timestamp column ``event_time``."""
     col = F.col(ts_col)
     if dict(events.dtypes)[ts_col] in ("bigint", "long"):

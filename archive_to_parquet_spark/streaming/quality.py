@@ -1,6 +1,6 @@
 """Streaming data-quality constraint monitoring.
 
-The batch constraint suite (``queries_ext3.audit_constraint_suite``)
+The batch constraint suite (``queries.maintenance.audit_constraint_suite``)
 works because every constraint metric is an ALGEBRAIC aggregate; this
 module runs the same idea under Structured Streaming: each micro-batch
 folds to a one-row partial (counts only), the partial is written to a
@@ -114,7 +114,7 @@ def psi_batch_partial(batch: DataFrame) -> DataFrame:
     reference/current counts (the batch entry's ``psi_bin_counts``,
     imported so the streaming fold can never drift from the certified
     batch binning)."""
-    from archive_to_parquet_spark.queries_ext4 import psi_bin_counts
+    from archive_to_parquet_spark.queries.maintenance import psi_bin_counts
 
     return psi_bin_counts(batch)
 
@@ -145,7 +145,7 @@ def psi_report(spark: SparkSession, state_dir: str) -> DataFrame:
     algebraic, so merge(partials) == one-pass counts over all arrived
     rows regardless of batch boundaries — then compute the identical
     PSI report the batch entry emits."""
-    from archive_to_parquet_spark.queries_ext4 import psi_report_from_counts
+    from archive_to_parquet_spark.queries.maintenance import psi_report_from_counts
 
     partials = spark.read.option("basePath", state_dir).parquet(
         os.path.join(state_dir, "batch=*")

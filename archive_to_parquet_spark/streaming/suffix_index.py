@@ -5,7 +5,7 @@ stream — the streaming leg of the bucketed suffix family
 Every micro-batch:
 
 1. computes the batch's word-start suffix prefix rows
-   (``queries_ext3._suffix_rows`` — the same builder as the batch
+   (``queries.dedup._suffix_rows`` — the same builder as the batch
    entries, so all three agree on the suffix universe);
 2. probes the ACCUMULATED prefix index for the prefixes this batch
    INTRODUCES (left-anti join on ``pfx``; the stored side excludes
@@ -37,7 +37,7 @@ accumulated index each batch — probe cost grows with index size. The
 zero-re-shuffle claim belongs to the BUCKETED layout
 (``dedup_suffix_lcp_bucketed``). For continuous ingest, periodically
 fold aged batch partitions into the bucketed base with
-:func:`archive_to_parquet_spark.queries_ext3.compact_suffix_index`
+:func:`compact_suffix_index`
 (catalog entry ``maintenance_stream_index_compaction``) — probe
 results are identical before/after the fold, and the probe then pays
 one bucketed anti-join plus only the young uncompacted tail.
@@ -67,7 +67,7 @@ def probe_and_append_prefixes(
     count), then append the batch's distinct prefixes to the index —
     both under the batch_id partition, overwrite (replay-idempotent).
     """
-    from archive_to_parquet_spark.queries_ext3 import _suffix_rows
+    from archive_to_parquet_spark.queries.dedup import _suffix_rows
 
     sfx = _suffix_rows(
         batch.select(
@@ -178,7 +178,7 @@ def compact_suffix_index(
     partitions (optionally unioned with a previous ``base_table``), so
     (base ∪ tail) is exactly the prefix set of the original index —
     any anti-join probe returns identical rows before and after the
-    fold (pinned by tests/test_round11_compaction.py). Distinct-union
+    fold (pinned by tests/test_bucketing.py). Distinct-union
     also makes re-running the fold idempotent.
 
     With ``fingerprint`` the fold is staged once per (path,

@@ -1,16 +1,17 @@
 """Catalog and ingest timer.
 
-Times every non-streaming catalog entry at ``$SPARK_GRAFT_SF_DIR``, in
-catalog order, plus three archive-ingest legs, on the session
-``session.get_spark`` builds for this host (``SPARK_GRAFT_CPUS``, else
-every core). Each entry or leg gets one warm run, then three profiled
-build+execute runs into the noop sink (``observability.profile``). Its
-record is the fastest run's profile: wall, build and execute seconds,
-jobs, stages, tasks, executor and GC ms, shuffle bytes, spill, classes
-compiled and plan shape. ``repeat`` says whether the three runs counted
-the same; when they did not, ``moved`` holds the fields that differed.
-Wall time moves with host load; the counted fields do not, so they
-carry the evidence where a wall time cannot.
+Times every catalog entry outside the streaming family at
+``$SPARK_GRAFT_SF_DIR``, in catalog order, plus three archive-ingest
+legs, on the session ``session.get_spark`` builds for this host
+(``SPARK_GRAFT_CPUS``, else every core). Each entry or leg gets one warm
+run, then three profiled build+execute runs into the noop sink
+(``observability.profile``). Its record is the fastest run's profile:
+wall, build and execute seconds, jobs, stages, tasks, executor and GC
+ms, shuffle bytes, spill, classes compiled and plan shape. ``repeat``
+says whether the three runs counted the same; when they did not,
+``moved`` holds the fields that differed. Wall time moves with host
+load; the counted fields do not, so they carry the evidence where a wall
+time cannot.
 
 Usage:
     SPARK_GRAFT_SF_DIR=<tables dir, e.g. .../sf0.01> python bench.py [NAME...]
@@ -217,7 +218,7 @@ def main(names: list[str]) -> int:
             full["ingest_pruned"]["speedup_vs_full"] = round(
                 full["ingest"]["wall_s"] / full["ingest_pruned"]["wall_s"], 2
             )
-    for name in names or [n for n in qs if not n.startswith("stream_")]:
+    for name in names or [n for n in qs if catalog.family(n) != "streaming"]:
         measure(
             full["entries"],
             name,

@@ -26,6 +26,7 @@ from archive_to_parquet_spark.plans.checkpoint import (
     checkpoint_keeping_partitioning,
     checkpoint_partitioned,
 )
+from tests.test_plan_shapes import SF_DIR
 
 
 def test_checkpoint_partitioned_joins_without_exchange(spark):
@@ -91,3 +92,48 @@ def test_checkpoint_keeping_partitioning_restores_aqe_conf(spark):
     )
     assert spark.conf.get("spark.sql.adaptive.enabled") == before
     assert df.count() == 10
+
+
+# -- checkpoint partitioning capture (the dbscan/CC rework's foundation) ---
+
+
+def test_checkpoint_partitioning_survives_for_bare_distinct(spark):
+    """The round-9 shuffle shave rests on two measured facts: a
+    partitioning-keeping checkpoint of a BARE distinct is reusable by
+    id-keyed consumers with no exchange, while aliasing the key inside
+    the checkpointed plan loses the captured partitioning.  Pin both,
+    so a Spark upgrade that changes the capture rules fails loudly
+    here instead of silently re-inflating the CC loop's shuffles."""
+    from archive_to_parquet_spark.plans.checkpoint import (
+        checkpoint_keeping_partitioning,
+        checkpoint_partitioned,
+    )
+
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try:
+        base = spark.range(100).select((F.col("id") % 11).alias("id"))
+        other = checkpoint_partitioned(
+            spark.range(50).select(F.col("id").alias("src")), "src"
+        )
+        good = checkpoint_keeping_partitioning(base.distinct())
+        plan_good = (
+            good.join(other, good.id == other.src, "left")
+            ._jdf.queryExecution()
+            .executedPlan()
+            .toString()
+        )
+        assert plan_good.count("Exchange") == 0
+        # the anti-pattern: key aliased inside the checkpointed plan
+        bad = checkpoint_keeping_partitioning(
+            base.distinct().withColumn("component", F.col("id"))
+        )
+        plan_bad = (
+            bad.join(other, bad.id == other.src, "left")
+            ._jdf.queryExecution()
+            .executedPlan()
+            .toString()
+        )
+        assert plan_bad.count("Exchange") == 1
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)

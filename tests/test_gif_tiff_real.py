@@ -288,11 +288,11 @@ def test_decode_pixels_and_phash_cover_new_formats():
 
 
 def test_content_decode_gif_literal_matches_generator():
-    """The frozen _GIF_BLOB literal in queries_ext2 must equal this
+    """The frozen _GIF_BLOB literal in queries.multimodal must equal this
     module's forward encoder output for its documented construction —
     keeps the driver-certified fixture regenerable and independent of
     the decoder."""
-    from archive_to_parquet_spark.queries_ext2 import _GIF_BLOB
+    from archive_to_parquet_spark.queries.multimodal import _GIF_BLOB
 
     idx = np.zeros((8, 16), dtype=np.uint8)
     idx[:, 8:] = 1

@@ -7,8 +7,10 @@ patterns), not volume."""
 
 from __future__ import annotations
 
+import json
 from collections import Counter
 
+import pytest
 from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
@@ -90,8 +92,6 @@ def test_hamming_near_duplicates_matches_brute_force(spark, sigs, max_hamming):
 
 
 def test_hamming_near_duplicates_rejects_full_width_distance(spark):
-    import pytest
-
     from archive_to_parquet_spark.operators.dedup import hamming_near_duplicates
 
     df = spark.createDataFrame([(1, 0), (2, -1)], ["id", "sig"])
@@ -281,6 +281,73 @@ def test_catalog_docs_count_in_sync():
     assert not stale, f"PARITY.md stale counts {stale}, catalog has {n}"
 
 
+def test_catalog_registry_by_family(spark, monkeypatch, tmp_path):
+    """One registration point: a name two families register raises and
+    names both; every entry belongs to one of the nine families, whose
+    imports of each other flow one way at module level; and the
+    streaming family is exactly what bench.py and plans.audit skip."""
+    import ast
+    import inspect
+    import types
+
+    import bench
+    from archive_to_parquet_spark import queries as q
+    from archive_to_parquet_spark import session
+    from archive_to_parquet_spark.plans import audit
+
+    def family_module(fam, entries):
+        module = types.ModuleType(f"archive_to_parquet_spark.queries.{fam}")
+        module.ENTRIES = entries
+        return module
+
+    entry = (lambda spark, sf_dir: None, "SELECT 1")
+    with pytest.raises(ValueError, match="'x' is registered by both dedup and text"):
+        q._register(
+            [family_module("dedup", {"x": entry}), family_module("text", {"x": entry})]
+        )
+
+    names = q.queries()
+    families = {
+        "parity", "relational", "dedup", "similarity", "text",
+        "multimodal", "graph", "maintenance", "streaming",
+    }
+    assert {n: q.family(n) for n in names if q.family(n) not in families} == {}
+    order = [module.__name__ for module in q._FAMILIES]
+    for i, module in enumerate(q._FAMILIES):
+        tree = ast.parse(inspect.getsource(module))
+        for node in ast.walk(tree):
+            if isinstance(node, ast.ImportFrom) and node.module in order:
+                assert node in tree.body and order.index(node.module) < i, (
+                    f"{module.__name__} imports {node.module}"
+                )
+    streaming = {n for n in names if q.family(n) == "streaming"}
+    assert streaming
+
+    # plans.audit: every entry built as a one-row stub
+    monkeypatch.setattr(
+        q, "queries", lambda: {n: lambda s, d: s.range(1) for n in names}
+    )
+    rows, skipped, errors = audit.collect_audit(spark, "unused")
+    assert not errors and set(skipped) == streaming
+    assert len(rows) == len(names) - len(streaming)
+    monkeypatch.undo()
+
+    # bench.py: what it records when nothing runs — no Spark, no ingest
+    record = {"wall_s": 1.0, "repeat": True, "jobs": 1, "stages": 1, "tasks": 1}
+    fake_spark = types.SimpleNamespace(
+        sparkContext=types.SimpleNamespace(defaultParallelism=1), stop=lambda: None
+    )
+    monkeypatch.setattr(session, "get_spark", lambda app: fake_spark)
+    monkeypatch.setattr(bench, "ingest_fixtures", lambda tmp: ([], []))
+    monkeypatch.setattr(bench, "ingest_leg", lambda *a: {"wall_s": 1.0, "mb_per_s": 1})
+    monkeypatch.setattr(bench, "time_entry", lambda spark, build: dict(record))
+    monkeypatch.setattr(bench, "REPO", str(tmp_path))
+    monkeypatch.setenv("SPARK_GRAFT_SF_DIR", "/data/sf0.01")
+    bench.main([])
+    report = json.loads((tmp_path / bench.artifact_name(1, 0.01)).read_text())
+    assert set(names) - set(report["entries"]) == streaming
+
+
 # -- URL canonicalization: idempotence + batch form ---------------------------
 
 _url_paths = st.lists(
@@ -380,29 +447,30 @@ def test_no_new_order_dependent_rounded_aggregates():
     integer fragments; only the documented exceptions below (log/exp
     scores where rounding ties are measure-zero, and avgs over integer
     inputs whose sums are already exact) may keep the double form.
-    Scans every ``queries*.py`` module of the catalog."""
+    Scans every module of the ``queries`` catalog package; each
+    exception admits one site."""
     import pathlib
     import re
 
-    import archive_to_parquet_spark
+    from archive_to_parquet_spark import queries
 
-    allowed = {
-        # log-based BM25 contributions (irrational values)
-        ("queries.py", "score"),
-        ("queries_ext.py", "score"),
-        ("queries_ext3.py", "score"),
+    allowed = Counter([
+        # log-based BM25 contributions (irrational values): search_bm25,
+        # search_index_probe, search_hybrid_rrf
+        ("similarity.py", "score"),
+        ("similarity.py", "score"),
+        ("similarity.py", "score"),
         # exp-decayed sums (irrational weights)
-        ("queries_ext.py", "decayed_value"),
-        ("queries_ext.py", "decayed_count"),
+        ("relational.py", "decayed_value"),
+        ("relational.py", "decayed_count"),
         # integer-input avgs: sums are exact, division deterministic
-        ("queries.py", "avg_ship_delay_days"),
-        ("queries.py", "avg_chars"),
+        ("relational.py", "avg_ship_delay_days"),
+        ("text.py", "avg_chars"),
         # a sum of log-ratio PSI terms (irrational values)
-        ("queries_ext4.py", "psi_total"),
-    }
-    offenders = []
-    package = pathlib.Path(archive_to_parquet_spark.__file__).parent
-    catalog = sorted(package.glob("queries*.py"))
+        ("maintenance.py", "psi_total"),
+    ])
+    found = Counter()
+    catalog = sorted(pathlib.Path(queries.__file__).parent.glob("*.py"))
     assert catalog
     for path in catalog:
         fname = path.name
@@ -411,8 +479,8 @@ def test_no_new_order_dependent_rounded_aggregates():
             r"F\.round\(\s*F\.(?:sum|avg)\([^)]*\)[^)]*\)\s*\.alias\(\s*"
             r"f?['\"]([^'\"]+)['\"]", src
         ):
-            if (fname, m.group(1)) not in allowed:
-                offenders.append((fname, m.group(1)))
+            found[(fname, m.group(1))] += 1
+    offenders = sorted(found - allowed)
     assert not offenders, (
         f"new round-over-double-aggregate sites: {offenders} — use "
         "functions/exactnum.py or add a justified exception"

@@ -646,7 +646,7 @@ def test_lsh_dbscan_pair_generator_has_no_all_pairs_join(spark):
     cartesian join anywhere in the candidate plan (the exact baseline
     `cosine_dbscan` deliberately uses one; the LSH twin must not)."""
     from archive_to_parquet_spark.operators.similarity import lsh_epsilon_pairs
-    from archive_to_parquet_spark.queries_ext import _dbscan_planted_corpus
+    from archive_to_parquet_spark.queries.similarity import _dbscan_planted_corpus
 
     corpus = _dbscan_planted_corpus(spark, SF_DIR)
     plan = _plan(lsh_epsilon_pairs(corpus, dim=64, threshold=0.95))

@@ -1,6 +1,6 @@
-"""Unit tests for queries_ext: URL canonicalization edge cases,
-corpus-format round-trips on adversarial strings, quarantine routing,
-and decayed-sum math."""
+"""Unit tests for catalog entries across families: URL canonicalization
+edge cases, corpus-format round-trips on adversarial strings, quarantine
+routing, and decayed-sum math."""
 
 from __future__ import annotations
 
@@ -9,7 +9,7 @@ import math
 from pyspark.sql import functions as F
 
 from archive_to_parquet_spark.functions.web import canonicalize_url
-from archive_to_parquet_spark.queries_ext import (
+from archive_to_parquet_spark.queries.parity import (
     parse_quarantine,
     source_csv_roundtrip,
     source_jsonl_roundtrip,
@@ -119,7 +119,7 @@ def test_decayed_sum_math(spark, tmp_path):
         "event_id long, ts timestamp, user_id long, event_type string, value double, props string",
     )
     df.write.mode("overwrite").parquet(f"{tmp_path}/events.parquet")
-    from archive_to_parquet_spark.queries_ext import rel_decayed_sum
+    from archive_to_parquet_spark.queries.relational import rel_decayed_sum
 
     row = rel_decayed_sum(spark, str(tmp_path)).collect()[0]
     assert row.n_events == 2
@@ -129,7 +129,7 @@ def test_decayed_sum_math(spark, tmp_path):
 
 def test_bpe_encode_known_merges(spark):
     from archive_to_parquet_spark.operators.tokenize import bpe_token_count_col
-    from archive_to_parquet_spark.queries_ext import _BPE_MERGES
+    from archive_to_parquet_spark.queries.text import _BPE_MERGES
 
     df = spark.createDataFrame(
         [(0, "the thin thing"), (1, "x 🚀y"), (2, "")], "doc_id long, text string"
@@ -162,11 +162,11 @@ def test_partitioned_write_prunes_partitions(spark, tmp_path):
 
 
 def test_dpp_join_prunes_at_runtime(spark, tmp_path):
-    from archive_to_parquet_spark.queries_ext import source_dpp_join
+    from archive_to_parquet_spark.queries.parity import source_dpp_join
 
     _write_docs(spark, tmp_path, [f"text number {i}" for i in range(12)])
     # patch the dim to this fixture's langs (l0/l1/l2)
-    import archive_to_parquet_spark.queries_ext as qe
+    import archive_to_parquet_spark.queries.parity as qe
 
     orig = qe._LANG_SCRIPT
     qe._LANG_SCRIPT = [("l0", "latin"), ("l1", "latin"), ("l2", "cjk")]
@@ -183,7 +183,7 @@ def test_dpp_join_prunes_at_runtime(spark, tmp_path):
 def test_pq_topk_recall_against_exact_l2(spark):
     import os
 
-    from archive_to_parquet_spark.queries_ext import ann_pq_topk
+    from archive_to_parquet_spark.queries.similarity import ann_pq_topk
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
@@ -256,7 +256,7 @@ def test_kmeans_fixed_rounds_converges_on_separated_clusters(spark):
 def test_chunk_documents_window_geometry(spark, tmp_path):
     import hashlib
 
-    from archive_to_parquet_spark.queries_ext import chunk_documents
+    from archive_to_parquet_spark.queries.text import chunk_documents
 
     words = [f"w{i}" for i in range(120)]
     _write_docs(spark, tmp_path, [" ".join(words), "short doc", ""])
@@ -312,7 +312,7 @@ def test_logreg_learns_separable_rule(spark, tmp_path):
     positively."""
     texts = ["word " * 20] * 15 + ["word " * 200] * 15  # 100 vs 1000 chars
     _write_docs(spark, tmp_path, texts)
-    from archive_to_parquet_spark.queries_ext import train_logreg_quality
+    from archive_to_parquet_spark.queries.text import train_logreg_quality
 
     r = train_logreg_quality(spark, str(tmp_path)).collect()[0]
     assert r.n_rows == 30

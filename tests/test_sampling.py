@@ -1,6 +1,19 @@
-"""Deterministic sampling/split operators."""
+"""Deterministic sampling/split operators, and the text family's
+sampling, mixing and evaluation entries (Neyman allocation, temperature
+weights, binned ROC-AUC)."""
 
 from pyspark.sql import functions as F
+
+from archive_to_parquet_spark.queries.text import (
+    _AUC_BIN_CAP,
+    _AUC_BIN_DIV,
+    _MIX_BUDGET,
+    _NEYMAN_BUDGET,
+    eval_auc_quality,
+    mix_temperature_sampling,
+    sample_stratified_neyman,
+)
+from tests.test_plan_shapes import SF_DIR
 
 
 def test_hash_sample_deterministic_and_unbiased(spark):
@@ -138,3 +151,90 @@ def test_sample_fixed_per_group_exact_counts(spark):
     # under-full groups keep everything
     tiny = sample_fixed_per_group(df.filter("id < 3"), "g", 10, "id")
     assert tiny.count() == 3
+
+
+# -- Neyman stratified sampling -------------------------------------------
+
+
+def test_neyman_allocation_and_draw_invariants(spark):
+    rows = sample_stratified_neyman(spark, SF_DIR).collect()
+    by_lang: dict[str, list] = {}
+    for r in rows:
+        by_lang.setdefault(r["lang"], []).append(r)
+    total = sum(len(v) for v in by_lang.values())
+    # rounding can drift the total a little around the budget
+    assert 0.9 * _NEYMAN_BUDGET <= total <= 1.1 * _NEYMAN_BUDGET
+    docs = (
+        spark.read.parquet(f"{SF_DIR}/documents.parquet")
+        .groupBy("lang")
+        .agg(F.count("*").alias("n"), F.stddev_samp("n_chars").alias("sd"))
+        .collect()
+    )
+    truth = {r["lang"]: r for r in docs}
+    assert set(by_lang) <= set(truth)
+    shares = {
+        r["lang"]: r["n"] * r["sd"]
+        for r in docs
+    }
+    w_tot = sum(shares.values())
+    for lang, drawn in by_lang.items():
+        alloc = drawn[0]["alloc_h"]
+        # every stratum draws exactly its allocation (capped by size)
+        assert len(drawn) == min(alloc, truth[lang]["n"])
+        assert sorted(r["stratum_rank"] for r in drawn) == list(
+            range(1, len(drawn) + 1)
+        )
+        # allocation tracks the Neyman share within rounding
+        want = _NEYMAN_BUDGET * shares[lang] / w_tot
+        assert abs(alloc - want) <= 1.0 or alloc == 1
+
+
+# -- exact binned ROC-AUC --------------------------------------------------
+
+
+def test_auc_matches_brute_force_pair_count(spark):
+    row = eval_auc_quality(spark, SF_DIR).collect()[0]
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet").select(
+        F.least(
+            F.expr(f"n_chars DIV {_AUC_BIN_DIV}"), F.lit(_AUC_BIN_CAP)
+        ).alias("s"),
+        (F.col("lang") == "en").alias("pos"),
+    ).collect()
+    pos = sorted(r["s"] for r in docs if r["pos"])
+    neg = sorted(r["s"] for r in docs if not r["pos"])
+    assert row["n_pos"] == len(pos) and row["n_neg"] == len(neg)
+    # brute-force Mann-Whitney with ties counted 1/2
+    wins = sum(1 for p in pos for n in neg if p > n)
+    ties = sum(1 for p in pos for n in neg if p == n)
+    expect = (wins + 0.5 * ties) / (len(pos) * len(neg))
+    assert abs(row["auc"] - expect) < 1e-6
+    assert 0.0 <= row["auc"] <= 1.0
+
+
+# -- temperature mixing ----------------------------------------------------
+
+
+def test_temperature_weights_normalize_and_upsample_small_langs(spark):
+    rows = mix_temperature_sampling(spark, SF_DIR).collect()
+    assert abs(sum(r["p_natural"] for r in rows) - 1.0) < 1e-4
+    assert abs(sum(r["q_sampling"] for r in rows) - 1.0) < 1e-4
+    for r in rows:
+        # sqrt temperature: q ∝ sqrt(n) — epochs = q*budget/n.  The
+        # column uses the UNROUNDED ratio while q_sampling is 6dp, so
+        # the recomputation tolerance is the rounding step amplified by
+        # budget/n (0.5e-6 * 100k / n ≈ 7e-4 at sf0.001 group sizes).
+        assert abs(
+            r["effective_epochs"] - r["q_sampling"] * _MIX_BUDGET / r["n_docs"]
+        ) < 1e-6 * _MIX_BUDGET / r["n_docs"]
+    # the defining property of temperature sampling: relative to the
+    # natural distribution, the smallest language is upsampled and the
+    # largest is downsampled (strict when the sizes differ)
+    smallest = min(rows, key=lambda r: r["n_docs"])
+    largest = max(rows, key=lambda r: r["n_docs"])
+    if smallest["n_docs"] < largest["n_docs"]:
+        assert smallest["q_sampling"] > smallest["p_natural"] - 1e-9
+        assert largest["q_sampling"] < largest["p_natural"] + 1e-9
+    # q ordering follows n ordering (sqrt is monotone)
+    by_n = sorted(rows, key=lambda r: r["n_docs"])
+    qs = [r["q_sampling"] for r in by_n]
+    assert qs == sorted(qs)

@@ -9,7 +9,9 @@ import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 import pytest
 
+from archive_to_parquet_spark.queries.maintenance import eval_psi_drift
 from tests.conftest import tar_archive
+from tests.test_plan_shapes import SF_DIR
 
 
 @pytest.fixture()
@@ -349,7 +351,7 @@ def test_stream_neardup_equals_batch(spark):
     """The streaming probe/append loop must emit exactly the batch-mode
     all-pairs band-collision set (exact-confirmed): the pair union is
     invariant to micro-batch boundaries."""
-    from archive_to_parquet_spark import queries as q
+    from archive_to_parquet_spark.queries.streaming import stream_neardup_incremental
     from archive_to_parquet_spark.operators.dedup import (
         minhash_near_duplicates_confirmed,
     )
@@ -357,7 +359,7 @@ def test_stream_neardup_equals_batch(spark):
     sf_dir = "/root/testdata/sf0.001"
     streamed = {
         (r.id_a, r.id_b, round(r.jaccard, 6))
-        for r in q.stream_neardup_incremental(spark, sf_dir).collect()
+        for r in stream_neardup_incremental(spark, sf_dir).collect()
     }
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     batch = {
@@ -466,3 +468,164 @@ def test_ann_index_replay_is_idempotent(spark, tmp_path):
         assert spark.table(table).count() == rows_before + b1.count()
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {table}")
+
+
+# -- streaming constraint monitor ----------------------------------------
+
+
+def test_constraint_monitor_replay_is_idempotent(spark, tmp_path):
+    """A failure-replayed micro-batch overwrites its own partial: the
+    merged report must be identical after re-running a batch."""
+    from archive_to_parquet_spark.streaming.quality import (
+        constraint_report,
+        write_batch_partial,
+    )
+
+    events = (
+        spark.read.parquet(f"{SF_DIR}/events.parquet")
+        .select("event_id", "event_type", "value", "props")
+    )
+    state = str(tmp_path / "state")
+    for bid in range(3):
+        write_batch_partial(
+            events.filter(F.col("event_id") % 3 == bid), bid, state
+        )
+    before = {
+        r["constraint_name"]: r for r in constraint_report(spark, state).collect()
+    }
+    # replay batch 1 (same data) — the partial is overwritten, not added
+    write_batch_partial(events.filter(F.col("event_id") % 3 == 1), 1, state)
+    after = {
+        r["constraint_name"]: r for r in constraint_report(spark, state).collect()
+    }
+    assert before == after
+    # and the merged metrics equal the whole-table computation
+    n = events.count()
+    ok = events.filter(F.col("value").between(0.0, 300.0)).count()
+    assert after["bounds_value_0_300"]["metric"] == round(ok / n, 6)
+
+
+# -- streaming PSI monitor --------------------------------------------------
+
+
+def test_stream_psi_report_equals_batch_psi(spark):
+    from archive_to_parquet_spark.queries.maintenance import eval_psi_drift
+    from archive_to_parquet_spark.queries.streaming import stream_psi_drift
+
+    batch = {r["bin"]: r for r in eval_psi_drift(spark, SF_DIR).collect()}
+    stream = {r["bin"]: r for r in stream_psi_drift(spark, SF_DIR).collect()}
+    assert set(batch) == set(stream)
+    for b in batch:
+        assert batch[b].asDict() == stream[b].asDict()
+
+
+def test_psi_partial_replay_is_idempotent(spark, tmp_path):
+    import glob
+
+    from pyspark.sql import functions as F
+
+    from archive_to_parquet_spark.streaming.quality import (
+        psi_report,
+        write_psi_partial,
+    )
+
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    events = (
+        spark.read.parquet(f"{SF_DIR}/events.parquet")
+        .select("event_id", "value")
+    )
+    state = str(tmp_path / "state")
+    write_psi_partial(events.filter(F.col("event_id") % 2 == 0), 0, state)
+    write_psi_partial(events.filter(F.col("event_id") % 2 == 1), 1, state)
+    once = {r["bin"]: r.asDict() for r in psi_report(spark, state).collect()}
+    # a failure-replayed micro-batch OVERWRITES its own partial
+    write_psi_partial(events.filter(F.col("event_id") % 2 == 1), 1, state)
+    twice = {r["bin"]: r.asDict() for r in psi_report(spark, state).collect()}
+    assert once == twice
+    assert len(glob.glob(f"{state}/batch=*")) == 2
+
+
+def test_suffix_stream_replay_is_idempotent(spark, tmp_path):
+    """foreachBatch is at-least-once: replaying a batch (same
+    batch_id) must neither grow the prefix index nor erase the
+    batch's own delta by anti-joining against its previously-appended
+    prefixes (the same-batch exclusion in the probe)."""
+    from archive_to_parquet_spark.streaming.suffix_index import (
+        probe_and_append_prefixes,
+    )
+
+    docs = (
+        spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
+        .limit(40)
+    )
+    index_dir = str(tmp_path / "index")
+    delta_dir = str(tmp_path / "delta")
+
+    probe_and_append_prefixes(spark, docs, index_dir, delta_dir, batch_id=0)
+    idx_rows = spark.read.parquet(index_dir).count()
+    d1 = sorted(
+        map(
+            tuple,
+            spark.read.parquet(delta_dir)
+            .select("pfx", "first_doc", "n_suffixes")
+            .collect(),
+        )
+    )
+    assert idx_rows > 0 and len(d1) == idx_rows  # first batch: all new
+
+    probe_and_append_prefixes(spark, docs, index_dir, delta_dir, batch_id=0)
+    assert spark.read.parquet(index_dir).count() == idx_rows
+    d2 = sorted(
+        map(
+            tuple,
+            spark.read.parquet(delta_dir)
+            .select("pfx", "first_doc", "n_suffixes")
+            .collect(),
+        )
+    )
+    assert d2 == d1
+
+
+def test_suffix_stream_cross_batch_delta_only_new_prefixes(spark, tmp_path):
+    from pyspark.sql import functions as F2
+
+    from archive_to_parquet_spark.streaming.suffix_index import (
+        probe_and_append_prefixes,
+    )
+
+    docs = spark.read.parquet(
+        "/root/testdata/sf0.001/documents.parquet"
+    ).limit(60)
+    b0 = docs.filter(F2.col("doc_id") % 2 == 0)
+    b1 = docs.filter(F2.col("doc_id") % 2 == 1)
+    index_dir = str(tmp_path / "index")
+    delta_dir = str(tmp_path / "delta")
+    probe_and_append_prefixes(spark, b0, index_dir, delta_dir, batch_id=0)
+    probe_and_append_prefixes(spark, b1, index_dir, delta_dir, batch_id=1)
+    batch0_pfx = {
+        r["pfx"]
+        for r in spark.read.parquet(index_dir)
+        .filter(F2.col("batch_id") == 0)
+        .collect()
+    }
+    delta1 = spark.read.parquet(delta_dir).filter(F2.col("batch_id") == 1)
+    assert delta1.count() > 0
+    # batch 1's delta must not contain any prefix batch 0 introduced
+    assert not {r["pfx"] for r in delta1.collect()} & batch0_pfx
+
+
+def test_suffix_stream_empty_corpus_yields_empty_frame(spark, tmp_path):
+    """A corpus where no batch produces a ≥25-char word-start suffix
+    writes no delta files at all; the entry must return the oracle's
+    empty relation, not crash on a missing parquet path."""
+    from archive_to_parquet_spark.queries.streaming import stream_suffix_incremental
+
+    sf_dir = str(tmp_path / "sf_empty")
+    spark.createDataFrame(
+        [(1, "a b", "en", 3, "s")],  # too short for any 25-char suffix
+        "doc_id long, text string, lang string, n_chars long,"
+        " source string",
+    ).write.parquet(f"{sf_dir}/documents.parquet")
+    out = stream_suffix_incremental(spark, sf_dir)
+    assert out.count() == 0
+    assert out.columns == ["pfx", "first_doc", "n_suffixes", "first_batch"]

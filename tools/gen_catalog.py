@@ -1,5 +1,7 @@
-"""Generate CATALOG.md: one line per catalog entry, grouped by prefix,
-first docstring sentence as the description. Run after adding entries:
+"""Generate CATALOG.md: one line per catalog entry, grouped by the
+family that registers it (the family module's docstring introduces each
+group), first docstring sentence as the description. Run after adding
+entries:
 
     python tools/gen_catalog.py > CATALOG.md
 """
@@ -12,39 +14,6 @@ import sys
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
-
-GROUPS = [
-    ("q", "Reference dataflow (SURVEY.md §2.12)"),
-    ("rel_", "Relational surface"),
-    ("tpch_", "TPC-H pattern suite"),
-    ("source_", "Sources, formats & layout"),
-    ("dedup_", "Deduplication"),
-    ("text_", "Text analysis & quality"),
-    ("tokenize_", "Tokenizer"),
-    ("curation_", "Corpus curation"),
-    ("sample_", "Sampling & splits"),
-    ("mix", "Data mixing"),
-    ("pack_", "Sequence packing"),
-    ("decontaminate_", "Decontamination"),
-    ("corpus_", "Corpus ops"),
-    ("vocab_", "Vocabulary"),
-    ("filter_", "Filtering"),
-    ("crossdoc_", "Cross-document"),
-    ("web_", "Web curation"),
-    ("parse_", "Parsing & quarantine"),
-    ("chunk_", "Chunking"),
-    ("search_", "Search / retrieval"),
-    ("lm_", "Language modeling"),
-    ("ann_", "Similarity search (ANN)"),
-    ("cluster_", "Clustering"),
-    ("embedding_", "Embedding ops"),
-    ("sketch_", "Sketches"),
-    ("graph_", "Graph analytics"),
-    ("stream_", "Structured Streaming"),
-    ("multimodal_", "Multimodal"),
-    ("maintenance_", "Dataset maintenance"),
-    ("profile_", "Profiling"),
-]
 
 
 def first_sentence(doc: str | None) -> str:
@@ -61,20 +30,9 @@ def main() -> int:
 
     qs = catalog.queries()
     oracles = catalog.oracle_sql()
-    # resolve original functions (queries() may wrap)
-    raw = {name: fn for name, (fn, _) in catalog._CATALOG.items()}
-
-    grouped: dict[str, list[str]] = {}
-    rest = []
-    for name in sorted(qs):
-        for prefix, title in GROUPS:
-            if name.startswith(prefix):
-                grouped.setdefault(title, []).append(name)
-                break
-        else:
-            rest.append(name)
-    if rest:
-        grouped["Other"] = rest
+    by_family: dict[str, list[str]] = {}
+    for name in qs:  # registration order is family order
+        by_family.setdefault(catalog.family(name), []).append(name)
 
     print("# CATALOG — every query/operator entry (auto-generated)")
     print()
@@ -83,13 +41,13 @@ def main() -> int:
         "(the driver compares rows + schema + value hash per entry). "
         "Regenerate with `python tools/gen_catalog.py > CATALOG.md`."
     )
-    for _, title in GROUPS + [("", "Other")]:
-        names = grouped.get(title)
-        if not names:
-            continue
-        print(f"\n## {title} ({len(names)})\n")
-        for name in names:
-            desc = first_sentence(raw[name].__doc__)
+    for fam, names in by_family.items():
+        module = sys.modules[f"archive_to_parquet_spark.queries.{fam}"]
+        intro = " ".join(module.__doc__.strip().split("\n\n")[0].split())
+        print(f"\n## {fam} ({len(names)})\n")
+        print(f"{intro}\n")
+        for name in sorted(names):
+            desc = first_sentence(qs[name].__doc__)
             mark = "" if name in oracles else " *(no SQL oracle)*"
             print(f"- **{name}**{mark} — {desc}")
     return 0
