@@ -214,13 +214,20 @@ def quantize_int8_cols(emb: Column | str) -> dict[str, Column]:
     between Spark and any oracle. Inputs are widened float32→double
     first (exact) so both engines do identical double arithmetic.
     Zero vectors quantize to all-zero with scale 0.
+
+    ``q`` reads the scale from the column ``scale``: project
+    ``scale`` first, then ``q``, and alias nothing else ``scale`` in
+    ``q``'s select (Spark resolves a lambda's column to a same-named
+    alias of its own select list). Written inline, the max-abs fold
+    sits inside ``q``'s per-element lambda, and Spark re-evaluates it
+    for every element — O(d²) work per vector.
     """
     e = F.transform(_c(emb), lambda x: x.cast("double"))
     scale = (
         F.aggregate(e, F.lit(0.0), lambda acc, v: F.greatest(acc, F.abs(v)))
         / 127.0
     )
-    safe = F.when(scale == 0.0, F.lit(1.0)).otherwise(scale)
+    safe = F.when(F.col("scale") == 0.0, F.lit(1.0)).otherwise(F.col("scale"))
     q = F.transform(
         e,
         lambda x: F.greatest(

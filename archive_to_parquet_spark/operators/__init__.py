@@ -3,7 +3,6 @@ from archive_to_parquet_spark.operators.dedup import (
     bloom_filter_bits,
     bloom_probe,
     connected_components,
-    connected_components_star,
     dedup_against_index,
     dedup_exact,
     dedup_exact_deterministic,
@@ -56,7 +55,6 @@ __all__ = [
     "brute_force_top_k",
     "cap_hot_buckets",
     "connected_components",
-    "connected_components_star",
     "dedup_against_index",
     "dedup_exact",
     "dedup_exact_deterministic",

@@ -721,9 +721,11 @@ def dbscan_from_pairs(
     are the minimum core id of each core component.
 
     Scale shape: one explode of the pair list + count agg for degrees,
-    `connected_components` over the core-core subgraph (min-label
-    propagation, shallow for density clusters), and one broadcast-sized
-    join to attach borders. Everything shuffles on point/pair ids only.
+    `connected_components` over the core-core subgraph (label
+    propagation with parent hooking and pointer jumping, so a chain of
+    core points costs rounds in the log of its length, not the length),
+    and one broadcast-sized join to attach borders. Everything shuffles
+    on point/pair ids only.
     Returns (vec_id, role, cluster).
     """
     from archive_to_parquet_spark.operators.dedup import connected_components

@@ -12,11 +12,17 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from archive_to_parquet_spark.functions.exactnum import cents_avg, cents_avg_sql
-from archive_to_parquet_spark.queries.dedup import (
+from archive_to_parquet_spark.operators.dedup import (
     _SFX_MIN,
     _SFX_SQL_PRELUDE,
     _SFX_SQL_WHERE,
     _suffix_rows,
+)
+from archive_to_parquet_spark.operators.profiling import (
+    _PSI_BINS,
+    _PSI_WIDTH,
+    psi_bin_counts,
+    psi_report_from_counts,
 )
 from archive_to_parquet_spark.queries.relational import (
     _broadcast_off,
@@ -908,74 +914,6 @@ SELECT DISTINCT pfx FROM sfx WHERE doc_id % 5 <= 2
 # ---------------------------------------------------------------------------
 # Population Stability Index drift monitor
 # ---------------------------------------------------------------------------
-
-_PSI_BINS = 10
-_PSI_WIDTH = 30.0  # value bins: [0,30), [30,60), ... clamped to [0,9]
-
-
-def _psi_binned(events: DataFrame) -> DataFrame:
-    """(is_ref, bin) per event — the shared binning step of the batch
-    and streaming PSI monitors (even/odd event_id snapshots, 10 fixed
-    value bins clamped to [0, 9])."""
-    return events.filter(F.col("value").isNotNull()).select(
-        (F.col("event_id") % 2 == 0).alias("is_ref"),
-        F.least(
-            F.greatest(
-                F.floor(F.col("value") / _PSI_WIDTH).cast("int"), F.lit(0)
-            ),
-            F.lit(_PSI_BINS - 1),
-        ).alias("bin"),
-    )
-
-
-def psi_bin_counts(events: DataFrame) -> DataFrame:
-    """≤10-row (bin, ref_n, cur_n) counts — the ALGEBRAIC partial both
-    PSI monitors fold to (mergeable by summation, so micro-batch
-    partials sum to exactly this)."""
-    sided = _psi_binned(events)
-    return sided.groupBy("bin").agg(
-        F.sum(F.when(F.col("is_ref"), 1).otherwise(0)).alias("ref_n"),
-        F.sum(F.when(~F.col("is_ref"), 1).otherwise(0)).alias("cur_n"),
-    )
-
-
-def psi_report_from_counts(
-    spark: SparkSession, counts: DataFrame
-) -> DataFrame:
-    """PSI report from materialized (bin, ref_n, cur_n) counts — the
-    shared tail of ``eval_psi_drift`` and ``stream_psi_drift``: literal
-    10-bin axis (empty bins contribute their smoothed term identically
-    in every engine), Laplace smoothing, per-bin 6dp terms, total."""
-    axis = spark.range(_PSI_BINS).select(F.col("id").cast("int").alias("bin"))
-    totals = counts.agg(
-        F.sum("ref_n").alias("ref_tot"), F.sum("cur_n").alias("cur_tot")
-    )
-    full = (
-        axis.join(counts, "bin", "left")
-        .select(
-            "bin",
-            F.coalesce("ref_n", F.lit(0)).cast("bigint").alias("ref_n"),
-            F.coalesce("cur_n", F.lit(0)).cast("bigint").alias("cur_n"),
-        )
-        .crossJoin(F.broadcast(totals))  # 1-row scalar fold
-    )
-    p = (F.col("ref_n") + 1).cast("double") / (
-        F.col("ref_tot") + _PSI_BINS
-    ).cast("double")
-    q = (F.col("cur_n") + 1).cast("double") / (
-        F.col("cur_tot") + _PSI_BINS
-    ).cast("double")
-    detail = full.select(
-        "bin",
-        "ref_n",
-        "cur_n",
-        F.round((p - q) * F.log(p / q), 6).alias("psi_term"),
-    ).localCheckpoint()  # 10 rows; total fold + final output reuse it
-    total = detail.agg(F.round(F.sum("psi_term"), 6).alias("psi_total"))
-    return detail.crossJoin(F.broadcast(total)).select(
-        "bin", "ref_n", "cur_n", "psi_term", "psi_total"
-    )
-
 
 def eval_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Population Stability Index between a reference and a current

@@ -2788,7 +2788,7 @@ def sketch_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     # of the bounded sketch (rebuild 1.43 → 1.77 s — serial barrier)
     # measured WORSE at sf0.1; the four ~0.9 s single-task legs are
     # cheaper than either fix locally. At 100 TB the checkpoint form
-    # is the right one (d fewer corpus passes) — see OPTIMIZATION_r11.
+    # is the right one (d fewer corpus passes).
     words = docs.select(
         F.explode(
             F.regexp_extract_all(F.lower("text"), F.lit("[a-z0-9]+"), F.lit(0))

@@ -127,16 +127,19 @@ def embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
         quantize_int8_cols,
     )
 
-    emb = _t(spark, sf_dir, "embeddings")
     qz = quantize_int8_cols("embedding")
+    emb = _t(spark, sf_dir, "embeddings").withColumn("scale", qz["scale"])
     dequant = F.transform(
         qz["q"],
         lambda x: x.cast("double")
-        * F.when(qz["scale"] == 0.0, F.lit(1.0)).otherwise(qz["scale"]),
+        * F.when(F.col("scale") == 0.0, F.lit(1.0)).otherwise(F.col("scale")),
     )
+    # the scale is rounded in a later projection: Spark resolves a
+    # lambda's ``scale`` to a same-named alias in its own select list,
+    # so q and dequant would read the rounded value
     return emb.select(
         "vec_id",
-        F.round(qz["scale"], 6).alias("scale"),
+        "scale",
         F.aggregate(
             qz["q"], F.lit(0), lambda acc, v: acc + F.abs(v)
         ).alias("q_l1"),
@@ -152,7 +155,7 @@ def embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
         (cosine_similarity_col("embedding", dequant) >= 0.99)
         .cast("int")
         .alias("cos_ok"),
-    )
+    ).withColumn("scale", F.round("scale", 6))
 
 
 EMBEDDING_QUANTIZE_SQL = """

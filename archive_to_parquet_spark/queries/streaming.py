@@ -15,12 +15,12 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from archive_to_parquet_spark.operators.similarity import fixed_hyperplanes
-from archive_to_parquet_spark.queries.dedup import (
+from archive_to_parquet_spark.operators.dedup import (
     _SFX_MIN,
     _SFX_SQL_PRELUDE,
     _SFX_SQL_WHERE,
 )
+from archive_to_parquet_spark.operators.similarity import fixed_hyperplanes
 from archive_to_parquet_spark.queries.maintenance import EVAL_PSI_SQL
 from archive_to_parquet_spark.queries.relational import (
     _broadcast_off,

@@ -22,6 +22,11 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from archive_to_parquet_spark.operators.profiling import (
+    psi_bin_counts,
+    psi_report_from_counts,
+)
+
 # (constraint_name, partial-count column, threshold) — metric is
 # count/n; thresholds chosen so the value-bounds check genuinely fails
 # at sf ≥ 0.01 (~0.2% of event values exceed 300)
@@ -109,21 +114,13 @@ def constraint_report(spark: SparkSession, state_dir: str) -> DataFrame:
 # -- PSI drift monitor under continuous arrival (round 9) -------------------
 
 
-def psi_batch_partial(batch: DataFrame) -> DataFrame:
-    """≤10-row algebraic partial for a micro-batch: per-bin
-    reference/current counts (the batch entry's ``psi_bin_counts``,
-    imported so the streaming fold can never drift from the certified
-    batch binning)."""
-    from archive_to_parquet_spark.queries.maintenance import psi_bin_counts
-
-    return psi_bin_counts(batch)
-
-
 def write_psi_partial(batch: DataFrame, batch_id: int, state_dir: str) -> None:
-    """foreachBatch sink: the batch's per-bin partial lands in its OWN
-    subdirectory, mode overwrite — a failure-replayed micro-batch
-    rewrites the same path and cannot double-count."""
-    psi_batch_partial(batch).write.mode("overwrite").parquet(
+    """foreachBatch sink: the batch's ≤10-row per-bin partial lands in
+    its OWN subdirectory, mode overwrite — a failure-replayed
+    micro-batch rewrites the same path and cannot double-count. The
+    partial is the batch entry's ``psi_bin_counts``, so the streaming
+    fold cannot drift from the certified batch binning."""
+    psi_bin_counts(batch).write.mode("overwrite").parquet(
         os.path.join(state_dir, f"batch={batch_id}")
     )
 
@@ -145,8 +142,6 @@ def psi_report(spark: SparkSession, state_dir: str) -> DataFrame:
     algebraic, so merge(partials) == one-pass counts over all arrived
     rows regardless of batch boundaries — then compute the identical
     PSI report the batch entry emits."""
-    from archive_to_parquet_spark.queries.maintenance import psi_report_from_counts
-
     partials = spark.read.option("basePath", state_dir).parquet(
         os.path.join(state_dir, "batch=*")
     )

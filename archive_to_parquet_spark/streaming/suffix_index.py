@@ -5,7 +5,7 @@ stream — the streaming leg of the bucketed suffix family
 Every micro-batch:
 
 1. computes the batch's word-start suffix prefix rows
-   (``queries.dedup._suffix_rows`` — the same builder as the batch
+   (``operators.dedup._suffix_rows`` — the same builder as the batch
    entries, so all three agree on the suffix universe);
 2. probes the ACCUMULATED prefix index for the prefixes this batch
    INTRODUCES (left-anti join on ``pfx``; the stored side excludes
@@ -50,6 +50,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from archive_to_parquet_spark.operators.dedup import _suffix_rows
 from archive_to_parquet_spark.streaming.neardup import _index_exists
 
 
@@ -67,8 +68,6 @@ def probe_and_append_prefixes(
     count), then append the batch's distinct prefixes to the index —
     both under the batch_id partition, overwrite (replay-idempotent).
     """
-    from archive_to_parquet_spark.queries.dedup import _suffix_rows
-
     sfx = _suffix_rows(
         batch.select(
             F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")

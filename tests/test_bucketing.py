@@ -12,6 +12,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
+from archive_to_parquet_spark.operators.profiling import _PSI_BINS
 from archive_to_parquet_spark.plans.bucketing import (
     bucketed_join,
     plan_has_exchange,
@@ -22,7 +23,6 @@ from archive_to_parquet_spark.queries.maintenance import (
     _COMPACT_TARGET,
     _LDIV_L,
     _LDIV_SENS_DIV,
-    _PSI_BINS,
     _VACUUM_OVERHEAD,
     _VACUUM_RETAIN,
     audit_constraint_suite,

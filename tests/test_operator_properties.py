@@ -281,6 +281,36 @@ def test_catalog_docs_count_in_sync():
     assert not stale, f"PARITY.md stale counts {stale}, catalog has {n}"
 
 
+def test_operator_layer_does_not_import_the_catalog():
+    """operators/, streaming/, functions/ and sources/ sit below the
+    catalog: no module there imports ``archive_to_parquet_spark.queries``,
+    at module level or inside a function, so moving a catalog entry
+    cannot break an operator or a stream that only fails when it runs."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    pkg = root / "archive_to_parquet_spark"
+    catalog = "archive_to_parquet_spark.queries"
+    found = []
+    for layer in ("operators", "streaming", "functions", "sources"):
+        for path in sorted((pkg / layer).rglob("*.py")):
+            package = ".".join(path.relative_to(root).parent.parts)
+            for node in ast.walk(ast.parse(path.read_text())):
+                if isinstance(node, ast.Import):
+                    names = [a.name for a in node.names]
+                elif isinstance(node, ast.ImportFrom):
+                    # a relative import climbs level - 1 packages
+                    base = package.rsplit(".", node.level - 1)[0] if node.level else ""
+                    module = ".".join(p for p in (base, node.module) if p)
+                    names = [module] + [f"{module}.{a.name}" for a in node.names]
+                else:
+                    continue
+                if any(n == catalog or n.startswith(catalog + ".") for n in names):
+                    found.append(f"{path.relative_to(root)}:{node.lineno}")
+    assert found == []
+
+
 def test_catalog_registry_by_family(spark, monkeypatch, tmp_path):
     """One registration point: a name two families register raises and
     names both; every entry belongs to one of the nine families, whose

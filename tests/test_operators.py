@@ -369,39 +369,36 @@ def test_media_table_classification(spark):
 
 
 def test_connected_components_star_known_graphs(spark):
-    """large-star/small-star agrees with the reference result on known
-    graphs, including the deep-chain shape that is label propagation's
-    worst case."""
-    from archive_to_parquet_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
+    """The components kernel agrees with the reference result on known
+    graphs — star-shaped, chained and mixed — including the deep chain
+    that is plain label propagation's worst case."""
+    from archive_to_parquet_spark.operators.dedup import connected_components
+    from tests.test_connected_components import min_reachable
 
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (10, 11), (11, 12), (10, 12), (20, 21)],
         "id_a long, id_b long",
     )
-    out = {r.id: r.component for r in connected_components_star(pairs).collect()}
+    out = {r.id: r.component for r in connected_components(pairs).collect()}
     assert out == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 12: 10, 20: 20, 21: 20}
 
-    # 40-node chain (diameter 39): star converges in O(log² n) rounds
+    # 40-node chain (diameter 39)
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(100, 140)], "id_a long, id_b long"
     )
-    star = {r.id: r.component for r in connected_components_star(chain).collect()}
-    assert set(star.values()) == {100}
-    assert len(star) == 41
+    got = {r.id: r.component for r in connected_components(chain).collect()}
+    assert set(got.values()) == {100}
+    assert len(got) == 41
 
-    # equivalence with label propagation on a mixed random-ish graph
+    # a mixed random-ish graph against the union-find reference
     import random
 
     rng = random.Random(7)
     edges = [(rng.randrange(60), rng.randrange(60)) for _ in range(45)]
     edges = [(a, b) for a, b in edges if a != b]
     g = spark.createDataFrame(edges, "id_a long, id_b long")
-    a = {r.id: r.component for r in connected_components(g).collect()}
-    b = {r.id: r.component for r in connected_components_star(g).collect()}
-    assert a == b
+    got = {r.id: r.component for r in connected_components(g).collect()}
+    assert got == min_reachable(edges)
 
 
 def test_gopher_quality_multiline_signals(spark):
@@ -940,11 +937,35 @@ def test_quantize_int8_edges(spark):
     qz = quantize_int8_cols("embedding")
     out = {
         r.id: (r.scale, r.q)
-        for r in df.select("id", qz["scale"].alias("scale"), qz["q"].alias("q")).collect()
+        for r in df.withColumn("scale", qz["scale"])
+        .select("id", "scale", qz["q"].alias("q"))
+        .collect()
     }
     assert out[1][1] == [64, -127, 32, 127]  # round(63.5)=64 via floor(x+.5)
     assert out[2] == (0.0, [0, 0])
     assert out[3][1] == [127]
+
+
+def test_quantize_int8_folds_the_scale_once_per_vector(spark):
+    """The max-abs fold over the array is the scale's alone: ``q`` reads
+    the projected scale column, so the fold does not sit in ``q``'s
+    per-element lambda (O(d²) work per vector), neither as written nor
+    after the optimizer merges the projections."""
+    from archive_to_parquet_spark.functions.vectors import quantize_int8_cols
+
+    qz = quantize_int8_cols("embedding")
+    assert "aggregate" in str(qz["scale"])
+    assert "aggregate" not in str(qz["q"])
+    df = spark.createDataFrame([(1, [1.0, -2.0])], "id long, embedding array<float>")
+    plan = (
+        df.withColumn("scale", qz["scale"])
+        .select("id", qz["q"].alias("q"))
+        ._jdf.queryExecution()
+        .optimizedPlan()
+        .toString()
+    )
+    (q_line,) = [ln for ln in plan.splitlines() if " AS q#" in ln]
+    assert "aggregate" not in q_line, plan
 
 
 def test_crossdoc_span_stats(spark):
@@ -1518,21 +1539,30 @@ def test_suffix_bucketed_reruns_reuse_staged_tables(spark):
 
 
 def test_near_clusters_star_agrees_with_label_on_corpus(spark):
-    """The two CC implementations must produce identical clusterings
-    through the FULL near-dup entry (LSH candidates → exact-Jaccard
-    confirm → components) on real corpus data — the claim the
-    dedup_near_clusters_star oracle certifies at the driver."""
-    from archive_to_parquet_spark.queries.dedup import (
-        dedup_near_clusters,
-        dedup_near_clusters_star,
+    """Both registered near-dup cluster entries (one function under two
+    names) label the corpus exactly as a union-find over the same
+    exact-Jaccard-confirmed pairs: component = min reachable doc id,
+    and the representative is the doc whose id is its component."""
+    from archive_to_parquet_spark import queries as catalog
+    from archive_to_parquet_spark.operators.dedup import (
+        minhash_near_duplicates_confirmed,
     )
+    from tests.test_connected_components import min_reachable
 
-    label = sorted(
-        map(tuple, dedup_near_clusters(spark, SF_DIR).collect())
+    docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
+    pairs = minhash_near_duplicates_confirmed(
+        docs, "doc_id", "text", jaccard_threshold=0.5, num_hashes=32, bands=8
+    ).collect()
+    comp = min_reachable((r.id_a, r.id_b) for r in pairs)
+    want = sorted(
+        (d, comp.get(d, d), int(comp.get(d, d) == d))
+        for d in (r.doc_id for r in docs.select("doc_id").collect())
     )
+    qs = catalog.queries()
+    label = sorted(map(tuple, qs["dedup_near_clusters"](spark, SF_DIR).collect()))
     star = sorted(
-        map(tuple, dedup_near_clusters_star(spark, SF_DIR).collect())
+        map(tuple, qs["dedup_near_clusters_star"](spark, SF_DIR).collect())
     )
-    assert label == star
+    assert label == star == want
     # sanity: at least one non-trivial cluster exists at sf0.001
     assert any(doc != comp for doc, comp, _rep in label)
