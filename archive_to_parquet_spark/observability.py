@@ -15,11 +15,12 @@ no extra pass). Here:
   twice, around the work to be measured).
 - ``profile``: one DataFrame built and executed into the noop sink,
   split into layers: build and execute wall time, the jobs, stages and
-  tasks it ran with their executor time and shuffle bytes, the classes
-  it compiled, and the shape of its physical plan as planned before
-  adaptive execution (the plan ``PLAN_PINS.json`` audits; a runtime
-  join or partition change shows in the counts, not in the shape).
-  ``bench.py`` records one per catalog entry and ingest leg.
+  tasks it ran with their executor time and shuffle bytes (and the
+  build's share of them), the classes it compiled, and the shape of the
+  whole computation as planned before adaptive execution
+  (``plans.audit.audit_build``, the record ``PLAN_PINS.json`` pins; a
+  runtime join or partition change shows in the counts, not in the
+  shape). ``bench.py`` records one per catalog entry and ingest leg.
 """
 
 from __future__ import annotations
@@ -107,11 +108,12 @@ class StageTotals:
 @dataclass(frozen=True)
 class QueryProfile:
     wall_s: float  # build_s + exec_s
-    build_s: float  # the build call, including any checkpoint it ran
+    build_s: float  # the build and its plan audit, with any checkpoint it ran
     exec_s: float  # the noop write
     totals: StageTotals | None  # None when the bracket could not be read
+    build_totals: StageTotals | None  # the part of totals the build ran
     codegen: CodegenCounters  # classes compiled inside the bracket
-    plan: dict  # plans.audit.audit_plan of the pre-AQE physical plan
+    plan: dict  # plans.audit.audit_build of the whole computation
 
     def record(self) -> dict:
         """The profile as one flat JSON-ready dict; the stage totals
@@ -120,11 +122,15 @@ class QueryProfile:
             totals = dict.fromkeys(f.name for f in fields(StageTotals))
         else:
             totals = {k: round(v, 1) for k, v in asdict(self.totals).items()}
+        build = {} if self.build_totals is None else asdict(self.build_totals)
         return {
             "wall_s": round(self.wall_s, 3),
             "build_s": round(self.build_s, 3),
             "exec_s": round(self.exec_s, 3),
             **totals,
+            "build_jobs": build.get("jobs"),
+            "build_stages": build.get("stages"),
+            "build_run_ms": build.get("executor_run_ms"),
             "codegen_compiled": self.codegen.compiled,
             "codegen_ms": round(self.codegen.compile_ms, 1),
             "plan": self.plan,
@@ -193,39 +199,43 @@ class _StatusStore:
 
 
 def profile(spark: SparkSession, build: Callable[[], DataFrame]) -> QueryProfile:
-    """Call ``build`` and execute the DataFrame it returns into the noop
-    sink, bracketed by job and stage id and by the codegen counters.
+    """Build the DataFrame through ``plans.audit.audit_build`` and
+    execute it into the noop sink, bracketed by job and stage id and by
+    the codegen counters.
 
     The bracket opens before ``build`` runs, so the jobs of a
-    checkpoint taken while the DataFrame is built are counted. The plan
-    shape is read from the built DataFrame's own physical plan, the one
-    ``PLAN_PINS.json`` audits: with AQE on it is the plan as first
-    planned, not the adaptive plan the noop write settled on (the write
-    plans its own execution), so a runtime join or partition change
-    shows in the jobs, stages and shuffle bytes but not in the shape.
-    Subplans hidden behind a checkpoint count in the jobs and stages but
-    not in the plan shape."""
-    from archive_to_parquet_spark.plans.audit import audit_plan
+    checkpoint taken while the DataFrame is built are counted; a read
+    of the bracket right after the build splits them out as
+    ``build_totals``. The plan shape is the audit of the whole
+    computation that ``PLAN_PINS.json`` pins: the built DataFrame's
+    physical plan with every subplan checkpointed during the build
+    folded in. With AQE on it is the plan as first planned, not the
+    adaptive plan the noop write settled on (the write plans its own
+    execution), so a runtime join or partition change shows in the
+    jobs, stages and shuffle bytes but not in the shape."""
+    from archive_to_parquet_spark.plans.audit import audit_build
 
     status = _StatusStore(spark)
     codegen0 = codegen_counters(spark)
     mark = status.mark()
     t0 = time.perf_counter()
-    df = build()
+    df, plan = audit_build(build)
+    build_s = time.perf_counter() - t0
+    build_totals = status.since(mark)
     t1 = time.perf_counter()
     df.write.format("noop").mode("overwrite").save()
-    t2 = time.perf_counter()
+    exec_s = time.perf_counter() - t1
     totals = status.since(mark)
     codegen1 = codegen_counters(spark)
-    plan = df._jdf.queryExecution().executedPlan().toString()
     return QueryProfile(
-        wall_s=t2 - t0,
-        build_s=t1 - t0,
-        exec_s=t2 - t1,
+        wall_s=build_s + exec_s,
+        build_s=build_s,
+        exec_s=exec_s,
         totals=totals,
+        build_totals=build_totals,
         codegen=CodegenCounters(
             compiled=codegen1.compiled - codegen0.compiled,
             compile_ms=codegen1.compile_ms - codegen0.compile_ms,
         ),
-        plan=audit_plan(plan),
+        plan=plan,
     )

@@ -10,9 +10,10 @@ generator executing inside an eager checkpoint).
 :func:`recording_checkpoint_plans` instruments
 ``DataFrame.localCheckpoint`` for the duration of a ``with`` block:
 the physical plan of every DataFrame is captured at the moment its
-lineage is truncated. ``tools/scale_audit.py`` and the plan-hygiene
-test wrap each catalog entry's construction in it, so the audit covers
-the WHOLE computation — final plan + every checkpoint-hidden subplan —
+lineage is truncated. ``plans.audit.audit_build`` wraps each catalog
+entry's construction in it — for ``tools/scale_audit.py``, the oracle
+gate's plan pin and the bench profile alike — so the audit covers the
+WHOLE computation — final plan + every checkpoint-hidden subplan —
 including call sites added in the future (nothing to remember at the
 call site). Normal execution is untouched.
 """

@@ -7,7 +7,9 @@ legs, on the session ``session.get_spark`` builds for this host
 run, then three profiled build+execute runs into the noop sink
 (``observability.profile``). Its record is the fastest run's profile:
 wall, build and execute seconds, jobs, stages, tasks, executor and GC
-ms, shuffle bytes, spill, classes compiled and plan shape. ``repeat``
+ms, shuffle bytes, spill, the jobs, stages and executor ms the build
+ran on its own, classes compiled, and the plan shape of the whole
+computation (the record ``PLAN_PINS.json`` pins). ``repeat``
 says whether the three runs counted the same; when they did not,
 ``moved`` holds the fields that differed. Wall time moves with host
 load; the counted fields do not, so they carry the evidence where a wall
@@ -46,6 +48,8 @@ COUNTED = (
     "shuffle_read_bytes",
     "shuffle_write_bytes",
     "spill_bytes",
+    "build_jobs",
+    "build_stages",
     "codegen_compiled",
     "plan",
 )

@@ -21,12 +21,12 @@ if REPO not in sys.path:
 # python main thread blocked in a py4j socket read (JVM idle), which
 # nothing short of process death unblocks.  These hooks arm a fresh
 # daemon timer around EACH test phase (setup — which includes fixture
-# execution, so the session-scoped whole-catalog audit fixture is
-# covered — then call, then teardown).  Per-phase arming means a test
-# whose fixture setup and body are both legitimately slow never shares
-# one window (the r8 advice: the old whole-protocol timer charged the
-# 180+-plan-build audit fixture to the first requesting test's call
-# budget), while a py4j wedge in any single phase still dies in
+# execution, so the session Spark start-up is covered — then call, then
+# teardown).  Per-phase arming means a test whose fixture setup and
+# body are both legitimately slow never shares one window (a
+# whole-protocol timer charges a slow session fixture to the first
+# requesting test's call budget), while a py4j wedge in any single
+# phase still dies in
 # 1200 s: the timer dumps all thread stacks and hard-exits with a
 # distinctive status, so a wedged suite fails loudly in ~20 minutes
 # instead of silently eating a round.  A heavily loaded CI host can

@@ -1,20 +1,18 @@
-"""Physical-plan shape discipline for the round-2 catalog queries:
+"""Physical-plan shape discipline for individual catalog queries:
 single-scan ops must plan with zero shuffle exchanges, joins must
 broadcast the intended side, windows must be partitioned. These pin the
 scale properties SCALING.md claims — a regression that adds a shuffle
 or de-broadcasts a join fails here long before it shows up at 100 TB.
 
-Since round 7 the WHOLE catalog is additionally pinned: PLAN_PINS.json
-(written by tools/scale_audit.py) records every batch entry's
-{shuffles, bnlj, py, cartesian}, and
-``test_catalog_plan_shapes_match_pin`` fails on ANY drift — an entry
-silently growing a shuffle no longer merely changes a generated doc.
+The WHOLE catalog is additionally pinned: PLAN_PINS.json (written by
+tools/scale_audit.py) records every batch entry's {shuffles, bnlj, py,
+cartesian, gw}, and the oracle gate (``tests/test_oracle_gate.py``)
+checks each entry's record against it on the one build it collects,
+so an entry silently growing a shuffle fails that entry's test.
 """
 
 import json
 import os
-
-import pytest
 
 SF_DIR = "/root/testdata/sf0.001"
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -22,17 +20,6 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
-
-
-@pytest.fixture(scope="session")
-def catalog_audit(spark):
-    """One whole-catalog audit shared by the hygiene and pin tests —
-    building 180+ plans (and executing the iterative operators'
-    checkpoints) is the expensive part; pay it once per session."""
-    from archive_to_parquet_spark.plans.audit import collect_audit
-
-    rows, streaming, errors = collect_audit(spark, SF_DIR)
-    return rows, streaming, errors
 
 
 def test_scan_only_queries_have_no_exchange(spark):
@@ -167,64 +154,6 @@ def test_tpch_q21_single_shuffle_conditional_agg(spark):
     assert plan.count("Scan parquet") == 2  # orders + customer, once each
 
 
-def test_catalog_plan_hygiene(catalog_audit):
-    """Whole-catalog physical-plan audit: no non-streaming catalog query
-    may plan a cartesian product, a row-at-a-time or Arrow Python eval
-    node (the catalog is 100% JVM expressions), or a cached scan.
-    Single-partition exchanges are allowed only because they are 1-row
-    scalar broadcasts / final agg merges — windows over data stay
-    partitioned, which the dedicated window tests pin. The audit ALSO
-    covers checkpoint-hidden subplans (plans/checkpoint.py) — lineage
-    truncation must not hide a cartesian product or Python eval node."""
-    rows, _streaming, errors = catalog_audit
-    assert not errors, errors
-    offenders = {}
-    for rec in rows:
-        flags = [
-            flag
-            for flag, bad in (
-                ("cartesian", rec["cartesian"]),
-                ("py-row", "BatchEvalPython" in rec["py"]),
-                ("py-arrow", "ArrowEvalPython" in rec["py"]),
-                ("cached", rec["cached"]),
-            )
-            if bad
-        ]
-        if flags:
-            offenders[rec["name"]] = flags
-    assert not offenders, offenders
-
-
-# Intentional plan-shape changes land here keyed by entry name, with
-# the PLAN_PINS.json "generation" current at the time of allowlisting —
-# the pin test skips listed entries so a deliberate rework doesn't
-# force an immediate PLAN_PINS.json regeneration mid-review.  The
-# drain is ENFORCED (r7 verdict ask #7): regenerating the pin bumps
-# its generation, and test_pin_allowlist_drained fails any entry whose
-# recorded generation is older than the committed pin's — a lingering
-# allowlist entry can no longer survive the regeneration that was
-# supposed to resolve it.
-_PIN_DRIFT_ALLOWLIST: dict[str, int] = {}
-
-
-def test_pin_allowlist_drained():
-    """An allowlist entry is a promise to regenerate PLAN_PINS.json;
-    once the pin's generation advances past the one the entry was
-    recorded under, keeping the entry would silently exempt that
-    query from drift detection forever — fail instead."""
-    with open(os.path.join(REPO, "PLAN_PINS.json")) as fh:
-        generation = json.load(fh).get("generation", 0)
-    stale = {
-        name: gen
-        for name, gen in _PIN_DRIFT_ALLOWLIST.items()
-        if gen < generation
-    }
-    assert not stale, (
-        f"PLAN_PINS.json is at generation {generation}; drain these "
-        f"allowlist entries recorded under older generations: {stale}"
-    )
-
-
 def test_single_partition_windows_are_enumerated():
     """Unpartitioned windows funnel the input to ONE task — legitimate
     only as a fold over a bounded (sketch-sized) table.  The committed
@@ -239,44 +168,6 @@ def test_single_partition_windows_are_enumerated():
     assert offenders == ["eval_auc_quality", "sketch_hdr_quantiles"], offenders
     assert pins["sketch_hdr_quantiles"]["gw"] == 1
     assert pins["eval_auc_quality"]["gw"] == 1
-
-
-def test_catalog_plan_shapes_match_pin(catalog_audit):
-    """Every batch entry's {shuffles, bnlj, py, cartesian} must equal
-    the committed PLAN_PINS.json (r6 verdict ask #5): SCALE_AUDIT.md is
-    regenerated evidence, but nothing used to FAIL when an entry's
-    shuffle count silently grew.  Now it does.  Intentional changes:
-    rerun `python tools/scale_audit.py > SCALE_AUDIT.md` and review the
-    PLAN_PINS.json diff."""
-    from archive_to_parquet_spark.plans.audit import pin_of
-
-    rows, _streaming, _errors = catalog_audit
-    with open(os.path.join(REPO, "PLAN_PINS.json")) as fh:
-        pin_doc = json.load(fh)
-    # the committed pin must have been generated at the scale this
-    # test audits at — a pin from an exploratory run at another sf
-    # would make every comparison meaningless
-    assert pin_doc["sf_dir"] == SF_DIR, (
-        f"PLAN_PINS.json generated at {pin_doc['sf_dir']}, test audits "
-        f"at {SF_DIR} — regenerate with `python tools/scale_audit.py`"
-    )
-    pinned = pin_doc["entries"]
-
-    live = {r["name"]: pin_of(r) for r in rows}
-    drift = {}
-    for name, got in live.items():
-        if name in _PIN_DRIFT_ALLOWLIST:
-            continue
-        want = pinned.get(name)
-        if want is None:
-            drift[name] = {"live": got, "pinned": "MISSING — regenerate pin"}
-        elif got != want:
-            drift[name] = {"live": got, "pinned": want}
-    stale = sorted(set(pinned) - set(live))
-    assert not drift and not stale, {
-        "drift": drift,
-        "pinned_but_gone": stale,
-    }
 
 
 def test_tpch_q01_scan_rollup_shape(spark):

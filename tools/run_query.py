@@ -37,10 +37,7 @@ def main(argv: list[str] | None = None) -> int:
 
     qs = catalog.queries()
     if args.list_names:
-        oracles = catalog.oracle_sql()
-        for name in sorted(qs):
-            mark = " " if name in oracles else "*"  # * = no SQL oracle
-            print(f"{mark} {name}")
+        print("\n".join(sorted(qs)))
         return 0
     if not args.names:
         p.error("give at least one query name, or --list")

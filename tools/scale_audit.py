@@ -32,17 +32,18 @@ they are not reported here; the plan-shape tests pin JVM-only
 execution where it matters.)
 
 Besides the human-readable table, the tool writes ``PLAN_PINS.json``:
-the per-entry {shuffles, bnlj, py, cartesian} quadruple.
-``tests/test_plan_shapes.py::test_catalog_plan_shapes_match_pin``
-recomputes the audit live and fails on ANY drift from the committed
-pin — an entry silently growing a shuffle or a nested-loop join now
-breaks the suite instead of only changing a generated document.
-Intentional changes regenerate the pin with this tool and show up in
-the diff for review.
+the per-entry {shuffles, bnlj, py, cartesian, gw} record.
+``tests/test_oracle_gate.py::test_entry_matches_oracle`` audits each
+entry on the build it collects and fails that entry on ANY drift from
+the committed pin — an entry silently growing a shuffle or a
+nested-loop join breaks the suite instead of only changing a generated
+document. Intentional changes regenerate the pin with this tool and
+show up in the diff for review.
 
-The collection logic itself lives in
-``archive_to_parquet_spark/plans/audit.py`` so the tool and the test
-audit with the SAME code.
+Each entry is built and audited by
+``archive_to_parquet_spark/plans/audit.audit_build``, the one code path
+the tool, the oracle gate and ``observability.profile`` (the bench's
+plan shape) share.
 
 Usage: python tools/scale_audit.py [sf_dir] > SCALE_AUDIT.md
 """
@@ -56,7 +57,8 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-# the canonical pin scale: must equal tests/test_plan_shapes.SF_DIR
+# the canonical pin scale: must equal the oracle gate's SF_DIR
+# (tests/test_plan_shapes.SF_DIR)
 PIN_SF_DIR = "/root/testdata/sf0.001"
 
 
@@ -71,26 +73,16 @@ def main() -> int:
 
     # The committed pin is only valid at the canonical audit scale —
     # an exploratory run at another sf must not silently overwrite it
-    # (the pin test compares a live sf0.001 audit against the file).
+    # (the oracle gate compares each entry's sf0.001 audit against it).
     if sf_dir == PIN_SF_DIR:
-        # monotone generation counter: every regeneration bumps it, and
-        # the pin test fails any _PIN_DRIFT_ALLOWLIST entry recorded
-        # under an OLDER generation — the allowlist is forced to drain
-        # with the regeneration that resolves it (r7 verdict ask #7)
-        generation = 1
-        pin_path = os.path.join(REPO, "PLAN_PINS.json")
-        if os.path.exists(pin_path):
-            with open(pin_path) as fh:
-                generation = json.load(fh).get("generation", 0) + 1
         pins = {
             "_comment": (
                 "Per-entry physical-plan pin written by "
                 f"tools/scale_audit.py at {sf_dir}; enforced by "
-                "tests/test_plan_shapes.py. Regenerate deliberately "
+                "tests/test_oracle_gate.py. Regenerate deliberately "
                 "after an intentional plan change."
             ),
             "sf_dir": sf_dir,
-            "generation": generation,
             "entries": {
                 r["name"]: pin_of(r)
                 for r in sorted(rows, key=lambda r: r["name"])
@@ -178,7 +170,7 @@ def main() -> int:
     print(
         "- **Every entry's {shuffles, BNLJ, python, cartesian, "
         "global-windows} is pinned in PLAN_PINS.json and enforced by "
-        "tests/test_plan_shapes.py** — silent drift fails the suite."
+        "tests/test_oracle_gate.py** — silent drift fails the suite."
     )
     print()
     print(
