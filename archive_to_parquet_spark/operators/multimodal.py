@@ -682,6 +682,25 @@ def _real_decode_image(data: bytes) -> tuple[int, int, int, list[float]]:
     return w, h, channels, _hash_feature(data)
 
 
+def parse_audio_header(data: bytes) -> tuple[int, int, float] | None:
+    """(sample_rate, n_samples, duration_s) from the first audio header
+    parser that recognises ``data`` — WAV, FLAC, M4A, Ogg Vorbis/Opus,
+    AIFF, AU, MP3, ADTS — or None. The one header chain behind both
+    ``_real_decode_audio`` and ``profile_media``."""
+    return (
+        parse_wav_header(data)
+        or parse_flac_header(data)
+        # strong-magic containers before MP3's sync-scan heuristic
+        or parse_mp4_audio_header(data)
+        or parse_ogg_vorbis_header(data)
+        or parse_ogg_opus_header(data)
+        or parse_aiff_header(data)
+        or parse_au_header(data)
+        or parse_mp3_header(data)
+        or parse_adts_header(data)
+    )
+
+
 def _real_decode_audio(data: bytes) -> tuple[int, int, float, list[float]]:
     """WAV in linear PCM, G.711 μ-law/A-law, mono IMA ADPCM, or a
     native FLAC stream (lossless decode, RFC 9639) yields REAL sample
@@ -709,18 +728,7 @@ def _real_decode_audio(data: bytes) -> tuple[int, int, float, list[float]]:
         )
         feat = [float(20.0 * math.log10(max(v, 1e-10))) for v in rms]
         return rate, int(decoded[1].size), decoded[1].size / rate, feat
-    parsed = (
-        parse_wav_header(data)
-        or parse_flac_header(data)
-        # strong-magic containers before MP3's sync-scan heuristic
-        or parse_mp4_audio_header(data)
-        or parse_ogg_vorbis_header(data)
-        or parse_ogg_opus_header(data)
-        or parse_aiff_header(data)
-        or parse_au_header(data)
-        or parse_mp3_header(data)
-        or parse_adts_header(data)
-    )
+    parsed = parse_audio_header(data)
     if parsed is None:
         magic = (data or b"")[:4].hex()
         raise NotImplementedError(
@@ -3021,13 +3029,7 @@ def profile_media(df: DataFrame) -> DataFrame:
                         w, h, ch = parsed
                     ph = perceptual_hash(data)
                 elif kind == "audio":
-                    parsed = (
-                        parse_wav_header(data)
-                        or parse_flac_header(data)
-                        or parse_mp3_header(data)
-                        or parse_ogg_vorbis_header(data)
-                        or parse_adts_header(data)
-                    )
+                    parsed = parse_audio_header(data)
                     if parsed:
                         rate, n_samp, dur = parsed
                     fp = audio_fingerprint64(data)

@@ -60,7 +60,6 @@ class ConvertOptions:
     min_string_len: int = DEFAULT_MIN_STRING_LEN
     # Engine extensions beyond the reference surface:
     max_depth: int = 16  # recursion guard alongside the quine check (S11)
-    emit_format_column: bool = True
     single_file: bool = False  # coalesce(1) for byte-level output parity
     # Row-group byte budget (parquet.block.size). Spark/parquet-java caps
     # row groups by BYTES where the reference caps by 1,048,576 ROWS

@@ -4,8 +4,8 @@ At 100 TB the same big-big join (lineitem ⨝ orders on orderkey, or
 entries ⨝ entries on hash) recurs across workloads; bucketing both
 tables on the join key at write time makes every subsequent join
 shuffle-free — the exchange is paid once at layout time instead of per
-query. Verified by asserting no Exchange operator in the joined plan
-(tests/test_bucketing.py).
+query. ``bucketed_join`` is the one place that join is planned; each
+catalog entry that uses it pins its shuffle count in PLAN_PINS.json.
 """
 
 from __future__ import annotations
@@ -16,6 +16,8 @@ import shutil
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+
+from archive_to_parquet_spark.plans.audit import audit_plan
 
 
 def write_bucketed(
@@ -146,23 +148,23 @@ def ensure_parquet_snapshot(
 
 
 def bucketed_join(
-    spark: SparkSession, left_table: str, right_table: str, on: str
+    spark: SparkSession, left: str, right: str, on: str, how: str = "inner"
 ) -> DataFrame:
-    """Join two same-bucketed tables on their bucket key — planned
-    without any Exchange when bucket specs line up."""
-    return spark.table(left_table).join(spark.table(right_table), on)
+    """Join two co-bucketed tables on their bucket key as a
+    bucket-aligned sort-merge join: each bucket of ``left`` meets the
+    same bucket of ``right`` with no Exchange on either side.
 
-
-def count_shuffle_exchanges(df: DataFrame) -> int:
-    """Number of SHUFFLE Exchange operators in the physical plan.
-
-    BroadcastExchange doesn't count — it replicates a small side without
-    repartitioning rows; bucketing exists to remove shuffle exchanges.
-    """
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    return plan.replace("BroadcastExchange", "").count("Exchange")
+    The merge hint keeps that plan at any broadcast threshold — without
+    it a small side is broadcast and the layout is never exercised. A
+    layout whose bucket specs stop lining up gains an Exchange, which
+    the entry's ``PLAN_PINS.json`` shuffle count catches."""
+    return spark.table(left).join(spark.table(right).hint("merge"), on, how)
 
 
 def plan_has_exchange(df: DataFrame) -> bool:
-    """True if the physical plan contains a SHUFFLE Exchange."""
-    return count_shuffle_exchanges(df) > 0
+    """True if the physical plan contains a SHUFFLE Exchange, counted
+    as ``plans.audit.audit_plan`` counts the pin's ``shuffles`` (a
+    BroadcastExchange replicates a small side without repartitioning
+    rows, so it does not count)."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    return audit_plan(plan)["shuffle_exchanges"] > 0

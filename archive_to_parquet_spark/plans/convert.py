@@ -35,7 +35,6 @@ from archive_to_parquet_spark.operators.filters import (
 )
 from archive_to_parquet_spark.options import ConvertOptions
 from archive_to_parquet_spark.plans.sink import write_parquet
-from archive_to_parquet_spark.schema import REFERENCE_COLUMNS
 from archive_to_parquet_spark.sources.archive_source import read_archives
 
 
@@ -49,8 +48,7 @@ class ConversionCounters:
 
 def refine(df: DataFrame, options: ConvertOptions) -> DataFrame:
     """Entries → the rows the reference keeps: include filter → size
-    filter → (``unique``) hash dedup → the reference projection when
-    ``emit_format_column`` is off."""
+    filter → (``unique``) hash dedup."""
     df = apply_include_filter(df, options.include)
     df = apply_size_filter(df, options)
     if options.unique:
@@ -59,8 +57,6 @@ def refine(df: DataFrame, options: ConvertOptions) -> DataFrame:
             if options.deterministic_dedup
             else dedup_exact(df, "hash")
         )
-    if not options.emit_format_column:
-        df = df.select(*[c for c in REFERENCE_COLUMNS if c in df.columns])
     return df
 
 

@@ -25,7 +25,7 @@ from archive_to_parquet_spark.operators.dedup import (
     minhash_near_duplicates_confirmed,
     simhash_near_duplicates,
 )
-from archive_to_parquet_spark.queries.relational import _broadcast_off, _stage_dir, _t
+from archive_to_parquet_spark.queries.relational import _stage_dir, _t
 
 
 def dedup_exact_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -956,9 +956,10 @@ def dedup_incremental_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     sha256) and the daily ingest batch (odd doc_ids) are both written
     as 8-bucket tables on the hash, so the daily anti-join ("which
     documents are NEW?") AND the within-batch winner election
-    (min doc_id per hash) plan with ZERO shuffle Exchanges — asserted
-    in-query with auto-broadcast disabled, so the driver row certifies
-    the values and the scale property together.
+    (min doc_id per hash) plan as a bucket-aligned sort-merge join with
+    ZERO shuffle Exchanges (``bucketed_join``; the entry's plan pin
+    holds the count), so the oracle row certifies the values and the
+    scale property together.
 
     This is `source_bucketed_join`'s pay-the-shuffle-once layout
     carried to the flagship dedup workload: at 100 TB the index is the
@@ -977,8 +978,8 @@ def dedup_incremental_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from archive_to_parquet_spark.plans.bucketing import (
         _input_fingerprint,
+        bucketed_join,
         ensure_bucketed_table,
-        plan_has_exchange,
     )
 
     suffix = re.sub(r"\W", "_", sf_dir.rstrip("/").split("sf")[-1])
@@ -1003,24 +1004,16 @@ def dedup_incremental_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         fp,
     )
 
-    def probe() -> DataFrame:
-        return (
-            spark.table(tb)
-            .join(spark.table(ti), "hash_hex", "left_anti")
-            .groupBy("hash_hex")
-            .agg(
-                F.min("doc_id").alias("new_id"),
-                F.count("*").alias("n_copies"),
-            )
+    # anti-join AND winner election both ride the bucket spec: zero
+    # Exchange anywhere in the probe plan
+    return (
+        bucketed_join(spark, tb, ti, "hash_hex", "left_anti")
+        .groupBy("hash_hex")
+        .agg(
+            F.min("doc_id").alias("new_id"),
+            F.count("*").alias("n_copies"),
         )
-
-    with _broadcast_off(spark):
-        # anti-join AND winner election both ride the bucket spec:
-        # zero Exchange anywhere in the probe plan
-        assert not plan_has_exchange(probe()), (
-            "bucketed incremental dedup gained a shuffle"
-        )
-    return probe()
+    )
 
 
 DEDUP_INCREMENTAL_BUCKETED_SQL = """
@@ -1106,8 +1099,8 @@ def dedup_minhash_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch's band rows (odd doc_ids) are both bucketed 8-way on the
     band hash, so the daily index DELTA — which band buckets are new
     today, with their first member and membership count — plans with
-    ZERO shuffle Exchanges, asserted in-query with auto-broadcast
-    disabled.
+    ZERO shuffle Exchanges (``bucketed_join``, held by the entry's
+    plan pin).
 
     This is the daily workload of a 100-TB near-dup index: candidate
     lookup and delta-append both key on (band, bucket); bucketing the
@@ -1129,8 +1122,8 @@ def dedup_minhash_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from archive_to_parquet_spark.plans.bucketing import (
         _input_fingerprint,
+        bucketed_join,
         ensure_bucketed_table,
-        plan_has_exchange,
     )
 
     suffix = re.sub(r"\W", "_", sf_dir.rstrip("/").split("sf")[-1])
@@ -1153,27 +1146,18 @@ def dedup_minhash_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         fp,
     )
 
-    def probe() -> DataFrame:
-        # band_hash embeds band_idx in its md5 input, so the single
-        # bucket column is the full join key; grouping by (band_idx,
-        # band_hash) still rides the bucket spec (grouping keys ⊇
-        # partitioning key).
-        return (
-            spark.table(tb)
-            .join(spark.table(ti).select("band_hash"), "band_hash", "left_anti")
-            .groupBy("band_idx", "band_hash")
-            .agg(
-                F.min("doc_id").alias("first_doc"),
-                F.count("*").alias("n_docs"),
-            )
-            .select("band_idx", "band_hash", "first_doc", "n_docs")
+    # band_hash embeds band_idx in its md5 input, so the single bucket
+    # column is the full join key; grouping by (band_idx, band_hash)
+    # still rides the bucket spec (grouping keys ⊇ partitioning key).
+    return (
+        bucketed_join(spark, tb, ti, "band_hash", "left_anti")
+        .groupBy("band_idx", "band_hash")
+        .agg(
+            F.min("doc_id").alias("first_doc"),
+            F.count("*").alias("n_docs"),
         )
-
-    with _broadcast_off(spark):
-        assert not plan_has_exchange(probe()), (
-            "bucketed near-dup index delta gained a shuffle"
-        )
-    return probe()
+        .select("band_idx", "band_hash", "first_doc", "n_docs")
+    )
 
 
 def _mhbk_oracle_sql() -> str:
@@ -1366,10 +1350,11 @@ def dedup_suffix_lcp_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     repeat threshold shares its 25-char prefix, so a persisted suffix
     index bucketed on ``pfx`` answers the daily question — which
     25-char prefix groups are NEW today, i.e. which long substrings
-    appear for the first time — with ZERO shuffle Exchanges, asserted
-    in-query with auto-broadcast disabled (same zero-Exchange contract
-    as ``dedup_minhash_bucketed`` / ``dedup_incremental_bucketed``;
-    reference contract D1 generalized to substring dedup).
+    appear for the first time — with ZERO shuffle Exchanges
+    (``bucketed_join``, held by the entry's plan pin; same zero-Exchange
+    contract as ``dedup_minhash_bucketed`` /
+    ``dedup_incremental_bucketed``; reference contract D1 generalized to
+    substring dedup).
 
     Index = distinct 25-char prefixes of the even-doc_id corpus's
     word-start suffixes (``_suffix_rows``, shared with the batch
@@ -1387,8 +1372,8 @@ def dedup_suffix_lcp_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from archive_to_parquet_spark.plans.bucketing import (
         _input_fingerprint,
+        bucketed_join,
         ensure_bucketed_table,
-        plan_has_exchange,
     )
 
     suffix = re.sub(r"\W", "_", sf_dir.rstrip("/").split("sf")[-1])
@@ -1413,23 +1398,15 @@ def dedup_suffix_lcp_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         fp,
     )
 
-    def probe() -> DataFrame:
-        return (
-            spark.table(tb)
-            .join(spark.table(ti), "pfx", "left_anti")
-            .groupBy("pfx")
-            .agg(
-                F.min("doc_id").alias("first_doc"),
-                F.count("*").alias("n_suffixes"),
-            )
-            .select("pfx", "first_doc", "n_suffixes")
+    return (
+        bucketed_join(spark, tb, ti, "pfx", "left_anti")
+        .groupBy("pfx")
+        .agg(
+            F.min("doc_id").alias("first_doc"),
+            F.count("*").alias("n_suffixes"),
         )
-
-    with _broadcast_off(spark):
-        assert not plan_has_exchange(probe()), (
-            "bucketed suffix-index delta gained a shuffle"
-        )
-    return probe()
+        .select("pfx", "first_doc", "n_suffixes")
+    )
 
 
 DEDUP_SUFFIX_BUCKETED_SQL = f"""

@@ -25,7 +25,6 @@ from archive_to_parquet_spark.operators.profiling import (
     psi_report_from_counts,
 )
 from archive_to_parquet_spark.queries.relational import (
-    _broadcast_off,
     _read_events,
     _stage_dir,
     _t,
@@ -431,26 +430,24 @@ def maintenance_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         ],
     )
 
-    def probe() -> DataFrame:
-        state = spark.read.parquet(mv_path)
-        delta = rev_by_nation(orders.filter(F.col("o_orderkey") % 4 == 3))
-        return (
-            state.unionByName(delta)
-            .groupBy("n_name")
-            .agg(
-                F.sum("n_orders").alias("n_orders"),
-                F.sum("revenue_c").alias("revenue_c"),
-            )
+    delta = rev_by_nation(orders.filter(F.col("o_orderkey") % 4 == 3))
+    out = (
+        spark.read.parquet(mv_path)
+        .unionByName(delta)
+        .groupBy("n_name")
+        .agg(
+            F.sum("n_orders").alias("n_orders"),
+            F.sum("revenue_c").alias("revenue_c"),
         )
-
-    plan = probe()._jdf.queryExecution().executedPlan().toString()
+    )
+    plan = out._jdf.queryExecution().executedPlan().toString()
     n_scans = plan.count("Scan parquet")
     assert n_scans == 4, (
         f"incremental-MV probe must scan state + delta + 2 dims "
         f"(4 parquet scans), plan has {n_scans} — the history fact "
         f"table is being rescanned"
     )
-    return probe()
+    return out
 
 
 MAINTENANCE_INCREMENTAL_AGG_SQL = """
@@ -728,16 +725,17 @@ def maintenance_stream_index_compaction(
     paid at fold time (staged once per input fingerprint here, like
     every bucketed layout); the folded-batch decision is a partition-
     directory listing, never a data scan (the maintenance-family
-    rule). The probe anti-joins the BUCKETED base exchange-free
-    (asserted in-query with auto-broadcast disabled, same contract as
-    the bucketed twin) and pays exchanges only for the young tail —
+    rule). The probe anti-joins the BUCKETED base as a bucket-aligned
+    sort-merge join (``bucketed_join``, same contract as the bucketed
+    twin; the entry's plan pin holds its zero shuffles) and pays
+    exchanges only for the young tail —
     probe cost tracks tail size, not index size, which is what makes
     the continuous-ingest index sustainable at 100 TB."""
     from archive_to_parquet_spark.plans.bucketing import (
         _input_fingerprint,
+        bucketed_join,
         ensure_bucketed_table,
         ensure_parquet_snapshot,
-        plan_has_exchange,
     )
     from archive_to_parquet_spark.streaming.suffix_index import (
         compact_suffix_index,
@@ -786,32 +784,19 @@ def maintenance_stream_index_compaction(
         fp,
     )
 
-    def probe() -> DataFrame:
-        tail = (
-            spark.read.parquet(idx_dir)
-            .filter(F.col("batch_id") > 2)
-            .select("pfx")
+    tail = (
+        spark.read.parquet(idx_dir).filter(F.col("batch_id") > 2).select("pfx")
+    )
+    return (
+        bucketed_join(spark, tprobe, tbase, "pfx", "left_anti")
+        .join(tail, "pfx", "left_anti")
+        .groupBy("pfx")
+        .agg(
+            F.min("doc_id").alias("first_doc"),
+            F.count("*").alias("n_suffixes"),
         )
-        return (
-            spark.table(tprobe)
-            .join(spark.table(tbase), "pfx", "left_anti")
-            .join(tail, "pfx", "left_anti")
-            .groupBy("pfx")
-            .agg(
-                F.min("doc_id").alias("first_doc"),
-                F.count("*").alias("n_suffixes"),
-            )
-            .select("pfx", "first_doc", "n_suffixes")
-        )
-
-    with _broadcast_off(spark):
-        base_leg = spark.table(tprobe).join(
-            spark.table(tbase), "pfx", "left_anti"
-        )
-        assert not plan_has_exchange(base_leg), (
-            "compacted suffix-index base probe gained a shuffle"
-        )
-    return probe()
+        .select("pfx", "first_doc", "n_suffixes")
+    )
 
 
 MAINTENANCE_STREAM_INDEX_COMPACTION_SQL = f"""

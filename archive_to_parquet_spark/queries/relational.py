@@ -8,8 +8,7 @@ the mergeable sketches, and the event-table statistics.
 Also home of what every family shares: the table reader ``_t``, the
 one events reader (``_read_events``, the only place that sets
 ``spark.sql.legacy.parquet.nanosAsLong``) with its ``_events``
-epoch-second view, the deterministic ``_stage_dir`` and the
-``_broadcast_off`` context manager.
+epoch-second view and the deterministic ``_stage_dir``.
 
 Money aggregates use the exact integer fragments of
 ``functions/exactnum.py`` so Spark and DuckDB round identically.
@@ -20,8 +19,6 @@ from __future__ import annotations
 import hashlib
 import os
 import tempfile
-from collections.abc import Iterator
-from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -38,19 +35,6 @@ from archive_to_parquet_spark.functions.exactnum import (
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
-
-@contextmanager
-def _broadcast_off(spark: SparkSession) -> Iterator[None]:
-    """Auto-broadcast off for the block, the prior threshold restored
-    after: a plan asserted to keep its bucketed, exchange-free join must
-    not turn it into a broadcast at small scale."""
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
 
 
 def _read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3198,12 +3182,13 @@ REL_SKEW_ISOLATED_SQL = REL_SALTED_SQL
 
 def rel_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The bucketed-layout join (``plans.bucketing``) driver-checked:
-    orders and lineitem are persisted as same-bucketed managed tables
-    on the orderkey, then joined and aggregated — the join plans with
-    ZERO shuffle exchanges (the layout's whole point, asserted in
-    tests/test_bucketing.py; here the oracle certifies the RESULTS are
-    exactly the plain join's). Pay the exchange once at layout time,
-    never per query — the recurring big-big join economics at 100 TB.
+    orders and lineitem are persisted as same-bucketed external tables
+    on the orderkey, then joined and aggregated — ``bucketed_join``
+    plans a bucket-aligned sort-merge join with ZERO shuffle exchanges
+    (the layout's whole point; the entry's plan pin holds the one
+    aggregate exchange, and the oracle certifies the RESULTS are exactly
+    the plain join's). Pay the exchange once at layout time, never per
+    query — the recurring big-big join economics at 100 TB.
     """
     from archive_to_parquet_spark.plans.bucketing import (
         bucketed_join,

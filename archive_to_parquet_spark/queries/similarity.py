@@ -19,7 +19,7 @@ from archive_to_parquet_spark.operators.similarity import (
     ivf_top_k_fixed_centroids,
     lsh_top_k,
 )
-from archive_to_parquet_spark.queries.relational import _broadcast_off, _stage_dir, _t
+from archive_to_parquet_spark.queries.relational import _stage_dir, _t
 
 
 def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1357,11 +1357,11 @@ def ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket bit-for-bit), and each day's query batch is staged
     probe-EXPANDED (home bucket + 37-way multi-probe) on the same
     bucket spec. Candidate generation — the join that touches the
-    100-TB side — then plans with ZERO shuffle Exchanges, asserted
-    in-query with auto-broadcast disabled; the only Exchange in the
+    100-TB side — then plans as a bucket-aligned sort-merge join with
+    ZERO shuffle Exchanges (``bucketed_join``); the only Exchange in the
     whole top-k plan is the final re-rank, keyed on query_id and
-    priced on CANDIDATES only (also asserted: exactly one). The corpus
-    is never re-shuffled, per batch or ever.
+    priced on CANDIDATES only (the entry's plan pin holds exactly one).
+    The corpus is never re-shuffled, per batch or ever.
 
     Output and oracle match `ann_lsh_topk` (exact equality on the
     approximate algorithm itself): per query the top-10 by cosine
@@ -1385,9 +1385,8 @@ def ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     from archive_to_parquet_spark.plans.bucketing import (
         _input_fingerprint,
-        count_shuffle_exchanges,
+        bucketed_join,
         ensure_bucketed_table,
-        plan_has_exchange,
     )
 
     planes = fixed_hyperplanes(_ALSHBK_PLANES, _ALSHBK_DIM)
@@ -1430,42 +1429,21 @@ def ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         fp,
     )
 
-    def candidates() -> DataFrame:
-        return (
-            spark.table(tb)
-            .join(spark.table(ti), "bucket")
-            .select(
-                "query_id",
-                "vec_id",
-                F.round(cosine_from_norms("cv", "qv", "cn", "qn"), 6).alias(
-                    "cosine"
-                ),
-            )
-        )
-
-    def topk() -> DataFrame:
-        w = Window.partitionBy("query_id").orderBy(
-            F.col("cosine").desc(), F.col("vec_id").asc()
-        )
-        return (
-            candidates()
-            .withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= _ALSHBK_K)
-            .select("query_id", "vec_id", "cosine", "rank")
-        )
-
-    with _broadcast_off(spark):
-        # the join that touches the corpus side moves no rows at all;
-        # the whole top-k pays exactly ONE exchange, on candidates only
-        assert not plan_has_exchange(candidates()), (
-            "bucketed ANN candidate generation gained a shuffle"
-        )
-        n_ex = count_shuffle_exchanges(topk())
-        assert n_ex == 1, (
-            f"bucketed ANN top-k should pay exactly 1 exchange "
-            f"(candidates-only re-rank), plan has {n_ex}"
-        )
-    return topk()
+    # the join that touches the corpus side moves no rows at all; the
+    # whole top-k pays exactly ONE exchange, on candidates only
+    candidates = bucketed_join(spark, tb, ti, "bucket").select(
+        "query_id",
+        "vec_id",
+        F.round(cosine_from_norms("cv", "qv", "cn", "qn"), 6).alias("cosine"),
+    )
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("vec_id").asc()
+    )
+    return (
+        candidates.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= _ALSHBK_K)
+        .select("query_id", "vec_id", "cosine", "rank")
+    )
 
 
 def _alshbk_sql_planes():

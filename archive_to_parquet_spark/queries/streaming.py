@@ -23,7 +23,6 @@ from archive_to_parquet_spark.operators.dedup import (
 from archive_to_parquet_spark.operators.similarity import fixed_hyperplanes
 from archive_to_parquet_spark.queries.maintenance import EVAL_PSI_SQL
 from archive_to_parquet_spark.queries.relational import (
-    _broadcast_off,
     _events,
     _read_events,
     _stage_dir,
@@ -636,12 +635,12 @@ def stream_ann_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         finally:
             q.stop()
 
-        with _broadcast_off(spark):
-            assert not plan_has_exchange(index_profile(spark, table)), (
-                "bucketed index profile gained a shuffle"
-            )
+        profile = index_profile(spark, table)
+        assert not plan_has_exchange(profile), (
+            "bucketed index profile gained a shuffle"
+        )
         # the staging dir (bucket files included) is removed below
-        return index_profile(spark, table).localCheckpoint(eager=True)
+        return profile.localCheckpoint(eager=True)
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {table}")
         shutil.rmtree(root, ignore_errors=True)

@@ -90,6 +90,18 @@ def spark():
     spark.stop()
 
 
+@pytest.fixture
+def broadcast_off(spark):
+    """Auto-broadcast off for one test, the session's threshold restored
+    after: a test that asks whether a join shuffles must not let the
+    tiny test scale answer it with a broadcast."""
+    key = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "-1")
+    yield
+    spark.conf.set(key, old)
+
+
 # -- synthetic archive builders (translation of the reference's in-memory
 #    test helpers, /root/reference/src/anyreader/test.rs:15-62) -------------
 

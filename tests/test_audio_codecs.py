@@ -374,6 +374,36 @@ def test_aiff_header_tier_extended_float_rates():
     assert parse_aiff_header(ima)[0] == 8000
 
 
+def test_profile_media_reads_au_and_aiff_like_extract(spark):
+    """``profile_media``'s bulk audio metadata and targeted
+    ``extract_audio_features`` agree on AU and AIFF: both read the same
+    header chain, so an audio-classified ``.snd``/``FORM…AIFF`` blob
+    never profiles with a null rate while it decodes fine."""
+    from pyspark.sql import Row
+
+    from archive_to_parquet_spark.operators.multimodal import (
+        MEDIA_SCHEMA,
+        extract_audio_features,
+        profile_media,
+    )
+
+    sig = (np.sin(np.arange(4000) / 5.0) * 9000).astype(np.int16)
+    blobs = {
+        1: _make_au(3, 8000, sig.astype(">i2").tobytes()),
+        2: _make_aiff(22050, sig),
+    }
+    media = spark.createDataFrame(
+        [Row(media_id=k, kind="audio", mime=None, data=v, meta=None)
+         for k, v in blobs.items()],
+        MEDIA_SCHEMA,
+    )
+    prof = {r.media_id: r for r in profile_media(media).collect()}
+    feat = {r.media_id: r for r in extract_audio_features(media).collect()}
+    for k, rate in ((1, 8000), (2, 22050)):
+        assert (prof[k].sample_rate, prof[k].n_samples) == (rate, 4000)
+        assert (feat[k].sample_rate, feat[k].n_samples) == (rate, 4000)
+
+
 def test_aiff_f80_overflow_edge_degrades_to_none():
     # e - 16446 == 960 passes an exponent-only bound, but a mantissa
     # within 2^10 of 2^64 rounds to 2^64 as a double, so the product

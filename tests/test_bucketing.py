@@ -58,27 +58,44 @@ def bucketed_tables(spark):
     spark.sql("DROP TABLE IF EXISTS ord_b")
 
 
-def test_bucketed_join_is_exchange_free(spark, bucketed_tables):
+def test_bucketed_join_is_exchange_free(
+    spark, bucketed_tables, broadcast_off
+):
     lt, rt = bucketed_tables
-    # force the big-big (sort-merge) path: broadcast would sidestep the
-    # shuffle question entirely at this tiny scale
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        joined = bucketed_join(spark, lt, rt, "okey")
-        # co-located buckets: the join plans with zero shuffle exchanges
-        assert not plan_has_exchange(
-            joined.select("okey", "l_quantity", "o_totalprice")
+    # broadcast is off so the plain join below cannot sidestep the
+    # shuffle question at this tiny scale
+    joined = bucketed_join(spark, lt, rt, "okey")
+    # co-located buckets: the join plans with zero shuffle exchanges
+    assert not plan_has_exchange(
+        joined.select("okey", "l_quantity", "o_totalprice")
+    )
+    # whereas the plain (unbucketed) join must exchange
+    li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
+    orders = spark.read.parquet(f"{SF_DIR}/orders.parquet")
+    plain = li.join(orders, li.l_orderkey == orders.o_orderkey).select(
+        "l_quantity", "o_totalprice"
+    )
+    assert plan_has_exchange(plain)
+
+
+def test_bucketed_join_is_bucket_aligned_smj_at_default_threshold(
+    spark, bucketed_tables
+):
+    """At the session's own broadcast threshold, where the small side of
+    a plain join would broadcast, ``bucketed_join`` still plans the
+    bucket-aligned sort-merge join over bucketed scans — inner and
+    anti alike — so the plan an entry pins is the layout it certifies."""
+    lt, rt = bucketed_tables
+    for how in ("inner", "left_anti"):
+        plan = (
+            bucketed_join(spark, lt, rt, "okey", how)
+            ._jdf.queryExecution()
+            .executedPlan()
+            .toString()
         )
-        # whereas the plain (unbucketed) join must exchange
-        li = spark.read.parquet(f"{SF_DIR}/lineitem.parquet")
-        orders = spark.read.parquet(f"{SF_DIR}/orders.parquet")
-        plain = li.join(orders, li.l_orderkey == orders.o_orderkey).select(
-            "l_quantity", "o_totalprice"
-        )
-        assert plan_has_exchange(plain)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+        assert "SortMergeJoin" in plan, (how, plan)
+        assert "Exchange" not in plan, (how, plan)  # shuffle or broadcast
+        assert plan.count("Bucketed: true") == 2, (how, plan)
 
 
 def test_bucketed_join_results_match_plain(spark, bucketed_tables):
@@ -200,7 +217,9 @@ def test_upsert_partitioned_rewrites_only_touched_partitions(spark, tmp_path):
 # -- idempotent staging (ensure_bucketed_table, r8) ---------------------------
 
 
-def test_ensure_bucketed_table_builds_once_and_reregisters(spark, tmp_path):
+def test_ensure_bucketed_table_builds_once_and_reregisters(
+    spark, tmp_path, broadcast_off
+):
     """The pay-the-shuffle-ONCE contract: the first call writes, later
     calls with the same fingerprint never rebuild — even after the
     table vanishes from the catalog (a fresh session) — and the
@@ -245,14 +264,9 @@ def test_ensure_bucketed_table_builds_once_and_reregisters(spark, tmp_path):
         ),
         fp,
     )
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        j = spark.table("ensb_a").join(spark.table("ensb_b"), "k")
-        assert not plan_has_exchange(j)
-        assert j.count() == 100
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    j = spark.table("ensb_a").join(spark.table("ensb_b"), "k")
+    assert not plan_has_exchange(j)
+    assert j.count() == 100
 
     # changed fingerprint (input or recipe) rebuilds
     ensure_bucketed_table(
@@ -288,8 +302,9 @@ def test_ann_lsh_bucketed_matches_unbucketed_lsh(spark):
     """The bucketed ANN serving path returns EXACTLY what the plain
     lsh_top_k composition returns for the same corpus/query split and
     parameters — the layout changes the physical plan (zero-Exchange
-    candidates, asserted in-query), never the answer. Also exercises
-    staging idempotence: the second run reuses the staged tables."""
+    candidates, held by the entry's plan pin), never the answer. Also
+    exercises staging idempotence: the second run reuses the staged
+    tables."""
     from archive_to_parquet_spark.operators.similarity import (
         fixed_hyperplanes,
         lsh_top_k,

@@ -29,60 +29,52 @@ from archive_to_parquet_spark.plans.checkpoint import (
 from tests.test_plan_shapes import SF_DIR
 
 
-def test_checkpoint_partitioned_joins_without_exchange(spark):
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        edges = spark.range(1000).select(
-            F.col("id").alias("src"), (F.col("id") % 7).alias("dst")
-        )
-        labels = spark.range(7).select(
-            F.col("id"), F.col("id").alias("component")
-        )
-        ck_e = checkpoint_partitioned(edges, "dst")
-        ck_l = checkpoint_partitioned(labels, "id")
-        joined = ck_e.join(ck_l, ck_e.dst == ck_l.id)
-        assert not plan_has_exchange(joined), (
-            "co-partitioned checkpoints must join exchange-free"
-        )
-        # self-join over ONE partitioned checkpoint: also exchange-free
-        a, b = ck_e.alias("a"), ck_e.alias("b")
-        self_joined = a.join(
-            b,
-            (F.col("a.dst") == F.col("b.dst"))
-            & (F.col("a.src") < F.col("b.src")),
-        )
-        assert not plan_has_exchange(self_joined)
-        # and the values are intact
-        assert joined.count() == 1000
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+def test_checkpoint_partitioned_joins_without_exchange(spark, broadcast_off):
+    edges = spark.range(1000).select(
+        F.col("id").alias("src"), (F.col("id") % 7).alias("dst")
+    )
+    labels = spark.range(7).select(
+        F.col("id"), F.col("id").alias("component")
+    )
+    ck_e = checkpoint_partitioned(edges, "dst")
+    ck_l = checkpoint_partitioned(labels, "id")
+    joined = ck_e.join(ck_l, ck_e.dst == ck_l.id)
+    assert not plan_has_exchange(joined), (
+        "co-partitioned checkpoints must join exchange-free"
+    )
+    # self-join over ONE partitioned checkpoint: also exchange-free
+    a, b = ck_e.alias("a"), ck_e.alias("b")
+    self_joined = a.join(
+        b,
+        (F.col("a.dst") == F.col("b.dst"))
+        & (F.col("a.src") < F.col("b.src")),
+    )
+    assert not plan_has_exchange(self_joined)
+    # and the values are intact
+    assert joined.count() == 1000
 
 
-def test_plain_localcheckpoint_loses_partitioning_under_aqe(spark):
+def test_plain_localcheckpoint_loses_partitioning_under_aqe(
+    spark, broadcast_off
+):
     """The negative control: without the AQE-off trick, the same join
     re-shuffles both sides — this is the Spark behavior the helpers
     exist to work around; if an upgrade makes plain localCheckpoint
     preserve partitioning, this fails and the helpers can be retired."""
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        n = int(spark.conf.get("spark.sql.shuffle.partitions"))
-        edges = (
-            spark.range(1000)
-            .select(F.col("id").alias("src"), (F.col("id") % 7).alias("dst"))
-            .repartition(n, F.col("dst"))
-            .localCheckpoint()
-        )
-        labels = (
-            spark.range(7)
-            .select(F.col("id"), F.col("id").alias("component"))
-            .repartition(n, F.col("id"))
-            .localCheckpoint()
-        )
-        assert plan_has_exchange(edges.join(labels, edges.dst == labels.id))
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    edges = (
+        spark.range(1000)
+        .select(F.col("id").alias("src"), (F.col("id") % 7).alias("dst"))
+        .repartition(n, F.col("dst"))
+        .localCheckpoint()
+    )
+    labels = (
+        spark.range(7)
+        .select(F.col("id"), F.col("id").alias("component"))
+        .repartition(n, F.col("id"))
+        .localCheckpoint()
+    )
+    assert plan_has_exchange(edges.join(labels, edges.dst == labels.id))
 
 
 def test_checkpoint_keeping_partitioning_restores_aqe_conf(spark):
@@ -97,7 +89,9 @@ def test_checkpoint_keeping_partitioning_restores_aqe_conf(spark):
 # -- checkpoint partitioning capture (the dbscan/CC rework's foundation) ---
 
 
-def test_checkpoint_partitioning_survives_for_bare_distinct(spark):
+def test_checkpoint_partitioning_survives_for_bare_distinct(
+    spark, broadcast_off
+):
     """The round-9 shuffle shave rests on two measured facts: a
     partitioning-keeping checkpoint of a BARE distinct is reusable by
     id-keyed consumers with no exchange, while aliasing the key inside
@@ -109,31 +103,26 @@ def test_checkpoint_partitioning_survives_for_bare_distinct(spark):
         checkpoint_partitioned,
     )
 
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        base = spark.range(100).select((F.col("id") % 11).alias("id"))
-        other = checkpoint_partitioned(
-            spark.range(50).select(F.col("id").alias("src")), "src"
-        )
-        good = checkpoint_keeping_partitioning(base.distinct())
-        plan_good = (
-            good.join(other, good.id == other.src, "left")
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert plan_good.count("Exchange") == 0
-        # the anti-pattern: key aliased inside the checkpointed plan
-        bad = checkpoint_keeping_partitioning(
-            base.distinct().withColumn("component", F.col("id"))
-        )
-        plan_bad = (
-            bad.join(other, bad.id == other.src, "left")
-            ._jdf.queryExecution()
-            .executedPlan()
-            .toString()
-        )
-        assert plan_bad.count("Exchange") == 1
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    base = spark.range(100).select((F.col("id") % 11).alias("id"))
+    other = checkpoint_partitioned(
+        spark.range(50).select(F.col("id").alias("src")), "src"
+    )
+    good = checkpoint_keeping_partitioning(base.distinct())
+    plan_good = (
+        good.join(other, good.id == other.src, "left")
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert plan_good.count("Exchange") == 0
+    # the anti-pattern: key aliased inside the checkpointed plan
+    bad = checkpoint_keeping_partitioning(
+        base.distinct().withColumn("component", F.col("id"))
+    )
+    plan_bad = (
+        bad.join(other, bad.id == other.src, "left")
+        ._jdf.queryExecution()
+        .executedPlan()
+        .toString()
+    )
+    assert plan_bad.count("Exchange") == 1

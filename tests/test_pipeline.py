@@ -10,6 +10,7 @@ import pytest
 
 from archive_to_parquet_spark.options import ConvertOptions, IncludeType
 from archive_to_parquet_spark.plans.convert import convert, entries_pipeline
+from archive_to_parquet_spark.schema import REFERENCE_COLUMNS
 from tests.conftest import gzip_data, tar_archive, zip_archive
 
 
@@ -101,7 +102,7 @@ def test_zero_rows_is_error(spark, fixture_archives, tmp_path):
 
 def test_reference_column_mode(spark, fixture_archives):
     df = entries_pipeline(
-        spark, fixture_archives, ConvertOptions(emit_format_column=False)
+        spark, fixture_archives, ConvertOptions(columns=REFERENCE_COLUMNS)
     )
     assert df.columns == ["source", "path", "size", "hash", "content"]
 

@@ -1,14 +1,15 @@
-"""Physical-plan shape discipline for individual catalog queries:
-single-scan ops must plan with zero shuffle exchanges, joins must
-broadcast the intended side, windows must be partitioned. These pin the
-scale properties SCALING.md claims — a regression that adds a shuffle
-or de-broadcasts a join fails here long before it shows up at 100 TB.
+"""Physical-plan shape discipline for individual catalog queries
+beyond the shuffle count: joins must broadcast the intended side,
+windows must be partitioned, filters must reach the scan. These pin
+the scale properties SCALING.md claims — a regression that
+de-broadcasts a join fails here long before it shows up at 100 TB.
 
-The WHOLE catalog is additionally pinned: PLAN_PINS.json (written by
-tools/scale_audit.py) records every batch entry's {shuffles, bnlj, py,
-cartesian, gw}, and the oracle gate (``tests/test_oracle_gate.py``)
-checks each entry's record against it on the one build it collects,
-so an entry silently growing a shuffle fails that entry's test.
+Shuffle counts are pinned for the WHOLE catalog: PLAN_PINS.json
+(written by tools/scale_audit.py) records every batch entry's
+{shuffles, bnlj, py, cartesian, gw}, and the oracle gate
+(``tests/test_oracle_gate.py``) checks each entry's record against it
+on the one build it collects, so an entry silently growing a shuffle
+fails that entry's test — a zero-shuffle entry needs no test here.
 """
 
 import json
@@ -20,16 +21,6 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 def _plan(df) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
-
-
-def test_scan_only_queries_have_no_exchange(spark):
-    from archive_to_parquet_spark import queries as q
-    from archive_to_parquet_spark.plans.bucketing import plan_has_exchange
-
-    for name in ("text_gopher_quality", "text_pii_redact", "sample_split",
-                 "text_quality", "text_lang_id", "text_fingerprint"):
-        df = q.queries()[name](spark, SF_DIR)
-        assert not plan_has_exchange(df), f"{name} gained a shuffle"
 
 
 def test_decontaminate_broadcasts_benchmark_grams(spark):
@@ -98,7 +89,6 @@ def test_web_domain_stats_single_agg_shuffle(spark):
 
 def test_tpch_q06_predicates_pushed_to_scan(spark):
     from archive_to_parquet_spark import queries as q
-    from archive_to_parquet_spark.plans.bucketing import plan_has_exchange
 
     df = q.queries()["tpch_q06_forecast_revenue"](spark, SF_DIR)
     plan = _plan(df)
@@ -112,7 +102,6 @@ def test_tpch_q06_predicates_pushed_to_scan(spark):
         "ReadSchema: struct<l_quantity:double,l_extendedprice:double,"
         "l_discount:double,l_shipdate:timestamp_ntz>" in plan
     )
-    del plan_has_exchange  # imported for symmetry with the other tests
 
 
 def test_tpch_q03_broadcasts_dims_and_takeordered(spark):
@@ -207,18 +196,6 @@ def test_tpch_q02_min_joinback_keeps_ties(spark):
     assert all(len(v) == 1 for v in by_part.values())
 
 
-def test_ext_scan_only_queries_have_no_exchange(spark):
-    """The continuation-4 zero-shuffle family: BPE encode, chunking, and
-    quarantine parse are per-row expression pipelines — a shuffle here
-    means the scan-bandwidth-bound claim in SCALING.md broke."""
-    from archive_to_parquet_spark import queries as q
-    from archive_to_parquet_spark.plans.bucketing import plan_has_exchange
-
-    for name in ("tokenize_bpe_encode", "chunk_documents", "parse_quarantine"):
-        df = q.queries()[name](spark, SF_DIR)
-        assert not plan_has_exchange(df), f"{name} gained a shuffle"
-
-
 def test_url_dedup_single_shuffle_with_partial_agg(spark):
     from archive_to_parquet_spark import queries as q
 
@@ -256,14 +233,6 @@ def test_semantic_decontaminate_broadcasts_benchmark(spark):
 
 
 # -- round-2-late entries (r2 verdict item 8) ---------------------------------
-
-
-def test_text_readability_is_scan_only(spark):
-    from archive_to_parquet_spark import queries as q
-    from archive_to_parquet_spark.plans.bucketing import plan_has_exchange
-
-    df = q.queries()["text_readability"](spark, SF_DIR)
-    assert not plan_has_exchange(df), "text_readability gained a shuffle"
 
 
 def test_benford_broadcasts_expected_distribution(spark):
@@ -322,14 +291,6 @@ def test_index_probe_reads_postings_only(spark):
 
 
 # -- round-3 entries ----------------------------------------------------------
-
-
-def test_jl_projection_is_scan_only_literal_matrix(spark):
-    from archive_to_parquet_spark import queries as q
-    from archive_to_parquet_spark.plans.bucketing import plan_has_exchange
-
-    df = q.queries()["embedding_jl_projection"](spark, SF_DIR)
-    assert not plan_has_exchange(df), "JL projection gained a shuffle"
 
 
 def test_bloom_probe_broadcasts_filter_bits(spark):
