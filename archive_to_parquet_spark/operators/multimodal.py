@@ -84,7 +84,9 @@ def parse_image_header(data: bytes) -> tuple[int, int, int] | None:
         color_type = d[25]
         channels = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}.get(color_type, 3)
         return w, h, channels
-    # JPEG: walk marker segments to the first SOFn
+    # JPEG: its own tolerant walk to the first SOFn, which resyncs over
+    # non-0xFF bytes so a damaged JPEG still gets dims (and the hash
+    # feature) instead of `_real_decode_image`'s NotImplementedError
     if d[:3] == b"\xff\xd8\xff":
         i = 2
         while i + 9 < len(d):
@@ -649,8 +651,8 @@ def _hash_feature(data: bytes, dim: int = 16) -> list[float]:
 
 def _real_decode_image(data: bytes) -> tuple[int, int, int, list[float]]:
     """Codec-free formats (PPM/PGM/uncompressed BMP, non-interlaced
-    8/16-bit PNG via stdlib zlib, baseline AND progressive Huffman
-    JPEG via the pure-stdlib entropy decoders, GIF via pure-stdlib
+    8/16-bit PNG via stdlib zlib, sequential AND progressive Huffman
+    JPEG via the pure-stdlib entropy decoder, GIF via pure-stdlib
     LZW, and uncompressed 8-bit TIFF) yield REAL pixel features: a
     4×4 grid of box-mean luminances scaled to [-1, 1]. Header-only
     formats (WEBP, compressed/tiled TIFF, plus PNGs outside the
@@ -668,15 +670,16 @@ def _real_decode_image(data: bytes) -> tuple[int, int, int, list[float]]:
     kind = _jpeg_unsupported_kind(data or b"")
     if kind is not None:
         raise NotImplementedError(
-            f"{kind} JPEG is outside the pure-stdlib baseline decoder's "
+            f"{kind} JPEG is outside the pure-stdlib Huffman decoder's "
             f"scope and needs a codec library (PIL) for pixel decode"
         )
     parsed = parse_image_header(data)
     if parsed is None:
         magic = (data or b"")[:4].hex()
         raise NotImplementedError(
-            f"image header parse supports PNG/JPEG/GIF/BMP/PPM; bytes with "
-            f"magic {magic!r} need a codec library (PIL) for decode"
+            f"image header parse supports PNG/JPEG/GIF/BMP/TIFF/WEBP/PPM; "
+            f"bytes with magic {magic!r} need a codec library (PIL) for "
+            f"decode"
         )
     w, h, channels = parsed
     return w, h, channels, _hash_feature(data)
@@ -1090,10 +1093,9 @@ _JPEG_ZIGZAG = (
     58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63,
 )
 
-# SOF markers by coding process: baseline/extended-sequential Huffman
-# and progressive Huffman (SOF2, multi-scan — see
-# _jpeg_pixels_progressive) are decodable here; everything else is the
-# loud codec boundary.
+# SOF markers by coding process: sequential (SOF0/SOF1) and progressive
+# (SOF2) Huffman are decodable here; everything else is the loud codec
+# boundary.
 _JPEG_SOF_BASELINE = {0xC0, 0xC1}
 _JPEG_SOF_PROGRESSIVE = 0xC2
 _JPEG_SOF_UNSUPPORTED = {
@@ -1110,28 +1112,55 @@ _JPEG_SOF_UNSUPPORTED = {
 }
 
 
-def _jpeg_unsupported_kind(d: bytes) -> str | None:
-    """Name of the JPEG coding process if `d` is a JPEG whose process is
-    outside the baseline-Huffman decoder's scope, else None. Pure marker
-    walk — no entropy decode."""
+def _jpeg_segments(d: bytes):
+    """The JPEG marker walk (T.81 B.1.1): yields ``(marker, body,
+    next_pos)`` for each marker segment in stream order, and
+    ``(0xD9, b"", next_pos)`` for EOI, where it stops. It skips the
+    spec-legal 0xFF fill bytes before a marker (B.1.1.2), steps over
+    the standalone SOI and RSTn markers, and after an SOS segment skips
+    the entropy-coded data (stuffed 0xFF00 bytes and RSTn included) to
+    the next marker. It stops quietly at a byte that is not a marker
+    and at a segment length below 2 or past the end of the data."""
     if d[:2] != b"\xff\xd8":
-        return None
+        return
+    n = len(d)
     pos = 2
-    while pos + 4 <= len(d):
+    while pos + 2 <= n:
         if d[pos] != 0xFF:
-            return None
-        # Spec-legal 0xFF fill bytes may pad before any marker (B.1.1.2).
-        while pos + 2 < len(d) and d[pos + 1] == 0xFF:
+            return
+        while pos + 2 < n and d[pos + 1] == 0xFF:
             pos += 1
         marker = d[pos + 1]
+        if marker == 0xD8 or 0xD0 <= marker <= 0xD7:
+            pos += 2
+            continue
+        if marker == 0xD9:
+            yield marker, b"", pos + 2
+            return
+        nxt = pos + 2 + int.from_bytes(d[pos + 2 : pos + 4], "big")
+        if nxt < pos + 4 or nxt > n:
+            return
+        yield marker, d[pos + 4 : nxt], nxt
+        pos = nxt
+        if marker == 0xDA:
+            pos = d.find(b"\xff", pos)
+            while 0 <= pos < n - 1 and (
+                d[pos + 1] == 0x00 or 0xD0 <= d[pos + 1] <= 0xD7
+            ):
+                pos = d.find(b"\xff", pos + 2)
+            if pos < 0:
+                return
+
+
+def _jpeg_unsupported_kind(d: bytes) -> str | None:
+    """Name of the JPEG coding process if `d` is a JPEG whose process is
+    outside the Huffman decoder's scope (arithmetic / lossless /
+    differential), else None. Marker walk only — no entropy decode."""
+    for marker, _body, _nxt in _jpeg_segments(d):
         if marker in _JPEG_SOF_UNSUPPORTED:
             return _JPEG_SOF_UNSUPPORTED[marker]
         if marker in _JPEG_SOF_BASELINE or marker == 0xDA:
             return None
-        if marker == 0xD8 or 0xD0 <= marker <= 0xD7:
-            pos += 2
-            continue
-        pos += 2 + int.from_bytes(d[pos + 2 : pos + 4], "big")
     return None
 
 
@@ -1216,45 +1245,181 @@ def _jpeg_extend(v: int, n: int) -> int:
     return v if v >= (1 << (n - 1)) else v - (1 << n) + 1
 
 
-def _jpeg_decode_block(br: _JpegBits, dc_tbl: dict, ac_tbl: dict, pred: int):
-    """One 8×8 block of zigzag coefficients (spec F.2.2): returns
-    (coef_list_64_in_linear_order, new_dc_pred). Coefficients stay
-    unscaled; the caller dequantizes."""
-    t = br.decode_huffman(dc_tbl)
-    dc = pred + _jpeg_extend(br.receive(t), t)
-    coef = [0] * 64
-    coef[0] = dc
-    k = 1
-    while k < 64:
-        rs = br.decode_huffman(ac_tbl)
-        r, s = rs >> 4, rs & 0x0F
-        if s == 0:
-            if r == 15:  # ZRL: 16 zeros
-                k += 16
+
+def _jpeg_decode_scan(
+    d: bytes,
+    pos: int,
+    comps: list,
+    layout: list,
+    grid: tuple[int, int],
+    spectral: tuple[int, int, int, int],
+    restart_interval: int,
+    progressive: bool,
+):
+    """Entropy-decode the scan whose data starts at ``d[pos]`` into the
+    coefficient stores (T.81 F.2.2 and G.2). ``comps`` holds, per scan
+    component, ``(cid, store, dc_table, ac_table)`` — its component id,
+    which keys the DC predictor, and its (rows, cols, 64) store of
+    natural-order coefficients — or None when the component or a table
+    it needs is missing, which fails the scan where its first block is
+    reached. A unit is an MCU
+    of an interleaved scan or one block of a single-component scan;
+    ``layout`` lists its blocks as ``(j, v, y, h, x)`` — block
+    ``(uy * v + y, ux * h + x)`` of scan component j in unit (uy, ux) —
+    and ``grid`` is (rows, cols) of units. ``spectral`` is the scan's
+    (Ss, Se, Ah, Al). A sequential scan is the special case DC-first
+    then AC 1..63 at Al=0; its blocks are decoded whole and stored with
+    one row write.
+
+    Returns None on a malformed or truncated scan, else the list of
+    ``(j, by, bx)`` blocks the data did not reach: empty for a whole
+    scan, non-empty only under the sequential rule that end-of-data in
+    the last unit keeps the blocks decoded before it."""
+    ss, se, ah, al = (1, 63, 0, 0) if not progressive else spectral
+    br = _JpegBits(d, pos)
+    preds = {c[0]: 0 for c in comps if c is not None}
+    eobrun = 0
+    p1 = 1 << al
+    m1 = -p1
+
+    def dc_first(blk, cid: int, tbl: dict) -> None:
+        t = br.decode_huffman(tbl)
+        preds[cid] += _jpeg_extend(br.receive(t), t)
+        blk[0] = preds[cid] << al
+
+    def ac_first(blk, tbl: dict) -> None:
+        nonlocal eobrun
+        if eobrun:
+            eobrun -= 1
+            return
+        k = ss
+        while k <= se:
+            rs = br.decode_huffman(tbl)
+            r, s = rs >> 4, rs & 0x0F
+            if s == 0:
+                if r != 15:
+                    if progressive:  # EOBRUN (G.1.2.2); sequential: EOB
+                        eobrun = (1 << r) - 1
+                        if r:
+                            eobrun += br.receive(r)
+                    return
+                k += 16  # ZRL
                 continue
-            break  # EOB
-        k += r
-        if k > 63:
-            break  # malformed run; stop the block rather than corrupt
-        coef[_JPEG_ZIGZAG[k]] = _jpeg_extend(br.receive(s), s)
-        k += 1
-    return coef, dc
+            k += r
+            if k > se:
+                if progressive:
+                    raise _JpegMarker(0xD9)  # malformed band overrun
+                return  # sequential: the run ends the block
+            blk[_JPEG_ZIGZAG[k]] = _jpeg_extend(br.receive(s), s) << al
+            k += 1
+
+    def correct(blk, z: int) -> None:
+        if br.read_bit() and not (int(blk[z]) & p1):
+            blk[z] += p1 if blk[z] >= 0 else m1
+
+    def ac_refine(blk, tbl: dict) -> None:
+        nonlocal eobrun
+        k = ss
+        if eobrun == 0:
+            while k <= se:
+                rs = br.decode_huffman(tbl)
+                r, s = rs >> 4, rs & 0x0F
+                val = 0
+                if s == 0:
+                    if r != 15:
+                        eobrun = 1 << r
+                        if r:
+                            eobrun += br.receive(r)
+                        break
+                    # ZRL: advance over 16 zero-history coefficients
+                else:
+                    # s must be 1 in a refinement scan
+                    val = p1 if br.read_bit() else m1
+                while k <= se:
+                    z = _JPEG_ZIGZAG[k]
+                    if blk[z] != 0:
+                        correct(blk, z)
+                    else:
+                        if r == 0:
+                            break
+                        r -= 1
+                    k += 1
+                if val and k <= se:
+                    blk[_JPEG_ZIGZAG[k]] = val
+                k += 1
+        if eobrun > 0:
+            while k <= se:
+                z = _JPEG_ZIGZAG[k]
+                if blk[z] != 0:
+                    correct(blk, z)
+                k += 1
+            eobrun -= 1
+
+    def unit(cid: int, store, dc_tbl, ac_tbl, by: int, bx: int) -> None:
+        if not progressive:
+            coef = [0] * 64
+            dc_first(coef, cid, dc_tbl)
+            ac_first(coef, ac_tbl)
+            store[by, bx] = coef
+        elif ss > 0:
+            (ac_refine if ah else ac_first)(store[by, bx], ac_tbl)
+        elif ah == 0:
+            dc_first(store[by, bx], cid, dc_tbl)
+        elif br.read_bit():  # DC refinement bit
+            store[by, bx, 0] = int(store[by, bx, 0]) | p1
+
+    rows, cols = grid
+    count = rst = i = 0
+    try:
+        for uy in range(rows):
+            for ux in range(cols):
+                if restart_interval and count and count % restart_interval == 0:
+                    if not br.align_and_expect_rst(rst):
+                        return None
+                    rst = (rst + 1) & 7
+                    preds = dict.fromkeys(preds, 0)
+                    eobrun = 0
+                for i, (j, v, y, h, x) in enumerate(layout):
+                    if comps[j] is None:
+                        return None
+                    unit(*comps[j], uy * v + y, ux * h + x)
+                count += 1
+    except _JpegMarker as m:
+        if progressive or m.marker != 0xD9 or count < rows * cols - 1:
+            return None
+        return [(j, uy * v + y, ux * h + x) for j, v, y, h, x in layout[i:]]
+    return []
 
 
 def _jpeg_pixels(d: bytes):
     """Grayscale float64 (H, W) matrix — the luma (Y) plane — of a
-    BASELINE Huffman JPEG (SOF0/SOF1, the overwhelmingly dominant JPEG
-    on the web): REAL pixel decode, pure stdlib + numpy. Marker walk →
-    DQT/DHT tables → interleaved MCU entropy decode (byte-unstuffing,
-    restart markers, DC prediction) → dequantize → 8×8 IDCT. Chroma
-    blocks are entropy-decoded to keep the bitstream in sync but not
-    reconstructed: grayscale output == the Y plane, which is the same
-    BT.601 luma the PNG/BMP paths compute from RGB. Progressive
-    Huffman (SOF2) delegates to `_jpeg_pixels_progressive`. None for
-    non-JPEG bytes, malformed/truncated streams, and out-of-scope
-    processes (arithmetic/lossless/differential —
-    `_jpeg_unsupported_kind` names them so `_real_decode_image` can
-    raise the loud codec boundary).
+    Huffman-coded JPEG, sequential (SOF0/SOF1, the overwhelmingly
+    dominant JPEG on the web) or progressive (SOF2): REAL pixel decode,
+    pure stdlib + numpy. One marker walk (`_jpeg_segments`) collects
+    DQT/DHT/DRI/SOF; every SOS entropy-decodes into one per-component
+    coefficient store (`_jpeg_decode_scan`: byte-unstuffing, restart
+    markers, DC prediction, and for progressive frames the T.81 §G.2
+    spectral-selection bands, EOBRUNs and successive-approximation
+    refinement); one dequantize + 8×8 IDCT pass then rebuilds the Y
+    plane. Chroma is entropy-decoded to keep the bitstream in sync but
+    not reconstructed: the Y plane is the same BT.601 luma the PNG/BMP
+    paths compute from RGB.
+
+    Malformed input returns None; the frame types keep their own rules:
+    - SOF0/1 needs no EOI. A scan decodes the frame components it names
+      in frame order; decoding ends once every component has had its
+      scan, and end-of-data inside the last unit of a scan is tolerated:
+      the Y blocks it did not reach stay 0 (black). A run past
+      coefficient 63 ends its block.
+    - SOF2 needs an EOI. A scan decodes its components in scan order; a
+      scan naming an unknown component, a band overrun, and end-of-data
+      or a marker inside any scan return None.
+    - Both need a scan that decoded Y, and Y's quantization table. A
+      second SOF returns None, and so does a missing Huffman table once
+      the scan reaches a block that needs it.
+    Out-of-scope processes (arithmetic/lossless/differential) are None
+    here too; `_jpeg_unsupported_kind` names them so `_real_decode_image`
+    can raise the loud codec boundary.
 
     Scale note: this is the correctness tier — a pure-Python Huffman
     loop (~1 MB/s/core). At 100 TB the hash-fingerprint tier or a real
@@ -1263,49 +1428,31 @@ def _jpeg_pixels(d: bytes):
     """
     import numpy as np
 
-    if d[:2] != b"\xff\xd8":
-        return None
     qt: dict[int, list[int]] = {}
     huff: dict[tuple[int, int], dict] = {}
-    sof = None
     restart_interval = 0
-    pos = 2
-    n = len(d)
-    scan = None
-    while pos + 4 <= n:
-        if d[pos] != 0xFF:
-            return None
-        # Spec-legal 0xFF fill bytes may pad before any marker (B.1.1.2).
-        while pos + 2 < n and d[pos + 1] == 0xFF:
-            pos += 1
-        marker = d[pos + 1]
-        if marker == 0xD8 or 0xD0 <= marker <= 0xD7:
-            pos += 2
-            continue
-        if marker == 0xD9:
-            break
-        seglen = int.from_bytes(d[pos + 2 : pos + 4], "big")
-        body = d[pos + 4 : pos + 2 + seglen]
-        if len(body) < seglen - 2:
-            return None
+    frame: list[tuple[int, int, int, int]] = []  # (cid, hi, vi, tq)
+    stores: list = []  # per frame component: (rows, cols, 64) float64
+    progressive = saw_eoi = False
+    decoded: set[int] = set()  # frame components some scan decoded
+    holes: list[tuple[int, int]] = []  # Y blocks left black (SOF0/1 rule)
+    for marker, body, nxt in _jpeg_segments(d):
         if marker == 0xDB:  # DQT — one or more tables, 8- or 16-bit
             i = 0
-            while i + 1 <= len(body):
+            while i < len(body):
                 pq, tq = body[i] >> 4, body[i] & 0x0F
-                i += 1
-                if pq == 0:
-                    if i + 64 > len(body):
-                        return None
-                    qt[tq] = list(body[i : i + 64])
-                    i += 64
-                else:
-                    if i + 128 > len(body):
-                        return None
-                    qt[tq] = [
+                end = i + 1 + (128 if pq else 64)
+                if end > len(body):
+                    return None
+                qt[tq] = (
+                    list(body[i + 1 : end])
+                    if pq == 0
+                    else [
                         int.from_bytes(body[j : j + 2], "big")
-                        for j in range(i, i + 128, 2)
+                        for j in range(i + 1, end, 2)
                     ]
-                    i += 128
+                )
+                i = end
         elif marker == 0xC4:  # DHT — one or more tables
             i = 0
             while i + 17 <= len(body):
@@ -1317,437 +1464,129 @@ def _jpeg_pixels(d: bytes):
                     return None
                 huff[(tc, th)] = _jpeg_build_huffman(counts, body[i : i + total])
                 i += total
-        elif marker in _JPEG_SOF_BASELINE:
-            sof = body
-        elif marker == _JPEG_SOF_PROGRESSIVE:
-            return _jpeg_pixels_progressive(d)
-        elif marker in _JPEG_SOF_UNSUPPORTED:
-            return None  # named by _jpeg_unsupported_kind; loud in _real_decode_image
         elif marker == 0xDD:  # DRI
             restart_interval = int.from_bytes(body[:2], "big")
+        elif marker in _JPEG_SOF:
+            if frame or marker in _JPEG_SOF_UNSUPPORTED or len(body) < 6:
+                return None
+            h_img, w_img = struct.unpack(">HH", body[1:5])
+            ncomp = body[5]
+            if body[0] != 8 or not (w_img and h_img and ncomp):
+                return None
+            if len(body) < 6 + 3 * ncomp:
+                return None
+            frame = [
+                (body[j], body[j + 1] >> 4, body[j + 1] & 0x0F, body[j + 2])
+                for j in range(6, 6 + 3 * ncomp, 3)
+            ]
+            hmax = max(c[1] for c in frame)
+            vmax = max(c[2] for c in frame)
+            # The luma component must be full-resolution (universally
+            # true: Y carries the max sampling factors); bail rather
+            # than mis-scale.
+            if hmax == 0 or vmax == 0 or frame[0][1:3] != (hmax, vmax):
+                return None
+            progressive = marker == _JPEG_SOF_PROGRESSIVE
+            mcus_x = (w_img + 8 * hmax - 1) // (8 * hmax)
+            mcus_y = (h_img + 8 * vmax - 1) // (8 * vmax)
+            # padded to the MCU grid so interleaved scans can index it
+            stores = [
+                np.zeros((mcus_y * vi, mcus_x * hi, 64))
+                for _cid, hi, vi, _tq in frame
+            ]
         elif marker == 0xDA:  # SOS
-            scan = body
-            scan_start = pos + 2 + seglen
-            break
-        pos += 2 + seglen
-    if sof is None or scan is None or len(sof) < 6:
-        return None
-    precision, h_img, w_img, ncomp = sof[0], *struct.unpack(">HH", sof[1:5]), sof[5]
-    if precision != 8 or w_img == 0 or h_img == 0 or len(sof) < 6 + 3 * ncomp:
-        return None
-    comps = []  # (id, hi, vi, tq)
-    for c in range(ncomp):
-        cid, hv, tq = sof[6 + 3 * c : 9 + 3 * c]
-        comps.append((cid, hv >> 4, hv & 0x0F, tq))
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
-    if hmax == 0 or vmax == 0:
-        return None
-    # The luma component must be full-resolution (universally true: Y
-    # carries the max sampling factors); bail rather than mis-scale.
-    if comps[0][1] != hmax or comps[0][2] != vmax:
-        return None
-    # SOS: component → entropy table ids, in scan order. Baseline single
-    # scan must cover all frame components (interleaved when ncomp > 1).
-    if not scan:
-        return None  # empty SOS segment: malformed, degrade quietly
-    ns = scan[0]
-    if ns != ncomp or len(scan) < 1 + 2 * ns:
-        return None
-    scan_tables = {}
-    for c in range(ns):
-        cs, tdta = scan[1 + 2 * c : 3 + 2 * c]
-        scan_tables[cs] = (tdta >> 4, tdta & 0x0F)
-    if comps[0][3] not in qt:
-        return None
-    # coefficients land in LINEAR order (per-coefficient zigzag→linear in
-    # _jpeg_decode_block), so scatter the zigzag-ordered DQT through the
-    # same map to get the luma quant matrix in linear order too
-    qy = np.zeros((8, 8), dtype=np.float64)
-    for k, lin in enumerate(_JPEG_ZIGZAG):
-        qy[lin // 8][lin % 8] = qt[comps[0][3]][k]
-    # 8×8 IDCT basis: C[u, x] = c(u)/2 · cos((2x+1)uπ/16)
-    u = np.arange(8).reshape(8, 1)
-    x = np.arange(8).reshape(1, 8)
-    basis = np.cos((2 * x + 1) * u * np.pi / 16.0) * 0.5
-    basis[0, :] *= 1.0 / np.sqrt(2.0)
-    mcu_w, mcu_h = 8 * hmax, 8 * vmax
-    mcus_x = (w_img + mcu_w - 1) // mcu_w
-    mcus_y = (h_img + mcu_h - 1) // mcu_h
-    y_plane = np.zeros((mcus_y * mcu_h, mcus_x * mcu_w), dtype=np.float64)
-    preds = {c[0]: 0 for c in comps}
-    br = _JpegBits(d, scan_start)
-    mcu_count = 0
-    rst_n = 0
-    try:
-        for my in range(mcus_y):
-            for mx in range(mcus_x):
-                if restart_interval and mcu_count and mcu_count % restart_interval == 0:
-                    if not br.align_and_expect_rst(rst_n):
-                        return None
-                    rst_n = (rst_n + 1) & 7
-                    preds = {c[0]: 0 for c in comps}
-                for ci, (cid, hi, vi, tq) in enumerate(comps):
-                    td, ta = scan_tables.get(cid, (None, None))
-                    dc_tbl = huff.get((0, td))
-                    ac_tbl = huff.get((1, ta))
-                    if dc_tbl is None or ac_tbl is None:
-                        return None
-                    for by in range(vi):
-                        for bx in range(hi):
-                            coef, preds[cid] = _jpeg_decode_block(
-                                br, dc_tbl, ac_tbl, preds[cid]
-                            )
-                            if ci == 0:  # luma: reconstruct
-                                block = (
-                                    np.array(coef, dtype=np.float64).reshape(8, 8)
-                                    * qy
-                                )
-                                spatial = basis.T @ block @ basis + 128.0
-                                y0 = (my * vmax + by) * 8
-                                x0 = (mx * hmax + bx) * 8
-                                y_plane[y0 : y0 + 8, x0 : x0 + 8] = spatial
-                mcu_count += 1
-    except _JpegMarker as m:
-        # tolerate only end-of-data on the very last MCU row boundary;
-        # a marker mid-image means a truncated/corrupt stream
-        if not (m.marker == 0xD9 and mcu_count >= mcus_x * mcus_y - 1):
-            return None
-    return np.clip(y_plane[:h_img, :w_img], 0.0, 255.0)
-
-
-def _jpeg_pixels_progressive(d: bytes):
-    """Grayscale float64 (H, W) luma plane of a PROGRESSIVE Huffman
-    JPEG (SOF2) — REAL pixel decode, pure stdlib + numpy, T.81 §G.2:
-    coefficients accumulate across scans (DC first + successive-
-    approximation refinement; AC spectral-selection bands with EOBRUN
-    and, in refinement scans, correction bits for nonzero history —
-    the decode_mcu_AC_refine semantics every progressive decoder
-    implements), then one dequantize + 8×8 IDCT pass reconstructs the
-    Y plane. Interleaved (multi-component) DC scans walk MCU geometry;
-    AC scans are per-component non-interleaved by spec. Chroma
-    coefficients are entropy-decoded to keep the bitstream in sync but
-    not reconstructed (output == Y plane, as in `_jpeg_pixels`). None
-    for malformed/truncated streams.
-
-    Scale note: same correctness-tier contract as the baseline decoder
-    (~1 MB/s/core pure-Python entropy loop); the fingerprint tier or a
-    codec library is the 100-TB throughput path."""
-    import numpy as np
-
-    if d[:2] != b"\xff\xd8":
-        return None
-    n = len(d)
-    qt: dict[int, list[int]] = {}
-    huff: dict[tuple[int, int], dict] = {}
-    restart_interval = 0
-    comps: list[tuple[int, int, int, int]] = []  # (cid, hi, vi, tq)
-    coeffs: dict[int, "np.ndarray"] = {}  # cid -> (bh, bw, 64) int32
-    nblocks: dict[int, tuple[int, int]] = {}  # cid -> actual (cbh, cbw)
-    hmax = vmax = mcus_x = mcus_y = 0
-    w_img = h_img = 0
-    saw_eoi = False
-    saw_scan = False  # at least one SOS scan decoded successfully
-
-    def parse_sof(body: bytes) -> bool:
-        nonlocal comps, hmax, vmax, mcus_x, mcus_y, w_img, h_img
-        if len(body) < 6:
-            return False
-        precision, h_, w_, ncomp = (
-            body[0],
-            *struct.unpack(">HH", body[1:5]),
-            body[5],
-        )
-        if precision != 8 or w_ == 0 or h_ == 0 or len(body) < 6 + 3 * ncomp:
-            return False
-        w_img, h_img = w_, h_
-        for c in range(ncomp):
-            cid, hv, tq = body[6 + 3 * c : 9 + 3 * c]
-            comps.append((cid, hv >> 4, hv & 0x0F, tq))
-        hmax = max(c[1] for c in comps)
-        vmax = max(c[2] for c in comps)
-        if hmax == 0 or vmax == 0:
-            return False
-        if comps[0][1] != hmax or comps[0][2] != vmax:
-            return False  # luma must be full-resolution (as in baseline)
-        mcus_x = (w_img + 8 * hmax - 1) // (8 * hmax)
-        mcus_y = (h_img + 8 * vmax - 1) // (8 * vmax)
-        for cid, hi, vi, _tq in comps:
-            cw = (w_img * hi + hmax - 1) // hmax
-            ch_ = (h_img * vi + vmax - 1) // vmax
-            nblocks[cid] = ((ch_ + 7) // 8, (cw + 7) // 8)
-            # padded to MCU geometry so interleaved DC scans can index
-            coeffs[cid] = np.zeros(
-                (mcus_y * vi, mcus_x * hi, 64), dtype=np.int32
+            if not frame or not body:
+                return None
+            ns = body[0]
+            # a sequential scan's Ss/Se/Ah/Al are fixed; only a
+            # progressive scan needs its three trailing bytes
+            if ns == 0 or len(body) < 1 + 2 * ns + 3 * progressive:
+                return None
+            ss, se, ah, al = 0, 63, 0, 0
+            if progressive:
+                ss, se, a = body[1 + 2 * ns : 4 + 2 * ns]
+                ah, al = a >> 4, a & 0x0F
+                if ss > se or se > 63 or (ss == 0 and se != 0):
+                    return None  # DC and AC never share a progressive scan
+                if ss > 0 and ns != 1:
+                    return None  # AC scans are non-interleaved by spec
+            named = [(body[1 + 2 * j], body[2 + 2 * j]) for j in range(ns)]
+            if progressive:
+                # scan order; a repeated component decodes again
+                index = {c[0]: ci for ci, c in enumerate(frame)}
+                if any(cs not in index for cs, _tt in named):
+                    return None
+                sel = [(index[cs], tt) for cs, tt in named]
+            else:
+                # frame order, each named component with its entry's tables
+                tables = dict(named)
+                sel = [
+                    (ci, tables[c[0]])
+                    for ci, c in enumerate(frame)
+                    if c[0] in tables
+                ]
+                if not sel:
+                    return None
+            needs_dc = not progressive or ss == ah == 0
+            needs_ac = not progressive or ss > 0
+            comps = []
+            for ci, tt in sel:
+                dc_tbl, ac_tbl = huff.get((0, tt >> 4)), huff.get((1, tt & 0x0F))
+                if (needs_dc and dc_tbl is None) or (needs_ac and ac_tbl is None):
+                    comps.append(None)
+                else:
+                    comps.append((frame[ci][0], stores[ci], dc_tbl, ac_tbl))
+            if ns == 1:  # non-interleaved: the component's own block grid
+                _cid, hi, vi, _tq = frame[sel[0][0]]
+                ch = (h_img * vi + vmax - 1) // vmax
+                cw = (w_img * hi + hmax - 1) // hmax
+                grid = ((ch + 7) // 8, (cw + 7) // 8)
+                layout = [(0, 1, 0, 1, 0)]
+            else:  # interleaved: MCU geometry
+                grid = (mcus_y, mcus_x)
+                layout = [
+                    (j, frame[ci][2], y, frame[ci][1], x)
+                    for j, (ci, _tt) in enumerate(sel)
+                    for y in range(frame[ci][2])
+                    for x in range(frame[ci][1])
+                ]
+            missing = _jpeg_decode_scan(
+                d, nxt, comps, layout, grid, (ss, se, ah, al),
+                restart_interval, progressive,
             )
-        return True
-
-    def scan_entropy(body: bytes, start: int) -> int | None:
-        """Decode one scan's entropy data; returns the byte offset just
-        past it (at the next marker), or None on malformed input."""
-        if not body:
-            return None  # empty SOS segment: malformed, degrade quietly
-        ns = body[0]
-        if ns == 0 or len(body) < 4 + 2 * ns:
-            return None
-        sel = []  # (cid, hi, vi, dc_tbl, ac_tbl)
-        by_id = {c[0]: c for c in comps}
-        for c in range(ns):
-            cs, tt = body[1 + 2 * c : 3 + 2 * c]
-            if cs not in by_id:
+            if missing is None:
                 return None
-            sel.append((cs, by_id[cs][1], by_id[cs][2], tt >> 4, tt & 0x0F))
-        ss, se = body[1 + 2 * ns], body[2 + 2 * ns]
-        ah, al = body[3 + 2 * ns] >> 4, body[3 + 2 * ns] & 0x0F
-        if ss > se or se > 63:
-            return None
-        if ss == 0 and se != 0:
-            return None  # DC and AC never share a progressive scan
-        if ss > 0 and ns != 1:
-            return None  # AC scans are non-interleaved by spec
-        br = _JpegBits(d, start)
-        preds = {cid: 0 for cid, *_ in sel}
-        eobrun = 0
-        p1 = 1 << al
-        m1 = -p1
-
-        def dc_first(blk, cid, dc_tbl) -> None:
-            t = br.decode_huffman(dc_tbl)
-            preds[cid] += _jpeg_extend(br.receive(t), t)
-            blk[0] = preds[cid] << al
-
-        def dc_refine(blk) -> None:
-            if br.read_bit():
-                blk[0] |= p1
-
-        def ac_first(blk, ac_tbl) -> None:
-            nonlocal eobrun
-            if eobrun:
-                eobrun -= 1
-                return
-            k = ss
-            while k <= se:
-                rs = br.decode_huffman(ac_tbl)
-                r, s = rs >> 4, rs & 0x0F
-                if s == 0:
-                    if r != 15:
-                        eobrun = (1 << r) - 1
-                        if r:
-                            eobrun += br.receive(r)
-                        return
-                    k += 16  # ZRL
-                    continue
-                k += r
-                if k > se:
-                    raise _JpegMarker(0xD9)  # malformed band overrun
-                blk[_JPEG_ZIGZAG[k]] = _jpeg_extend(br.receive(s), s) << al
-                k += 1
-
-        def _correct(blk, z) -> None:
-            if br.read_bit() and not (int(blk[z]) & p1):
-                blk[z] += p1 if blk[z] >= 0 else m1
-
-        def ac_refine(blk, ac_tbl) -> None:
-            nonlocal eobrun
-            k = ss
-            if eobrun == 0:
-                while k <= se:
-                    rs = br.decode_huffman(ac_tbl)
-                    r, s = rs >> 4, rs & 0x0F
-                    val = 0
-                    if s == 0:
-                        if r != 15:
-                            eobrun = 1 << r
-                            if r:
-                                eobrun += br.receive(r)
-                            break
-                        # ZRL: advance over 16 zero-history coefficients
-                    else:
-                        # s must be 1 in a refinement scan
-                        val = p1 if br.read_bit() else m1
-                    while k <= se:
-                        z = _JPEG_ZIGZAG[k]
-                        if blk[z] != 0:
-                            _correct(blk, z)
-                        else:
-                            if r == 0:
-                                break
-                            r -= 1
-                        k += 1
-                    if val and k <= se:
-                        blk[_JPEG_ZIGZAG[k]] = val
-                    k += 1
-            if eobrun > 0:
-                while k <= se:
-                    z = _JPEG_ZIGZAG[k]
-                    if blk[z] != 0:
-                        _correct(blk, z)
-                    k += 1
-                eobrun -= 1
-
-        def do_unit(cid, hi, vi, td, ta, by, bx) -> None:
-            blk = coeffs[cid][by, bx]
-            if ss == 0:
-                tbl = huff.get((0, td))
-                if ah == 0:
-                    if tbl is None:
-                        raise _JpegMarker(0xD9)
-                    dc_first(blk, cid, tbl)
-                else:
-                    dc_refine(blk)
-            else:
-                tbl = huff.get((1, ta))
-                if tbl is None:
-                    raise _JpegMarker(0xD9)
-                if ah == 0:
-                    ac_first(blk, tbl)
-                else:
-                    ac_refine(blk, tbl)
-
-        rst_n = 0
-        unit_count = 0
-
-        def maybe_restart() -> bool:
-            nonlocal rst_n, eobrun, preds
-            if (
-                restart_interval
-                and unit_count
-                and unit_count % restart_interval == 0
-            ):
-                if not br.align_and_expect_rst(rst_n):
-                    return False
-                rst_n = (rst_n + 1) & 7
-                preds = {cid: 0 for cid, *_ in sel}
-                eobrun = 0
-            return True
-
-        try:
-            if ns > 1:
-                # interleaved (DC) scan: MCU geometry
-                for my in range(mcus_y):
-                    for mx in range(mcus_x):
-                        if not maybe_restart():
-                            return None
-                        for cid, hi, vi, td, ta in sel:
-                            for by in range(vi):
-                                for bx in range(hi):
-                                    do_unit(
-                                        cid, hi, vi, td, ta,
-                                        my * vi + by, mx * hi + bx,
-                                    )
-                        unit_count += 1
-            else:
-                # non-interleaved: the component's ACTUAL block grid
-                cid, hi, vi, td, ta = sel[0]
-                cbh, cbw = nblocks[cid]
-                for by in range(cbh):
-                    for bx in range(cbw):
-                        if not maybe_restart():
-                            return None
-                        do_unit(cid, hi, vi, td, ta, by, bx)
-                        unit_count += 1
-        except _JpegMarker:
-            return None  # truncated / malformed mid-scan
-        # byte-align and walk forward to the next marker (skipping the
-        # pad bits and any stuffed 0xFF00 stragglers)
-        pos_ = br.pos
-        while pos_ + 1 < n and not (
-            d[pos_] == 0xFF and d[pos_ + 1] != 0x00
-        ):
-            pos_ += 1
-        return pos_
-
-    pos = 2
-    while pos + 2 <= n:
-        if d[pos] != 0xFF:
-            return None
-        while pos + 2 < n and d[pos + 1] == 0xFF:
-            pos += 1
-        marker = d[pos + 1]
-        if marker == 0xD8 or 0xD0 <= marker <= 0xD7:
-            pos += 2
-            continue
-        if marker == 0xD9:
+            decoded.update(ci for ci, _tt in sel)
+            holes += [(by, bx) for j, by, bx in missing if sel[j][0] == 0]
+            if not progressive and (missing or len(decoded) == len(frame)):
+                break
+        elif marker == 0xD9:
             saw_eoi = True
-            break
-        if pos + 4 > n:
-            return None  # segment marker with no room for its length
-        seglen = int.from_bytes(d[pos + 2 : pos + 4], "big")
-        body = d[pos + 4 : pos + 2 + seglen]
-        if len(body) < seglen - 2:
-            return None
-        if marker == 0xDB:
-            i = 0
-            while i + 1 <= len(body):
-                pq, tq_ = body[i] >> 4, body[i] & 0x0F
-                i += 1
-                width = 128 if pq else 64
-                if i + width > len(body):
-                    return None
-                if pq == 0:
-                    qt[tq_] = list(body[i : i + 64])
-                else:
-                    qt[tq_] = [
-                        int.from_bytes(body[j : j + 2], "big")
-                        for j in range(i, i + 128, 2)
-                    ]
-                i += width
-        elif marker == 0xC4:
-            i = 0
-            while i + 17 <= len(body):
-                tc, th = body[i] >> 4, body[i] & 0x0F
-                counts = body[i + 1 : i + 17]
-                total = sum(counts)
-                i += 17
-                if i + total > len(body):
-                    return None
-                huff[(tc, th)] = _jpeg_build_huffman(
-                    counts, body[i : i + total]
-                )
-                i += total
-        elif marker == _JPEG_SOF_PROGRESSIVE:
-            if comps or not parse_sof(body):
-                return None
-        elif marker in _JPEG_SOF_BASELINE or marker in _JPEG_SOF_UNSUPPORTED:
-            return None  # mixed/foreign frame type
-        elif marker == 0xDD:
-            restart_interval = int.from_bytes(body[:2], "big")
-        elif marker == 0xDA:
-            if not comps:
-                return None
-            nxt = scan_entropy(body, pos + 2 + seglen)
-            if nxt is None:
-                return None
-            saw_scan = True
-            pos = nxt
-            continue
-        pos += 2 + seglen
-    if not comps or not saw_eoi or not saw_scan:
-        # No frame, stream ended before EOI (truncated), or a scanless
-        # SOF2+EOI shell: the baseline decoder returns None for a
-        # zero-scan stream, and fabricating an all-128 plane here would
-        # hand malformed files real-tier features (false dedup merges).
+    if 0 not in decoded or (progressive and not saw_eoi):
         return None
-    cid0, _hi, _vi, tq0 = comps[0]
+    tq0 = frame[0][3]
     if tq0 not in qt:
         return None
     qy = np.zeros(64, dtype=np.float64)
     for k, lin in enumerate(_JPEG_ZIGZAG):
         qy[lin] = qt[tq0][k]
     qy = qy.reshape(8, 8)
+    # 8×8 IDCT basis: C[u, x] = c(u)/2 · cos((2x+1)uπ/16)
     u = np.arange(8).reshape(8, 1)
     x = np.arange(8).reshape(1, 8)
     basis = np.cos((2 * x + 1) * u * np.pi / 16.0) * 0.5
     basis[0, :] *= 1.0 / np.sqrt(2.0)
-    cbh, cbw = nblocks[cid0]
+    cbh, cbw = (h_img + 7) // 8, (w_img + 7) // 8
     y_plane = np.zeros((cbh * 8, cbw * 8), dtype=np.float64)
-    c0 = coeffs[cid0]
+    c0 = stores[0]
     for by in range(cbh):
         for bx in range(cbw):
-            block = c0[by, bx].astype(np.float64).reshape(8, 8) * qy
+            block = c0[by, bx].reshape(8, 8) * qy
             y_plane[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = (
                 basis.T @ block @ basis + 128.0
             )
+    for by, bx in holes:
+        y_plane[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8] = 0.0
     return np.clip(y_plane[:h_img, :w_img], 0.0, 255.0)
 
 
@@ -1755,7 +1594,8 @@ def _gif_lzw_decode(min_code_size: int, data: bytes, max_out: int):
     """GIF-variant LZW (LSB-first bit packing, variable width 3..12
     bits, clear/EOI codes): returns the decoded index bytes, or None on
     a corrupt stream. ``max_out`` bounds output so a malicious blob
-    can't balloon memory (quine-zip guard discipline, walker.py:653)."""
+    can't balloon memory (the quine-zip guard discipline of
+    ``Walker.begin_visit_archive``)."""
     if not 2 <= min_code_size <= 11:
         return None
     clear = 1 << min_code_size
@@ -1965,7 +1805,8 @@ def _tiff_pixels(d: bytes):
 def decode_pixels(data: bytes):
     """Grayscale float64 (H, W) pixel matrix for binary PPM (P6), PGM
     (P5), uncompressed 24/32-bpp BMP, non-interlaced 8/16-bit PNG,
-    baseline-Huffman JPEG (Y plane), GIF (first frame, LZW), or
+    sequential or progressive Huffman JPEG (Y plane), GIF (first frame,
+    LZW), or
     uncompressed striped 8-bit TIFF bytes; None for anything else.
     """
     import numpy as np

@@ -555,7 +555,7 @@ _JPEG_BLOB = _jpeg_fixture()
 def _jpeg_progressive_fixture() -> bytes:
     """The same 16×8 two-block image (left 64, right 192) as
     ``_jpeg_fixture`` encoded PROGRESSIVELY (SOF2) by hand, independent
-    of ``_jpeg_pixels_progressive``: a DC-first scan at Al=1
+    of ``operators.multimodal._jpeg_pixels``: a DC-first scan at Al=1
     (successive approximation, point-transformed diffs −256/+512), one
     AC scan whose band 1..63 is a single EOBRUN=2 spanning both blocks
     (EOB1 symbol + one extension bit), and a DC refinement scan (one

@@ -441,31 +441,13 @@ class _LineBufferedStream:
         return b"".join(out)
 
 
-def _read_crlf_line(stream, limit: int = 64 * 1024) -> bytes | None:
-    """Read one LF-terminated line. Buffered streams split in-buffer;
-    other sequential decoder adapters (no readline) fall back to
-    byte-at-a-time. None on EOF at line start; a line longer than
-    ``limit`` aborts (malformed input)."""
-    if isinstance(stream, _LineBufferedStream):
-        return stream.readline_lf(limit)
-    out = bytearray()
-    while len(out) < limit:
-        b = stream.read(1)
-        if not b:
-            return bytes(out) if out else None
-        out += b
-        if b == b"\n":
-            return bytes(out)
-    return None
-
-
-def _read_mime_headers(stream) -> dict[str, str] | None:
+def _read_mime_headers(stream: _LineBufferedStream) -> dict[str, str] | None:
     """Read CRLF-separated ``Name: value`` headers up to the blank line.
     Keys are lower-cased; continuation lines and malformed lines are
     skipped. None if EOF hits before the blank line."""
     headers: dict[str, str] = {}
     while True:
-        line = _read_crlf_line(stream)
+        line = stream.readline_lf()
         if line is None:
             return None
         line = line.rstrip(b"\r\n")
@@ -934,9 +916,9 @@ class Walker:
         n_records = 0
         while True:
             # version line, tolerating blank separator lines before it
-            line = _read_crlf_line(stream)
+            line = stream.readline_lf()
             while line is not None and line.strip(b"\r\n") == b"":
-                line = _read_crlf_line(stream)
+                line = stream.readline_lf()
             if line is None or not line.startswith(b"WARC/"):
                 return
             headers = _read_mime_headers(stream)

@@ -3,9 +3,9 @@
 ``decode_pixels`` / ``decode_pcm`` run inside executor tasks over
 arbitrary archive content — a malformed blob must degrade to None (or
 decode to a finite array), never raise and never balloon memory.  The
-walker applies the same truncation-tolerance discipline
-(sources/walker.py:653 quine/depth guards); these tests hold the media
-tier to it under random truncation and byte corruption of valid
+walker applies the same truncation-tolerance discipline (the quine and
+depth guards in ``Walker.begin_visit_archive``); these tests hold the
+media tier to it under random truncation and byte corruption of valid
 fixtures.
 """
 
@@ -21,7 +21,13 @@ from archive_to_parquet_spark.operators.multimodal import (
 )
 from tests.test_audio_codecs import make_wav
 from tests.test_gif_tiff_real import make_gif, make_tiff
-from tests.test_jpeg_real import make_jpeg_gray, make_jpeg_rgb
+from tests.test_jpeg_real import (
+    _block_zigzag,
+    make_jpeg_gray,
+    make_jpeg_progressive_from_coeffs,
+    make_jpeg_progressive_gray,
+    make_jpeg_rgb,
+)
 
 
 def _fixtures() -> list[bytes]:
@@ -30,9 +36,25 @@ def _fixtures() -> list[bytes]:
     rgb = rng.integers(0, 256, size=(16, 16, 3), dtype=np.uint8)
     pal = [(i * 37 % 256,) * 3 for i in range(16)]
     idx = rng.integers(0, 16, size=(16, 16), dtype=np.uint8)
+    rgb_wide = rng.integers(0, 256, size=(16, 24, 3), dtype=np.uint8)
+    comp_blocks = {
+        c + 1: [
+            _block_zigzag(rgb[y0 : y0 + 8, x0 : x0 + 8, c], np.ones((8, 8)))
+            for y0 in (0, 8)
+            for x0 in (0, 8)
+        ]
+        for c in range(3)
+    }
     return [
         make_jpeg_gray(img),
         make_jpeg_rgb(rgb, subsample=True),
+        make_jpeg_progressive_gray(img),
+        make_jpeg_progressive_from_coeffs(
+            [], 16, 16,
+            comps=[(1, 1, 1, 0), (2, 1, 1, 0), (3, 1, 1, 0)],
+            comp_blocks=comp_blocks,
+        ),
+        make_jpeg_rgb(rgb_wide, interleaved=False),
         make_gif(idx, pal),
         make_tiff(img),
         make_tiff(rgb, byte_order=">"),

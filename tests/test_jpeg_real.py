@@ -1,4 +1,5 @@
-"""Baseline-JPEG real pixel decode (pure stdlib + numpy).
+"""JPEG real pixel decode (pure stdlib + numpy): the one Huffman
+decoder behind sequential (SOF0/SOF1) and progressive (SOF2) frames.
 
 The fixtures are produced by a minimal test-side ENCODER (numpy forward
 DCT + canonical fixed-length Huffman tables) so the roundtrip needs no
@@ -210,9 +211,13 @@ def make_jpeg_gray(
     return bytes(out)
 
 
-def make_jpeg_rgb(rgb: np.ndarray, subsample: bool = False) -> bytes:
+def make_jpeg_rgb(
+    rgb: np.ndarray, subsample: bool = False, interleaved: bool = True
+) -> bytes:
     """3-component YCbCr baseline JPEG (4:4:4, or 4:2:0 with
-    ``subsample=True``) of a (H, W, 3) uint8 image, quant all-ones."""
+    ``subsample=True``) of a (H, W, 3) uint8 image, quant all-ones.
+    ``interleaved=False`` codes each component in its own scan over
+    its own block grid (T.81 A.2.2) instead of one interleaved scan."""
     h, w, _ = rgb.shape
     r = rgb[:, :, 0].astype(np.float64)
     g = rgb[:, :, 1].astype(np.float64)
@@ -240,6 +245,23 @@ def make_jpeg_rgb(rgb: np.ndarray, subsample: bool = False) -> bytes:
             for p in (y, cb, cr)
         ]
     out = bytearray(_headers(w, h, comps, [[1] * 64]))
+    if not interleaved:
+        hmax = vmax = 2 if subsample else 1
+        for ci, (cid, hi, vi, _tq) in enumerate(comps):
+            out += _sos([cid])
+            bw = _BitWriter()
+            pred = 0
+            rows = (-(-h * vi // vmax) + 7) // 8
+            cols = (-(-w * hi // hmax) + 7) // 8
+            for by in range(rows):
+                for bx in range(cols):
+                    block = planes[ci][by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8]
+                    zz = _block_zigzag(block, qmat)
+                    pred = _encode_block(bw, zz, pred, dc_tbl, ac_tbl)
+            bw.flush()
+            out += bw.out
+        out += b"\xff\xd9"
+        return bytes(out)
     out += _sos([1, 2, 3])
     bw = _BitWriter()
     preds = [0, 0, 0]
@@ -545,6 +567,35 @@ def test_rgb_420_subsampled_chroma_stays_in_sync():
     ).astype(np.float64)
     assert got is not None and got.shape == (24, 40)
     assert np.abs(got - y).max() <= 2.0
+
+
+def test_rgb_per_component_scans_match_interleaved():
+    """A sequential frame may code Y, Cb and Cr in three single-
+    component scans, each over its own block grid (T.81 A.2.2): the
+    decoded luma equals that of the interleaved encoding."""
+    rng = np.random.default_rng(13)
+    rgb = rng.integers(0, 256, size=(16, 24, 3), dtype=np.uint8)
+    for subsample in (False, True):
+        three = make_jpeg_rgb(rgb, subsample, interleaved=False)
+        assert three.count(b"\xff\xda") == 3
+        got = _jpeg_pixels(three)
+        assert got is not None and got.shape == (16, 24)
+        assert np.array_equal(got, _jpeg_pixels(make_jpeg_rgb(rgb, subsample)))
+
+
+def test_gray_sampling_factors_keep_block_order():
+    """A single-component scan's MCU is one block whatever the frame's
+    sampling factors (T.81 A.2.2), so a grayscale frame declaring 2×2
+    sampling decodes exactly like the 1×1 one."""
+    rng = np.random.default_rng(17)
+    img = rng.integers(0, 256, size=(16, 32), dtype=np.uint8)
+    blob = make_jpeg_gray(img)
+    # SOF0: marker, length, P, Y, X, Nf, then C1's id and sampling byte
+    at = blob.index(b"\xff\xc0") + 11
+    assert blob[at] == 0x11
+    sampled = blob[:at] + b"\x22" + blob[at + 1 :]
+    got = _jpeg_pixels(sampled)
+    assert got is not None and np.array_equal(got, _jpeg_pixels(blob))
 
 
 def test_truncated_stream_degrades_to_none():
