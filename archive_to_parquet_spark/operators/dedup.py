@@ -1490,7 +1490,10 @@ def minhash_band_index(
     ``bucketBy(band_hash)``-style (or hash-prefix partitioned) once;
     every future ingest batch probes it without touching corpus text.
     """
-    assert num_hashes % bands == 0, "bands must divide num_hashes"
+    if num_hashes % bands:
+        raise ValueError(
+            f"bands ({bands}) must divide num_hashes ({num_hashes})"
+        )
     rows_per_band = num_hashes // bands
     mh_cols = [f"mh_{i}" for i in range(num_hashes)]
     sig = minhash_signatures(df, id_col, text_col, num_hashes, shingle_n).withColumn(
@@ -1599,7 +1602,11 @@ def bloom_filter_bits(
 
     Size ``num_bits`` ≈ 14×(expected keys) for ~0.1% FP at k=3.
     """
-    assert num_hashes <= 4, "md5 yields 4 non-overlapping 8-hex slices"
+    if num_hashes > 4:
+        raise ValueError(
+            f"num_hashes={num_hashes}: md5 yields only 4 non-overlapping "
+            f"8-hex slices"
+        )
     return (
         df.select(
             F.explode(

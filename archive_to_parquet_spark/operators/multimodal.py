@@ -1097,6 +1097,11 @@ _JPEG_ZIGZAG = (
 # (SOF2) Huffman are decodable here; everything else is the loud codec
 # boundary.
 _JPEG_SOF_BASELINE = {0xC0, 0xC1}
+# Largest declared frame (width × height) `_jpeg_pixels` decodes: PIL's
+# decompression-bomb default. The coefficient stores are sized from the
+# SOF before any entropy data is read, and a progressive EOBRUN lets a
+# few bytes cover any grid, so the file size bounds nothing.
+_JPEG_MAX_PIXELS = 89_478_485
 _JPEG_SOF_PROGRESSIVE = 0xC2
 _JPEG_SOF_UNSUPPORTED = {
     0xC3: "lossless",
@@ -1417,6 +1422,10 @@ def _jpeg_pixels(d: bytes):
     - Both need a scan that decoded Y, and Y's quantization table. A
       second SOF returns None, and so does a missing Huffman table once
       the scan reaches a block that needs it.
+    - A SOF declaring more than 89,478,485 pixels (`_JPEG_MAX_PIXELS`,
+      PIL's decompression-bomb default) returns None before anything
+      is allocated; at the bound the stores take ~8 bytes per pixel
+      per component.
     Out-of-scope processes (arithmetic/lossless/differential) are None
     here too; `_jpeg_unsupported_kind` names them so `_real_decode_image`
     can raise the loud codec boundary.
@@ -1472,6 +1481,8 @@ def _jpeg_pixels(d: bytes):
             h_img, w_img = struct.unpack(">HH", body[1:5])
             ncomp = body[5]
             if body[0] != 8 or not (w_img and h_img and ncomp):
+                return None
+            if w_img * h_img > _JPEG_MAX_PIXELS:
                 return None
             if len(body) < 6 + 3 * ncomp:
                 return None

@@ -442,11 +442,12 @@ def maintenance_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     plan = out._jdf.queryExecution().executedPlan().toString()
     n_scans = plan.count("Scan parquet")
-    assert n_scans == 4, (
-        f"incremental-MV probe must scan state + delta + 2 dims "
-        f"(4 parquet scans), plan has {n_scans} — the history fact "
-        f"table is being rescanned"
-    )
+    if n_scans != 4:
+        raise RuntimeError(
+            f"incremental-MV probe must scan state + delta + 2 dims "
+            f"(4 parquet scans), plan has {n_scans} — the history fact "
+            f"table is being rescanned"
+        )
     return out
 
 

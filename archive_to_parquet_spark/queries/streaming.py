@@ -1,19 +1,34 @@
 """Streaming family: Structured Streaming entries driven to completion
-over bounded inputs (``_drain_to_memory``: memory sink,
-``processAllAvailable``), each oracle-checked against the batch result
-its watermark semantics imply. ``bench.py`` and ``plans.audit`` skip
-this family: a streaming build runs its query to completion.
+over bounded inputs, each oracle-checked against the batch result its
+watermark semantics imply. ``bench.py`` and ``plans.audit`` skip this
+family: a streaming build runs its query to completion.
+
+Every entry runs on one bounded-stream harness:
+
+- staging: ``_fresh_stage`` clears the entry's deterministic
+  ``_stage_dir`` when the build starts. Arrivals, checkpoint, sinks
+  and state all live under it until the next build of the same entry,
+  so the returned frame may read them lazily.
+- arrival: ``_arrive`` writes each frame as one parquet file with a
+  deterministic mtime, and the stream reads one file per micro-batch.
+  The watermark entries arrive as ONE frame: sliced, every batch after
+  the first would drop its late rows behind the advanced watermark.
+- drive: ``_drain_to_memory`` (memory sink) and ``_drain_each_batch``
+  (foreachBatch) run every available micro-batch, then stop the query.
 """
 
 from __future__ import annotations
 
+import glob
 import hashlib
 import os
-import tempfile
+import shutil
 import uuid
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from archive_to_parquet_spark.operators.dedup import (
     _SFX_MIN,
@@ -23,7 +38,6 @@ from archive_to_parquet_spark.operators.dedup import (
 from archive_to_parquet_spark.operators.similarity import fixed_hyperplanes
 from archive_to_parquet_spark.queries.maintenance import EVAL_PSI_SQL
 from archive_to_parquet_spark.queries.relational import (
-    _events,
     _read_events,
     _stage_dir,
     _t,
@@ -35,27 +49,99 @@ from archive_to_parquet_spark.queries.similarity import (
 )
 
 
-def _drain_to_memory(
-    spark: SparkSession, stream: DataFrame, prefix: str, mode: str = "append"
+_ARRIVAL_T0 = 1_700_000_000  # arrival k's mtime is T0 + 10·k
+
+
+def _fresh_stage(entry: str, sf_dir: str) -> str:
+    """The entry's ``_stage_dir``, emptied: a build starts with no
+    arrivals, checkpoint or sink output left by an earlier build."""
+    stage = _stage_dir(entry, sf_dir)
+    shutil.rmtree(stage)
+    os.makedirs(stage)
+    return stage
+
+
+def _slices(df: DataFrame, key: str) -> list[DataFrame]:
+    """The sliced arrival: the rows with ``key % 4 == k`` arrive k-th."""
+    return [df.filter(F.col(key) % 4 == k) for k in range(4)]
+
+
+def _arrive(
+    spark: SparkSession, stage: str, frames: list[DataFrame]
 ) -> DataFrame:
-    """Drive ``stream`` to completion into a fresh memory table named
-    ``{prefix}_<8 hex>`` (output ``mode``, throwaway checkpoint) and
-    return that table: ``processAllAvailable`` runs a final batch after
-    the watermark advances to cover all input, then the query stops."""
-    name = f"{prefix}_{uuid.uuid4().hex[:8]}"
-    with tempfile.TemporaryDirectory() as ckpt:
-        q = (
-            stream.writeStream.outputMode(mode)
-            .format("memory")
-            .queryName(name)
-            .option("checkpointLocation", ckpt)
-            .start()
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
+    """Stage ``frames`` as the stream's input: frame k becomes the one
+    parquet file ``<stage>/in/kk.parquet`` with mtime T0 + 10·k, and
+    the returned stream reads one file per micro-batch, in that order."""
+    src = os.path.join(stage, "in")
+    os.makedirs(src)
+    for k, frame in enumerate(frames):
+        tmp = os.path.join(stage, f"slice{k}")
+        frame.coalesce(1).write.parquet(tmp)
+        (part,) = glob.glob(os.path.join(tmp, "part-*.parquet"))
+        dst = os.path.join(src, f"{k:02d}.parquet")
+        os.replace(part, dst)
+        t = _ARRIVAL_T0 + 10 * k
+        os.utime(dst, (t, t))
+    return (
+        spark.readStream.schema(frames[0].schema)
+        .option("maxFilesPerTrigger", 1)
+        .parquet(src)
+    )
+
+
+def _drive(writer: DataStreamWriter, stage: str) -> None:
+    """The one drive: start ``writer`` with its checkpoint under
+    ``stage``, run every micro-batch the input makes available
+    (``processAllAvailable`` includes the final batch a watermark
+    advance adds), then stop the query."""
+    q = writer.option("checkpointLocation", os.path.join(stage, "ckpt")).start()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+
+
+def _drain_to_memory(
+    spark: SparkSession,
+    entry: str,
+    stream: DataFrame,
+    stage: str,
+    mode: str = "append",
+) -> DataFrame:
+    """Drive ``stream`` into a fresh memory table named
+    ``{entry}_<8 hex>`` (output ``mode``) and return that table."""
+    name = f"{entry}_{uuid.uuid4().hex[:8]}"
+    _drive(
+        stream.writeStream.outputMode(mode).format("memory").queryName(name),
+        stage,
+    )
     return spark.table(name)
+
+
+def _drain_each_batch(
+    entry: str,
+    stream: DataFrame,
+    stage: str,
+    each_batch: Callable[[DataFrame, int], None],
+    mode: str = "append",
+) -> None:
+    """Drive ``stream`` through ``foreachBatch(each_batch)``. Each
+    staged arrival must be its own micro-batch, because the oracles of
+    the sliced entries state per-batch results; any other count of
+    micro-batches raises RuntimeError."""
+    batch_ids: list[int] = []
+
+    def run(batch: DataFrame, batch_id: int) -> None:
+        batch_ids.append(batch_id)
+        each_batch(batch, batch_id)
+
+    _drive(stream.writeStream.outputMode(mode).foreachBatch(run), stage)
+    n = len(os.listdir(os.path.join(stage, "in")))
+    if len(batch_ids) != n:
+        raise RuntimeError(
+            f"{entry}: expected {n} micro-batches, one per arrival, "
+            f"ran {len(batch_ids)}"
+        )
 
 
 def stream_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -68,27 +154,17 @@ def stream_events_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     to cover all input. The batch oracle reproduces that cutoff with
     plain SQL (boundary semantics pinned by
     tests/test_streaming.py::test_append_mode_watermark_boundary)."""
-    import tempfile
-
     from archive_to_parquet_spark.streaming.events import windowed_event_counts
 
-    import shutil
-
-    schema = _read_events(spark, sf_dir).schema
-    # file-stream sources need a directory; stage the single parquet file
-    stage = tempfile.mkdtemp(prefix="stream_events_")
-    try:
-        shutil.copy(f"{sf_dir}/events.parquet", stage)
-        stream = spark.readStream.schema(schema).parquet(stage)
-        agg = windowed_event_counts(stream, "1 hour", watermark="2 hours")
-        return _drain_to_memory(spark, agg, "stream_hourly").select(
-            F.col("window_start").cast("long").alias("hour_sec"),
-            "event_type",
-            "n",
-            F.round("total_value", 4).alias("total_value"),
-        )
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
+    stage = _fresh_stage("stream_events_hourly", sf_dir)
+    stream = _arrive(spark, stage, [_read_events(spark, sf_dir)])
+    agg = windowed_event_counts(stream, "1 hour", watermark="2 hours")
+    return _drain_to_memory(spark, "stream_events_hourly", agg, stage).select(
+        F.col("window_start").cast("long").alias("hour_sec"),
+        "event_type",
+        "n",
+        F.round("total_value", 4).alias("total_value"),
+    )
 
 
 STREAM_EVENTS_HOURLY_SQL = """
@@ -118,26 +194,18 @@ def stream_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     the previous one still merges (pinned by a sf0.1 pair at exactly
     1800 s; the ``>=`` variant splits it and diverges) — then applies
     the same cutoff."""
-    import shutil
-    import tempfile
-
     from archive_to_parquet_spark.streaming.events import sessionized_counts_stream
 
-    schema = _read_events(spark, sf_dir).schema
-    stage = tempfile.mkdtemp(prefix="stream_sessionize_")
-    try:
-        shutil.copy(f"{sf_dir}/events.parquet", stage)
-        stream = spark.readStream.schema(schema).parquet(stage)
-        agg = sessionized_counts_stream(stream, gap="30 minutes", watermark="2 hours")
-        return _drain_to_memory(spark, agg, "stream_sess").select(
-            "user_id",
-            F.col("session_start").cast("long").alias("session_start"),
-            F.col("session_end").cast("long").alias("session_end"),
-            "n_events",
-            F.round("total_value", 4).alias("total_value"),
-        )
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
+    stage = _fresh_stage("stream_sessionize", sf_dir)
+    stream = _arrive(spark, stage, [_read_events(spark, sf_dir)])
+    agg = sessionized_counts_stream(stream, gap="30 minutes", watermark="2 hours")
+    return _drain_to_memory(spark, "stream_sessionize", agg, stage).select(
+        "user_id",
+        F.col("session_start").cast("long").alias("session_start"),
+        F.col("session_end").cast("long").alias("session_end"),
+        "n_events",
+        F.round("total_value", 4).alias("total_value"),
+    )
 
 
 STREAM_SESSIONIZE_SQL = """
@@ -176,29 +244,21 @@ def stream_click_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries a two-sided time-range predicate, so state stays bounded on
     a real stream; over the bounded input the inner join emits exactly
     the batch join result, so the SQL twin is an exact oracle."""
-    import shutil
-    import tempfile
-
     from archive_to_parquet_spark.streaming.events import interval_join_stream
 
-    schema = _read_events(spark, sf_dir).schema
-    stage = tempfile.mkdtemp(prefix="stream_cp_")
-    try:
-        shutil.copy(f"{sf_dir}/events.parquet", stage)
-        stream = spark.readStream.schema(schema).parquet(stage)
-        clicks = stream.filter(F.col("event_type") == "click")
-        purchases = stream.filter(F.col("event_type") == "purchase")
-        joined = interval_join_stream(clicks, purchases, within="1 hour")
-        return _drain_to_memory(spark, joined, "stream_cp").select(
-            F.col("l_id").alias("click_id"),
-            F.col("r_id").alias("purchase_id"),
-            F.col("l_user").alias("user_id"),
-            (F.col("r_time").cast("long") - F.col("l_time").cast("long")).alias(
-                "gap_sec"
-            ),
-        )
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
+    stage = _fresh_stage("stream_click_purchase", sf_dir)
+    stream = _arrive(spark, stage, [_read_events(spark, sf_dir)])
+    clicks = stream.filter(F.col("event_type") == "click")
+    purchases = stream.filter(F.col("event_type") == "purchase")
+    joined = interval_join_stream(clicks, purchases, within="1 hour")
+    return _drain_to_memory(spark, "stream_click_purchase", joined, stage).select(
+        F.col("l_id").alias("click_id"),
+        F.col("r_id").alias("purchase_id"),
+        F.col("l_user").alias("user_id"),
+        (F.col("r_time").cast("long") - F.col("l_time").cast("long")).alias(
+            "gap_sec"
+        ),
+    )
 
 
 STREAM_CLICK_PURCHASE_SQL = """
@@ -227,22 +287,14 @@ def stream_dedup_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     winners are not, so only keys are emitted), and over a bounded
     input it equals batch DISTINCT — the SQL twin is exact. State is
     watermark-bounded on a real stream."""
-    import shutil
-    import tempfile
-
     from archive_to_parquet_spark.streaming.events import dedup_stream
 
-    schema = _read_events(spark, sf_dir).schema
-    stage = tempfile.mkdtemp(prefix="stream_dedup_")
-    try:
-        shutil.copy(f"{sf_dir}/events.parquet", stage)
-        stream = spark.readStream.schema(schema).parquet(stage)
-        deduped = dedup_stream(stream, ["user_id", "event_type"], "2 hours")
-        return _drain_to_memory(spark, deduped, "stream_dedup").select(
-            "user_id", "event_type"
-        )
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
+    stage = _fresh_stage("stream_dedup_keys", sf_dir)
+    stream = _arrive(spark, stage, [_read_events(spark, sf_dir)])
+    deduped = dedup_stream(stream, ["user_id", "event_type"], "2 hours")
+    return _drain_to_memory(spark, "stream_dedup_keys", deduped, stage).select(
+        "user_id", "event_type"
+    )
 
 
 STREAM_DEDUP_KEYS_SQL = """
@@ -252,12 +304,12 @@ SELECT DISTINCT user_id, event_type FROM events
 
 def stream_neardup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Continuous near-dup over a documents STREAM: the corpus arrives
-    as 4 slice files (doc_id % 4), one per micro-batch
-    (maxFilesPerTrigger=1); each batch probes the accumulated MinHash
-    band index for cross-batch collisions, self-joins for intra-batch
-    ones, and appends its own band rows (streaming/neardup.py — the
-    probe+append loop of dedup_incremental driven by Structured
-    Streaming foreachBatch). The emitted pair set is invariant to
+    as 4 slice files (doc_id % 4), one per micro-batch; each batch
+    probes the accumulated MinHash band index for cross-batch
+    collisions, self-joins for intra-batch ones, and appends its own
+    band rows (streaming/neardup.py — the probe+append loop of
+    dedup_incremental driven by Structured Streaming foreachBatch).
+    The emitted pair set is invariant to
     batch boundaries (each colliding pair is found exactly once, by
     the later arrival), so over the bounded stream it equals batch
     all-pairs banding; after exact-Jaccard confirmation (≥ 0.5) the
@@ -265,56 +317,32 @@ def stream_neardup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     as dedup_minhash. The reference has no near-dup tier (its
     `unique` is exact sha256, src/lib.rs:30); this is the streaming
     extension of that dedup model."""
-    import glob
-    import os
-    import shutil
-    import tempfile
-
     from archive_to_parquet_spark.operators.candidates import exact_jaccard
     from archive_to_parquet_spark.operators.dedup import shingle_sets
-    from archive_to_parquet_spark.streaming.neardup import neardup_stream
+    from archive_to_parquet_spark.streaming.neardup import probe_and_append
 
     docs = _t(spark, sf_dir, "documents")
-    root = tempfile.mkdtemp(prefix="stream_neardup_")
-    stage = os.path.join(root, "in")
-    os.makedirs(stage)
-    try:
-        for k in range(4):
-            tmp = os.path.join(root, f"slice{k}")
-            docs.filter(F.col("doc_id") % 4 == k).coalesce(1).write.parquet(tmp)
-            part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-            dst = os.path.join(stage, f"{k:02d}.parquet")
-            shutil.copy(part, dst)
-            t = 1_700_000_000 + k * 10  # deterministic arrival order
-            os.utime(dst, (t, t))
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        q = neardup_stream(
-            spark,
-            stream,
-            index_dir=os.path.join(root, "index"),
-            pairs_dir=os.path.join(root, "pairs"),
-            checkpoint_dir=os.path.join(root, "ckpt"),
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        cand = (
-            spark.read.parquet(os.path.join(root, "pairs"))
-            .drop("batch_id")  # per-batch partition of the pair sink
-            .dropDuplicates(["id_a", "id_b"])
-            .localCheckpoint(eager=True)  # staging dir is removed below
-        )
-        sh = shingle_sets(docs, "doc_id", "text", 3)
-        return exact_jaccard(cand, sh, 0.5).select(
-            "id_a", "id_b", F.round("jaccard", 6).alias("jaccard")
-        )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    stage = _fresh_stage("stream_neardup_incremental", sf_dir)
+    index_dir = os.path.join(stage, "index")
+    pairs_dir = os.path.join(stage, "pairs")
+
+    def each_batch(batch: DataFrame, batch_id: int) -> None:
+        if not batch.isEmpty():
+            probe_and_append(
+                spark, batch, index_dir, pairs_dir, batch_id=batch_id
+            )
+
+    stream = _arrive(spark, stage, _slices(docs, "doc_id"))
+    _drain_each_batch("stream_neardup_incremental", stream, stage, each_batch)
+    cand = (
+        spark.read.parquet(pairs_dir)
+        .drop("batch_id")  # per-batch partition of the pair sink
+        .dropDuplicates(["id_a", "id_b"])
+    )
+    sh = shingle_sets(docs, "doc_id", "text", 3)
+    return exact_jaccard(cand, sh, 0.5).select(
+        "id_a", "id_b", F.round("jaccard", 6).alias("jaccard")
+    )
 
 
 STREAM_NEARDUP_INCREMENTAL_SQL = r"""
@@ -358,11 +386,10 @@ def stream_parse_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     — what a continuously-ingesting corpus pipeline runs. Bounded input
     driven to completion makes the result equal the batch closed form,
     which the oracle states. State is the (ok, lang) count table —
-    tiny, watermark-free by design.
+    tiny, watermark-free by design. The shards are JSONL text, so they
+    arrive as two text files written here rather than through the
+    parquet stager.
     """
-    import shutil
-    import tempfile
-
     docs = _t(spark, sf_dir, "documents")
     valid = F.to_json(
         F.struct(F.col("doc_id").alias("id"), F.col("lang").alias("lang"))
@@ -370,31 +397,27 @@ def stream_parse_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     raw = F.when(F.col("doc_id") % 5 == 0, F.substring(valid, 1, 10)).otherwise(
         valid
     )
-    stage = tempfile.mkdtemp(prefix="stream_quarantine_")
-    try:
-        docs.select(raw.alias("value")).coalesce(2).write.mode(
-            "overwrite"
-        ).text(stage)
-        stream = spark.readStream.format("text").load(stage)
-        parsed = F.from_json(
-            F.col("value"),
-            "id LONG, lang STRING, _bad STRING",
-            {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_bad"},
+    stage = _fresh_stage("stream_parse_quarantine", sf_dir)
+    shards = os.path.join(stage, "in")
+    docs.select(raw.alias("value")).coalesce(2).write.text(shards)
+    stream = spark.readStream.format("text").load(shards)
+    parsed = F.from_json(
+        F.col("value"),
+        "id LONG, lang STRING, _bad STRING",
+        {"mode": "PERMISSIVE", "columnNameOfCorruptRecord": "_bad"},
+    )
+    agg = (
+        stream.select(parsed.alias("p"))
+        .select(
+            F.col("p._bad").isNull().cast("int").alias("ok"),
+            F.col("p.lang").alias("parsed_lang"),
         )
-        agg = (
-            stream.select(parsed.alias("p"))
-            .select(
-                F.col("p._bad").isNull().cast("int").alias("ok"),
-                F.col("p.lang").alias("parsed_lang"),
-            )
-            .groupBy("ok", "parsed_lang")
-            .agg(F.count("*").alias("n"))
-        )
-        return _drain_to_memory(
-            spark, agg, "stream_quarantine", "complete"
-        ).select("ok", "parsed_lang", "n")
-    finally:
-        shutil.rmtree(stage, ignore_errors=True)
+        .groupBy("ok", "parsed_lang")
+        .agg(F.count("*").alias("n"))
+    )
+    return _drain_to_memory(
+        spark, "stream_parse_quarantine", agg, stage, "complete"
+    ).select("ok", "parsed_lang", "n")
 
 
 STREAM_PARSE_QUARANTINE_SQL = """
@@ -429,13 +452,11 @@ def stream_archive_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     value-hash check, not a rows-only concession.
     """
     import gzip
-    import shutil
 
     from archive_to_parquet_spark.sources.datasource import register
 
     register(spark)
-    stage = _stage_dir("streamwarc", sf_dir)
-    shutil.rmtree(stage, ignore_errors=True)
+    stage = _fresh_stage("stream_archive_ingest", sf_dir)
     watch = os.path.join(stage, "in")
     out = os.path.join(stage, "out")
     ckpt = os.path.join(stage, "ckpt")
@@ -483,8 +504,6 @@ def stream_archive_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _stream_ingest_oracle_sql() -> str:
-    import hashlib
-
     rows = ",\n  ".join(
         f"('{uri}', {len(payload)}, "
         f"'{hashlib.sha256(payload).hexdigest()}', 'unknown')"
@@ -507,46 +526,40 @@ STREAM_ARCHIVE_INGEST_SQL = _stream_ingest_oracle_sql()
 def stream_stateful_user_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ``applyInPandasWithState`` custom stateful operator
     (streaming/stateful.py running_user_stats) driver-checked: a subset
-    of events streams through a real query (file source, one
-    availableNow-style pass, foreachBatch parquet staging because
-    update output mode has no file sink), and the per-user lifetime
-    stats must equal the batch ground truth — the oracle states it as
-    plain SQL. Every field is in the contract: counts and min/max are
-    exact set extrema, and the running total accumulates integer CENTS
-    inside the state (streaming/stateful.py), so it is batch-order- and
-    partitioning-independent and compares exactly against the oracle's
-    integer-cents sum.
+    of events streams through a real query in 4 micro-batches
+    (event_id % 4 slices, one file per trigger), and the per-user
+    lifetime stats must equal the batch ground truth — the oracle
+    states it as plain SQL. Update mode emits only the users a batch
+    touched, carrying the stats accumulated in the state store, so
+    foreachBatch writes each batch to its own ``batch_id=N`` partition
+    (overwrite: a replay rewrites its own rows; update mode has no file
+    sink) and the result takes each user's row from the latest batch
+    that emitted it. Every field is in the contract: counts and min/max
+    are exact set extrema, and the running total accumulates integer
+    CENTS inside the state (streaming/stateful.py), so it is
+    batch-order- and partitioning-independent and compares exactly
+    against the oracle's integer-cents sum.
     """
-    import shutil
-
     from archive_to_parquet_spark.streaming.stateful import running_user_stats
 
-    stage = _stage_dir("statefuluser", sf_dir)
-    shutil.rmtree(stage, ignore_errors=True)
-    src_dir = os.path.join(stage, "in")
+    stage = _fresh_stage("stream_stateful_user_stats", sf_dir)
     out = os.path.join(stage, "out")
-    ckpt = os.path.join(stage, "ckpt")
-    subset = _events(spark, sf_dir).filter(F.col("user_id") < 20).select(
-        "user_id", "value"
+    subset = _read_events(spark, sf_dir).filter(F.col("user_id") < 20).select(
+        "event_id", "user_id", "value"
     )
-    subset.write.parquet(src_dir)
-
-    schema = spark.read.parquet(src_dir).schema
-    stream = spark.readStream.schema(schema).parquet(src_dir)
-    stats = running_user_stats(stream)
-    q = (
-        stats.writeStream.outputMode("update")
-        .foreachBatch(
-            lambda batch_df, _bid: batch_df.write.mode("overwrite").parquet(out)
-        )
-        .option("checkpointLocation", ckpt)
-        .start()
+    stream = _arrive(spark, stage, _slices(subset, "event_id"))
+    _drain_each_batch(
+        "stream_stateful_user_stats",
+        running_user_stats(stream.select("user_id", "value")),
+        stage,
+        lambda batch, batch_id: batch.write.mode("overwrite").parquet(
+            os.path.join(out, f"batch_id={batch_id}")
+        ),
+        mode="update",
     )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.read.parquet(out).select(
+    rows = spark.read.parquet(out)
+    latest = rows.groupBy("user_id").agg(F.max("batch_id").alias("batch_id"))
+    return rows.join(latest, ["user_id", "batch_id"]).select(
         "user_id", "n_events", "total_value", "min_value", "max_value"
     )
 
@@ -581,69 +594,41 @@ def stream_ann_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     appends twice) cannot change the answer: dedup rides the layout
     instead of needing a transactional sink.
 
-    Scale shape, asserted in-query: the profile groupBy("bucket") —
-    and even its two-phase DISTINCT expansion, whose keys (bucket,
-    vec_id) ⊇ the bucket key — plans with ZERO shuffle Exchanges over
-    the appended table. At 100 TB this is the daily health check of
-    the index you serve from; it never moves a row.
+    Scale shape, checked in-query (RuntimeError otherwise): the profile
+    groupBy("bucket") — and even its two-phase DISTINCT expansion,
+    whose keys (bucket, vec_id) ⊇ the bucket key — plans with ZERO
+    shuffle Exchanges over the appended table. At 100 TB this is the
+    daily health check of the index you serve from; it never moves a
+    row.
 
     Machinery lives in streaming/ann_index.py (replay idempotence has
     its own crash-replay test there)."""
-    import glob
-    import shutil
-    import tempfile
-    import uuid
-
-    from archive_to_parquet_spark.operators.similarity import (
-        fixed_hyperplanes,
-    )
     from archive_to_parquet_spark.plans.bucketing import plan_has_exchange
     from archive_to_parquet_spark.streaming.ann_index import (
-        ann_index_stream,
+        append_vectors_batch,
         index_profile,
     )
 
     emb = _t(spark, sf_dir, "embeddings")
     planes = fixed_hyperplanes(_ALSHBK_PLANES, _ALSHBK_DIM)
-    table = f"saidx_{uuid.uuid4().hex[:8]}"
-    root = tempfile.mkdtemp(prefix="stream_ann_idx_")
-    stage = os.path.join(root, "in")
-    os.makedirs(stage)
-    try:
-        for k in range(4):
-            tmp = os.path.join(root, f"slice{k}")
-            emb.filter(F.col("vec_id") % 4 == k).coalesce(1).write.parquet(tmp)
-            part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-            dst = os.path.join(stage, f"{k:02d}.parquet")
-            shutil.copy(part, dst)
-            t = 1_700_000_000 + k * 10  # deterministic arrival order
-            os.utime(dst, (t, t))
-        stream = (
-            spark.readStream.schema(emb.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
+    table = "stream_ann_idx_" + hashlib.md5(sf_dir.encode()).hexdigest()[:10]
+    spark.sql(f"DROP TABLE IF EXISTS {table}")
+    stage = _fresh_stage("stream_ann_index_append", sf_dir)
+    idx = os.path.join(stage, "idx")
+    stream = _arrive(spark, stage, _slices(emb, "vec_id"))
+    _drain_each_batch(
+        "stream_ann_index_append",
+        stream,
+        stage,
+        lambda batch, _batch_id: append_vectors_batch(batch, table, idx, planes),
+    )
+    profile = index_profile(spark, table)
+    if plan_has_exchange(profile):
+        raise RuntimeError(
+            "stream_ann_index_append: the bucketed index profile plans a "
+            "shuffle Exchange"
         )
-        q = ann_index_stream(
-            stream,
-            table,
-            os.path.join(root, "idx"),
-            planes,
-            checkpoint_dir=os.path.join(root, "ckpt"),
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-
-        profile = index_profile(spark, table)
-        assert not plan_has_exchange(profile), (
-            "bucketed index profile gained a shuffle"
-        )
-        # the staging dir (bucket files included) is removed below
-        return profile.localCheckpoint(eager=True)
-    finally:
-        spark.sql(f"DROP TABLE IF EXISTS {table}")
-        shutil.rmtree(root, ignore_errors=True)
+    return profile
 
 
 def _stream_ann_idx_oracle_sql() -> str:
@@ -689,70 +674,40 @@ def stream_suffix_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly once, stored state is probe+append; persisted bucketed on
     ``pfx`` (the bucketed twin's layout) the probe never re-shuffles
     the index."""
-    import glob
-    import shutil
-    import tempfile
-
+    from archive_to_parquet_spark.streaming.neardup import _index_exists
     from archive_to_parquet_spark.streaming.suffix_index import (
-        suffix_index_stream,
+        probe_and_append_prefixes,
     )
 
     docs = _t(spark, sf_dir, "documents")
-    root = tempfile.mkdtemp(prefix="stream_sfx_")
-    stage = os.path.join(root, "in")
-    os.makedirs(stage)
-    try:
-        for k in range(4):
-            tmp = os.path.join(root, f"slice{k}")
-            docs.filter(F.col("doc_id") % 4 == k).coalesce(1).write.parquet(
-                tmp
-            )
-            part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-            dst = os.path.join(stage, f"{k:02d}.parquet")
-            shutil.copy(part, dst)
-            t = 1_700_000_000 + k * 10  # deterministic arrival order
-            os.utime(dst, (t, t))
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        q = suffix_index_stream(
-            spark,
-            stream,
-            index_dir=os.path.join(root, "index"),
-            delta_dir=os.path.join(root, "delta"),
-            checkpoint_dir=os.path.join(root, "ckpt"),
-        )
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-        delta_dir = os.path.join(root, "delta")
-        from archive_to_parquet_spark.streaming.neardup import _index_exists
+    stage = _fresh_stage("stream_suffix_incremental", sf_dir)
+    index_dir = os.path.join(stage, "index")
+    delta_dir = os.path.join(stage, "delta")
 
-        if not _index_exists(delta_dir):
-            # a corpus where no batch yields a ≥25-char word-start
-            # suffix writes no delta at all; the oracle returns 0 rows
-            # — return the same empty relation instead of crashing on
-            # a missing parquet path
-            return spark.createDataFrame(
-                [],
-                "pfx string, first_doc bigint, n_suffixes bigint,"
-                " first_batch bigint",
+    def each_batch(batch: DataFrame, batch_id: int) -> None:
+        if not batch.isEmpty():
+            probe_and_append_prefixes(
+                spark, batch, index_dir, delta_dir, batch_id=batch_id
             )
-        return (
-            spark.read.parquet(delta_dir)
-            .select(
-                "pfx",
-                "first_doc",
-                "n_suffixes",
-                F.col("batch_id").cast("bigint").alias("first_batch"),
-            )
-            .localCheckpoint(eager=True)  # staging dir is removed below
+
+    stream = _arrive(spark, stage, _slices(docs, "doc_id"))
+    _drain_each_batch("stream_suffix_incremental", stream, stage, each_batch)
+    if not _index_exists(delta_dir):
+        # a corpus where no batch yields a ≥25-char word-start
+        # suffix writes no delta at all; the oracle returns 0 rows
+        # — return the same empty relation instead of crashing on
+        # a missing parquet path
+        return spark.createDataFrame(
+            [],
+            "pfx string, first_doc bigint, n_suffixes bigint,"
+            " first_batch bigint",
         )
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    return spark.read.parquet(delta_dir).select(
+        "pfx",
+        "first_doc",
+        "n_suffixes",
+        F.col("batch_id").cast("bigint").alias("first_batch"),
+    )
 
 
 STREAM_SUFFIX_INCREMENTAL_SQL = f"""
@@ -796,55 +751,24 @@ def stream_constraint_monitor(spark: SparkSession, sf_dir: str) -> DataFrame:
     report aggregates batch-count rows. The monitor never rescans
     arrived data — the same never-rescan-the-base argument as
     ``maintenance_incremental_agg``, carried to quality metrics."""
-    import glob
-    import shutil
-    import tempfile
-
     from archive_to_parquet_spark.streaming.quality import (
-        constraint_monitor_stream,
         constraint_report,
+        write_batch_partial,
     )
 
     events = _read_events(spark, sf_dir).select(
         "event_id", "event_type", "value", "props"
     )
-    root = tempfile.mkdtemp(prefix="stream_cmon_")
-    stage = os.path.join(root, "in")
-    os.makedirs(stage)
-    try:
-        for k in range(4):
-            tmp = os.path.join(root, f"slice{k}")
-            events.filter(F.col("event_id") % 4 == k).coalesce(
-                1
-            ).write.parquet(tmp)
-            part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-            dst = os.path.join(stage, f"{k:02d}.parquet")
-            shutil.copy(part, dst)
-            t = 1_700_000_000 + k * 10  # deterministic arrival order
-            os.utime(dst, (t, t))
-        stream = (
-            spark.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        q = constraint_monitor_stream(
-            stream,
-            os.path.join(root, "state"),
-            os.path.join(root, "ckpt"),
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-        n_batches = len(glob.glob(os.path.join(root, "state", "batch=*")))
-        assert n_batches == 4, (
-            f"expected 4 micro-batch partials, found {n_batches}"
-        )
-        return constraint_report(
-            spark, os.path.join(root, "state")
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    stage = _fresh_stage("stream_constraint_monitor", sf_dir)
+    state = os.path.join(stage, "state")
+    stream = _arrive(spark, stage, _slices(events, "event_id"))
+    _drain_each_batch(
+        "stream_constraint_monitor",
+        stream,
+        stage,
+        lambda batch, batch_id: write_batch_partial(batch, batch_id, state),
+    )
+    return constraint_report(spark, state)
 
 
 STREAM_CONSTRAINT_MONITOR_SQL = """
@@ -897,54 +821,22 @@ def stream_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: per batch one map-side-combinable fold to ≤10 rows;
     the report aggregates batch_count·10 rows — a drift dashboard over
     a 100-TB/day stream costs a 10-integer fold per trigger."""
-    import glob
-    import shutil
-    import tempfile
-
     from archive_to_parquet_spark.streaming.quality import (
-        psi_monitor_stream,
         psi_report,
+        write_psi_partial,
     )
 
     events = _read_events(spark, sf_dir).select("event_id", "value")
-    root = tempfile.mkdtemp(prefix="stream_psi_")
-    stage = os.path.join(root, "in")
-    os.makedirs(stage)
-    try:
-        for k in range(4):
-            tmp = os.path.join(root, f"slice{k}")
-            events.filter(F.col("event_id") % 4 == k).coalesce(
-                1
-            ).write.parquet(tmp)
-            part = glob.glob(os.path.join(tmp, "part-*.parquet"))[0]
-            dst = os.path.join(stage, f"{k:02d}.parquet")
-            shutil.copy(part, dst)
-            t = 1_700_000_000 + k * 10  # deterministic arrival order
-            os.utime(dst, (t, t))
-        stream = (
-            spark.readStream.schema(events.schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(stage)
-        )
-        q = psi_monitor_stream(
-            stream,
-            os.path.join(root, "state"),
-            os.path.join(root, "ckpt"),
-        )
-        try:
-            q.awaitTermination()
-        finally:
-            q.stop()
-        n_batches = len(glob.glob(os.path.join(root, "state", "batch=*")))
-        if n_batches != 4:
-            raise RuntimeError(
-                f"expected 4 micro-batch partials, found {n_batches}"
-            )
-        return psi_report(
-            spark, os.path.join(root, "state")
-        ).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(root, ignore_errors=True)
+    stage = _fresh_stage("stream_psi_drift", sf_dir)
+    state = os.path.join(stage, "state")
+    stream = _arrive(spark, stage, _slices(events, "event_id"))
+    _drain_each_batch(
+        "stream_psi_drift",
+        stream,
+        stage,
+        lambda batch, batch_id: write_psi_partial(batch, batch_id, state),
+    )
+    return psi_report(spark, state)
 
 
 ENTRIES = {

@@ -52,34 +52,12 @@ def append_vectors_batch(
     )
 
 
-def ann_index_stream(
-    stream: DataFrame,
-    table: str,
-    path: str,
-    planes: list[list[float]],
-    checkpoint_dir: str,
-    num_buckets: int = 8,
-):
-    """Wire a vector stream into the index via foreachBatch. Returns
-    the started StreamingQuery (caller drives/stops it)."""
-
-    def _append(batch_df: DataFrame, _batch_id: int) -> None:
-        append_vectors_batch(
-            batch_df, table, path, planes, num_buckets=num_buckets
-        )
-
-    return (
-        stream.writeStream.foreachBatch(_append)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-
-
 def index_profile(spark: SparkSession, table: str) -> DataFrame:
     """Per-bucket index health: distinct vector count + first member.
     Grouping keys of both phases of the DISTINCT expansion contain the
     bucket key, so over the bucketed table this plans with ZERO shuffle
-    Exchanges (asserted in-query by the catalog entry)."""
+    Exchanges (checked in-query by the catalog entry, which raises
+    RuntimeError otherwise)."""
     return (
         spark.table(table)
         .groupBy("bucket")

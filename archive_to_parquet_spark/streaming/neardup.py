@@ -3,8 +3,9 @@ stream — the 100 TB continuous-dedup loop under Structured Streaming.
 
 The batch tier already has the two halves: `minhash_band_index` (the
 persistable LSH state) and `dedup_against_index` (probe a batch
-without re-banding the corpus). This module drives them from
-`foreachBatch`: every micro-batch
+without re-banding the corpus). `probe_and_append` is the
+`foreachBatch` body that joins them (the catalog entry
+`stream_neardup_incremental` drives it): every micro-batch
 
 1. probes the ACCUMULATED band index for cross-batch collisions
    (batch bands ⨝ index bands on (band_idx, band_hash) — the batch
@@ -131,43 +132,4 @@ def probe_and_append(
     )
     bidx.write.mode("overwrite").parquet(
         os.path.join(index_dir, f"batch_id={batch_id}")
-    )
-
-
-def neardup_stream(
-    spark: SparkSession,
-    stream: DataFrame,
-    index_dir: str,
-    pairs_dir: str,
-    checkpoint_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 32,
-    bands: int = 8,
-    shingle_n: int = 3,
-):
-    """Wire a streaming DataFrame of documents into the probe/append
-    loop. Returns the started StreamingQuery; drive it with
-    ``processAllAvailable()`` for a bounded input or leave it running
-    for continuous ingest."""
-
-    def _each_batch(batch: DataFrame, batch_id: int) -> None:
-        if not batch.isEmpty():
-            probe_and_append(
-                spark,
-                batch,
-                index_dir,
-                pairs_dir,
-                id_col,
-                text_col,
-                num_hashes,
-                bands,
-                shingle_n,
-                batch_id=batch_id,
-            )
-
-    return (
-        stream.writeStream.foreachBatch(_each_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
     )

@@ -67,20 +67,6 @@ def write_batch_partial(batch: DataFrame, batch_id: int, state_dir: str) -> None
     )
 
 
-def constraint_monitor_stream(
-    stream: DataFrame, state_dir: str, checkpoint_dir: str
-):
-    """Wire the partial-fold into a foreachBatch query."""
-    return (
-        stream.writeStream.foreachBatch(
-            lambda b, bid: write_batch_partial(b, bid, state_dir)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
 def constraint_report(spark: SparkSession, state_dir: str) -> DataFrame:
     """Merge the per-batch partials into the constraint report — pure
     summation, so the report is batch-boundary invariant."""
@@ -122,18 +108,6 @@ def write_psi_partial(batch: DataFrame, batch_id: int, state_dir: str) -> None:
     fold cannot drift from the certified batch binning."""
     psi_bin_counts(batch).write.mode("overwrite").parquet(
         os.path.join(state_dir, f"batch={batch_id}")
-    )
-
-
-def psi_monitor_stream(stream: DataFrame, state_dir: str, checkpoint_dir: str):
-    """Wire the PSI partial-fold into a foreachBatch query."""
-    return (
-        stream.writeStream.foreachBatch(
-            lambda b, bid: write_psi_partial(b, bid, state_dir)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
     )
 
 

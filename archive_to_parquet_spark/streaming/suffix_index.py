@@ -105,39 +105,6 @@ def probe_and_append_prefixes(
         agg.unpersist()
 
 
-def suffix_index_stream(
-    spark: SparkSession,
-    stream: DataFrame,
-    index_dir: str,
-    delta_dir: str,
-    checkpoint_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-):
-    """Wire a streaming DataFrame of documents into the prefix
-    probe/append loop. Returns the started StreamingQuery; drive with
-    ``processAllAvailable()`` for bounded input or leave running for
-    continuous ingest."""
-
-    def _each_batch(batch: DataFrame, batch_id: int) -> None:
-        if not batch.isEmpty():
-            probe_and_append_prefixes(
-                spark,
-                batch,
-                index_dir,
-                delta_dir,
-                id_col,
-                text_col,
-                batch_id=batch_id,
-            )
-
-    return (
-        stream.writeStream.foreachBatch(_each_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .start()
-    )
-
-
 def aged_batch_ids(index_dir: str, max_batch_id: int) -> list[int]:
     """Batch ids at or below the fold watermark — a METADATA decision
     read from the partition directory names (the maintenance-family

@@ -22,6 +22,7 @@ import pytest
 
 from archive_to_parquet_spark.operators.multimodal import (
     _JPEG_ZIGZAG,
+    _hash_feature,
     _jpeg_pixels,
     _jpeg_unsupported_kind,
     _real_decode_image,
@@ -602,6 +603,22 @@ def test_truncated_stream_degrades_to_none():
     img = np.full((16, 16), 100, dtype=np.uint8)
     blob = make_jpeg_gray(img)
     assert _jpeg_pixels(blob[: len(blob) // 2]) is None
+
+
+def test_oversized_sof_degrades_to_header_tier():
+    """A SOF declaring 65535×65535 must not size coefficient stores
+    from the header (that raised MemoryError): pixel decode is None,
+    and the real-decode tier keeps the declared dims with the hash
+    feature."""
+    blob = make_jpeg_gray(np.full((16, 16), 100, dtype=np.uint8))
+    sof = blob.index(b"\xff\xc0")  # marker, length(2), precision, H, W
+    patched = (
+        blob[: sof + 5] + struct.pack(">HH", 65535, 65535) + blob[sof + 9 :]
+    )
+    assert decode_pixels(patched) is None
+    w, h, channels, feature = _real_decode_image(patched)
+    assert (w, h, channels) == (65535, 65535, 1)
+    assert feature == _hash_feature(patched)
 
 
 def test_progressive_supported_arithmetic_still_loud():

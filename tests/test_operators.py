@@ -1280,6 +1280,24 @@ def test_bloom_probe_plan_broadcasts_bits(spark):
     assert "BroadcastHashJoin" in plan
 
 
+def test_bloom_filter_rejects_more_hashes_than_md5_slices(spark):
+    """md5 yields 4 non-overlapping 8-hex slices; a fifth position has
+    no slice to come from. The check must survive ``python -O``."""
+    from archive_to_parquet_spark.operators.dedup import bloom_filter_bits
+
+    df = spark.createDataFrame([(1, "a")], ["id", "text"])
+    with pytest.raises(ValueError, match="num_hashes=5"):
+        bloom_filter_bits(df, "text", num_bits=256, num_hashes=5)
+
+
+def test_minhash_band_index_rejects_bands_not_dividing_hashes(spark):
+    from archive_to_parquet_spark.operators.dedup import minhash_band_index
+
+    df = spark.createDataFrame([(1, "a b c d")], ["doc_id", "text"])
+    with pytest.raises(ValueError, match="must divide"):
+        minhash_band_index(df, num_hashes=32, bands=5)
+
+
 def test_triangle_count_known_graphs(spark):
     from archive_to_parquet_spark.operators.graph import triangle_count
 

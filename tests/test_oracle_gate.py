@@ -70,6 +70,7 @@ def test_entry_matches_oracle(spark, oracle, name):
     build = partial(QUERIES[name], spark, SF_DIR)
     if catalog.family(name) == "streaming":  # executes while it is built
         df = build()
+        assert spark.streams.active == [], f"{name}: left a query running"
     else:
         df, rec = audit_build(build)
         assert name in PINS, f"{name}: no PLAN_PINS.json record"

@@ -629,3 +629,35 @@ def test_suffix_stream_empty_corpus_yields_empty_frame(spark, tmp_path):
     out = stream_suffix_incremental(spark, sf_dir)
     assert out.count() == 0
     assert out.columns == ["pfx", "first_doc", "n_suffixes", "first_batch"]
+
+
+def test_stream_stateful_keeps_users_absent_from_later_batches(spark, tmp_path):
+    """Events arrive in 4 event_id % 4 slices and update mode emits
+    only the users a micro-batch touched: user 1, whose events are all
+    in slice 0, must still come back with its exact lifetime stats."""
+    from archive_to_parquet_spark.queries.streaming import (
+        stream_stateful_user_stats,
+    )
+
+    sf_dir = str(tmp_path / "sf_tiny")
+    events = [  # (event_id, user_id, value)
+        (0, 1, 1.25), (4, 1, 2.5), (8, 1, 0.75),
+        (1, 2, 3.0), (2, 2, 0.5), (3, 2, 10.0), (5, 2, 4.25),
+        (6, 3, 7.5), (7, 3, 0.25),
+        (9, 25, 99.0),  # user_id >= 20 is outside the entry's subset
+    ]
+    spark.createDataFrame(
+        [(e, 1_700_000_000_000_000_000 + e, u, "click", v, None)
+         for e, u, v in events],
+        "event_id long, ts long, user_id long, event_type string,"
+        " value double, props string",
+    ).write.parquet(f"{sf_dir}/events.parquet")
+    got = {
+        r.user_id: (r.n_events, r.total_value, r.min_value, r.max_value)
+        for r in stream_stateful_user_stats(spark, sf_dir).collect()
+    }
+    assert got == {
+        1: (3, 4.5, 0.75, 2.5),
+        2: (4, 17.75, 0.5, 10.0),
+        3: (2, 7.75, 0.25, 7.5),
+    }
