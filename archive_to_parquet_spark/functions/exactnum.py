@@ -128,10 +128,3 @@ def ratio_half_up(num_agg: str, den_agg: str, dp: int, alias: str) -> Column:
         f" div (2 * {den_agg}) as double) / {s}.0"
     ).alias(alias)
 
-
-def ratio_half_up_sql(num_agg: str, den_agg: str, dp: int) -> str:
-    s = 10**dp
-    return (
-        f"CAST((2 * {num_agg} * {s} + {den_agg})"
-        f" // (2 * {den_agg}) AS BIGINT) / {s}.0"
-    )

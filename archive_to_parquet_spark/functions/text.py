@@ -295,17 +295,6 @@ def redact_pii_col(text: Column | str) -> Column:
     return col
 
 
-# -- document fingerprinting ---------------------------------------------------
-
-
-def fingerprint64_col(text: Column | str) -> Column:
-    """64-bit content fingerprint: xxhash64 of the whitespace-normalized,
-    lowercased text. Pure expression; stable across runs/executors."""
-    col = F.col(text) if isinstance(text, str) else text
-    normalized = F.lower(F.regexp_replace(F.trim(col), r"\s+", " "))
-    return F.xxhash64(normalized)
-
-
 # -- SimHash ------------------------------------------------------------------
 #
 # SimHash is computed fully JVM-side: see

@@ -822,7 +822,7 @@ def source_pruned_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``columns=(source, path, size, hash, format)`` — the projection the
     Python DataSource API cannot push automatically, threaded into the
     walker explicitly. Entry payloads are stream-hashed but NEVER
-    buffered (sources/walker._hashed_meta keeps only the 262-byte sniff
+    buffered (sources/walker._hashed_read keeps only the 262-byte sniff
     peek); ``content`` is absent from the scan's output schema
     entirely, not dropped afterwards. The oracle is the construction
     literals (size, sha256, refined format — including an executable

@@ -22,6 +22,7 @@ from __future__ import annotations
 import glob
 import hashlib
 import os
+import re
 import shutil
 import uuid
 from collections.abc import Callable
@@ -109,7 +110,13 @@ def _drain_to_memory(
     mode: str = "append",
 ) -> DataFrame:
     """Drive ``stream`` into a fresh memory table named
-    ``{entry}_<8 hex>`` (output ``mode``) and return that table."""
+    ``{entry}_<8 hex>`` (output ``mode``) and return that table. The
+    entry's memory tables from earlier builds are dropped first, so a
+    session holds the rows of one build per entry."""
+    earlier = re.compile(rf"{entry}_[0-9a-f]{{8}}")
+    for table in spark.catalog.listTables():
+        if table.isTemporary and earlier.fullmatch(table.name):
+            spark.catalog.dropTempView(table.name)
     name = f"{entry}_{uuid.uuid4().hex[:8]}"
     _drive(
         stream.writeStream.outputMode(mode).format("memory").queryName(name),

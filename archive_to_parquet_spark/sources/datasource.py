@@ -117,26 +117,6 @@ def _is_growable(path: str) -> bool:
     return path.endswith((".warc.gz", ".warc"))
 
 
-class _BoundedTail:
-    """Sequential reader over a file's byte range [start, end) — pins a
-    micro-batch to the size recorded in its offset even if the file
-    keeps growing while we read (exactly-once replay needs the range,
-    not 'to EOF')."""
-
-    def __init__(self, fh, start: int, end: int):
-        fh.seek(start)
-        self._fh = fh
-        self._left = end - start
-
-    def read(self, n: int = -1) -> bytes:
-        if self._left <= 0:
-            return b""
-        n = self._left if n is None or n < 0 else min(n, self._left)
-        data = self._fh.read(n)
-        self._left -= len(data)
-        return data
-
-
 class ArchiveStreamReader(SimpleDataSourceStreamReader):
     """Streaming variant: each micro-batch walks archives that appeared
     under the glob since the last committed offset — plus, for
@@ -168,11 +148,15 @@ class ArchiveStreamReader(SimpleDataSourceStreamReader):
         return dict(processed)
 
     def _walk_range(self, path: str, start_b: int, end_b: int):
-        from archive_to_parquet_spark.sources.walker import walk_stream
+        from archive_to_parquet_spark.sources.walker import _Bounded, walk_stream
 
+        # the byte range pins a micro-batch to the size recorded in its
+        # offset even if the file keeps growing while we read
+        # (exactly-once replay needs the range, not 'to EOF')
         names = [c for c in ENTRY_COLUMNS if self.convert.wants(c)]
         with open(path, "rb") as fh:
-            tail = _BoundedTail(fh, start_b, end_b)
+            fh.seek(start_b)
+            tail = _Bounded(fh, end_b - start_b)
             for r in walk_stream(path, tail, end_b - start_b, self.convert):
                 yield tuple(getattr(r, c) for c in names)
 

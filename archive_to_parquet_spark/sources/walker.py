@@ -8,6 +8,13 @@ size-balanced bin of input archives per task, so the cluster
 parallelizes across inputs and everything downstream is stock
 DataFrame ops.
 
+Every stream the walk reads (the input, each decoder, each archive
+member) is read through one ``_Reader``, the reference's one peekable
+reader under the decoder and the archive reader
+(src/anyreader/compression.rs:8-32): the sniff pushes its peeks back
+into it, the member walks and the content copy read it directly, and
+it is the one place where a decoder or container error ends a stream.
+
 Reference semantics preserved (file:line into /root/reference/):
 
 - depth-first walk, pre/post archive hooks: src/anyreader_walker/stack.rs:7-40
@@ -92,12 +99,12 @@ def _find_zstd_bin() -> str | None:
 
 _ZSTD_BIN = _find_zstd_bin()
 
-# content-copy chunk size. The reference copies in 8 KiB chunks
-# (src/batch.rs:42) — cheap in Rust, but every .read() call here is a
-# Python-level round-trip through the decoder adapter stack, so larger
-# chunks win: measured 257 → 368 MB/s single-thread tar walk moving
-# 8 KiB → 64 KiB (256 KiB adds ~1%, not worth the extra buffer memory
-# per concurrent walk task).
+# content-copy chunk size (the hash loop, skips, the zip spool and the
+# deflate member's compressed reads). The reference copies in 8 KiB
+# chunks (src/batch.rs:42) — cheap in Rust, but each chunk here is a
+# Python-level loop turn, so larger chunks win: measured 257 → 368 MB/s
+# single-thread tar walk moving 8 KiB → 64 KiB (256 KiB adds ~1%, not
+# worth the extra buffer memory per concurrent walk task).
 _COPY_BUF = 64 * 1024
 _SPOOL_MAX = 64 * 1024 * 1024  # zip spool: memory below this, disk above
 
@@ -122,7 +129,7 @@ class _StackFrame:
     size: int
 
 
-def _wrap_decoder(stream: io.BufferedReader, kind: str):
+def _wrap_decoder(stream: _Reader, kind: str):
     if kind == "gzip":
         return gzip.GzipFile(fileobj=stream)
     if kind == "bzip2":
@@ -146,7 +153,7 @@ def _wrap_decoder(stream: io.BufferedReader, kind: str):
 class ZstdDecodeError(Exception):
     """Corrupt zstd input detected by the subprocess decoder — the twin
     of ``zstandard.ZstdError`` from the in-process path, and like it NOT
-    absorbed by ``_RawAdapter``'s truncation catch list: genuinely bad
+    in ``_TRUNCATED``, the reader's truncation catch list: genuinely bad
     zstd fails the walk loudly in both decode paths."""
 
 
@@ -245,203 +252,169 @@ class _SubprocessZstdReader:
             pass
 
 
-def sniff_stream(stream) -> tuple[str, io.BufferedReader]:
-    """Two-stage sniff. Returns (format_kind, readable stream positioned
-    at the logical start of the decompressed data).
-
-    Peeks use exact-read loops + prefix push-back rather than
-    ``BufferedReader.peek`` — peek performs a single raw read and may
-    return fewer than the requested bytes on short-read streams, which
-    made tar detection (magic at offset 257) silently fail."""
-    tolerant = io.BufferedReader(_as_raw(stream))
-    head = _read_exact(tolerant, 6)
-    rewound = io.BufferedReader(_RawAdapter(tolerant, prefix=head))
-    compression = detect_compression(head)
-    if compression is not None:
-        decoder = _wrap_decoder(rewound, compression)
-        decoded_tolerant = io.BufferedReader(_RawAdapter(decoder))
-        inner = _read_exact(decoded_tolerant, PEEK_SIZE)
-        decoded = io.BufferedReader(_RawAdapter(decoded_tolerant, prefix=inner))
-        return detect_format(inner, compression), decoded
-    peek = _read_exact(rewound, PEEK_SIZE)
-    out = io.BufferedReader(_RawAdapter(rewound, prefix=peek))
-    return detect_format(peek, None), out
+# Decoder and container errors that end an entry as truncated content,
+# the reference's infallable_copy contract (src/batch.rs:41-59). zipfile
+# raises BadZipFile on a CRC mismatch while reading a member; zstd
+# errors are absent on purpose, so corrupt zstd fails the walk loudly.
+_TRUNCATED = (
+    OSError,
+    EOFError,
+    zlib.error,
+    lzma.LZMAError,
+    zipfile.BadZipFile,
+    tarfile.ReadError,
+)
 
 
-class _RawAdapter(io.RawIOBase):
-    """Adapt any .read()-able object to RawIOBase for BufferedReader,
-    optionally serving a pushed-back prefix first.
+# The reader reads its inner stream in blocks of 8 KiB, the reference's
+# copy size (src/batch.rs:42). A buffered decoder drops the output of a
+# read that meets an error, so a stream that ends in error keeps every
+# whole block decoded before it.
+_BLOCK = 8 * 1024
 
-    Decoder/container errors (truncated gzip/bz2/xz streams, CRC
-    failures, bad zip members) are converted to EOF so
-    partially-readable content is emitted as-is — the reference's
-    ``infallable_copy`` contract (src/batch.rs:41-59). This sits below
-    BOTH the sniffing peek and the content copy, so a stream cut or a
-    corrupt member anywhere yields a truncated row, never a crash.
-    """
 
-    def __init__(self, inner, prefix: bytes = b""):
+class _Reader:
+    """The one reader under the walker. The sniff, every member walk
+    and the content copy read a file, a decoder or an archive member
+    through one of these.
+
+    ``read(n)`` returns n bytes unless the stream ends, so a short-read
+    inner stream (an HTTP body, a decoder) cannot cut a peek short.
+    ``push`` un-reads bytes (the sniff peeks, a zip header before the
+    spool fallback), ``skip`` discards them and ``readline_lf`` splits
+    LF lines for the WARC header parse. An error in ``_TRUNCATED`` ends
+    the inner stream: what was read before it stands, as the
+    reference's ``infallable_copy`` keeps the bytes copied so far
+    (src/batch.rs:41-59)."""
+
+    __slots__ = ("_inner", "_buf")
+
+    def __init__(self, inner):
         self._inner = inner
-        self._prefix = prefix
-        self._failed = False
+        self._buf = b""
 
-    def readable(self) -> bool:
+    def _pull(self) -> bytes:
+        if self._inner is None:
+            return b""
+        try:
+            return self._inner.read(_BLOCK)
+        except _TRUNCATED:
+            self._inner = None
+            return b""
+
+    def read(self, n: int) -> bytes:
+        buf = self._buf
+        if n > len(buf):
+            parts = [buf]
+            got = len(buf)
+            while got < n:
+                block = self._pull()
+                if not block:
+                    break
+                parts.append(block)
+                got += len(block)
+            buf = b"".join(parts)
+        n = max(n, 0)
+        self._buf = buf[n:]
+        return buf[:n]
+
+    def push(self, data: bytes) -> None:
+        self._buf = data + self._buf
+
+    def skip(self, n: int) -> bool:
+        """Discard n bytes; False if the stream ends first."""
+        while n > 0:
+            data = self.read(min(n, _COPY_BUF))
+            if not data:
+                return False
+            n -= len(data)
         return True
 
-    def readinto(self, b) -> int:
-        if self._prefix:
-            n = min(len(b), len(self._prefix))
-            b[:n] = self._prefix[:n]
-            self._prefix = self._prefix[n:]
-            return n
-        if self._failed:
-            return 0
-        try:
-            data = self._inner.read(len(b))
-        except (
-            OSError,
-            EOFError,
-            zlib.error,
-            lzma.LZMAError,
-            zipfile.BadZipFile,
-            tarfile.ReadError,
-        ):
-            # note: zipfile raises BadZipFile on a CRC mismatch while
-            # READING a member — reachable from the sniff peek, outside
-            # _walk_zip's zf.open guard
-            self._failed = True
-            return 0
-        if not data:
-            return 0
-        b[: len(data)] = data
-        return len(data)
+    def readline_lf(self, limit: int = 64 * 1024) -> bytes | None:
+        """One LF-terminated line (terminator included). At the end of
+        the stream a partial line is returned as-is; the end at a line
+        start → None; a line longer than ``limit`` → None (malformed
+        input)."""
+        parts: list[bytes] = []
+        size = 0
+        while size <= limit:
+            nl = self._buf.find(b"\n")
+            if nl >= 0:
+                parts.append(self._buf[: nl + 1])
+                self._buf = self._buf[nl + 1 :]
+                line = b"".join(parts)
+                return line if len(line) <= limit else None
+            parts.append(self._buf)
+            size += len(self._buf)
+            self._buf = self._pull()
+            if not self._buf:
+                return b"".join(parts) or None
+        return None
 
 
-def _read_exact(stream, n: int) -> bytes:
-    """Read exactly n bytes unless EOF — a single .read(n) may return
-    fewer on short-read streams (HTTP bodies, zstd stream_reader), which
-    previously made 262-byte container sniffing silently misdetect."""
-    chunks: list[bytes] = []
-    got = 0
-    while got < n:
-        data = stream.read(n - got)
-        if not data:
-            break
-        chunks.append(data)
-        got += len(data)
-    return b"".join(chunks)
+class _Bounded:
+    """The next ``size`` bytes of ``s``: a plain tar member, a stored
+    zip member, an ar or cpio body, or a byte range of a file."""
+
+    __slots__ = ("_s", "_left")
+
+    def __init__(self, s, size: int):
+        self._s = s
+        self._left = size
+
+    def read(self, n: int) -> bytes:
+        n = min(n, self._left)
+        if n <= 0:
+            return b""
+        data = self._s.read(n)
+        self._left -= len(data)
+        return data
+
+    def drain(self) -> None:
+        """Skip what is left of the range (``s`` is a ``_Reader``)."""
+        self._s.skip(self._left)
+        self._left = 0
 
 
-def _as_raw(obj) -> io.RawIOBase:
-    return obj if isinstance(obj, io.RawIOBase) else _RawAdapter(obj)
+def sniff_stream(stream) -> tuple[str, _Reader]:
+    """Two-stage sniff. Returns (format_kind, reader positioned at the
+    logical start of the decompressed data).
+
+    The 6-byte compression peek and the 262-byte container peek are
+    pushed back into the reader they were read from, so the walk that
+    follows reads the same reader; a ``_Reader`` argument is reused."""
+    reader = stream if isinstance(stream, _Reader) else _Reader(stream)
+    head = reader.read(6)
+    reader.push(head)
+    compression = detect_compression(head)
+    if compression is not None:
+        reader = _Reader(_wrap_decoder(reader, compression))
+    peek = reader.read(PEEK_SIZE)
+    reader.push(peek)
+    return detect_format(peek, compression), reader
 
 
-def _hashed_copy(stream) -> tuple[bytes, bytes, int]:
-    """Read to EOF with fused SHA-256; on mid-read errors return bytes
-    copied so far (reference infallable_copy, src/batch.rs:41-59)."""
+def _hashed_read(stream, keep: bool) -> tuple[bytes, bytes, int]:
+    """Read to the end with a fused SHA-256. Returns (content, digest,
+    size); with ``keep`` false only the first PEEK_SIZE bytes are kept
+    for format refinement, so a column-pruned walk (``options.columns``
+    without ``content``) never holds more of an entry than one
+    ``_COPY_BUF`` chunk."""
     hasher = hashlib.sha256()
-    chunks: list[bytes] = []
-    total = 0
-    try:
-        while True:
-            chunk = stream.read(_COPY_BUF)
-            if not chunk:
-                break
-            hasher.update(chunk)
-            chunks.append(chunk)
-            total += len(chunk)
-    except (OSError, EOFError, lzma.LZMAError, zipfile.BadZipFile, tarfile.ReadError):
-        pass  # truncated content is emitted as-is
-    return b"".join(chunks), hasher.digest(), total
-
-
-def _hashed_meta(stream) -> tuple[bytes, bytes, int]:
-    """Read to EOF with fused SHA-256 WITHOUT buffering the payload —
-    the column-pruned ingest path (``options.columns`` excludes
-    ``content``): only the first PEEK_SIZE bytes are kept for format
-    refinement, so a manifest / hash-only-dedup scan never materializes
-    entry bytes beyond one 64 KiB copy buffer (``_COPY_BUF``). Same
-    truncation tolerance as `_hashed_copy`."""
-    hasher = hashlib.sha256()
-    peek = b""
-    total = 0
-    try:
-        while True:
-            chunk = stream.read(_COPY_BUF)
-            if not chunk:
-                break
-            hasher.update(chunk)
-            if len(peek) < PEEK_SIZE:
-                peek += chunk[: PEEK_SIZE - len(peek)]
-            total += len(chunk)
-    except (OSError, EOFError, lzma.LZMAError, zipfile.BadZipFile, tarfile.ReadError):
-        pass
-    return peek, hasher.digest(), total
+    kept: list[bytes] = []
+    size = 0
+    while chunk := stream.read(_COPY_BUF):
+        hasher.update(chunk)
+        if keep or not size:
+            kept.append(chunk if keep else chunk[:PEEK_SIZE])
+        size += len(chunk)
+    return b"".join(kept), hasher.digest(), size
 
 
 # -- WARC record machinery -----------------------------------------------------
 
 
-class _LineBufferedStream:
-    """Chunked sequential reader with LF-line splitting for the WARC
-    header parse. Replaces the former per-byte ``read(1)`` loop (a
-    100M-record Common Crawl segment paid hundreds of Python calls per
-    record before any payload moved) with 64 KiB buffered chunks and
-    ``bytes.find(b"\\n")``; ``read()`` consumes the buffer first so
-    over-read bytes are never lost, then reads the tail directly from
-    the inner stream (no extra copy for large payloads)."""
-
-    __slots__ = ("_inner", "_chunk", "_buf", "_pos")
-
-    def __init__(self, inner, chunk: int = 64 * 1024):
-        self._inner = inner
-        self._chunk = chunk
-        self._buf = b""
-        self._pos = 0
-
-    def readline_lf(self, limit: int = 64 * 1024) -> bytes | None:
-        """One LF-terminated line (terminator included). At EOF a
-        partial line is returned as-is; EOF at line start → None; a
-        line longer than ``limit`` → None (malformed input)."""
-        parts: list[bytes] = []
-        size = 0
-        while size <= limit:
-            if self._pos >= len(self._buf):
-                data = self._inner.read(self._chunk)
-                if not data:
-                    return b"".join(parts) if parts else None
-                self._buf = data
-                self._pos = 0
-            nl = self._buf.find(b"\n", self._pos)
-            if nl >= 0:
-                parts.append(self._buf[self._pos : nl + 1])
-                self._pos = nl + 1
-                line = b"".join(parts)
-                return line if len(line) <= limit else None
-            parts.append(self._buf[self._pos :])
-            size += len(self._buf) - self._pos
-            self._pos = len(self._buf)
-        return None
-
-    def read(self, n: int) -> bytes:
-        out: list[bytes] = []
-        got = 0
-        while got < n:
-            if self._pos < len(self._buf):
-                take = self._buf[self._pos : self._pos + (n - got)]
-                self._pos += len(take)
-                out.append(take)
-                got += len(take)
-                continue
-            data = self._inner.read(n - got)
-            if not data:
-                break
-            out.append(data)
-            got += len(data)
-        return b"".join(out)
-
-
-def _read_mime_headers(stream: _LineBufferedStream) -> dict[str, str] | None:
+def _read_mime_headers(stream: _Reader) -> dict[str, str] | None:
     """Read CRLF-separated ``Name: value`` headers up to the blank line.
     Keys are lower-cased; continuation lines and malformed lines are
     skipped. None if EOF hits before the blank line."""
@@ -505,53 +478,7 @@ def _http_body(message: bytes) -> bytes:
 # -- streaming-zip machinery ---------------------------------------------------
 
 
-class _PushbackStream:
-    """Sequential reader with a pushback buffer (for bytes the deflate
-    scanner over-read past a member's end)."""
-
-    __slots__ = ("_inner", "_buf")
-
-    def __init__(self, inner):
-        self._inner = inner
-        self._buf = b""
-
-    def read(self, n: int) -> bytes:
-        out: list[bytes] = []
-        got = 0
-        while got < n:
-            if self._buf:
-                take = self._buf[: n - got]
-                self._buf = self._buf[len(take):]
-                out.append(take)
-                got += len(take)
-                continue
-            data = self._inner.read(n - got)
-            if not data:
-                break
-            out.append(data)
-            got += len(data)
-        return b"".join(out)
-
-    def push(self, data: bytes) -> None:
-        if data:
-            self._buf = data + self._buf
-
-    def drain_pushback(self) -> bytes:
-        buf, self._buf = self._buf, b""
-        return buf
-
-
-def _skip_bytes(s: _PushbackStream, n: int) -> bool:
-    left = n
-    while left > 0:
-        d = s.read(min(65536, left))
-        if not d:
-            return False
-        left -= len(d)
-    return True
-
-
-def _consume_descriptor(s: _PushbackStream, zip64: bool) -> None:
+def _consume_descriptor(s: _Reader, zip64: bool) -> None:
     """Consume a data descriptor: optional PK\\x07\\x08 signature, then
     crc + compressed size + uncompressed size (8-byte sizes if zip64)."""
     body_len = 16 if zip64 else 12
@@ -562,107 +489,43 @@ def _consume_descriptor(s: _PushbackStream, zip64: bool) -> None:
         s.read(body_len - 4)
 
 
-class _BoundedReader:
-    """Exactly ``size`` bytes of a STORED member from the sequential
-    stream."""
+class _Inflate:
+    """A deflate zip member: raw inflate of ``s``, ``csize`` compressed
+    bytes of it or, without ``csize`` (a data-descriptor member), up to
+    the deflate stream's own end, with the bytes read past that end
+    pushed back into ``s`` for the next header parse. A descriptor
+    member is drained through the ``_Reader`` over it, which stops at a
+    corrupt stream.
 
-    def __init__(self, s: _PushbackStream, size: int):
+    Compressed bytes are read in ``_COPY_BUF`` chunks, and a chunk is
+    inflated only once the previous one's output is all read, so a
+    ``zlib.error`` reaches the ``_Reader`` above with no inflated byte
+    lost."""
+
+    __slots__ = ("_s", "_src", "_z", "_out", "_pos")
+
+    def __init__(self, s: _Reader, csize: int | None = None):
         self._s = s
-        self._left = size
-
-    def read(self, n: int = -1) -> bytes:
-        if n is None or n < 0:
-            n = self._left
-        if self._left <= 0 or n <= 0:
-            return b""
-        data = self._s.read(min(n, self._left))
-        self._left -= len(data)
-        return data
-
-    def drain(self) -> None:
-        while self._left > 0:
-            d = self._s.read(min(65536, self._left))
-            if not d:
-                break
-            self._left -= len(d)
-
-
-class _DeflateReader:
-    """Streaming inflate of a member with KNOWN compressed size."""
-
-    def __init__(self, s: _PushbackStream, csize: int):
-        self._s = s
-        self._left = csize
+        self._src = s if csize is None else _Bounded(s, csize)
         self._z = zlib.decompressobj(-15)
-        self._buf = bytearray()
-        self._eof = False
+        self._out = b""
+        self._pos = 0
 
-    def read(self, n: int = -1) -> bytes:
-        if n is None or n < 0:
-            n = 1 << 62
-        while len(self._buf) < n and not self._eof:
-            if self._z.eof or self._left <= 0:
-                self._eof = True
-                break
-            chunk = self._s.read(min(65536, self._left))
+    def read(self, n: int) -> bytes:
+        while self._pos >= len(self._out) and not self._z.eof:
+            chunk = self._src.read(_COPY_BUF)
             if not chunk:
-                self._eof = True
                 break
-            self._left -= len(chunk)
-            try:
-                self._buf += self._z.decompress(chunk)
-            except zlib.error:
-                self._eof = True  # truncated content is emitted as-is
-                break
-        out = bytes(self._buf[:n])
-        del self._buf[:n]
-        return out
-
-    def drain(self) -> None:
-        while self._left > 0:
-            d = self._s.read(min(65536, self._left))
-            if not d:
-                break
-            self._left -= len(d)
-
-
-class _DeflateDescReader:
-    """Streaming inflate of a data-descriptor member (compressed size
-    unknown): the inflater detects the deflate stream's end, and the
-    bytes it over-read (``unused_data``) are pushed back for the next
-    header parse."""
-
-    def __init__(self, s: _PushbackStream):
-        self._s = s
-        self._z = zlib.decompressobj(-15)
-        self._buf = bytearray()
-        self._eof = False
-
-    def read(self, n: int = -1) -> bytes:
-        if n is None or n < 0:
-            n = 1 << 62
-        while len(self._buf) < n and not self._eof:
-            chunk = self._s.read(65536)
-            if not chunk:
-                self._eof = True
-                break
-            try:
-                self._buf += self._z.decompress(chunk)
-            except zlib.error:
-                self._eof = True
-                break
-            if self._z.eof:
+            self._out, self._pos = self._z.decompress(chunk), 0
+            if self._z.eof and self._src is self._s:
                 self._s.push(self._z.unused_data)
-                self._eof = True
-        out = bytes(self._buf[:n])
-        del self._buf[:n]
+        out = self._out[self._pos : self._pos + n]
+        self._pos += len(out)
         return out
 
     def drain(self) -> None:
-        while not self._eof:
-            self.read(1 << 20)
-            self._buf.clear()
-        self._buf.clear()
+        """Skip the rest of the ``csize`` compressed bytes."""
+        self._src.drain()
 
 
 class Walker:
@@ -743,44 +606,32 @@ class Walker:
         # leaf (any compression already stripped by sniff_stream)
         yield from self._leaf(name, decoded, kind)
 
-    def _leaf(self, name: str, decoded, kind: str) -> Iterator[EntryRow]:
-        want_content = self.options.wants("content")
-        if want_content or self.options.extract_strings:
-            # extract_strings rewrites executable payloads, so hash/size
-            # depend on the full bytes even when content is pruned
-            content, digest, size = _hashed_copy(decoded)
-            fmt = (
-                kind
-                if kind != "unknown"
-                else detect_format(content[:PEEK_SIZE], None)
-            )
-            if self.options.extract_strings and fmt == "executable":
-                content = joined_ascii_strings(
-                    content, self.options.min_string_len
-                )
-                digest = hashlib.sha256(content).digest()
-                size = len(content)
-            if not want_content:
-                content = None
-        else:
-            # pruned path: fused hash over a bounded copy buffer; only
-            # the sniff peek is retained
-            peek, digest, size = _hashed_meta(decoded)
-            fmt = kind if kind != "unknown" else detect_format(peek, None)
-            content = None
+    def _leaf(self, name: str, decoded: _Reader, kind: str) -> Iterator[EntryRow]:
+        opts = self.options
+        want_content = opts.wants("content")
+        # extract_strings rewrites executable payloads, so hash/size
+        # depend on the full bytes even when content is pruned
+        content, digest, size = _hashed_read(
+            decoded, keep=want_content or opts.extract_strings
+        )
+        fmt = kind if kind != "unknown" else detect_format(content[:PEEK_SIZE], None)
+        if opts.extract_strings and fmt == "executable":
+            content = joined_ascii_strings(content, opts.min_string_len)
+            digest = hashlib.sha256(content).digest()
+            size = len(content)
         row = EntryRow(
             source=self.source,
             path=self._nested_path(name),
             size=size,
             hash=digest,
-            content=content,
+            content=content if want_content else None,
             format=fmt,
         )
         out = self.visit_file_entry(row)
         if out is not None:
             yield out
 
-    def _walk_tar(self, stream) -> Iterator[EntryRow]:
+    def _walk_tar(self, stream: _Reader) -> Iterator[EntryRow]:
         """Streaming tar iteration; skip non-regular and empty members;
         stop at the first bad entry (walkers/tarfile.rs:21-33)."""
         try:
@@ -797,17 +648,22 @@ class Walker:
                     return
                 if not member.isreg() or member.size == 0:
                     continue  # skip predicate (tarfile.rs:24)
-                fobj = tf.extractfile(member)
-                if fobj is None:
-                    continue
-                yield from self.walk(member.name, fobj, member.size)
+                # a plain member is read straight off the tar stream, so
+                # a cut stream ends it short where extractfile's reader
+                # would raise and drop its last read
+                body = (
+                    tf.extractfile(member)
+                    if member.issparse()
+                    else _Bounded(tf.fileobj, member.size)
+                )
+                yield from self.walk(member.name, body, member.size)
         finally:
             try:
                 tf.close()
             except Exception:
                 pass
 
-    def _walk_ar(self, stream) -> Iterator[EntryRow]:
+    def _walk_ar(self, stream: _Reader) -> Iterator[EntryRow]:
         """Streaming Unix ar(1) walk (deb packages, static libraries) —
         beyond-reference format. Fixed 60-byte headers after the
         ``!<arch>\\n`` global magic; data padded to even offsets. GNU
@@ -815,11 +671,11 @@ class Walker:
         ``#1/N`` names are read from the data prefix; the ``/`` symbol
         table is skipped. Stops silently at the first malformed header
         (tar stop-at-first-bad-entry contract)."""
-        if _read_exact(stream, 8) != b"!<arch>\n":
+        if stream.read(8) != b"!<arch>\n":
             return
         gnu_names: dict[int, str] = {}
         while True:
-            hdr = _read_exact(stream, 60)
+            hdr = stream.read(60)
             if len(hdr) < 60 or hdr[58:60] != b"\x60\n":
                 return
             try:
@@ -829,8 +685,8 @@ class Walker:
                 return
             pad = size % 2
             if raw_name == "//":  # GNU extended-name table
-                table = _read_exact(stream, size)
-                _read_exact(stream, pad)
+                table = stream.read(size)
+                stream.skip(pad)
                 off = 0
                 for line in table.split(b"\n"):
                     entry = line.decode("ascii", "replace").rstrip("/\r")
@@ -839,18 +695,18 @@ class Walker:
                     off += len(line) + 1
                 continue
             if raw_name == "/":  # symbol table
-                _read_exact(stream, size)
-                _read_exact(stream, pad)
+                stream.skip(size)
+                stream.skip(pad)
                 continue
             name = raw_name
-            body = _BoundedReader(stream, size)
+            body = _Bounded(stream, size)
             if raw_name.startswith("#1/"):  # BSD embedded long name
                 try:
                     nlen = int(raw_name[3:])
                 except ValueError:
                     return
                 name = (
-                    _read_exact(body, nlen).decode("utf-8", "replace").rstrip("\x00")
+                    body.read(nlen).decode("utf-8", "replace").rstrip("\x00")
                 )
             elif raw_name.startswith("/") and raw_name[1:].isdigit():
                 name = gnu_names.get(int(raw_name[1:]), raw_name)
@@ -859,9 +715,9 @@ class Walker:
             if size > 0:
                 yield from self.walk(name, body, size)
             body.drain()
-            _read_exact(stream, pad)
+            stream.skip(pad)
 
-    def _walk_cpio(self, stream) -> Iterator[EntryRow]:
+    def _walk_cpio(self, stream: _Reader) -> Iterator[EntryRow]:
         """Streaming cpio walk, newc/crc variants (``070701``/``070702``
         — initramfs, kernel archives) — beyond-reference format.
         110-char ASCII-hex headers; name and data each padded to 4-byte
@@ -869,7 +725,7 @@ class Walker:
         empty members are skipped (tar skip-predicate parity); a
         malformed header stops the walk silently."""
         while True:
-            hdr = _read_exact(stream, 110)
+            hdr = stream.read(110)
             if len(hdr) < 110 or hdr[:6] not in (b"070701", b"070702"):
                 return
             try:
@@ -879,19 +735,19 @@ class Walker:
             except ValueError:
                 return
             mode, filesize, namesize = fields[1], fields[6], fields[11]
-            raw_name = _read_exact(stream, namesize)
-            _read_exact(stream, (-(110 + namesize)) % 4)
+            raw_name = stream.read(namesize)
+            stream.skip((-(110 + namesize)) % 4)
             name = raw_name.decode("utf-8", "replace").rstrip("\x00")
             if name == "TRAILER!!!":
                 return
-            body = _BoundedReader(stream, filesize)
+            body = _Bounded(stream, filesize)
             is_regular = (mode & 0o170000) == 0o100000
             if is_regular and filesize > 0:
                 yield from self.walk(name, body, filesize)
             body.drain()
-            _read_exact(stream, (-filesize) % 4)
+            stream.skip((-filesize) % 4)
 
-    def _walk_warc(self, stream) -> Iterator[EntryRow]:
+    def _walk_warc(self, stream: _Reader) -> Iterator[EntryRow]:
         """Streaming WARC walk (ISO 28500 — Common Crawl's capture
         format) — beyond-reference format, the canonical source for
         web-scale training corpora. Sequential record parse: a
@@ -912,7 +768,6 @@ class Walker:
         archive body (e.g. a .tar.gz download) expands in place. A
         malformed version line or header block stops the walk silently
         (stop-at-first-bad-entry contract, tarfile.rs:23)."""
-        stream = _LineBufferedStream(stream)
         n_records = 0
         while True:
             # version line, tolerating blank separator lines before it
@@ -928,7 +783,7 @@ class Walker:
                 length = int(headers.get("content-length", ""))
             except ValueError:
                 return
-            payload = _read_exact(stream, length)
+            payload = stream.read(length)
             if len(payload) < length:
                 return  # truncated record: stop silently
             n_records += 1
@@ -945,7 +800,7 @@ class Walker:
                 continue  # empty-member skip predicate
             yield from self.walk(name, io.BytesIO(payload), len(payload))
 
-    def _walk_zip(self, stream) -> Iterator[EntryRow]:
+    def _walk_zip(self, s: _Reader) -> Iterator[EntryRow]:
         """TRUE streaming zip walk: sequential local-file-header parse
         (PK\\x03\\x04 records, no central directory — reference
         read_zipfile_from_stream, walkers/zipfile.rs:21-32). Stored and
@@ -965,7 +820,6 @@ class Walker:
         Skip predicate parity (zipfile.rs:23): directories and empty
         members are skipped — for descriptor members (size unknown
         upfront) via a one-byte decompressed peek."""
-        s = _PushbackStream(stream)
         emitted_any = False
         while True:
             sig = s.read(4)
@@ -1003,51 +857,40 @@ class Walker:
                 if emitted_any:
                     return  # stop silently (zipfile.rs:22)
                 self.zip_spool_fallbacks += 1
-                prefix = sig + hdr + raw_name + extra + s.drain_pushback()
-                yield from self._walk_zip_spool(stream, prefix=prefix)
+                # restore the header so central-directory offsets hold
+                s.push(sig + hdr + raw_name + extra)
+                yield from self._walk_zip_spool(s)
                 return
             is_dir = name.endswith("/")
             if not has_desc:
                 if is_dir or usize == 0:
-                    if not _skip_bytes(s, csize):
+                    if not s.skip(csize):
                         return
                     continue  # skip predicate (zipfile.rs:23)
-                reader = (
-                    _BoundedReader(s, csize)
-                    if method == 0
-                    else _DeflateReader(s, csize)
-                )
-                yield from self.walk(name, reader, usize)
+                body = _Bounded(s, csize) if method == 0 else _Inflate(s, csize)
+                yield from self.walk(name, body, usize)
                 emitted_any = True
-                reader.drain()
+                body.drain()
             else:
                 # deflate + data descriptor: the inflater finds its own
-                # end; leftover compressed-side bytes are pushed back for
-                # the next header parse
-                reader = _DeflateDescReader(s)
-                first = reader.read(1)
-                if is_dir or not first:
-                    reader.drain()
-                    _consume_descriptor(s, zip64)
-                    continue
-                yield from self.walk(name, _RawAdapter(reader, prefix=first), usize)
-                emitted_any = True
-                reader.drain()
+                # end and pushes the bytes it read past it back into s
+                member = _Reader(_Inflate(s))
+                first = member.read(1)
+                member.push(first)
+                if first and not is_dir:
+                    yield from self.walk(name, member, usize)
+                    emitted_any = True
+                while member.read(_COPY_BUF):
+                    pass  # to the deflate end, or where it is corrupt
                 _consume_descriptor(s, zip64)
 
-    def _walk_zip_spool(self, stream, prefix: bytes = b"") -> Iterator[EntryRow]:
+    def _walk_zip_spool(self, stream: _Reader) -> Iterator[EntryRow]:
         """Fallback zip path: spool the whole archive (memory below
         _SPOOL_MAX, disk above) and read via zipfile with its central
-        directory. ``prefix`` restores bytes the streaming parser already
-        consumed so central-directory offsets stay valid."""
+        directory."""
         spool = tempfile.SpooledTemporaryFile(max_size=_SPOOL_MAX)
         try:
-            if prefix:
-                spool.write(prefix)
-            while True:
-                chunk = stream.read(_COPY_BUF)
-                if not chunk:
-                    break
+            while chunk := stream.read(_COPY_BUF):
                 spool.write(chunk)
             spool.seek(0)
             try:

@@ -70,9 +70,7 @@ def write_batch_partial(batch: DataFrame, batch_id: int, state_dir: str) -> None
 def constraint_report(spark: SparkSession, state_dir: str) -> DataFrame:
     """Merge the per-batch partials into the constraint report — pure
     summation, so the report is batch-boundary invariant."""
-    partials = spark.read.option("basePath", state_dir).parquet(
-        os.path.join(state_dir, "batch=*")
-    )
+    partials = spark.read.parquet(state_dir)  # batch=N partition discovery
     merged = partials.agg(
         F.sum("n").alias("n"),
         *[F.sum(col).alias(col) for _, col, _ in EVENT_CHECKS],
@@ -116,9 +114,7 @@ def psi_report(spark: SparkSession, state_dir: str) -> DataFrame:
     algebraic, so merge(partials) == one-pass counts over all arrived
     rows regardless of batch boundaries — then compute the identical
     PSI report the batch entry emits."""
-    partials = spark.read.option("basePath", state_dir).parquet(
-        os.path.join(state_dir, "batch=*")
-    )
+    partials = spark.read.parquet(state_dir)  # batch=N partition discovery
     counts = (
         partials.groupBy("bin")
         .agg(F.sum("ref_n").alias("ref_n"), F.sum("cur_n").alias("cur_n"))

@@ -661,3 +661,25 @@ def test_stream_stateful_keeps_users_absent_from_later_batches(spark, tmp_path):
         2: (4, 17.75, 0.5, 10.0),
         3: (2, 7.75, 0.25, 7.5),
     }
+
+
+def test_stream_dedup_keys_rebuild_keeps_one_memory_table(spark, tmp_path):
+    """A memory-sink entry drops its earlier memory tables when it
+    drains again: two builds leave one ``stream_dedup_keys_*`` table in
+    the session, not one per build."""
+    from archive_to_parquet_spark.queries.streaming import stream_dedup_keys
+
+    sf_dir = str(tmp_path / "sf_tiny")
+    spark.createDataFrame(
+        [(e, 1_700_000_000_000_000_000 + e, e % 3, "click", 1.0, None)
+         for e in range(12)],
+        "event_id long, ts long, user_id long, event_type string,"
+        " value double, props string",
+    ).write.parquet(f"{sf_dir}/events.parquet")
+    for _ in range(2):
+        assert stream_dedup_keys(spark, sf_dir).count() == 3
+    tables = [
+        t.name for t in spark.catalog.listTables()
+        if t.name.startswith("stream_dedup_keys_")
+    ]
+    assert len(tables) == 1

@@ -154,6 +154,25 @@ def test_truncated_gzip_emits_partial_content():
     assert r.size == len(r.content)
 
 
+def test_cut_stream_keeps_every_whole_block_before_the_cut():
+    """A cut plain tar member keeps every byte up to the cut; a cut
+    gzip keeps every whole 8 KiB block decoded before the cut
+    (PARITY.md §2.11 item 4)."""
+    import zlib
+
+    payload = b"".join(  # 102,400 incompressible bytes
+        hashlib.sha256(i.to_bytes(4, "big")).digest() for i in range(3200)
+    )
+    tar = tar_archive({"m.bin": payload})
+    rows = _walk_bytes("cut.tar", tar[: 512 + 60_000])
+    assert [(r.path, r.content) for r in rows] == [("m.bin", payload[:60_000])]
+    cut = gzip_data(payload)[:60_000]
+    decoded = len(zlib.decompressobj(31).decompress(cut))
+    assert decoded > 8192
+    (row,) = _walk_bytes("cut.gz", cut)
+    assert row.content == payload[: decoded - decoded % 8192]
+
+
 def test_truncated_tar_stops_at_bad_entry():
     tar = tar_archive({"good.txt": b"G" * 600, "later.txt": b"L" * 600})
     truncated = tar[: 512 + 600]  # header + part of first member region
@@ -162,6 +181,26 @@ def test_truncated_tar_stops_at_bad_entry():
     assert len(rows) <= 1
     if rows:
         assert rows[0].path == "good.txt"
+
+
+def test_sparse_tar_member_is_expanded():
+    """A plain tar member is read straight off the tar stream, a GNU
+    sparse one through tarfile's reader, which fills its holes."""
+    import tarfile
+
+    info = tarfile.TarInfo("holes.bin")
+    info.size = 4  # stored bytes: "AAAA" at offset 8 of 16
+    hdr = bytearray(info.tobuf(tarfile.GNU_FORMAT))
+    hdr[156:157] = tarfile.GNUTYPE_SPARSE
+    hdr[386:410] = b"%011o\0%011o\0" % (8, 4)  # one (offset, numbytes) pair
+    hdr[483:495] = b"%011o\0" % 16  # real size
+    hdr[148:156] = b" " * 8
+    hdr[148:156] = b"%06o\0 " % sum(hdr)  # header checksum
+    blob = bytes(hdr) + b"AAAA".ljust(512, b"\0") + b"\0" * 1024
+    rows = _walk_bytes("sparse.tar", blob)
+    assert [(r.path, r.content) for r in rows] == [
+        ("holes.bin", b"\0" * 8 + b"AAAA" + b"\0" * 4)
+    ]
 
 
 def test_extract_strings_rewrites_executables():
@@ -525,10 +564,10 @@ def test_hashed_meta_streams_without_buffering():
     import io
 
     from archive_to_parquet_spark.functions.sniff import PEEK_SIZE
-    from archive_to_parquet_spark.sources.walker import _hashed_meta
+    from archive_to_parquet_spark.sources.walker import _hashed_read
 
     payload = bytes(range(256)) * 40_000  # ~10 MB
-    peek, digest, size = _hashed_meta(io.BytesIO(payload))
+    peek, digest, size = _hashed_read(io.BytesIO(payload), keep=False)
     assert size == len(payload)
     assert digest == hashlib.sha256(payload).digest()
     assert len(peek) == PEEK_SIZE

@@ -203,9 +203,11 @@ def _naive_lines(data: bytes, limit: int = 64 * 1024) -> list[bytes | None]:
 )
 @settings(max_examples=200, suppress_health_check=[HealthCheck.too_slow])
 def test_line_buffered_stream_matches_naive_reader(data, step, chunk):
-    from archive_to_parquet_spark.sources.walker import _LineBufferedStream
+    from archive_to_parquet_spark.sources.walker import _Reader
 
-    s = _LineBufferedStream(_ByteAtATime(data, step), chunk=chunk)
+    # the reader asks for whole chunks; capping each answer at `chunk`
+    # bytes as well as `step` gives the same sequence of inner reads
+    s = _Reader(_ByteAtATime(data, min(step, chunk)))
     got: list[bytes] = []
     while True:
         line = s.readline_lf()
@@ -220,21 +222,32 @@ def test_line_buffered_stream_matches_naive_reader(data, step, chunk):
     data=st.binary(min_size=1, max_size=2048),
     split=st.integers(min_value=0, max_value=2048),
     step=st.integers(min_value=1, max_value=97),
+    skip=st.integers(min_value=0, max_value=64),
+    pushed=st.binary(max_size=64),
 )
 @settings(max_examples=200, suppress_health_check=[HealthCheck.too_slow])
-def test_line_buffered_stream_read_after_lines_loses_nothing(data, split, step):
-    """Interleaving readline_lf and bulk read() must reproduce the
-    exact byte stream — over-read buffered bytes are never dropped
-    (the WARC walk reads headers by line, then the payload by size)."""
-    from archive_to_parquet_spark.sources.walker import _LineBufferedStream
+def test_line_buffered_stream_read_after_lines_loses_nothing(
+    data, split, step, skip, pushed
+):
+    """Interleaving readline_lf, skip, push and bulk read() must
+    reproduce the exact byte stream — over-read buffered bytes are never
+    dropped (the WARC walk reads headers by line, then the payload by
+    size; the sniff pushes its peeks back). The skipped bytes are pushed
+    back, then ``pushed`` in front of them."""
+    from archive_to_parquet_spark.sources.walker import _Reader
 
     split = min(split, len(data))
     prefix, rest = data[:split], data[split:]
     blob = prefix + b"\n" + rest
-    s = _LineBufferedStream(_ByteAtATime(blob, step), chunk=31)
+    s = _Reader(_ByteAtATime(blob, min(step, 31)))
     consumed = b""
     line = s.readline_lf()
     assert line is not None
     consumed += line
-    tail = s.read(len(blob))
-    assert consumed + tail == blob
+    skipped = blob[len(consumed) : len(consumed) + skip]
+    assert s.skip(skip) == (len(skipped) == skip)
+    s.push(skipped)
+    s.push(pushed)
+    tail = s.read(len(blob) + len(pushed))
+    assert tail[: len(pushed)] == pushed
+    assert consumed + tail[len(pushed) :] == blob
