@@ -16,6 +16,7 @@ import zipfile
 from pyspark.sql import SparkSession
 
 _PKG_DIR = os.path.dirname(os.path.abspath(__file__))
+_WORKER_BOOT_DIR = os.path.join(_PKG_DIR, "worker-boot")
 
 
 def package_zip(pkg_dir: str = _PKG_DIR, out_dir: str | None = None) -> str:
@@ -67,6 +68,37 @@ def ensure_package_shipped(spark: SparkSession) -> None:
         return
     sc.addPyFile(package_zip())
     setattr(sc, flag, True)
+
+
+def local_worker_conf(
+    master: str, extra_conf: dict[str, str] | None = None
+) -> dict[str, str]:
+    """The conf that starts a local session's Python workers on the
+    driver's own pyspark and py4j (``worker-boot/a2p_daemon.py`` says
+    why): the daemon module, and ``spark.executorEnv.PYTHONPATH`` led by
+    the module's directory and the two packages' parent directories,
+    with the caller's own ``extra_conf`` value after them. Empty for a
+    non-local master, for a caller that names its own daemon module and
+    for a driver that imports pyspark or py4j from a zip."""
+    extra_conf = extra_conf or {}
+    if not master.startswith("local") or "spark.python.daemon.module" in extra_conf:
+        return {}
+    import py4j
+    import pyspark
+
+    path = [_WORKER_BOOT_DIR]
+    for module in (pyspark, py4j):
+        parent = os.path.dirname(os.path.dirname(os.path.abspath(module.__file__)))
+        if not os.path.isdir(parent):
+            return {}
+        if parent not in path:
+            path.append(parent)
+    if extra_conf.get("spark.executorEnv.PYTHONPATH"):
+        path.append(extra_conf["spark.executorEnv.PYTHONPATH"])
+    return {
+        "spark.python.daemon.module": "a2p_daemon",
+        "spark.executorEnv.PYTHONPATH": os.pathsep.join(path),
+    }
 
 
 def get_spark(
@@ -168,7 +200,8 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
     )
-    for k, v in (extra_conf or {}).items():
+    conf = {**(extra_conf or {}), **local_worker_conf(master, extra_conf)}
+    for k, v in conf.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

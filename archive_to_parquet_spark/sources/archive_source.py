@@ -9,13 +9,15 @@ Mapping of the reference's physical layer (SURVEY.md §2.7) onto Spark:
   JVM-only ``spark.range`` with one row per bin drives ONE
   ``mapInArrow`` evaluation per task that walks its bin's inputs in
   sequence. More tasks would only add cost: every Python task pays a
-  fixed start-up of about 0.3 s of worker CPU (measured on a 4-core
-  x86 host, PySpark 4.1, Python 3.11), because PySpark's per-task
+  fixed start-up. On a 4-core x86 host (PySpark 4.1, Python 3.11) an
+  empty ``mapInArrow`` takes 0.16 s over 4 tasks and 0.42 s over 16.
+  It took 0.34 s and 1.16 s while workers imported pyspark from
+  SPARK_HOME's ``pyspark.zip``: PySpark's per-task
   ``setup_spark_files`` calls ``importlib.invalidate_caches()``, which
-  makes every ``zipimporter`` (one per package directory imported from
-  a zip, ``pyspark.zip`` above all) re-read its zip's central
-  directory; SCALING.md §Ingest has the figures. A cluster sets
-  ``threads`` to its total executor cores.
+  makes every ``zipimporter`` re-read its zip's central directory. A
+  local session's workers now import the driver's unpacked pyspark
+  (``session.local_worker_conf``); SCALING.md §Ingest has the figures.
+  A cluster sets ``threads`` to its total executor cores.
 - bounded batch channel with backpressure (reference
   src/channel.rs:112-139) → the ``mapInArrow`` iterator protocol:
   each yielded Arrow RecordBatch is capped by rows AND bytes (the

@@ -901,6 +901,8 @@ class Walker:
                 for info in zf.infolist():
                     if info.is_dir() or info.file_size == 0:
                         continue  # skip predicate (zipfile.rs:23)
+                    if info.flag_bits & 0x01:
+                        return  # encrypted: stop, as at a bad entry below
                     try:
                         fobj = zf.open(info)
                     except (zipfile.BadZipFile, NotImplementedError, OSError):

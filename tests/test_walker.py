@@ -6,6 +6,8 @@ from __future__ import annotations
 import hashlib
 import io
 
+import pytest
+
 from archive_to_parquet_spark.options import ConvertOptions
 from archive_to_parquet_spark.sources.walker import walk_stream
 from tests.conftest import (
@@ -370,6 +372,33 @@ def test_zip_stored_data_descriptor_falls_back_to_spool():
     data = _descriptor_zip(files, zf_mod.ZIP_STORED)
     rows, fallbacks = _walk_with_counter("sd.zip", data)
     assert {(r.path, r.content) for r in rows} == set(files.items())
+    assert fallbacks == 1
+
+
+def _set_encrypted_bit(data: bytes, member: int) -> bytes:
+    """Set the encryption flag on one member's local and central
+    headers; the payload stays as it is."""
+    blob = bytearray(data)
+    for sig, flags_at in ((b"PK\x03\x04", 6), (b"PK\x01\x02", 8)):
+        pos = -1
+        for _ in range(member + 1):
+            pos = blob.find(sig, pos + 1)
+        blob[pos + flags_at] |= 0x01
+    return bytes(blob)
+
+
+@pytest.mark.parametrize("member, kept", [(0, []), (1, ["x.txt"])])
+def test_encrypted_zip_member_stops_the_walk(member, kept):
+    """An encrypted member ends the walk at that member: the rows before
+    it stay and nothing raises (opening it, zipfile would ask for a
+    password with a RuntimeError). Stored members with data descriptors take the spool
+    path, which reads the members through zipfile."""
+    import zipfile as zf_mod
+
+    files = {"x.txt": b"stored with descriptor", "y.txt": b"second"}
+    data = _set_encrypted_bit(_descriptor_zip(files, zf_mod.ZIP_STORED), member)
+    rows, fallbacks = _walk_with_counter("enc.zip", data)
+    assert [r.path for r in rows] == kept
     assert fallbacks == 1
 
 
