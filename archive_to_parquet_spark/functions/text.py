@@ -33,7 +33,16 @@ def token_count_col(text: Column | str, mode: str = "whitespace") -> Column:
     raise ValueError(f"unknown token mode {mode!r}")
 
 
-# -- word n-gram shingles ------------------------------------------------------
+# -- words and word n-gram shingles -------------------------------------------
+
+
+def words_col(text: Column | str) -> Column:
+    """Whitespace words: ``text`` split on runs of whitespace, minus the
+    empty strings split() emits at a leading or trailing boundary
+    (``F.trim`` strips only spaces, so a trailing newline would
+    otherwise yield a phantom '' word). Callers that lowercase pass
+    ``F.lower(...)``."""
+    return F.array_remove(F.split(text, r"\s+"), "")
 
 
 def word_ngrams_col(text: Column | str, n: int = 3) -> Column:
@@ -52,12 +61,7 @@ def word_ngrams_col(text: Column | str, n: int = 3) -> Column:
     yield one shingle of all their words (arrays_zip pads with null,
     concat_ws skips nulls).
     """
-    col = F.col(text) if isinstance(text, str) else text
-    # array_remove drops the empty strings that split() emits at
-    # whitespace boundaries — F.trim strips only spaces, so a trailing
-    # newline otherwise produces phantom '' words (diverging from the
-    # DuckDB oracle and from simhash's str.split() tokenizer)
-    words = F.array_remove(F.split(F.lower(col), r"\s+"), "")
+    words = words_col(F.lower(text))
     n_sh = F.greatest(F.size(words) - F.lit(n - 1), F.lit(1))
     shifted = [words] + [
         F.slice(words, k + 1, F.greatest(F.size(words) - k, F.lit(1)))
@@ -179,7 +183,7 @@ def gopher_quality_cols(text: Column | str) -> dict[str, Column]:
     dup-line occurrence fraction < 0.3, dup-line char fraction < 0.2).
     """
     col = F.col(text) if isinstance(text, str) else text
-    words = F.array_remove(F.split(col, r"\s+"), "")
+    words = words_col(col)
     n_words = F.size(words)
     safe_words = F.greatest(n_words, F.lit(1))
     word_chars = F.aggregate(

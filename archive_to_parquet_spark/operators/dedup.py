@@ -42,6 +42,16 @@ propagation's. ``near_duplicate_clusters`` and
 ``similarity.dbscan_from_pairs`` both run it; there is no second
 algorithm to choose.
 
+The exact-span operators — aligned chunks (``dedup_chunk_spans``),
+unaligned word windows (``remove_duplicated_substrings``) and
+content-defined chunks (``cdc_chunk_stats``, ``gear_cdc_chunk_stats``)
+— share the reference's one rule, the first occurrence wins:
+``_first_occurrence`` marks every unit that is not the minimum
+(id, idx) of its key. They and the per-document counters
+(``remove_boilerplate_lines``, ``crossdoc_span_stats``,
+``decontaminate``) end in one tail, ``_per_doc``: every input document
+gets one row, and a missing statistic is its zero.
+
 SimHash is computed entirely JVM-side: md5 halves of each shingle are
 bit-vote aggregated (64 map-side-combinable sums), so the whole pipeline
 stays in whole-stage codegen and — because md5 is engine-independent —
@@ -53,6 +63,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
+from archive_to_parquet_spark.functions.text import word_ngrams_col, words_col
 from archive_to_parquet_spark.functions.vectors import (
     cosine_from_norms,
     d2_col,
@@ -95,8 +106,6 @@ def dedup_exact_deterministic(
 def shingles_col(text_col: str, n: int = 3):
     """Word n-gram shingle array — see functions.text.word_ngrams_col for
     the per-row-evaluation rationale."""
-    from archive_to_parquet_spark.functions.text import word_ngrams_col
-
     return word_ngrams_col(text_col, n)
 
 
@@ -662,8 +671,6 @@ def decontaminate(
     survivors on doc_id. Every training doc is returned with its
     overlap count (left join; zero = clean).
     """
-    from archive_to_parquet_spark.functions.text import word_ngrams_col
-
     grams = lambda df: df.select(  # noqa: E731 - tiny local helper
         F.col(id_col).alias("id"),
         F.explode(F.array_distinct(word_ngrams_col(text_col, shingle_n))).alias(
@@ -683,16 +690,13 @@ def decontaminate(
         .groupBy("id")
         .agg(F.count("*").alias("n_overlap_grams"))
     )
-    return (
-        train_df.select(F.col(id_col).alias("id"))
-        .join(overlap, "id", "left")
-        .select(
-            F.col("id").alias(id_col),
-            F.coalesce("n_overlap_grams", F.lit(0)).alias("n_overlap_grams"),
-            (F.coalesce("n_overlap_grams", F.lit(0)) >= min_overlap)
-            .cast("int")
-            .alias("contaminated"),
-        )
+    return _per_doc(
+        train_df.select(F.col(id_col).alias("id")),
+        id_col,
+        overlap,
+        {"n_overlap_grams": F.lit(0)},
+    ).withColumn(
+        "contaminated", (F.col("n_overlap_grams") >= min_overlap).cast("int")
     )
 
 
@@ -847,6 +851,52 @@ def _suffix_rows(docs: DataFrame) -> DataFrame:
     )
 
 
+# -- exact-span dedup: the first occurrence wins -----------------------------
+
+
+def _first_occurrence(units: DataFrame, key: str) -> DataFrame:
+    """``units`` (``id``, ``idx``, ``key``, ...) with a boolean
+    ``repeat``: false only for the corpus-wide first occurrence of the
+    unit's key, its minimum ``(id, idx)`` — the reference's
+    first-hash-wins rule over spans (a key seen once is its own first
+    occurrence).
+
+    Plan: one map-side-combinable ``min(struct(id, idx))`` per key,
+    then the join back on the same key. A first-occurrence row (key,
+    first) is never wider than a unit (id, idx, key, ...), so whenever
+    a side fits the broadcast threshold the planner builds the
+    join-back from the first occurrences; the units stream through and
+    keep their id partitioning, which the adaptive re-plan never trades
+    for a per-document shuffle. The build side therefore does not
+    depend on which map stage finishes first — as long as nothing is
+    carried beside the min. Past the threshold it is a sort-merge join
+    on the key, and AQE skew-join splits a corpus-hot key.
+    """
+    first = units.groupBy(key).agg(F.min(F.struct("id", "idx")).alias("_first"))
+    return (
+        units.join(first, key)
+        .withColumn(
+            "repeat",
+            (F.col("id") != F.col("_first.id")) | (F.col("idx") != F.col("_first.idx")),
+        )
+        .drop("_first")
+    )
+
+
+def _per_doc(
+    df: DataFrame, id_col: str, stats: DataFrame, zeros: dict[str, Column]
+) -> DataFrame:
+    """One row per ``df`` row: its ``id`` (renamed back to ``id_col``)
+    and other columns, then each ``zeros`` column of ``stats`` (keyed
+    on ``id``), which is its typed zero where ``stats`` has no row for
+    the document — a document with no units still gets its row."""
+    return df.join(stats, "id", "left").select(
+        F.col("id").alias(id_col),
+        *(c for c in df.columns if c != "id"),
+        *(F.coalesce(c, zero).alias(c) for c, zero in zeros.items()),
+    )
+
+
 def dedup_chunk_spans(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -866,15 +916,10 @@ def dedup_chunk_spans(
     string).
 
     Plan: per-row chunking (sequence/slice/array_join — no shuffle) →
-    posexplode → groupBy(chunk) with ``min(struct(id, idx))`` (map-side
-    combinable; the min IS the winner — for unique chunks the only
-    occurrence) → join back on chunk (same key as the agg shuffle) →
-    filter losers → groupBy(id) reassembling with sort_array over
+    posexplode → ``_first_occurrence`` on the chunk → keep first
+    occurrences → groupBy(id) reassembling with sort_array over
     collected (idx, chunk) structs. Shuffle keys: chunk, then id —
-    linear in corpus chunk volume, no pairwise doc work. A pathological
-    hot chunk (the same boilerplate in millions of docs) skews the
-    join-back; AQE skew-join splits it, and the agg side is already
-    map-side-combined.
+    linear in corpus chunk volume, no pairwise doc work.
     """
     # round 11 (guide §2.5): the documents parquet arrives as one split
     # at bench scale, pinning BOTH chunk-explode map stages (the agg
@@ -883,7 +928,7 @@ def dedup_chunk_spans(
     # spread_small_scan repartitions on id only when the scan is
     # narrower than the cluster; a wide 100-TB scan is untouched.
     df = spread_small_scan(df, id_col)
-    words = F.array_remove(F.split(F.trim(F.col(text_col)), r"\s+"), "")
+    words = words_col(text_col)
     n_chunks = F.ceil(F.size(words) / F.lit(chunk_words)).cast("int")
     # guard the empty document: sequence(0, -1) would DESCEND ([0, -1]),
     # not return empty — emit no chunks instead (posexplode drops the
@@ -901,12 +946,7 @@ def dedup_chunk_spans(
         F.col(id_col).alias("id"),
         F.posexplode(chunk_array).alias("idx", "chunk"),
     )
-    winners = chunked.groupBy("chunk").agg(
-        F.min(F.struct("id", "idx")).alias("w")
-    )
-    kept = chunked.join(winners, "chunk").filter(
-        (F.col("id") == F.col("w.id")) & (F.col("idx") == F.col("w.idx"))
-    )
+    kept = _first_occurrence(chunked, "chunk").filter(~F.col("repeat"))
     rebuilt = kept.groupBy("id").agg(
         F.count("*").alias("n_kept"),
         F.array_join(
@@ -918,11 +958,8 @@ def dedup_chunk_spans(
         ).alias("text_dedup"),
     )
     totals = df.select(F.col(id_col).alias("id"), n_chunks.alias("n_chunks"))
-    return totals.join(rebuilt, "id", "left").select(
-        F.col("id").alias(id_col),
-        "n_chunks",
-        F.coalesce("n_kept", F.lit(0)).cast("long").alias("n_kept"),
-        F.coalesce("text_dedup", F.lit("")).alias("text_dedup"),
+    return _per_doc(
+        totals, id_col, rebuilt, {"n_kept": F.lit(0), "text_dedup": F.lit("")}
     )
 
 
@@ -946,8 +983,6 @@ def crossdoc_span_stats(
     gram volume. Hot grams ARE the shared ones — at extreme scale cap
     the join fan-in with cap_hot_buckets on gram before the join-back.
     """
-    from archive_to_parquet_spark.functions.text import word_ngrams_col
-
     grams = df.select(
         F.col(id_col).alias("id"),
         F.explode(F.array_distinct(word_ngrams_col(text_col, shingle_n))).alias(
@@ -966,15 +1001,15 @@ def crossdoc_span_stats(
             "n_grams"
         ),
     )
-    return totals.join(shared, "id", "left").select(
-        F.col("id").alias(id_col),
-        "n_grams",
-        F.coalesce("n_shared_grams", F.lit(0)).alias("n_shared_grams"),
+    return _per_doc(
+        totals, id_col, shared, {"n_shared_grams": F.lit(0)}
+    ).withColumn(
+        "frac_shared_grams",
         F.round(
-            F.coalesce("n_shared_grams", F.lit(0)).cast("double")
+            F.col("n_shared_grams").cast("double")
             / F.greatest(F.col("n_grams"), F.lit(1)),
             6,
-        ).alias("frac_shared_grams"),
+        ),
     )
 
 
@@ -1002,18 +1037,14 @@ def remove_duplicated_substrings(
     one row per input document.
 
     Plan: per-row window generation (sequence/slice/array_join, no
-    shuffle; ~|words| windows per doc) → one shuffle keyed on the
-    window string for ``min(struct(id, pos))`` + count (map-side
-    combinable) → join back on the same key to tag loser occurrences
-    → one shuffle keyed on id: running-max-end window functions merge
-    loser intervals into disjoint spans (classic interval union,
-    per-doc sequential) → join spans to the doc row and rebuild with
-    a single O(|words|) ``aggregate`` that concatenates the slices
-    BETWEEN spans — no per-word membership probes, no doc×doc work.
-    A corpus-hot window (boilerplate in millions of docs) skews the
-    join-back; AQE skew-join splits it, and the winner agg is already
-    map-side-combined. At extreme scale swap the window string for
-    ``xxhash64`` pairs to shrink the shuffle payload.
+    shuffle; ~|words| windows per doc) → ``_first_occurrence`` on the
+    window string tags the repeats → keyed on id: running-max-end
+    window functions merge repeat intervals into disjoint spans
+    (classic interval union, per-doc sequential) → join spans to the
+    doc row and rebuild with a single O(|words|) ``aggregate`` that
+    concatenates the slices BETWEEN spans — no per-word membership
+    probes, no doc×doc work. At extreme scale swap the window string
+    for ``xxhash64`` pairs to shrink the shuffle payload.
     """
     # the window build is O(|words|·k) string work per doc — spread a
     # narrow scan across slots before it (id partitioning is reused by
@@ -1021,7 +1052,7 @@ def remove_duplicated_substrings(
     df = spread_small_scan(
         df.select(F.col(id_col), F.col(text_col)), id_col
     )
-    words = F.array_remove(F.split(F.trim(F.col(text_col)), r"\s+"), "")
+    words = words_col(text_col)
     k = window_words
     n_words = F.size(words)
     # docs shorter than one window emit no windows (sequence(0, neg)
@@ -1035,18 +1066,12 @@ def remove_duplicated_substrings(
     ).otherwise(F.array().cast("array<string>"))
     wins = df.select(
         F.col(id_col).alias("id"),
-        F.posexplode(win_array).alias("pos", "win"),
-    )
-    winners = wins.groupBy("win").agg(
-        F.min(F.struct("id", "pos")).alias("w"), F.count("*").alias("c")
+        F.posexplode(win_array).alias("idx", "win"),
     )
     losers = (
-        wins.join(winners, "win")
-        .filter(
-            (F.col("c") > 1)
-            & ~((F.col("id") == F.col("w.id")) & (F.col("pos") == F.col("w.pos")))
-        )
-        .select("id", "pos", (F.col("pos") + k).alias("end"))
+        _first_occurrence(wins, "win")
+        .filter(F.col("repeat"))
+        .select("id", F.col("idx").alias("pos"), (F.col("idx") + k).alias("end"))
     )
     # interval union: a loser starts a NEW span iff it begins past the
     # running max end of every earlier loser in the doc; the running
@@ -1065,20 +1090,25 @@ def remove_duplicated_substrings(
         .agg(F.min("pos").alias("s"), F.max("end").alias("e"))
         .groupBy("id")
         .agg(
-            F.count("*").alias("n_spans"),
-            F.sum(F.col("e") - F.col("s")).alias("removed_words"),
+            F.count("*").cast("int").alias("n_spans"),
+            F.sum(F.col("e") - F.col("s")).cast("int").alias("removed_words"),
             F.array_sort(F.collect_list(F.struct("s", "e"))).alias("spans"),
         )
     )
-    base = df.select(F.col(id_col).alias("id"), words.alias("words"))
-    joined = base.join(spans, "id", "left")
-    span_list = F.coalesce(
-        F.col("spans"), F.array().cast("array<struct<s:int,e:int>>")
+    joined = _per_doc(
+        df.select(F.col(id_col).alias("id"), words.alias("words")),
+        id_col,
+        spans,
+        {
+            "removed_words": F.lit(0),
+            "n_spans": F.lit(0),
+            "spans": F.array().cast("array<struct<s:int,e:int>>"),
+        },
     )
     # rebuild: fold over the disjoint sorted spans, emitting the gap
     # before each span, then the tail after the last — O(|words|)
     kept = F.aggregate(
-        span_list,
+        F.col("spans"),
         F.struct(
             F.lit(0).alias("pe"), F.array().cast("array<string>").alias("acc")
         ),
@@ -1097,10 +1127,10 @@ def remove_duplicated_substrings(
         ),
     )
     return joined.select(
-        F.col("id").alias(id_col),
+        id_col,
         F.size("words").cast("int").alias("n_words"),
-        F.coalesce("removed_words", F.lit(0)).cast("int").alias("removed_words"),
-        F.coalesce("n_spans", F.lit(0)).cast("int").alias("n_spans"),
+        "removed_words",
+        "n_spans",
         F.array_join(kept, " ").alias("text_clean"),
     )
 
@@ -1138,11 +1168,9 @@ def cdc_chunk_stats(
 
     Plan: per-row boundary scan + chunk slicing (filter/transform/
     zip_with over a char sequence — no shuffle, no Python) →
-    posexplode to (id, idx, chunk) → ONE map-side-combinable shuffle
-    on the chunk's md5 for (winner, count) → join back on the same
-    key → per-doc agg keyed on id. Identical scale shape to
-    ``remove_duplicated_substrings``; a corpus-hot chunk (shared
-    boilerplate) skews the join-back and AQE skew-join splits it.
+    posexplode to (id, idx, clen, md5) → ``_chunk_dup_stats``
+    (``_first_occurrence`` on the md5, then a per-doc agg keyed on
+    id). Identical scale shape to ``remove_duplicated_substrings``.
     """
     # one md5 per char position is the hash-heaviest per-row compute in
     # the dedup family — spread a narrow single-split scan across slots
@@ -1179,33 +1207,33 @@ def cdc_chunk_stats(
         F.length("chunk").alias("clen"),
         F.md5(F.col("chunk").cast("binary")).alias("h"),
     )
-    winners = chunked.groupBy("h").agg(
-        F.min(F.struct("id", "idx")).alias("w"), F.count("*").alias("c")
-    )
-    marked = chunked.join(winners, "h").select(
-        "id",
-        "clen",
-        (
-            (F.col("c") > 1)
-            & ~((F.col("id") == F.col("w.id")) & (F.col("idx") == F.col("w.idx")))
-        ).alias("dup"),
-    )
-    per_doc = marked.groupBy("id").agg(
-        F.count("*").alias("n_chunks"),
-        F.sum(F.col("dup").cast("int")).alias("dup_chunks"),
-        F.sum(F.when(F.col("dup"), F.col("clen")).otherwise(0)).alias(
-            "dup_chars"
-        ),
-    )
-    return (
-        df.select(F.col(id_col).alias("id"))
-        .join(per_doc, "id", "left")
-        .select(
-            F.col("id").alias(id_col),
-            F.coalesce("n_chunks", F.lit(0)).cast("int").alias("n_chunks"),
-            F.coalesce("dup_chunks", F.lit(0)).cast("int").alias("dup_chunks"),
-            F.coalesce("dup_chars", F.lit(0)).cast("int").alias("dup_chars"),
+    return _chunk_dup_stats(df, id_col, chunked, "dup_chars")
+
+
+def _chunk_dup_stats(
+    df: DataFrame, id_col: str, chunked: DataFrame, dup_len: str
+) -> DataFrame:
+    """The CDC tail shared by both chunkers: ``chunked`` (id, idx, clen,
+    h) → per ``df`` document (id_col, n_chunks, dup_chunks, ``dup_len``),
+    a chunk being a duplicate when its content hash ``h`` occurred
+    first elsewhere."""
+    repeat = F.col("repeat")
+    per_doc = (
+        _first_occurrence(chunked, "h")
+        .groupBy("id")
+        .agg(
+            F.count("*").cast("int").alias("n_chunks"),
+            F.sum(repeat.cast("int")).cast("int").alias("dup_chunks"),
+            F.sum(F.when(repeat, F.col("clen")).otherwise(0))
+            .cast("int")
+            .alias(dup_len),
         )
+    )
+    return _per_doc(
+        df.select(F.col(id_col).alias("id")),
+        id_col,
+        per_doc,
+        dict.fromkeys(("n_chunks", "dup_chunks", dup_len), F.lit(0)),
     )
 
 
@@ -1265,11 +1293,9 @@ def gear_cdc_chunk_stats(
 
     Plan: one ``mapInPandas`` stage emits (id, idx, clen, chunk-md5) —
     a bounded ~36-byte row per chunk, so the Python boundary never
-    ships payload bytes anywhere — then the identical JVM flow as the
-    md5-window variant: ONE map-side-combinable shuffle on the chunk
-    hash for (winner, count), join back, per-doc agg. Upstream should
-    size-repartition archives for decode-cost balance exactly as the
-    media kernels do.
+    ships payload bytes anywhere — then the md5-window variant's JVM
+    tail, ``_chunk_dup_stats``. Upstream should size-repartition
+    archives for decode-cost balance exactly as the media kernels do.
     """
     import numpy as np
 
@@ -1314,34 +1340,7 @@ def gear_cdc_chunk_stats(
             )
 
     chunked = cols.mapInPandas(batches, schema=GEAR_CDC_DDL)
-    winners = chunked.groupBy("h").agg(
-        F.min(F.struct("id", "idx")).alias("w"), F.count("*").alias("c")
-    )
-    marked = chunked.join(winners, "h").select(
-        "id",
-        "clen",
-        (
-            (F.col("c") > 1)
-            & ~((F.col("id") == F.col("w.id")) & (F.col("idx") == F.col("w.idx")))
-        ).alias("dup"),
-    )
-    per_doc = marked.groupBy("id").agg(
-        F.count("*").alias("n_chunks"),
-        F.sum(F.col("dup").cast("int")).alias("dup_chunks"),
-        F.sum(F.when(F.col("dup"), F.col("clen")).otherwise(0)).alias(
-            "dup_bytes"
-        ),
-    )
-    return (
-        df.select(F.col(id_col).alias("id"))
-        .join(per_doc, "id", "left")
-        .select(
-            F.col("id").alias(id_col),
-            F.coalesce("n_chunks", F.lit(0)).cast("int").alias("n_chunks"),
-            F.coalesce("dup_chunks", F.lit(0)).cast("int").alias("dup_chunks"),
-            F.coalesce("dup_bytes", F.lit(0)).cast("int").alias("dup_bytes"),
-        )
-    )
+    return _chunk_dup_stats(df, id_col, chunked, "dup_bytes")
 
 
 def remove_boilerplate_lines(
@@ -1349,48 +1348,33 @@ def remove_boilerplate_lines(
     id_col: str = "doc_id",
     text_col: str = "text",
     min_doc_frequency: int = 3,
-    keep_first: bool = False,
 ) -> DataFrame:
     """C4-style boilerplate removal at LINE granularity: a line occurring
     in ≥ ``min_doc_frequency`` distinct documents (nav menus, cookie
-    banners, license headers) is removed — from every document, or from
-    all but the globally first (min (doc_id, line_idx)) occurrence when
-    ``keep_first`` is set.
+    banners, license headers) is removed from every document.
 
     Returns (id_col, n_lines, n_kept, text_clean), one row per input
     document; blank lines are preserved verbatim (they don't count
     toward document frequency and are never removed).
 
     Plan: posexplode lines (no shuffle) → distinct (line, doc) pairs →
-    count per line = document frequency (map-side partial; grouping on
-    the line ONCE for both the frequency and, with keep_first, the
-    min-occurrence winner) → join back on line (same key as the agg
-    shuffle; AQE splits a pathological hot line) → reassemble per doc
-    with sort_array over (idx, line) structs. Cost is linear in corpus
-    line volume — no doc×doc work.
+    count per line = document frequency (map-side partial) → anti-join
+    back on line (same key as the agg shuffle; AQE splits a
+    pathological hot line) → reassemble per doc with sort_array over
+    (idx, line) structs. Cost is linear in corpus line volume — no
+    doc×doc work.
     """
-    trimmed = F.trim(F.col("line"))
     lines = df.select(
         F.col(id_col).alias("id"),
         F.posexplode(F.split(F.col(text_col), "\n")).alias("idx", "line"),
     )
-    content = lines.filter(F.length(trimmed) > 0)
-    freq = content.groupBy("line").agg(
-        F.count_distinct("id").alias("doc_freq"),
-        F.min(F.struct("id", "idx")).alias("first_occ"),
+    hot = (
+        lines.filter(F.length(F.trim(F.col("line"))) > 0)
+        .groupBy("line")
+        .agg(F.count_distinct("id").alias("doc_freq"))
+        .filter(F.col("doc_freq") >= min_doc_frequency)
     )
-    hot = freq.filter(F.col("doc_freq") >= min_doc_frequency).select(
-        "line", "first_occ"
-    )
-    joined = lines.join(hot, "line", "left")
-    if keep_first:
-        drop = F.col("first_occ").isNotNull() & ~(
-            (F.col("id") == F.col("first_occ.id"))
-            & (F.col("idx") == F.col("first_occ.idx"))
-        )
-    else:
-        drop = F.col("first_occ").isNotNull()
-    kept = joined.filter(~drop)
+    kept = lines.join(hot, "line", "left_anti")
     rebuilt = kept.groupBy("id").agg(
         F.count("*").alias("n_kept"),
         F.array_join(
@@ -1405,11 +1389,8 @@ def remove_boilerplate_lines(
         F.col(id_col).alias("id"),
         F.size(F.split(F.col(text_col), "\n")).alias("n_lines"),
     )
-    return totals.join(rebuilt, "id", "left").select(
-        F.col("id").alias(id_col),
-        "n_lines",
-        F.coalesce("n_kept", F.lit(0)).cast("long").alias("n_kept"),
-        F.coalesce("text_clean", F.lit("")).alias("text_clean"),
+    return _per_doc(
+        totals, id_col, rebuilt, {"n_kept": F.lit(0), "text_clean": F.lit("")}
     )
 
 

@@ -16,15 +16,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from archive_to_parquet_spark.functions.text import words_col
+
 
 def word_frequencies(df: DataFrame, text_col: str = "text") -> DataFrame:
     """(word, freq) over the corpus — lowercased, whitespace-split.
     The map-side-combined groupBy collapses the corpus to its distinct
     word set; every downstream tokenizer statistic runs on this table,
     never on raw text again."""
-    words = F.explode(
-        F.array_remove(F.split(F.lower(F.col(text_col)), r"\s+"), "")
-    ).alias("word")
+    words = F.explode(words_col(F.lower(text_col))).alias("word")
     return df.select(words).groupBy("word").agg(F.count("*").alias("freq"))
 
 
@@ -142,7 +142,7 @@ def bpe_token_count_col(text_col: str, merges: list[tuple[str, str]]):
     engine divergence char-splitting has (Java splits non-BMP code
     points into surrogate halves).
     """
-    words = F.array_remove(F.split(F.lower(F.col(text_col)), r"\s+"), "")
+    words = words_col(F.lower(text_col))
 
     def word_tokens(w):
         sym = F.array_join(F.split(w, ""), _SEP)

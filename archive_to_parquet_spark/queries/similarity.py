@@ -11,9 +11,10 @@ from __future__ import annotations
 import hashlib
 import os
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from archive_to_parquet_spark.operators.candidates import top_k
 from archive_to_parquet_spark.operators.similarity import (
     fixed_hyperplanes,
     ivf_top_k_fixed_centroids,
@@ -382,13 +383,14 @@ def search_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("query_id", "doc_id")
         .agg(F.round(F.sum(contrib), 4).alias("score"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
-    )
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 10)
-        .select(
+        top_k(
+            scored,
+            "query_id",
+            [F.col("score").desc(), F.col("doc_id").asc()],
+            10,
+            "rank",
+        ).select(
             "query_id",
             F.col("rank").cast("int").alias("rank"),
             "doc_id",
@@ -912,8 +914,6 @@ def search_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output contract and oracle are identical to `search_bm25` — the
     index round-trip must be score-exact.
     """
-    from pyspark.sql import Window
-
     docs = _t(spark, sf_dir, "documents")
     stage = _stage_dir("searchidx", sf_dir)
     postings_path = os.path.join(stage, "postings")
@@ -965,13 +965,14 @@ def search_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("query_id", "doc_id")
         .agg(F.round(F.sum(contrib), 4).alias("score"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
-    )
     return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 10)
-        .select(
+        top_k(
+            scored,
+            "query_id",
+            [F.col("score").desc(), F.col("doc_id").asc()],
+            10,
+            "rank",
+        ).select(
             "query_id",
             F.col("rank").cast("int").alias("rank"),
             "doc_id",
@@ -1210,8 +1211,6 @@ def ann_jl_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     floats (the point of JL at 100 TB); queries broadcast both stages;
     only candidate rows pay the full-width cosine.
     """
-    from pyspark.sql import Window
-
     from archive_to_parquet_spark.functions.vectors import (
         cosine_from_norms,
         l2_norm_col,
@@ -1233,16 +1232,13 @@ def ann_jl_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     for j in range(_JL_OUT_DIM):
         term = (F.col(f"s{j}") - F.col(f"q{j}")) * (F.col(f"s{j}") - F.col(f"q{j}"))
         d2 = term if d2 is None else d2 + term
-    wc = Window.partitionBy("query_id").orderBy(
-        F.col("approx_d2").asc(), F.col("vec_id").asc()
-    )
-    cand = (
-        cs.join(F.broadcast(qs))
-        .select("query_id", "vec_id", d2.alias("approx_d2"))
-        .withColumn("crank", F.row_number().over(wc))
-        .filter(F.col("crank") <= _JL_ANN_CANDIDATES)
-        .select("query_id", "vec_id")
-    )
+    cand = top_k(
+        cs.join(F.broadcast(qs)).select("query_id", "vec_id", d2.alias("approx_d2")),
+        "query_id",
+        [F.col("approx_d2").asc(), F.col("vec_id").asc()],
+        _JL_ANN_CANDIDATES,
+        "crank",
+    ).select("query_id", "vec_id")
     emb = _t(spark, sf_dir, "embeddings")
     full = emb.select(
         "vec_id", F.col("embedding").alias("cv"), l2_norm_col("embedding").alias("cn")
@@ -1253,17 +1249,15 @@ def ann_jl_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         l2_norm_col("embedding").alias("qn"),
     )
     score = F.round(cosine_from_norms("cv", "qv", "cn", "qn"), 6)
-    wr = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc()
-    )
-    return (
+    return top_k(
         cand.join(full, "vec_id")
         .join(F.broadcast(qfull), "query_id")
-        .select("query_id", "vec_id", score.alias("cosine"))
-        .withColumn("rank", F.row_number().over(wr))
-        .filter(F.col("rank") <= 10)
-        .select("query_id", "vec_id", "cosine", "rank")
-    )
+        .select("query_id", "vec_id", score.alias("cosine")),
+        "query_id",
+        [F.col("cosine").desc(), F.col("vec_id").asc()],
+        10,
+        "rank",
+    ).select("query_id", "vec_id", "cosine", "rank")
 
 
 def _jl_ann_oracle_sql() -> str:
@@ -1373,8 +1367,6 @@ def ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     measure the PROBE — the actual serving workload."""
     import re
 
-    from pyspark.sql import Window
-
     from archive_to_parquet_spark.functions.vectors import (
         cosine_from_norms,
         l2_norm_col,
@@ -1436,14 +1428,13 @@ def ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         F.round(cosine_from_norms("cv", "qv", "cn", "qn"), 6).alias("cosine"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc()
-    )
-    return (
-        candidates.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= _ALSHBK_K)
-        .select("query_id", "vec_id", "cosine", "rank")
-    )
+    return top_k(
+        candidates,
+        "query_id",
+        [F.col("cosine").desc(), F.col("vec_id").asc()],
+        _ALSHBK_K,
+        "rank",
+    ).select("query_id", "vec_id", "cosine", "rank")
 
 
 def _alshbk_sql_planes():
@@ -1567,15 +1558,13 @@ def search_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
     )
     qdocs = docs.filter(F.col("doc_id") % 100 == 50).select("doc_id")
-    qw = Window.partitionBy("doc_id").orderBy(
-        F.col("tf").desc(), F.col("term").asc()
-    )
-    qterms = (
-        tf.join(F.broadcast(qdocs), "doc_id")
-        .withColumn("rn", F.row_number().over(qw))
-        .filter(F.col("rn") <= _HYB_QTERMS)
-        .select(F.col("doc_id").alias("query_id"), "term")
-    )
+    qterms = top_k(
+        tf.join(F.broadcast(qdocs), "doc_id"),
+        "doc_id",
+        [F.col("tf").desc(), F.col("term").asc()],
+        _HYB_QTERMS,
+        "rn",
+    ).select(F.col("doc_id").alias("query_id"), "term")
     dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
     stats = dl.agg(
         F.count("*").cast("double").alias("n_docs"), F.avg("dl").alias("avgdl")
@@ -1603,14 +1592,13 @@ def search_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("query_id", "doc_id")
         .agg(F.round(F.sum(contrib), 4).alias("score"))
     )
-    lw = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("doc_id").asc()
-    )
-    lex = (
-        lex_scored.withColumn("rank_lex", F.row_number().over(lw))
-        .filter(F.col("rank_lex") <= _HYB_DEPTH)
-        .select("query_id", "doc_id", "rank_lex")
-    )
+    lex = top_k(
+        lex_scored,
+        "query_id",
+        [F.col("score").desc(), F.col("doc_id").asc()],
+        _HYB_DEPTH,
+        "rank_lex",
+    ).select("query_id", "doc_id", "rank_lex")
 
     # --- semantic leg: broadcast query vectors × one corpus scan
     q = emb.filter(F.col("vec_id") % 100 == 50).select(
@@ -1630,14 +1618,13 @@ def search_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         F.round(cosine_from_norms("cv", "qv", "cn", "qn"), 6).alias("cosine"),
     )
-    sw = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("vec_id").asc()
-    )
-    sem = (
-        sem_scored.withColumn("rank_sem", F.row_number().over(sw))
-        .filter(F.col("rank_sem") <= _HYB_DEPTH)
-        .select("query_id", F.col("vec_id").alias("doc_id"), "rank_sem")
-    )
+    sem = top_k(
+        sem_scored,
+        "query_id",
+        [F.col("cosine").desc(), F.col("vec_id").asc()],
+        _HYB_DEPTH,
+        "rank_sem",
+    ).select("query_id", F.col("vec_id").alias("doc_id"), "rank_sem")
 
     # --- reciprocal-rank fusion over the two ≤20-deep lists
     fused = lex.join(sem, ["query_id", "doc_id"], "full_outer").select(
@@ -1656,13 +1643,14 @@ def search_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit("sem"))
         .alias("src"),
     )
-    fw = Window.partitionBy("query_id").orderBy(
-        F.col("rrf_score").desc(), F.col("doc_id").asc()
-    )
     return (
-        fused.withColumn("rank", F.row_number().over(fw))
-        .filter(F.col("rank") <= _HYB_OUT)
-        .select(
+        top_k(
+            fused,
+            "query_id",
+            [F.col("rrf_score").desc(), F.col("doc_id").asc()],
+            _HYB_OUT,
+            "rank",
+        ).select(
             "query_id",
             "doc_id",
             "rrf_score",

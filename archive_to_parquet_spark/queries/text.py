@@ -14,7 +14,9 @@ from archive_to_parquet_spark.functions.text import (
     STOPWORDS,
     stopword_pattern,
     token_count_col,
+    words_col,
 )
+from archive_to_parquet_spark.operators.candidates import top_k
 from archive_to_parquet_spark.queries.relational import _t
 
 
@@ -466,9 +468,7 @@ def vocab_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _t(spark, sf_dir, "documents")
     toks = docs.select(
         "doc_id",
-        F.explode(
-            F.array_remove(F.split(F.lower("text"), r"\s+"), "")
-        ).alias("tok"),
+        F.explode(words_col(F.lower("text"))).alias("tok"),
     )
     vocab = (
         toks.groupBy("tok")
@@ -744,7 +744,7 @@ def filter_quantile_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
         (
             _stopword_hits_expr(F.col("text")).cast("double")
             / F.greatest(
-                F.size(F.array_remove(F.split(F.col("text"), r"\s+"), "")),
+                F.size(words_col("text")),
                 F.lit(1),
             )
         ).alias("stop_ratio"),
@@ -877,7 +877,7 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("faw") > 0.7)
         & (F.col("rsw") >= 1)
     )
-    words = F.array_remove(F.split(F.lower("text"), r"\s+"), "")
+    words = words_col(F.lower("text"))
     keyed = gated.withColumn(
         "fp", F.md5(F.concat_ws(" ", F.slice(words, 1, 5)).cast("binary"))
     )
@@ -1493,17 +1493,13 @@ def curation_domain_cap(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("doc_id") % 3 + 1).cast("int"),
     )
     domain = F.concat(F.col("source"), F.lit(".example."), tld)
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("domain").orderBy(
-        F.col("n_chars").desc(), F.col("doc_id").asc()
-    )
-    return (
-        docs.select("doc_id", "n_chars", domain.alias("domain"))
-        .withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 3)
-        .select("domain", "rnk", "doc_id", "n_chars")
-    )
+    return top_k(
+        docs.select("doc_id", "n_chars", domain.alias("domain")),
+        "domain",
+        [F.col("n_chars").desc(), F.col("doc_id").asc()],
+        3,
+        "rnk",
+    ).select("domain", "rnk", "doc_id", "n_chars")
 
 
 CURATION_DOMAIN_CAP_SQL = """
@@ -1610,7 +1606,7 @@ def chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     the result compact; the text itself is array_to_string of the same
     slice."""
     docs = _t(spark, sf_dir, "documents")
-    words = F.array_remove(F.split(F.lower("text"), r"\s+"), "")
+    words = words_col(F.lower("text"))
     n = F.size(words)
     starts = F.sequence(
         F.lit(1), F.greatest(F.col("n"), F.lit(1)), F.lit(_CHUNK_STRIDE)
@@ -1683,9 +1679,7 @@ def text_tfidf_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_docs = docs.agg(F.count("*").alias("n_docs"))
     words = docs.select(
         "doc_id",
-        F.explode(
-            F.array_remove(F.split(F.lower("text"), r"\s+"), "")
-        ).alias("word"),
+        F.explode(words_col(F.lower("text"))).alias("word"),
     )
     tf = words.groupBy("doc_id", "word").agg(F.count("*").alias("tf"))
     df_ = (
@@ -1702,16 +1696,13 @@ def text_tfidf_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.col("tf") * idf6, 6).alias("tfidf"),
         )
     )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("doc_id").orderBy(
-        F.col("tfidf").desc(), F.col("word").asc()
-    )
-    return (
-        scored.withColumn("rnk", F.row_number().over(w))
-        .filter(F.col("rnk") <= 5)
-        .select("doc_id", "rnk", "word", "tf", "tfidf")
-    )
+    return top_k(
+        scored,
+        "doc_id",
+        [F.col("tfidf").desc(), F.col("word").asc()],
+        5,
+        "rnk",
+    ).select("doc_id", "rnk", "word", "tf", "tfidf")
 
 
 TEXT_TFIDF_SQL = """
@@ -1768,7 +1759,7 @@ def train_logreg_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     accuracy by sign check (z >= 0 — no float rounding in the metric).
     """
     docs = _t(spark, sf_dir, "documents")
-    words = F.array_remove(F.split(F.lower("text"), r"\s+"), "")
+    words = words_col(F.lower("text"))
     n_words = F.greatest(F.size(words), F.lit(1)).cast("double")
 
     def e6(col):
@@ -2046,7 +2037,7 @@ def eval_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     bin assignment and sums replay exactly in the oracle.
     """
     docs = _t(spark, sf_dir, "documents")
-    words = F.array_remove(F.split(F.lower("text"), r"\s+"), "")
+    words = words_col(F.lower("text"))
     n_words = F.greatest(F.size(words), F.lit(1)).cast("double")
 
     def e6(col):
@@ -2291,16 +2282,14 @@ def sample_stratified_neyman(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("alloc_h"),
         )
     )
-    pri_w = Window.partitionBy("lang").orderBy(
-        F.col("priority").asc(), F.col("doc_id").asc()
-    )
-    drawn = (
+    drawn = top_k(
         docs.select(
             "lang", "doc_id", F.md5(F.col("doc_id").cast("string")).alias("priority")
-        )
-        .join(F.broadcast(alloc), "lang")
-        .withColumn("rn", F.row_number().over(pri_w))
-        .filter(F.col("rn") <= F.col("alloc_h"))
+        ).join(F.broadcast(alloc), "lang"),
+        "lang",
+        [F.col("priority").asc(), F.col("doc_id").asc()],
+        F.col("alloc_h"),
+        "rn",
     )
     return drawn.select(
         "lang",

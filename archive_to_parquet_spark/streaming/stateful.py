@@ -84,61 +84,3 @@ def running_user_stats(events: DataFrame) -> DataFrame:
         "update",
         GroupStateTimeout.NoTimeout,
     )
-
-
-def running_user_stats_tws(events: DataFrame) -> DataFrame:
-    """The same operator on Spark 4's transformWithStateInPandas API —
-    typed value state in the new state-store processor model (the
-    successor to applyInPandasWithState; composable state variables,
-    timers, TTL).
-
-    NOTE: the runtime path requires the ``protobuf`` Python package
-    (state serialization uses it); in environments without a working
-    ``google.protobuf``, the query fails at stream start — use
-    ``running_user_stats`` (applyInPandasWithState) there. Declared and
-    plan-checked regardless; executed in tests only when protobuf
-    imports."""
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class UserStatsProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState("stats", STATE_SCHEMA)
-
-        def handleInputRows(self, key, rows, timerValues):
-            (user_id,) = key
-            if self._state.exists():
-                n, total_c, vmin, vmax = self._state.get()
-            else:
-                n, total_c, vmin, vmax = 0, 0.0, float("inf"), float("-inf")
-            for pdf in rows:
-                values = pdf["value"].astype(float)
-                n += len(values)
-                # exact integer cents — see _update_user_state
-                total_c += float((values * 100).round().sum())
-                if len(values):
-                    vmin = min(vmin, float(values.min()))
-                    vmax = max(vmax, float(values.max()))
-            self._state.update((n, total_c, vmin, vmax))
-            # see _update_user_state: never emit the ±inf sentinels
-            yield pd.DataFrame(
-                {
-                    "user_id": [user_id],
-                    "n_events": [n],
-                    "total_value": [total_c / 100.0],
-                    "min_value": [vmin if n else None],
-                    "max_value": [vmax if n else None],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        UserStatsProcessor(),
-        outputStructType=OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )

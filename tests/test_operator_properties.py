@@ -573,3 +573,124 @@ def test_substring_dedup_matches_bruteforce_reference(spark):
             for r in remove_duplicated_substrings(df, window_words=k).collect()
         }
         assert got == ref, f"trial {trial} (k={k}) diverged"
+
+
+# --- aligned-chunk and CDC dedup vs first-occurrence references -----------
+
+
+def _ref_first_occurrence(units):
+    """``{(doc, idx): repeat}`` for ``{(doc, idx): key}``: a unit repeats
+    unless it is the minimum (doc, idx) of its key."""
+    first = {}
+    for unit, key in sorted(units.items()):
+        first.setdefault(key, unit)
+    return {unit: first[key] != unit for unit, key in units.items()}
+
+
+def _ref_dedup_chunk_spans(docs, k):
+    """Same contract as operators.dedup.dedup_chunk_spans."""
+    chunks = {}
+    for d, t in docs:
+        ws = t.split()
+        chunks[d] = [" ".join(ws[i : i + k]) for i in range(0, len(ws), k)]
+    repeat = _ref_first_occurrence(
+        {(d, i): c for d, cs in chunks.items() for i, c in enumerate(cs)}
+    )
+    out = {}
+    for d, cs in chunks.items():
+        kept = [c for i, c in enumerate(cs) if not repeat[(d, i)]]
+        out[d] = (len(cs), len(kept), " ".join(kept))
+    return out
+
+
+def _ref_cdc_chunk_stats(docs, window, boundary_hex_lt):
+    """Same contract as operators.dedup.cdc_chunk_stats: a chunk ends
+    after 1-based position i (window <= i < len) when the md5 hex of
+    the ``window`` chars ending at i sorts below ``boundary_hex_lt``."""
+    import hashlib
+
+    def md5(s):
+        return hashlib.md5(s.encode()).hexdigest()
+
+    chunks = {}
+    for d, t in docs:
+        cuts = [
+            i
+            for i in range(window, len(t))
+            if md5(t[i - window : i])[:2] < boundary_hex_lt
+        ]
+        ends = cuts + [len(t)]
+        starts = [0] + cuts
+        chunks[d] = [t[s:e] for s, e in zip(starts, ends)] if t else []
+    repeat = _ref_first_occurrence(
+        {(d, i): md5(c) for d, cs in chunks.items() for i, c in enumerate(cs)}
+    )
+    out = {}
+    for d, cs in chunks.items():
+        dups = [c for i, c in enumerate(cs) if repeat[(d, i)]]
+        out[d] = (len(cs), len(dups), sum(len(c) for c in dups))
+    return out
+
+
+def _span_corpus(rng, n_docs):
+    """Docs built from a small phrase pool (repeats across docs), some
+    repeating a phrase inside one doc, one copied doc, and empty and
+    whitespace-only docs."""
+    words = [f"w{i}" for i in range(6)]
+    pool = [
+        " ".join(rng.choice(words) for _ in range(rng.randint(1, 4)))
+        for _ in range(5)
+    ]
+    docs = []
+    for d in range(n_docs):
+        parts = [rng.choice(pool) for _ in range(rng.randint(1, 5))]
+        if rng.random() < 0.3:
+            parts += parts[:2]  # a repeat inside the doc
+        docs.append((d, rng.choice([" ", "  ", "\n", " \t"]).join(parts)))
+    docs.append((n_docs, docs[0][1]))  # a whole-doc copy
+    docs += [(n_docs + 1, ""), (n_docs + 2, "  \n\t "), (n_docs + 3, " ")]
+    return docs
+
+
+def test_chunk_span_dedup_matches_first_occurrence_reference(spark):
+    """Randomized corpora (fixed seed): every output column of
+    dedup_chunk_spans equals the Python first-occurrence reference."""
+    import random
+
+    from archive_to_parquet_spark.operators.dedup import dedup_chunk_spans
+
+    rng = random.Random(0x5A11)
+    for trial in range(4):
+        docs = _span_corpus(rng, 10)
+        k = rng.choice([1, 2, 3])
+        df = spark.createDataFrame(docs, "doc_id long, text string")
+        got = {
+            r.doc_id: (r.n_chunks, r.n_kept, r.text_dedup)
+            for r in dedup_chunk_spans(df, chunk_words=k).collect()
+        }
+        assert got == _ref_dedup_chunk_spans(docs, k), f"trial {trial} (k={k})"
+
+
+def test_cdc_chunk_stats_matches_first_occurrence_reference(spark):
+    """Randomized corpora (fixed seed), with a short window and a
+    permissive boundary so docs split into many small chunks: every
+    output column of cdc_chunk_stats equals the Python reference."""
+    import random
+
+    from archive_to_parquet_spark.operators.dedup import cdc_chunk_stats
+
+    rng = random.Random(0xCDC)
+    for trial in range(4):
+        docs = _span_corpus(rng, 10)
+        window = rng.choice([2, 3, 4])
+        df = spark.createDataFrame(docs, "doc_id long, text string")
+        got = {
+            r.doc_id: (r.n_chunks, r.dup_chunks, r.dup_chars)
+            for r in cdc_chunk_stats(
+                df, window=window, boundary_hex_lt="40"
+            ).collect()
+        }
+        want = _ref_cdc_chunk_stats(docs, window, "40")
+        assert got == want, f"trial {trial} (window={window})"
+        assert any(n > 1 for n, _, _ in want.values())
+        assert any(dup for _, dup, _ in want.values())

@@ -529,3 +529,27 @@ def test_weighted_priority_sample_is_take_ordered(spark):
     plan = _plan(q.queries()["sample_weighted_priority"](spark, SF_DIR))
     assert "TakeOrderedAndProject" in plan
     assert "Sort " not in plan  # no global sort node
+
+
+def test_first_occurrence_join_back_builds_from_the_first_occurrences(spark):
+    """The exact-span kernel's join-back broadcasts the first-occurrence
+    side and streams the units: a units-side build lets the adaptive
+    plan flip between the two from run to run (SCALING.md, Exact-span
+    first occurrence)."""
+    import re
+
+    from archive_to_parquet_spark import queries as q
+
+    for name, key in (
+        ("dedup_span_removal", "chunk"),
+        ("dedup_substring_exact", "win"),
+        ("dedup_cdc_chunks", "h"),
+        ("dedup_cdc_gear", "h"),
+    ):
+        plan = _plan(q.queries()[name](spark, SF_DIR))
+        sides = re.findall(
+            rf"BroadcastHashJoin \[[^\]]*\b{key}#\d+\], \[[^\]]*\b{key}#\d+\], "
+            r"Inner, (Build\w+)",
+            plan,
+        )
+        assert sides == ["BuildRight"], (name, sides)

@@ -166,35 +166,6 @@ def test_stateful_running_user_stats(spark, event_stream_dir):
         assert abs(out[r.user_id].total_value - r.total) < 1e-6
 
 
-def test_stateful_tws_declares_or_runs(spark, event_stream_dir):
-    """transformWithStateInPandas twin: executes fully where protobuf
-    works; otherwise asserts the query at least constructs (analysis)
-    and documents the runtime dependency."""
-    from archive_to_parquet_spark.streaming.stateful import running_user_stats_tws
-
-    schema = spark.read.parquet(event_stream_dir).schema
-    stream = spark.readStream.schema(schema).parquet(event_stream_dir)
-    out = running_user_stats_tws(stream)  # analysis/plan must succeed
-    assert set(out.columns) == {
-        "user_id", "n_events", "total_value", "min_value", "max_value",
-    }
-    try:
-        import google.protobuf.descriptor  # noqa: F401
-    except ImportError:
-        pytest.skip("protobuf unavailable: tws runtime path not executable here")
-    q = (
-        out.writeStream.outputMode("update")
-        .format("memory")
-        .queryName("tws_stats")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-        assert spark.sql("SELECT COUNT(*) n FROM tws_stats").collect()[0].n > 0
-    finally:
-        q.stop()
-
-
 def _drain(query, timeout_s: float = 120) -> None:
     """Wait for an availableNow stream_convert query to finish."""
     deadline = time.time() + timeout_s

@@ -65,21 +65,6 @@ def test_remove_boilerplate_lines_drops_hot_lines(spark):
     assert out[1]["n_lines"] == 4 and out[1]["n_kept"] == 3
 
 
-def test_remove_boilerplate_lines_keep_first(spark):
-    from archive_to_parquet_spark.operators.dedup import remove_boilerplate_lines
-
-    docs = [(1, "dup\nbody1"), (2, "dup\nbody2"), (3, "body3\ndup")]
-    df = spark.createDataFrame(docs, ["doc_id", "text"])
-    out = {
-        r["doc_id"]: r["text_clean"]
-        for r in remove_boilerplate_lines(
-            df, min_doc_frequency=2, keep_first=True
-        ).collect()
-    }
-    # globally-first occurrence (doc 1, idx 0) survives, later ones drop
-    assert out == {1: "dup\nbody1", 2: "body2", 3: "body3"}
-
-
 def test_remove_boilerplate_lines_fully_boilerplate_doc(spark):
     from archive_to_parquet_spark.operators.dedup import remove_boilerplate_lines
 
