@@ -45,6 +45,14 @@ def words_col(text: Column | str) -> Column:
     return F.array_remove(F.split(text, r"\s+"), "")
 
 
+def terms_col(text: Column | str) -> Column:
+    """Lowercase alphanumeric terms: the runs of ``[a-z0-9]`` in
+    ``lower(text)`` — the index/query term split of the BM25 family,
+    the count-min word sketch and the readability word count, written
+    ``regexp_extract_all(lower(text), '[a-z0-9]+')`` in their oracles."""
+    return F.regexp_extract_all(F.lower(text), F.lit("[a-z0-9]+"), F.lit(0))
+
+
 def word_ngrams_col(text: Column | str, n: int = 3) -> Column:
     """Word n-gram shingle array (lowercased, whitespace-split).
 

@@ -24,11 +24,6 @@ def url_host(url: Column) -> Column:
     return F.parse_url(url, F.lit("HOST"))
 
 
-def url_path(url: Column) -> Column:
-    """Path component of a URL."""
-    return F.parse_url(url, F.lit("PATH"))
-
-
 def url_query_param(url: Column, key: str) -> Column:
     """A single query parameter's value (``parse_url`` QUERY form)."""
     return F.parse_url(url, F.lit("QUERY"), F.lit(key))

@@ -606,41 +606,31 @@ def near_duplicate_clusters(
 
 def embedding_near_duplicates(
     df: DataFrame,
+    planes: list[list[float]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     threshold: float = 0.95,
-    num_planes: int = 8,
-    seed: int = 42,
-    planes: list[list[float]] | None = None,
     max_bucket_size: int | None = 100_000,
     observation: Observation | None = None,
 ) -> DataFrame:
     """Embedding-cosine near-dup pairs via random-hyperplane LSH.
 
-    Sign-of-dot-product against ``num_planes`` fixed pseudo-random
-    hyperplanes → bucket int → candidate pairs within a bucket → exact
-    cosine filter. Identical vectors always share a bucket, so recall
-    for exact/near-exact duplicates is structural, not probabilistic.
-
-    ``planes`` (literal plane matrix, see similarity.fixed_hyperplanes)
-    keeps the bucketing engine-independent for oracle checks; default is
-    the xxhash64-derived on-the-fly planes (no driver state shipped).
+    Sign-of-dot-product against the literal plane matrix ``planes``
+    (similarity.fixed_hyperplanes — engine-independent, so an oracle can
+    reproduce the buckets) → bucket int → candidate pairs within a
+    bucket → exact cosine filter. Identical vectors always share a
+    bucket, so recall for exact/near-exact duplicates is structural,
+    not probabilistic.
     """
     from archive_to_parquet_spark.operators.similarity import (
-        hyperplane_bucket_col,
         hyperplane_bucket_literal,
     )
 
-    bucket = (
-        hyperplane_bucket_literal(vec_col, planes)
-        if planes is not None
-        else hyperplane_bucket_col(vec_col, num_planes, seed)
-    )
     bucketed = df.select(
         F.col(id_col).alias("id"),
         F.col(vec_col).alias("v"),
         l2_norm_col(vec_col).alias("norm"),
-        bucket.alias("bucket"),
+        hyperplane_bucket_literal(vec_col, planes).alias("bucket"),
     )
     return bucket_pairs(
         bucketed,
@@ -1174,9 +1164,18 @@ def cdc_chunk_stats(
     """
     # one md5 per char position is the hash-heaviest per-row compute in
     # the dedup family — spread a narrow single-split scan across slots
-    # before it (the per-doc agg downstream reuses the id partitioning)
-    df = spread_small_scan(
-        df.select(F.col(id_col), F.col(text_col)), id_col
+    # before it (the per-doc agg downstream reuses the id partitioning).
+    # A document without an id gets no stats (the per-doc join cannot
+    # match it) and, as in the oracle's null-last order, owns no
+    # chunk's first occurrence, so its chunks are dropped before the
+    # spread. Written out, not left to the planner, which infers it for
+    # the join-back side only: both unit consumers then share one
+    # exchange.
+    spread = spread_small_scan(
+        df.select(F.col(id_col), F.col(text_col)).filter(
+            F.col(id_col).isNotNull()
+        ),
+        id_col,
     )
     w = window
     s = F.col(text_col)
@@ -1199,7 +1198,7 @@ def cdc_chunk_stats(
         n > 0,
         F.zip_with(starts, ends, lambda st, en: s.substr(st, en - st + 1)),
     ).otherwise(F.array().cast("array<string>"))
-    chunked = df.select(
+    chunked = spread.select(
         F.col(id_col).alias("id"), F.posexplode(chunks).alias("idx", "chunk")
     ).select(
         "id",

@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from archive_to_parquet_spark.functions.text import terms_col
+
 # log10(1 + 1/d) in nano-units, d = 1..9 — precomputed integer literals
 # so no engine evaluates a transcendental (ln/log10 differ in the last
 # ulp between JVM and libm; see the k-anonymity/ndcg integer-math
@@ -48,9 +50,7 @@ def flesch_readability(
     Returns ``keep_cols`` (default: every input column) plus
     ``n_words``, ``n_sentences``, ``n_syllables``, ``flesch``.
     """
-    words = F.size(
-        F.regexp_extract_all(F.lower(text_col), F.lit("[a-z0-9]+"), F.lit(0))
-    )
+    words = F.size(terms_col(text_col))
     sentences = F.greatest(
         F.size(F.regexp_extract_all(text_col, F.lit("[.!?]+"), F.lit(0))),
         F.lit(1),

@@ -77,16 +77,16 @@ def hash_split_col(
 
 
 def stratified_sample(
-    df: DataFrame,
     key: Column | str,
     strata: Column | str,
     rates: dict[str, float],
     default_rate: float = 0.0,
     seed: str = "strata",
-) -> DataFrame:
+) -> Column:
     """Deterministic per-stratum sampling (the reproducible twin of
-    ``df.sampleBy``): each stratum value keeps its own rate; unlisted
-    strata keep ``default_rate``. One scan, filter pushdown-eligible."""
+    ``df.sampleBy``) as a boolean keep column: each stratum value keeps
+    its own rate; unlisted strata keep ``default_rate``. Filter on it
+    (pushdown-eligible) or project it as a flag."""
     s = F.col(strata) if isinstance(strata, str) else strata
     u = uniform_hex_col(key, seed)
     threshold = None
@@ -102,7 +102,7 @@ def stratified_sample(
         if threshold is None
         else threshold.otherwise(F.lit(hex_threshold(default_rate)))
     )
-    return df.filter(u < threshold)
+    return u < threshold
 
 
 def sample_fixed_per_group(

@@ -8,6 +8,13 @@ top-k or clustering tail, built from the stages in
     candidates (scan / bucket / inverted list / PQ codes)
               → exact re-rank → ``top_k`` per query
 
+Each operator keeps its own candidate step; the re-rank has one home
+per distance: ``cosine_top_k`` (rounded cosine, ties to the smaller
+id) for the cosine operators here and the catalog's JL, bucketed-LSH
+and hybrid entries, ``_pq_rerank`` (ADC cut to ``k_candidates``, then
+exact integerized L2) for the two PQ operators. LSH buckets come from
+one plane generator, the md5-literal ``fixed_hyperplanes``.
+
 - ``brute_force_top_k`` / ``hard_negatives``: every corpus row is a
   candidate — broadcast the (small) query set against one corpus scan.
   The correctness baseline.
@@ -15,8 +22,7 @@ top-k or clustering tail, built from the stages in
 - ``ivf_top_k_fixed_centroids``: ``nearest`` centroid assigns the
   inverted lists; queries ``top_k`` their ``n_probe`` lists.
 - ``pq_top_k_fixed_codebook`` / ``ivf_pq_top_k_fixed``: ``nearest`` code
-  per subspace (PQ encode), an ADC ``top_k`` candidate cut, then the
-  exact re-rank.
+  per subspace (PQ encode), then ``_pq_rerank``.
 - ``kmeans_fixed_rounds``: ``nearest`` centroid, then the mean update.
 - ``cosine_dbscan`` / ``lsh_dbscan``: ε-pairs from ``bucket_pairs``
   (all pairs, or per LSH band), then ``dbscan_from_pairs``.
@@ -27,7 +33,7 @@ Everything is pure column expressions (distance and dot columns from
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from archive_to_parquet_spark.functions.vectors import (
@@ -52,9 +58,8 @@ def fixed_hyperplanes(
     any engine/language, so an external oracle (DuckDB) can reproduce
     the exact same buckets. component[p][d] = first 60 bits of
     md5("hp{seed}_{p}_{d}") mapped to [-1, 1). The planes are embedded
-    in the plan as LITERALS (constant-folded; nothing hashed per row),
-    which also makes literal-plane bucketing cheaper than the
-    hash-on-the-fly variant."""
+    in the plan as LITERALS (constant-folded; nothing hashed per row).
+    The one plane generator of every LSH operator."""
     import hashlib
 
     return [
@@ -99,34 +104,30 @@ def hyperplane_bucket_literal(vec_col: str, planes: list[list[float]]):
     return F.expr("CAST(" + " + ".join(terms) + " AS INT)")
 
 
-def hyperplane_bucket_col(vec_col, num_planes: int = 8, seed: int = 42):
-    """LSH bucket id: sign bits of dot(v, plane_i) for deterministic
-    pseudo-random hyperplanes. plane_i[d] = hash-derived value in [-1, 1),
-    computed from (seed, i, d) — identical on every executor, no shipped
-    state."""
-    v = F.col(vec_col) if isinstance(vec_col, str) else vec_col
-
-    def plane_component(dim_idx, plane_idx: int):
-        h = F.xxhash64(dim_idx, F.lit(plane_idx), F.lit(seed))
-        return (h.cast("double") / F.lit(float(1 << 63)))  # [-1, 1)
-
-    def sign_bit(plane_idx: int):
-        # dot(v, plane) via aggregate over (value, dim-index) pairs
-        dot = F.aggregate(
-            F.zip_with(
-                v,
-                F.sequence(F.lit(0), F.size(v) - 1),
-                lambda x, i: x.cast("double") * plane_component(i, plane_idx),
-            ),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        return F.when(dot >= 0, F.lit(1 << plane_idx)).otherwise(F.lit(0))
-
-    bucket = F.lit(0)
-    for p in range(num_planes):
-        bucket = bucket + sign_bit(p)
-    return bucket.cast("int")
+def cosine_top_k(
+    pairs: DataFrame,
+    id_col: str,
+    k: int,
+    rank: str = "rank",
+    round_to: int | None = None,
+) -> DataFrame:
+    """The exact re-rank every ANN operator ends with: ``pairs`` are
+    candidate (``query_id``, ``id_col``) rows carrying both vectors and
+    their norms (``cv``, ``cn``, ``qv``, ``qn``); per query, the ``k``
+    best by cosine, ties broken by ``id_col``. ``round_to`` rounds the
+    cosine BEFORE ranking so float noise can't flip cross-engine
+    orderings (the oracle-checked catalog entries). Returns
+    (query_id, ``id_col``, cosine, ``rank``)."""
+    score = cosine_from_norms("cv", "qv", "cn", "qn")
+    if round_to is not None:
+        score = F.round(score, round_to)
+    return top_k(
+        pairs.select("query_id", id_col, score.alias("cosine")),
+        "query_id",
+        [F.col("cosine").desc(), F.col(id_col).asc()],
+        k,
+        rank,
+    ).select("query_id", id_col, "cosine", rank)
 
 
 def brute_force_top_k(
@@ -141,10 +142,8 @@ def brute_force_top_k(
 ) -> DataFrame:
     """Exact cosine top-k: broadcast queries × scan corpus → window top-k.
 
-    Deterministic output: ties broken by corpus id. ``round_to`` rounds
-    the score BEFORE ranking so float noise can't flip cross-engine
-    orderings (used by the oracle-checked catalog entry). Returns
-    (query_id, vec_id, cosine, rank).
+    Deterministic output: ties broken by corpus id; ``round_to`` as in
+    :func:`cosine_top_k`. Returns (query_id, vec_id, cosine, rank).
     """
     # norms computed once per ROW below the join (the join node blocks
     # projection collapse), so each of the |corpus|×|queries| pairs pays
@@ -159,61 +158,43 @@ def brute_force_top_k(
         F.col(corpus_vec).alias("cv"),
         l2_norm_col(corpus_vec).alias("cn"),
     )
-    score = cosine_from_norms("cv", "qv", "cn", "qn")
-    if round_to is not None:
-        score = F.round(score, round_to)
-    scored = c.join(F.broadcast(q)).select(
-        "query_id", "vec_id", score.alias("cosine")
-    )
-    return top_k(
-        scored, "query_id", [F.col("cosine").desc(), F.col("vec_id").asc()], k, "rank"
-    ).select("query_id", "vec_id", "cosine", "rank")
+    return cosine_top_k(c.join(F.broadcast(q)), "vec_id", k, round_to=round_to)
 
 
 def lsh_top_k(
     corpus: DataFrame,
     queries: DataFrame,
+    planes: list[list[float]],
     k: int = 10,
-    num_planes: int = 8,
     multi_probe_bits: int = 1,
-    seed: int = 42,
     corpus_id: str = "vec_id",
     corpus_vec: str = "embedding",
     query_id: str = "query_id",
     query_vec: str = "query_vec",
-    planes: list[list[float]] | None = None,
     round_to: int | None = None,
 ) -> DataFrame:
     """Approximate cosine top-k via hyperplane LSH with multi-probe.
 
-    Queries probe their own bucket plus every bucket within
-    ``multi_probe_bits`` bit flips (recall knob). Join is an equi-join on
-    the int bucket id — at scale, bucket the corpus table by this column
-    (``write.bucketBy``) and the probe join is shuffle-free on the corpus
-    side.
-
-    ``planes`` switches to a literal md5-derived plane matrix (see
-    fixed_hyperplanes) — engine-independent, so the whole query is
-    reproducible by an external SQL oracle. ``round_to`` rounds the
-    cosine BEFORE ranking (cross-engine float-order stability, same as
-    brute_force_top_k).
+    ``planes`` is the literal plane matrix (``fixed_hyperplanes``) —
+    engine-independent, so the whole query is reproducible by an
+    external SQL oracle. Queries probe their own bucket plus every
+    bucket within ``multi_probe_bits`` bit flips (recall knob). Join is
+    an equi-join on the int bucket id — at scale, bucket the corpus
+    table by this column (``write.bucketBy``) and the probe join is
+    shuffle-free on the corpus side.
     """
-    if planes is not None:
-        num_planes = len(planes)
-        bucket_of = lambda col: hyperplane_bucket_literal(col, planes)  # noqa: E731
-    else:
-        bucket_of = lambda col: hyperplane_bucket_col(col, num_planes, seed)  # noqa: E731
+    num_planes = len(planes)
     c = corpus.select(
         F.col(corpus_id).alias("vec_id"),
         F.col(corpus_vec).alias("cv"),
         l2_norm_col(corpus_vec).alias("cn"),
-        bucket_of(corpus_vec).alias("bucket"),
+        hyperplane_bucket_literal(corpus_vec, planes).alias("bucket"),
     )
     q = queries.select(
         F.col(query_id).alias("query_id"),
         F.col(query_vec).alias("qv"),
         l2_norm_col(query_vec).alias("qn"),
-        bucket_of(query_vec).alias("bucket0"),
+        hyperplane_bucket_literal(query_vec, planes).alias("bucket0"),
     )
     # multi-probe: home bucket + single-bit flips (and optionally 2-bit)
     probes = [F.col("bucket0")]
@@ -230,18 +211,9 @@ def lsh_top_k(
     q_probed = q.select(
         "query_id", "qv", "qn", F.explode(F.array(*probes)).alias("bucket")
     ).dropDuplicates(["query_id", "bucket"])
-
-    score = cosine_from_norms("cv", "qv", "cn", "qn")
-    if round_to is not None:
-        score = F.round(score, round_to)
-    scored = c.join(F.broadcast(q_probed), "bucket").select(
-        "query_id",
-        "vec_id",
-        score.alias("cosine"),
+    return cosine_top_k(
+        c.join(F.broadcast(q_probed), "bucket"), "vec_id", k, round_to=round_to
     )
-    return top_k(
-        scored, "query_id", [F.col("cosine").desc(), F.col("vec_id").asc()], k, "rank"
-    ).select("query_id", "vec_id", "cosine", "rank")
 
 
 def ivf_top_k_fixed_centroids(
@@ -304,16 +276,12 @@ def ivf_top_k_fixed_centroids(
         n_probe,
         "pr",
     ).select("query_id", "qv", "qn", F.col("cid").alias("bucket"))
-
-    score = cosine_from_norms("cv", "qv", "cn", "qn")
-    if round_to is not None:
-        score = F.round(score, round_to)
-    scored = assigned.join(F.broadcast(q_probes), "bucket").select(
-        "query_id", "vec_id", score.alias("cosine")
+    return cosine_top_k(
+        assigned.join(F.broadcast(q_probes), "bucket"),
+        "vec_id",
+        k,
+        round_to=round_to,
     )
-    return top_k(
-        scored, "query_id", [F.col("cosine").desc(), F.col("vec_id").asc()], k, "rank"
-    ).select("query_id", "vec_id", "cosine", "rank")
 
 
 def hard_negatives(
@@ -340,8 +308,6 @@ def hard_negatives(
     the candidate stage for lsh_top_k/ivf_top_k_fixed_centroids and
     apply the same label filter on its candidates; the ranking
     contract is unchanged.
-    ``round_to`` rounds the score BEFORE ranking (cross-engine
-    determinism, same rationale as brute_force_top_k).
     """
     q = queries.select(
         F.col(query_id).alias("query_id"),
@@ -361,15 +327,12 @@ def hard_negatives(
         F.col(corpus_label).alias("c_label"),
         l2_norm_col(corpus_vec).alias("cn"),
     )
-    score = cosine_from_norms("cv", "qv", "cn", "qn")
-    if round_to is not None:
-        score = F.round(score, round_to)
-    scored = c.join(
-        F.broadcast(q), F.col("c_label") != F.col("q_label")
-    ).select("query_id", "neg_id", score.alias("cosine"))
-    return top_k(
-        scored, "query_id", [F.col("cosine").desc(), F.col("neg_id").asc()], k, "rank"
-    ).select("query_id", "neg_id", "cosine", "rank")
+    return cosine_top_k(
+        c.join(F.broadcast(q), F.col("c_label") != F.col("q_label")),
+        "neg_id",
+        k,
+        round_to=round_to,
+    )
 
 
 def _pq_sub_rows(
@@ -385,6 +348,42 @@ def _pq_sub_rows(
     return df.select(
         F.col(id_col).alias(out_id), F.posexplode(slices).alias("s", "sub")
     )
+
+
+def _pq_rerank(
+    adc: DataFrame,
+    full: DataFrame,
+    queries: DataFrame,
+    exact_d2_e6: Column,
+    k_candidates: int,
+    k: int,
+) -> DataFrame:
+    """The PQ tail: ``adc`` rows (query_id, vec_id, qd2) — one per
+    candidate code looked up in the query's distance table — sum to the
+    approximate distance; each query keeps its ``k_candidates`` nearest
+    (``crank``), then an EXACT re-rank joins ``full`` (vec_id, cv) and
+    broadcast ``queries`` (query_id, qv) only for those candidates and
+    keeps the ``k`` smallest ``exact_d2_e6``. Returns
+    (query_id, rank, vec_id, d2_e6)."""
+    scored = adc.groupBy("query_id", "vec_id").agg(
+        F.sum("qd2").alias("approx_d2_e6")
+    )
+    cand = top_k(
+        scored,
+        "query_id",
+        [F.col("approx_d2_e6").asc(), F.col("vec_id").asc()],
+        k_candidates,
+        "crank",
+    ).select("query_id", "vec_id")
+    return top_k(
+        cand.join(full, "vec_id")
+        .join(F.broadcast(queries), "query_id")
+        .select("query_id", "vec_id", exact_d2_e6.alias("d2_e6")),
+        "query_id",
+        [F.col("d2_e6").asc(), F.col("vec_id").asc()],
+        k,
+        "rank",
+    ).select("query_id", "rank", "vec_id", "d2_e6")
 
 
 def pq_top_k_fixed_codebook(
@@ -412,8 +411,7 @@ def pq_top_k_fixed_codebook(
     standard asymmetric distance computation: a per-query distance
     table to every (s, j) code, then approx distance = Σ_s table[s,
     code_s] — one broadcast join on (s, j) against the code table and a
-    map-side-combinable sum. No exact re-rank here: the entry measures
-    the PQ estimate itself (compose with a re-rank join for recall).
+    map-side-combinable sum.
 
     The ADC scan keeps ``k_candidates`` per query; an EXACT re-rank
     join (full vectors, only for candidates) then emits the final
@@ -433,10 +431,6 @@ def pq_top_k_fixed_codebook(
             F.col("s"), F.col("j"), F.col("code_vec").alias("cbv")
         )
     )
-
-    def sub_rows(df: DataFrame, id_col: str, vec_col: str, out_id: str):
-        return _pq_sub_rows(df, id_col, vec_col, out_id, m, sub_dim)
-
     # unrolled fixed-dim distances (guide §4.1): these evaluate inside
     # codegen'd hash-aggregate / project stages where the fixed-length
     # sum compiles, and the instance count is small (A/B-measured
@@ -446,48 +440,29 @@ def pq_top_k_fixed_codebook(
     d2_e6 = F.round(d2_col("sub", "cbv", sub_dim) * 1e6, 0).cast("long")
 
     codes = nearest(
-        sub_rows(corpus, corpus_id, corpus_vec, "vec_id"),
+        _pq_sub_rows(corpus, corpus_id, corpus_vec, "vec_id", m, sub_dim),
         ["vec_id", "s"],
         cb,
         d2_e6,
         "j",
     ).select("vec_id", "s", "j")
     qtab = (
-        sub_rows(queries, query_id, query_vec, "query_id")
+        _pq_sub_rows(queries, query_id, query_vec, "query_id", m, sub_dim)
         .join(cb, "s")
         .select("query_id", "s", "j", d2_e6.alias("qd2"))
     )
-    scored = (
-        codes.join(F.broadcast(qtab), ["s", "j"])
-        .groupBy("query_id", "vec_id")
-        .agg(F.sum("qd2").alias("approx_d2_e6"))
-    )
-    cand = top_k(
-        scored,
-        "query_id",
-        [F.col("approx_d2_e6").asc(), F.col("vec_id").asc()],
-        k_candidates,
-        "crank",
-    ).select("query_id", "vec_id")
-    # exact re-rank: full vectors touched ONLY for candidate rows
-    full = corpus.select(
-        F.col(corpus_id).alias("vec_id"), F.col(corpus_vec).alias("cv")
-    )
-    qfull = F.broadcast(
+    return _pq_rerank(
+        codes.join(F.broadcast(qtab), ["s", "j"]),
+        corpus.select(
+            F.col(corpus_id).alias("vec_id"), F.col(corpus_vec).alias("cv")
+        ),
         queries.select(
             F.col(query_id).alias("query_id"), F.col(query_vec).alias("qv")
-        )
-    )
-    exact_d2 = F.round(d2_col("cv", "qv", m * sub_dim) * 1e6, 0).cast("long")
-    return top_k(
-        cand.join(full, "vec_id")
-        .join(qfull, "query_id")
-        .select("query_id", "vec_id", exact_d2.alias("d2_e6")),
-        "query_id",
-        [F.col("d2_e6").asc(), F.col("vec_id").asc()],
+        ),
+        F.round(d2_col("cv", "qv", m * sub_dim) * 1e6, 0).cast("long"),
+        k_candidates,
         k,
-        "rank",
-    ).select("query_id", "rank", "vec_id", "d2_e6")
+    )
 
 
 def ivf_pq_top_k_fixed(
@@ -562,43 +537,31 @@ def ivf_pq_top_k_fixed(
     cb = F.broadcast(
         codebook.select("s", "j", F.col("code_vec").alias("cbv"))
     )
-
-    def sub_rows(df: DataFrame, id_col: str, vec_col: str, out_id: str):
-        return _pq_sub_rows(df, id_col, vec_col, out_id, m, sub_dim)
-
     sub_d2 = d2e6_col("sub", "cbv")
     codes = nearest(
-        sub_rows(c, "vec_id", "cv", "vec_id"), ["vec_id", "s"], cb, sub_d2, "j"
+        _pq_sub_rows(c, "vec_id", "cv", "vec_id", m, sub_dim),
+        ["vec_id", "s"],
+        cb,
+        sub_d2,
+        "j",
     ).select("vec_id", "s", "j")
     qtab = (
-        sub_rows(q, "query_id", "qv", "query_id")
+        _pq_sub_rows(q, "query_id", "qv", "query_id", m, sub_dim)
         .join(cb, "s")
         .select("query_id", "s", "j", sub_d2.alias("qd2"))
     )
     # ADC restricted to probed lists: explode candidates to their m
-    # codes, look each up in the query's distance table, sum integers
-    scored = (
-        probed.join(codes, "vec_id")
-        .join(F.broadcast(qtab), ["query_id", "s", "j"])
-        .groupBy("query_id", "vec_id")
-        .agg(F.sum("qd2").alias("approx_d2_e6"))
-    )
-    cand = top_k(
-        scored,
-        "query_id",
-        [F.col("approx_d2_e6").asc(), F.col("vec_id").asc()],
+    # codes, look each up in the query's distance table
+    return _pq_rerank(
+        probed.join(codes, "vec_id").join(
+            F.broadcast(qtab), ["query_id", "s", "j"]
+        ),
+        c,
+        q,
+        d2e6_col("cv", "qv"),
         k_candidates,
-        "crank",
-    ).select("query_id", "vec_id")
-    return top_k(
-        cand.join(c, "vec_id")
-        .join(F.broadcast(q), "query_id")
-        .select("query_id", "vec_id", d2e6_col("cv", "qv").alias("d2_e6")),
-        "query_id",
-        [F.col("d2_e6").asc(), F.col("vec_id").asc()],
         k,
-        "rank",
-    ).select("query_id", "rank", "vec_id", "d2_e6")
+    )
 
 
 def kmeans_fixed_rounds(

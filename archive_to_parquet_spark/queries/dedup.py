@@ -25,6 +25,7 @@ from archive_to_parquet_spark.operators.dedup import (
     minhash_near_duplicates_confirmed,
     simhash_near_duplicates,
 )
+from archive_to_parquet_spark.operators.similarity import fixed_hyperplanes
 from archive_to_parquet_spark.queries.relational import _stage_dir, _t
 
 
@@ -297,7 +298,7 @@ def dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     corpus = emb.select("vec_id", "embedding").unionByName(planted)
     pairs = embedding_near_duplicates(
-        corpus, "vec_id", "embedding", threshold=0.99, num_planes=8
+        corpus, fixed_hyperplanes(8, 64), threshold=0.99
     )
     return pairs.select("id_a", "id_b", F.round("cosine", 4).alias("cosine"))
 

@@ -31,6 +31,7 @@ from archive_to_parquet_spark.functions.exactnum import (
     cents_sum_round_sql,
     cents_sum_sql,
 )
+from archive_to_parquet_spark.functions.text import terms_col
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -2773,11 +2774,7 @@ def sketch_countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     # measured WORSE at sf0.1; the four ~0.9 s single-task legs are
     # cheaper than either fix locally. At 100 TB the checkpoint form
     # is the right one (d fewer corpus passes).
-    words = docs.select(
-        F.explode(
-            F.regexp_extract_all(F.lower("text"), F.lit("[a-z0-9]+"), F.lit(0))
-        ).alias("word")
-    )
+    words = docs.select(F.explode(terms_col("text")).alias("word"))
     # all d sketch-row positions from ONE scan: explode a struct array
     # per word (the union-of-d-selects form re-ran the regex word
     # extraction d times — measured 3 scans → 1)

@@ -14,8 +14,11 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from archive_to_parquet_spark.functions.text import terms_col
+from archive_to_parquet_spark.functions.vectors import l2_norm_col
 from archive_to_parquet_spark.operators.candidates import top_k
 from archive_to_parquet_spark.operators.similarity import (
+    cosine_top_k,
     fixed_hyperplanes,
     ivf_top_k_fixed_centroids,
     lsh_top_k,
@@ -315,6 +318,37 @@ def _bm25_relevance(docs: DataFrame) -> DataFrame:
     ).select("query_id", "doc_id")
 
 
+def _bm25_scores(
+    matched: DataFrame, df_counts: DataFrame, dl: DataFrame
+) -> DataFrame:
+    """The one Okapi BM25 scorer (k1=1.2, b=0.75): ``matched`` is the
+    term-frequency frame (doc_id, term, tf) already joined to the query
+    terms (query_id, term), ``df_counts`` (term, df) the matched terms'
+    document frequencies and ``dl`` (doc_id, dl) every document's
+    length, which also gives the corpus stats. Returns
+    (query_id, doc_id, score), the score rounded to 4 places so
+    cross-engine float summation order cannot flip a rank."""
+    stats = dl.agg(
+        F.count("*").cast("double").alias("n_docs"), F.avg("dl").alias("avgdl")
+    )
+    contrib = (
+        F.log(
+            F.lit(1.0)
+            + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
+        )
+        * F.col("tf")
+        * 2.2
+        / (F.col("tf") + 1.2 * (1 - 0.75 + 0.75 * F.col("dl") / F.col("avgdl")))
+    )
+    return (
+        matched.join(F.broadcast(df_counts), "term")
+        .join(dl, "doc_id")
+        .crossJoin(F.broadcast(stats))
+        .groupBy("query_id", "doc_id")
+        .agg(F.round(F.sum(contrib), 4).alias("score"))
+    )
+
+
 def search_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 (Okapi, k1=1.2, b=0.75) top-10 retrieval over documents.
 
@@ -341,9 +375,7 @@ def search_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tokens = docs.select(
         "doc_id",
-        F.explode(
-            F.regexp_extract_all(F.lower("text"), F.lit("[a-z0-9]+"), F.lit(0))
-        ).alias("term"),
+        F.explode(terms_col("text")).alias("term"),
     )
     tf = checkpoint_partitioned(
         tokens.groupBy("doc_id", "term").agg(F.count("*").alias("tf")),
@@ -358,31 +390,12 @@ def search_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     dl = checkpoint_keeping_partitioning(
         tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
     )
-    stats = dl.agg(
-        F.count("*").cast("double").alias("n_docs"), F.avg("dl").alias("avgdl")
-    )
     df_counts = (
         tf.join(F.broadcast(qterms.select("term").distinct()), "term")
         .groupBy("term")
         .agg(F.count("*").alias("df"))
     )
-    contrib = (
-        F.log(
-            F.lit(1.0)
-            + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-        )
-        * F.col("tf")
-        * 2.2
-        / (F.col("tf") + 1.2 * (1 - 0.75 + 0.75 * F.col("dl") / F.col("avgdl")))
-    )
-    scored = (
-        tf.join(F.broadcast(qterms), "term")
-        .join(F.broadcast(df_counts), "term")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .groupBy("query_id", "doc_id")
-        .agg(F.round(F.sum(contrib), 4).alias("score"))
-    )
+    scored = _bm25_scores(tf.join(F.broadcast(qterms), "term"), df_counts, dl)
     return (
         top_k(
             scored,
@@ -921,9 +934,7 @@ def search_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     tokens = docs.select(
         "doc_id",
-        F.explode(
-            F.regexp_extract_all(F.lower("text"), F.lit("[a-z0-9]+"), F.lit(0))
-        ).alias("term"),
+        F.explode(terms_col("text")).alias("term"),
     )
     tf_build = tokens.groupBy("doc_id", "term").agg(F.count("*").alias("tf"))
     (
@@ -944,27 +955,8 @@ def search_index_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms = sorted({t for _, ts in _BM25_QUERIES for t in ts})
     tf = spark.read.parquet(postings_path).filter(F.col("term").isin(terms))
     dl = spark.read.parquet(doclen_path)
-    stats = dl.agg(
-        F.count("*").cast("double").alias("n_docs"), F.avg("dl").alias("avgdl")
-    )
     df_counts = tf.groupBy("term").agg(F.count("*").alias("df"))
-    contrib = (
-        F.log(
-            F.lit(1.0)
-            + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-        )
-        * F.col("tf")
-        * 2.2
-        / (F.col("tf") + 1.2 * (1 - 0.75 + 0.75 * F.col("dl") / F.col("avgdl")))
-    )
-    scored = (
-        tf.join(F.broadcast(qterms), "term")
-        .join(F.broadcast(df_counts), "term")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .groupBy("query_id", "doc_id")
-        .agg(F.round(F.sum(contrib), 4).alias("score"))
-    )
+    scored = _bm25_scores(tf.join(F.broadcast(qterms), "term"), df_counts, dl)
     return (
         top_k(
             scored,
@@ -1211,11 +1203,6 @@ def ann_jl_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     floats (the point of JL at 100 TB); queries broadcast both stages;
     only candidate rows pay the full-width cosine.
     """
-    from archive_to_parquet_spark.functions.vectors import (
-        cosine_from_norms,
-        l2_norm_col,
-    )
-
     proj = embedding_jl_projection(spark, sf_dir)
     # scale down before squaring: |p| ≤ 64·1e6·1e6 = 6.4e13 → diff²
     # would overflow; after div 1e6, Σ of 8 squares ≤ ~1.3e17 < 2^63
@@ -1248,16 +1235,12 @@ def ann_jl_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("qv"),
         l2_norm_col("embedding").alias("qn"),
     )
-    score = F.round(cosine_from_norms("cv", "qv", "cn", "qn"), 6)
-    return top_k(
-        cand.join(full, "vec_id")
-        .join(F.broadcast(qfull), "query_id")
-        .select("query_id", "vec_id", score.alias("cosine")),
-        "query_id",
-        [F.col("cosine").desc(), F.col("vec_id").asc()],
+    return cosine_top_k(
+        cand.join(full, "vec_id").join(F.broadcast(qfull), "query_id"),
+        "vec_id",
         10,
-        "rank",
-    ).select("query_id", "vec_id", "cosine", "rank")
+        round_to=6,
+    )
 
 
 def _jl_ann_oracle_sql() -> str:
@@ -1367,12 +1350,7 @@ def ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
     measure the PROBE — the actual serving workload."""
     import re
 
-    from archive_to_parquet_spark.functions.vectors import (
-        cosine_from_norms,
-        l2_norm_col,
-    )
     from archive_to_parquet_spark.operators.similarity import (
-        fixed_hyperplanes,
         hyperplane_bucket_literal,
     )
     from archive_to_parquet_spark.plans.bucketing import (
@@ -1423,25 +1401,14 @@ def ann_lsh_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # the join that touches the corpus side moves no rows at all; the
     # whole top-k pays exactly ONE exchange, on candidates only
-    candidates = bucketed_join(spark, tb, ti, "bucket").select(
-        "query_id",
-        "vec_id",
-        F.round(cosine_from_norms("cv", "qv", "cn", "qn"), 6).alias("cosine"),
+    return cosine_top_k(
+        bucketed_join(spark, tb, ti, "bucket"), "vec_id", _ALSHBK_K, round_to=6
     )
-    return top_k(
-        candidates,
-        "query_id",
-        [F.col("cosine").desc(), F.col("vec_id").asc()],
-        _ALSHBK_K,
-        "rank",
-    ).select("query_id", "vec_id", "cosine", "rank")
 
 
 def _alshbk_sql_planes():
     """(plane_cols_sql, bucket_expr_fn) for the md5-literal-plane LSH —
     shared by every oracle that reproduces the bucket assignment."""
-    from archive_to_parquet_spark.operators.similarity import fixed_hyperplanes
-
     planes = fixed_hyperplanes(_ALSHBK_PLANES, _ALSHBK_DIM)
     plane_cols = ",\n         ".join(
         "[" + ", ".join(repr(x) for x in pl) + "]::DOUBLE[] AS p" + str(p)
@@ -1531,20 +1498,13 @@ def search_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     fusion moves ≤ 40 rows per query regardless of corpus size. At
     1000 executors each leg is embarrassingly parallel and the fusion
     is a driver-sized afterthought."""
-    from archive_to_parquet_spark.operators.similarity import (
-        cosine_from_norms,
-        l2_norm_col,
-    )
-
     docs = _t(spark, sf_dir, "documents")
     emb = _t(spark, sf_dir, "embeddings")
 
     # --- lexical leg: BM25 with per-example-doc top-5 TF query terms
     tokens = docs.select(
         "doc_id",
-        F.explode(
-            F.regexp_extract_all(F.lower("text"), F.lit("[a-z0-9]+"), F.lit(0))
-        ).alias("term"),
+        F.explode(terms_col("text")).alias("term"),
     )
     # the inverted index feeds FOUR consumers here (query-term top-5,
     # doc lengths, document frequencies, scoring) — materialize it once
@@ -1566,31 +1526,17 @@ def search_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         "rn",
     ).select(F.col("doc_id").alias("query_id"), "term")
     dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
-    stats = dl.agg(
-        F.count("*").cast("double").alias("n_docs"), F.avg("dl").alias("avgdl")
-    )
     df_counts = (
         tf.join(F.broadcast(qterms.select("term").distinct()), "term")
         .groupBy("term")
         .agg(F.count("*").alias("df"))
     )
-    contrib = (
-        F.log(
-            F.lit(1.0)
-            + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
-        )
-        * F.col("tf")
-        * 2.2
-        / (F.col("tf") + 1.2 * (1 - 0.75 + 0.75 * F.col("dl") / F.col("avgdl")))
-    )
-    lex_scored = (
-        tf.join(F.broadcast(qterms), "term")
-        .filter(F.col("doc_id") != F.col("query_id"))
-        .join(F.broadcast(df_counts), "term")
-        .join(dl, "doc_id")
-        .crossJoin(F.broadcast(stats))
-        .groupBy("query_id", "doc_id")
-        .agg(F.round(F.sum(contrib), 4).alias("score"))
+    lex_scored = _bm25_scores(
+        tf.join(F.broadcast(qterms), "term").filter(
+            F.col("doc_id") != F.col("query_id")
+        ),
+        df_counts,
+        dl,
     )
     lex = top_k(
         lex_scored,
@@ -1611,19 +1557,12 @@ def search_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("embedding").alias("cv"),
         l2_norm_col("embedding").alias("cn"),
     )
-    sem_scored = c.join(
-        F.broadcast(q), F.col("vec_id") != F.col("query_id")
-    ).select(
-        "query_id",
+    sem = cosine_top_k(
+        c.join(F.broadcast(q), F.col("vec_id") != F.col("query_id")),
         "vec_id",
-        F.round(cosine_from_norms("cv", "qv", "cn", "qn"), 6).alias("cosine"),
-    )
-    sem = top_k(
-        sem_scored,
-        "query_id",
-        [F.col("cosine").desc(), F.col("vec_id").asc()],
         _HYB_DEPTH,
-        "rank_sem",
+        rank="rank_sem",
+        round_to=6,
     ).select("query_id", F.col("vec_id").alias("doc_id"), "rank_sem")
 
     # --- reciprocal-rank fusion over the two ≤20-deep lists

@@ -407,18 +407,12 @@ def sample_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     df.sampleBy, which are partitioning-dependent)."""
     from archive_to_parquet_spark.operators.sampling import (
         hash_split_col,
-        hex_threshold,
-        uniform_hex_col,
+        stratified_sample,
     )
 
     docs = _t(spark, sf_dir, "documents")
-    rates = {"en": 0.5, "de": 0.25, "fr": 0.1}
-    u_strata = uniform_hex_col("doc_id", "strata")
-    threshold = (
-        F.when(F.col("lang") == "en", F.lit(hex_threshold(rates["en"])))
-        .when(F.col("lang") == "de", F.lit(hex_threshold(rates["de"])))
-        .when(F.col("lang") == "fr", F.lit(hex_threshold(rates["fr"])))
-        .otherwise(F.lit(hex_threshold(0.0)))
+    kept = stratified_sample(
+        "doc_id", "lang", {"en": 0.5, "de": 0.25, "fr": 0.1}
     )
     return docs.select(
         "doc_id",
@@ -426,7 +420,7 @@ def sample_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         hash_split_col("doc_id", {"train": 0.8, "val": 0.1, "test": 0.1}).alias(
             "split"
         ),
-        (u_strata < threshold).cast("int").alias("kept_stratified"),
+        kept.cast("int").alias("kept_stratified"),
     )
 
 

@@ -15,6 +15,8 @@ from archive_to_parquet_spark.operators.dedup import (
 )
 from archive_to_parquet_spark.operators.similarity import (
     brute_force_top_k,
+    fixed_hyperplanes,
+    ivf_top_k_fixed_centroids,
     lsh_top_k,
 )
 from archive_to_parquet_spark.queries.dedup import (
@@ -190,7 +192,9 @@ def test_lsh_topk_recall_against_brute_force(spark):
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
     )
     exact = brute_force_top_k(emb, q, k=5).collect()
-    approx = lsh_top_k(emb, q, k=5, num_planes=8, multi_probe_bits=2).collect()
+    approx = lsh_top_k(
+        emb, q, planes=fixed_hyperplanes(8, 64), k=5, multi_probe_bits=2
+    ).collect()
     exact_set = {(r.query_id, r.vec_id) for r in exact}
     approx_set = {(r.query_id, r.vec_id) for r in approx}
     recall = len(exact_set & approx_set) / len(exact_set)
@@ -199,6 +203,44 @@ def test_lsh_topk_recall_against_brute_force(spark):
     for r in approx:
         if r.rank == 1:
             assert r.query_id == r.vec_id
+
+
+def _exhaustive_probe_case(spark):
+    emb = spark.read.parquet(
+        os.path.join(os.path.dirname(SF_DIR), "sf0.01", "embeddings.parquet")
+    )
+    q = emb.filter(F.col("vec_id") % 50 == 0).select(
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("query_vec")
+    )
+    exact = sorted(
+        tuple(r) for r in brute_force_top_k(emb, q, k=10, round_to=6).collect()
+    )
+    return emb, q, exact
+
+
+def test_lsh_topk_probing_every_bucket_is_exact(spark):
+    """One plane and one-bit multi-probe visit both buckets, so the
+    candidates are the whole corpus and the shared cosine re-rank must
+    return brute force's rows exactly."""
+    emb, q, exact = _exhaustive_probe_case(spark)
+    got = lsh_top_k(
+        emb, q, planes=fixed_hyperplanes(1, 64), k=10, multi_probe_bits=1,
+        round_to=6,
+    ).collect()
+    assert sorted(tuple(r) for r in got) == exact
+
+
+def test_ivf_topk_probing_every_list_is_exact(spark):
+    """Probing as many lists as there are centroids makes IVF's
+    candidates the whole corpus: the re-rank must equal brute force."""
+    emb, q, exact = _exhaustive_probe_case(spark)
+    cent = emb.filter(F.col("vec_id") % 31 == 0).select(
+        F.col("vec_id").alias("cid"), F.col("embedding").alias("centroid")
+    )
+    got = ivf_top_k_fixed_centroids(
+        emb, cent, q, k=10, n_probe=cent.count(), round_to=6, dim=64
+    ).collect()
+    assert sorted(tuple(r) for r in got) == exact
 
 
 def test_connected_components(spark):
@@ -1029,7 +1071,6 @@ def test_web_url_functions(spark):
         domain_blocked,
         registrable_domain,
         url_host,
-        url_path,
         url_query_param,
     )
 
@@ -1047,7 +1088,6 @@ def test_web_url_functions(spark):
         for r in df.select(
             "id",
             url_host(u).alias("host"),
-            url_path(u).alias("path"),
             url_query_param(u, "lang").alias("lang"),
         )
         .withColumn("domain", registrable_domain(F.col("host")))
@@ -1059,7 +1099,6 @@ def test_web_url_functions(spark):
     }
     assert out[1]["host"] == "a.b.example.com"
     assert out[1]["domain"] == "example.com"  # deep subdomain stripped
-    assert out[1]["path"] == "/p/q"
     assert out[1]["lang"] == "en"
     assert out[2]["domain"] == "example.org"  # 2-label host unchanged
     assert out[2]["lang"] is None
@@ -1376,6 +1415,40 @@ def test_cdc_chunks_empty_and_short_docs(spark):
     assert out[3] == {
         "doc_id": 3, "n_chunks": 1, "dup_chunks": 1, "dup_chars": 4,
     }
+
+
+def test_cdc_chunks_null_id_docs_match_oracle(spark):
+    """A document without an id keeps its all-zero row and, as in the
+    oracle's null-last order, never owns a chunk's first occurrence:
+    the id-1 copy of a payload it shares is the original, the id-2
+    copy the duplicate."""
+    import random
+
+    import duckdb
+
+    from archive_to_parquet_spark.operators.dedup import cdc_chunk_stats
+    from archive_to_parquet_spark.queries.dedup import DEDUP_CDC_CHUNKS_SQL
+
+    rng = random.Random(3)
+    words = "alpha beta gamma delta epsilon zeta eta theta iota kappa".split()
+    shared = " ".join(rng.choice(words) for _ in range(120))
+    rows = [
+        (None, "zz " + shared), (1, "qq qq " + shared), (2, shared),
+        (None, ""), (3, ""),
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    con = duckdb.connect()
+    con.execute("CREATE TABLE documents (doc_id BIGINT, text VARCHAR)")
+    con.executemany("INSERT INTO documents VALUES (?, ?)", rows)
+
+    def key(r):
+        return (r[0] is not None, r[0] or 0)
+
+    got = sorted((tuple(r) for r in cdc_chunk_stats(df).collect()), key=key)
+    want = sorted(con.execute(DEDUP_CDC_CHUNKS_SQL).fetchall(), key=key)
+    assert got == want
+    assert got[:2] == [(None, 0, 0, 0)] * 2
+    assert got[3][2] > 0  # doc 2 duplicates doc 1, not the null-id doc
 
 
 def test_gear_cdc_kernel_matches_scalar_reference(spark):

@@ -52,7 +52,9 @@ def test_stratified_sample_rates(spark):
     df = spark.range(30000).select(
         F.col("id").alias("k"), (F.col("id") % 3).cast("string").alias("g")
     )
-    out = stratified_sample(df, "k", "g", {"0": 0.5, "1": 0.1}, default_rate=0.0)
+    out = df.filter(
+        stratified_sample("k", "g", {"0": 0.5, "1": 0.1}, default_rate=0.0)
+    )
     counts = {r["g"]: r["n"] for r in out.groupBy("g").agg(F.count("*").alias("n")).collect()}
     assert abs(counts["0"] / 10000 - 0.5) < 0.03
     assert abs(counts["1"] / 10000 - 0.1) < 0.02
